@@ -38,6 +38,8 @@ import pandas as pd  # module-level: pandas_udf type hints are stringized
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import fits_driver, plan_bytes
+
 __all__ = [
     "kmeans_lite",
     "kmeans_fit",
@@ -209,7 +211,7 @@ def _encode_udf(book_rows, m: int, sub: int, quant: int):
 # collect of the quantized frame instead of 2·iters tiny barrier
 # stages whose wall is pure scheduler latency. Larger corpora (the
 # 100-TB regime) run the distributed grouped-Lloyd plan unchanged;
-# pass driver_max_bytes=0 to force it.
+# spark.htrc.forceDistributed=true forces it (session.fits_driver).
 _DRIVER_TRAIN_MAX_BYTES = 64 << 20
 
 
@@ -406,19 +408,19 @@ def kmeans_fit(
     id_col: str = "vec_id",
     quant: int = 1000,
     persist_input: bool = True,
-    driver_max_bytes: int = _DRIVER_TRAIN_MAX_BYTES,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignment (id, cluster), centroids (cluster, cv)) after
     ``iters`` Lloyd iterations — centroids are in quantized space.
 
-    Corpora whose Catalyst source estimate is ≤ ``driver_max_bytes``
-    train on the driver (one collect + vectorized numpy rounds) and
+    Corpora whose Catalyst source estimate fits
+    ``_DRIVER_TRAIN_MAX_BYTES`` (session.fits_driver) train on the
+    driver (one collect + vectorized numpy rounds) and
     rebuild the RETURNED assignment as a distributed map-only Arrow
     argmin over the final-iteration centroids — the output stays a
     scale-correct distributed frame; only the k×dim model state rides
     the driver. Trajectory is bit-identical to the distributed plan
     (same seeding, argmin total order, floor-mean update — pinned by
-    the regime-parity test). Pass 0 to force the distributed trainer.
+    the regime-parity test).
     """
     if iters < 1:
         # iters=0 used to crash obscurely (the distributed loop never
@@ -426,10 +428,7 @@ def kmeans_fit(
         # zero-iteration assignment, so fail at entry
         raise ValueError(f"iters must be >= 1, got {iters}")
     spark = df.sparkSession
-    from .knn_join import _plan_size_bytes
-
-    est = _plan_size_bytes(df)
-    if 0 <= est <= driver_max_bytes:
+    if fits_driver(spark, plan_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
         rows = _np_train_rows(
             _quantize(df, vec_col, id_col, quant, persist=False), dim, id_col
         )
@@ -482,13 +481,10 @@ def kmeans_lite(
     id_col: str = "vec_id",
     quant: int = 1000,
     persist_input: bool = True,
-    driver_max_bytes: int = _DRIVER_TRAIN_MAX_BYTES,
 ) -> DataFrame:
     """Final (``id_col``, cluster:int) assignment after ``iters`` Lloyd
     iterations from the deterministic md5 seeding."""
-    return kmeans_fit(
-        df, k, iters, dim, vec_col, id_col, quant, persist_input, driver_max_bytes
-    )[0]
+    return kmeans_fit(df, k, iters, dim, vec_col, id_col, quant, persist_input)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -505,15 +501,14 @@ def pq_fit_encode(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quant: int = 1000,
-    driver_max_bytes: int = _DRIVER_TRAIN_MAX_BYTES,
 ) -> tuple[DataFrame, DataFrame]:
     """Train ``m`` independent sub-codebooks (Lloyd, shared seeding ids)
     and encode every vector as ``m`` codes.
 
-    Corpora whose Catalyst source estimate is ≤ ``driver_max_bytes``
-    train on the driver (one collect + vectorized numpy rounds,
-    bit-identical trajectory); larger ones run the distributed grouped
-    Lloyd plan. Pass 0 to force the distributed trainer.
+    Corpora whose Catalyst source estimate fits
+    ``_DRIVER_TRAIN_MAX_BYTES`` (session.fits_driver) train on the
+    driver (one collect + vectorized numpy rounds, bit-identical
+    trajectory); larger ones run the distributed grouped Lloyd plan.
 
     Returns (codes (id, codes array<int> length m),
     codebook (m, cluster, cv) — quantized-space sub-centroids).
@@ -524,10 +519,7 @@ def pq_fit_encode(
         raise ValueError(f"iters must be >= 1, got {iters}")
     sub = dim // m
     spark = df.sparkSession
-    from .knn_join import _plan_size_bytes
-
-    est = _plan_size_bytes(df)
-    if 0 <= est <= driver_max_bytes:
+    if fits_driver(spark, plan_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
         # driver-bounded regime (graph/dissolve precedent): collect the
         # quantized corpus ONCE and run the m·iters Lloyd rounds in
         # numpy — at bench scale the distributed trainer's wall is pure

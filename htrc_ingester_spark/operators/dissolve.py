@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geo import h3lite as H
+from ..session import fits_driver, materialize, plan_bytes, static_plan
 
 
 def _unpack(cell: str) -> tuple[str, str, str]:
@@ -112,19 +113,25 @@ def _cc_driver(cells_np, res: int):
 # pointer-jumping loop takes over.
 _DRIVER_MAX_CELLS = 2_000_000
 
+# the general-graph twin: a near-dup pair set is ≪ corpus by construction
+_DRIVER_MAX_EDGES = 2_000_000
+
+# _cc_loop runs its rounds static (AQE off) at or below this edge-set
+# size estimate
+_STATIC_MAX_BYTES = 64 << 20
+
 
 def connected_components(
     cells: DataFrame,
     res: int,
     cell_col: str = "cell",
     max_rounds: int = 64,
-    driver_max_cells: int = _DRIVER_MAX_CELLS,
 ) -> DataFrame:
     """(cell, comp) labels: ``comp`` is the MINIMUM cell id of the
     component — deterministic across partitionings and cluster sizes.
 
     Two regimes, same contract: a cell set that fits the driver
-    (≤ ``driver_max_cells``, ~16 bytes/cell — the common case, since
+    (≤ ``_DRIVER_MAX_CELLS``, ~16 bytes/cell — the common case, since
     the distinct-cell count is grid-bounded) is collected and labeled
     with numpy union-find in one pass; larger sets run the distributed
     pointer-jumping loop (one action per round, O(log diameter)
@@ -132,21 +139,21 @@ def connected_components(
     spark = cells.sparkSession
     distinct = cells.select(F.col(cell_col).cast("long").alias("cell")).distinct()
     n_cells = distinct.count()
-    if n_cells <= driver_max_cells:
+    if fits_driver(spark, n_cells, _DRIVER_MAX_CELLS):
         import pandas as pd
 
         cells_np = distinct.toPandas()["cell"].to_numpy()
         c, comp = _cc_driver(cells_np, res)
+        # explicit schema: an empty cell set has nothing to infer from
         out = spark.createDataFrame(
-            pd.DataFrame({"cell": c, "comp": comp})
+            pd.DataFrame({"cell": c, "comp": comp}), "cell long, comp long"
         ).persist()
         out.count()
         return out
-    edges = adjacency_edges(cells, res, cell_col).persist()
-    nodes = cells.select(
-        F.col(cell_col).cast("long").alias("node"),
-        F.col(cell_col).cast("long").alias("label"),
-    )
+    # distinct cells: a repeated node row would multiply through the
+    # loop's self-joins every round
+    edges = adjacency_edges(distinct, res).persist()
+    nodes = distinct.select(F.col("cell").alias("node"), F.col("cell").alias("label"))
     raw = _cc_loop(nodes, edges, max_rounds)
     out = raw.select(F.col("node").alias("cell"), F.col("label").alias("comp")).persist()
     out.count()
@@ -184,11 +191,7 @@ def _cc_loop(nodes: DataFrame, edges: DataFrame, max_rounds: int) -> DataFrame:
     AQE's per-stage replan jobs are pure latency, the same finding as
     knn_join_many/shortest_paths. Big or unknown-size graphs keep AQE
     — that is where per-round skew handling has data to act on."""
-    from ..session import materialize, static_plan
-    from .knn_join import _plan_size_bytes
-
-    est = _plan_size_bytes(edges)
-    run_static = 0 <= est <= (64 << 20)
+    run_static = fits_driver(edges.sparkSession, plan_bytes(edges), _STATIC_MAX_BYTES)
 
     def _mat(df: DataFrame) -> tuple[DataFrame, int]:
         if run_static:
@@ -234,19 +237,18 @@ def connected_components_edges(
     src: str = "id_a",
     dst: str = "id_b",
     max_rounds: int = 64,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, cluster) for every node of an arbitrary undirected edge
     list — ``cluster`` is the MINIMUM node id of the component. The
     general-graph sibling of :func:`connected_components` (dedup pair
-    graphs, not grids): small edge lists (≤ ``driver_max_edges``, e.g.
+    graphs, not grids): small edge lists (≤ ``_DRIVER_MAX_EDGES``, e.g.
     a near-dup pair set, which is ≪ corpus by construction) collect to
     a driver union-find; larger ones run the distributed
     pointer-jumping loop."""
     spark = edges.sparkSession
     e2 = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).persist()
     n_edges = e2.count()
-    if n_edges <= driver_max_edges:
+    if fits_driver(spark, n_edges, _DRIVER_MAX_EDGES):
         import pandas as pd
 
         pdf = e2.toPandas()

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import broadcast_threshold, fits_driver, plan_bytes
+
 N_PLANES = 8
 
 
@@ -133,22 +135,16 @@ def with_bucket(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> Dat
     return df.withColumn("bucket", F.expr(bucket_sql(checked, dim, "spark")).cast("int"))
 
 
-def _maybe_broadcast(q: DataFrame, broadcast_queries: bool | None) -> DataFrame:
+def _maybe_broadcast(q: DataFrame) -> DataFrame:
     """Query-side join hint guard (VERDICT r2): pin the broadcast only
     when Catalyst's size estimate says the query frame fits the
     broadcast threshold — an unconditional ``F.broadcast`` OOMs on a
-    10^8-query batch. ``None`` auto-decides; ``True``/``False``
-    force. Un-hinted joins are left to AQE (which can still pick a
-    runtime broadcast from actual sizes)."""
-    if broadcast_queries is None:
-        from .knn_join import _plan_size_bytes, _size_conf
-
-        est = _plan_size_bytes(q)
-        thresh = _size_conf(
-            q.sparkSession, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024
-        )
-        broadcast_queries = 0 <= est <= thresh > 0
-    return F.broadcast(q) if broadcast_queries else q
+    10^8-query batch. Un-hinted joins are left to AQE (which can still
+    pick a runtime broadcast from actual sizes)."""
+    spark = q.sparkSession
+    if fits_driver(spark, plan_bytes(q), broadcast_threshold(spark)):
+        return F.broadcast(q)
+    return q
 
 
 def ann_topk(
@@ -159,7 +155,6 @@ def ann_topk(
     id_col: str = "vec_id",
     dim: int = 64,
     multi_probe: bool = False,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Bucketed approximate top-k: each query scans only its bucket.
     query_df: (query_id, embedding). Returns (query_id, vec_id, cos,
@@ -195,7 +190,7 @@ def ann_topk(
     else:
         q = q.withColumnRenamed("bucket", "_qb")
     cand = data.join(
-        _maybe_broadcast(q, broadcast_queries), F.col("bucket") == F.col("_qb"), "inner"
+        _maybe_broadcast(q), F.col("bucket") == F.col("_qb"), "inner"
     ).withColumn(
         "cos", F.expr(f"round({_cos_norms_sql(vec_col, '_qv', '_n', '_qn')}, 5)")
     )
@@ -358,7 +353,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     dim: int = 64,
     nlist: int = N_LIST,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: assign rows to inverted lists, probe the
     query's ``nprobe`` nearest lists, exact-cosine re-rank. Returns
@@ -401,7 +395,7 @@ def ivf_topk(
         .drop("_qdots", "_thr")
         .withColumn("_qn", F.expr(norm_sql("_qv", "spark")))
     )
-    cand = data.join(_maybe_broadcast(q, broadcast_queries), "ivf_cell").withColumn(
+    cand = data.join(_maybe_broadcast(q), "ivf_cell").withColumn(
         "cos", F.expr(f"round({_cos_norms_sql(vec_col, '_qv', '_n', '_qn')}, 5)")
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col(id_col).asc())
@@ -527,7 +521,6 @@ def phash_search(
     k: int | None = None,
     id_col: str = "image_id",
     phash_col: str = "phash",
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """Radius search over the 64-bit phash column: all (query_id,
     image_id, hamming) with hamming ≤ ``max_hamming``, optionally
@@ -567,7 +560,7 @@ def phash_search(
         ["query_id", "_qph"],
     )
     out = (
-        data.join(_maybe_broadcast(q, broadcast_queries), ["band", "bucket"])
+        data.join(_maybe_broadcast(q), ["band", "bucket"])
         .select("query_id", id_col, phash_col, "_qph")
         .distinct()  # an image may collide with the query on >1 band
         .select(

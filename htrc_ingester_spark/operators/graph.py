@@ -37,11 +37,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import fits_driver
 from ..session import materialize as session_materialize
 from ..session import reliable_checkpoint_configured
 from ..session import static_plan as static_plan_ctx
 
 __all__ = ["shortest_paths"]
+
+# collapsed adjacencies up to this many edges run the driver regime
+_DRIVER_MAX_EDGES = 2_000_000
 
 
 def shortest_paths(
@@ -52,7 +56,6 @@ def shortest_paths(
     dst_col: str = "dst",
     weight_col: str = "w",
     persist_every: int | None = None,
-    driver_max_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, dist) for every node reachable from any of ``sources``
     within ``hops`` edges, dist = min total integer weight.
@@ -62,12 +65,12 @@ def shortest_paths(
     by (src, dst) — at scale this is the materialized adjacency you'd
     bucket-partition by src and reuse across queries).
 
-    Collapsed adjacencies ≤ ``driver_max_edges`` run the rounds in
+    Collapsed adjacencies ≤ ``_DRIVER_MAX_EDGES`` run the rounds in
     ONE vectorized numpy Bellman-Ford on the driver — the same bounded
     driver-trivial regime as dissolve's union-find (a 2M-edge int64
     adjacency ≈ 48 MB; a 6-round distributed walk over a few hundred
     surviving edges is pure scheduler latency). Larger graphs run the
-    distributed iterative join+min-agg rounds; pass 0 to force them.
+    distributed iterative join+min-agg rounds (session.fits_driver).
     """
     if hops < 0:
         raise ValueError("hops must be >= 0")
@@ -97,13 +100,9 @@ def shortest_paths(
         .agg(F.min(_req(weight_col)).alias("_w"))
         .persist()
     )
-    checkpoints: list[DataFrame] = []
     try:
         n_e = _materialize(spark, e)
-        # driver_max_edges=0 must force the distributed rounds even on
-        # an EMPTY collapsed adjacency (0 <= 0 silently took the driver
-        # path out from under the force-distributed parity tests)
-        if driver_max_edges > 0 and n_e <= driver_max_edges:
+        if fits_driver(spark, n_e, _DRIVER_MAX_EDGES):
             pdf = e.toPandas()
             src_a = pdf["_src"].to_numpy(dtype=np.int64)
             dst_a = pdf["_dst"].to_numpy(dtype=np.int64)
@@ -166,18 +165,16 @@ def shortest_paths(
                     with static_plan_ctx(spark):
                         best = session_materialize(best)
         # cache hygiene (ADVICE r3, matching the dissolve discipline):
-        # materialize the result ONCE; the adjacency and any stray
-        # intermediates release in the finally below — ALSO on failure,
-        # so a crashed call cannot strand cached partitions in a
-        # long-lived session. The returned frame itself stays cached
-        # (the only surviving entry); callers can unpersist when done.
+        # materialize the result ONCE; the adjacency releases in the
+        # finally below — ALSO on failure, so a crashed call cannot
+        # strand cached partitions in a long-lived session. The
+        # returned frame itself stays cached (the only surviving
+        # entry); callers can unpersist when done.
         best = best.persist()
         _materialize(spark, best)
         return best
     finally:
         e.unpersist(blocking=False)
-        for cp in checkpoints:
-            cp.unpersist(blocking=False)
 
 
 def _materialize(spark, df: DataFrame) -> int:

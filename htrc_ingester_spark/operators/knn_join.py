@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..functions import h3_cell, haversine_m
 from ..geo import h3lite as H
+from ..session import broadcast_threshold, fits_driver, plan_bytes
 
 EARTH_RADIUS_M = 6_371_008.8
 
@@ -208,36 +209,6 @@ def _kx_sql(lat: str, r: str, res: int, bound: str | None = None) -> str:
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate (no action, no scan;
-    parquet sources report real footer sizes). -1 when unavailable —
-    callers then leave the join strategy to AQE."""
-    try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:
-        return -1
-
-
-def _size_conf(spark: SparkSession, key: str, default: int) -> int:
-    """A Spark size conf in bytes ('10MB', '10485760b', …)."""
-    try:
-        v = spark.conf.get(key).strip().lower()
-    except Exception:
-        return default
-    mult = 1
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("b", 1),
-    ):
-        if v.endswith(suf):
-            v, mult = v[: -len(suf)], m
-            break
-    try:
-        return int(float(v) * mult)
-    except ValueError:
-        return default
-
-
 def knn_join_many(
     spark: SparkSession,
     points: DataFrame,
@@ -302,13 +273,12 @@ def knn_join_many(
     # latency every round); huge → pay ONE hash exchange on the join
     # key so every round's sort-merge join reuses the cached
     # partitioning instead of re-shuffling the points side; in
-    # between → cache as-is and let AQE pick per round.
-    est = _plan_size_bytes(skel)
-    bcast_thresh = int(
-        _size_conf(spark, "spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024)
-    )
-    broadcast_skel = 0 <= est <= bcast_thresh > 0
-    if est > 64 * max(bcast_thresh, 10 * 1024 * 1024):
+    # between → cache as-is and let AQE pick per round. An unknown
+    # estimate (or spark.htrc.forceDistributed) takes the huge regime.
+    est = plan_bytes(skel)
+    bcast_thresh = broadcast_threshold(spark)
+    broadcast_skel = fits_driver(spark, est, bcast_thresh)
+    if not fits_driver(spark, est, 64 * max(bcast_thresh, 10 * 1024 * 1024)):
         skel = skel.repartition("cell")
     skel = skel.persist()
 
@@ -549,8 +519,8 @@ def knn_auto_res_points(
     many empty expansion rounds. Falls back to one count() only when
     plan stats are unavailable."""
     have = [c for c in cols if c in points.columns]
-    est = _plan_size_bytes(points.select(*have) if have else points)
-    if 0 < est < (1 << 60):
+    est = plan_bytes(points.select(*have) if have else points)
+    if est:
         n = max(1, int(est / row_bytes))
     else:
         n = points.count()

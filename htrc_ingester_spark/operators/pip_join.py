@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 from ..geo import geometry as G
 from ..geo import h3lite as H
 from ..geo.backend import H3LiteBackend, get_backend
+from ..session import fits_driver, plan_bytes
 
 
 def poly_rings(p: dict) -> list[np.ndarray]:
@@ -638,36 +639,6 @@ def build_cell_cover(
     )
 
 
-def cover_area_fraction(cover: pd.DataFrame, backend=None) -> float:
-    """Upper bound on the fraction of the globe the cover touches
-    (grid-area sense): Σ 1/num_cells(res) over cover cells. Overlapping
-    polygons double-count — fine for a selectivity heuristic."""
-    be = backend or H3LiteBackend()
-    cells = cover["cell"].to_numpy()
-    if not len(cells):
-        return 0.0
-    res = be.cell_res(cells)
-    frac = 0.0
-    for r in np.unique(res):
-        n_r = int((res == r).sum())
-        frac += n_r / be.num_cells(int(r))
-    return min(1.0, frac)
-
-
-# auto-persist threshold: candidates ≤ ~25% of the point table is worth
-# one materialization to avoid the second scan+probe pass
-_PERSIST_FRACTION = 0.25
-
-# ...but only when that second pass is actually expensive. Persisting
-# inserts an InMemoryRelation that breaks whole-stage codegen at the
-# boundary and pays a columnar cache write; measured at sf0.1 (600k
-# rows) that costs MORE than just recomputing the scan+encode+join for
-# the second branch (1.26 s vs 0.57 s cold). Below this Catalyst size
-# estimate of the point side, recompute wins; above it (the 100-TB
-# regime) a second full scan dwarfs the cache write.
-_PERSIST_MIN_BYTES = 4 << 30
-
-
 def _polys_key(polys: list[dict], res: int, res_max: int, backend_name: str) -> str:
     """Content hash of a polygon set + resolution band + backend — the
     memo key for driver-side index artifacts."""
@@ -804,7 +775,6 @@ def _cover_artifacts(
         "levels": np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist()
         if len(cover)
         else [],
-        "frac": cover_area_fraction(cover, backend=be),
         "all_full": bool(cover["full"].all()) if len(cover) else True,
         "_bc": bc_rings,
     }
@@ -813,10 +783,10 @@ def _cover_artifacts(
         old = _ARTIFACT_MEMO.pop(oldest)
         try:
             # unpersist, NOT destroy: previously returned pip_join plans
-            # (including persisted candidate lineages) may still hold the
-            # evicted broadcast in their refine UDF — unpersist frees the
-            # executor copies but lets a later recompute re-send the
-            # value; destroy() would fail such a recompute (ADVICE r4)
+            # may still hold the evicted broadcast in their refine UDF —
+            # unpersist frees the executor copies but lets a later
+            # recompute re-send the value; destroy() would fail such a
+            # recompute (ADVICE r4)
             old["_bc"].unpersist(blocking=False)
         except Exception:
             pass  # context gone
@@ -832,7 +802,6 @@ def pip_join(
     res_max: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    persist_candidates: bool | None = None,
     backend=None,
 ) -> DataFrame:
     """points ⋈ polygons containment join.
@@ -855,29 +824,11 @@ def pip_join(
     (inner-join semantics, like the reference's unmatched-zip-entry drop
     at HectorManager.java:508-510 — track drops with a left_anti if
     needed).
-
-    ``persist_candidates``: the full/partial split has two consumers,
-    so without persistence the point scan+probe runs twice. Default
-    ``None`` decides from TWO driver-side estimates: the cover's area
-    fraction (candidate selectivity) AND Catalyst's size estimate of
-    the point side. Selective covers (< ~25% of the grid) over a LARGE
-    point side (≥ 4 GiB estimated) persist the candidate set — at
-    10^12 points that's ≪ one scan's worth of 3-column rows spread
-    across the cluster (MEMORY_AND_DISK, spills, never recomputes).
-    Small point sides skip the persist: the InMemoryRelation boundary
-    breaks whole-stage codegen and the cache write costs more than
-    just recomputing the cheap scan (measured 1.26 s vs 0.57 s cold at
-    sf0.1). Near-global covers also keep the two-scan plan, whose
-    second pass is a column-pruned read cheaper than caching ~the
-    whole table. Pass True/False to override; the persisted frame is
-    left cached for the returned plan (successive invocations with the
-    same polygons canonicalize to the SAME cache entry, so memory does
-    not accumulate).
     """
     be = get_backend(backend) if isinstance(backend, (str, type(None))) else backend
     if res_max is None:
         res_max = min(res + 5, be.res_max)
-    if len(polys) > _TABLE_POLYS_BUDGET:
+    if not fits_driver(spark, len(polys), _TABLE_POLYS_BUDGET):
         # cover-as-table spill-over (SCALE.md): past the driver budget
         # the serial cover build + broadcast is the wrong regime —
         # build the cover distributed and probe with a cell-keyed
@@ -901,33 +852,15 @@ def pip_join(
     # ONE broadcast equi-join for all cover levels: each point probes
     # with its ancestor-chain cells (array + explode — narrow,
     # whole-stage codegen). Cover levels are disjoint regions per
-    # polygon, so no duplicate hits.
-    #
-    # Scan economics: see the persist_candidates doc — selective covers
-    # persist the candidate set (single point-side scan), near-global
-    # covers re-scan the column-pruned skeleton per branch.
+    # polygon, so no duplicate hits. The full/partial split below has
+    # two consumers; both re-read the column-pruned point scan, which
+    # is cheaper than caching the candidates (measured 0.57 s vs
+    # 1.26 s cold at sf0.1: the InMemoryRelation breaks whole-stage
+    # codegen and pays a columnar cache write).
     probe = _probe_cells(points, art["levels"], be, lon_col, lat_col)
     cand = probe.join(
         F.broadcast(art["cover_df"]), F.col("__cell") == F.col("cell"), "inner"
     )
-    if persist_candidates is None:
-        from .knn_join import _plan_size_bytes
-
-        # -1 (stats unavailable) falls into the no-persist branch — the
-        # cheap-recompute default — instead of raising (ADVICE r4)
-        points_bytes = _plan_size_bytes(points)
-        persist_candidates = (
-            art["frac"] <= _PERSIST_FRACTION and points_bytes >= _PERSIST_MIN_BYTES
-        )
-    if persist_candidates:
-        # Memory stays bounded across repeated invocations WITHOUT an
-        # explicit unpersist: the memo reuses the same cover_df, so the
-        # candidate plans of successive invocations canonicalize equal
-        # and CacheManager keeps exactly ONE entry (verified: 1
-        # persistent RDD after 10 invocations). Re-invocations reuse it
-        # — steady-state service behavior; benchmarks that want
-        # cold-pipeline numbers clear the cache between reps (bench.py).
-        cand = cand.persist()
 
     _refine = art["refine"]
     full_hits = cand.where(F.col("full")).drop("cell", "full", "__cell")
@@ -967,14 +900,14 @@ _COVER_TASK_BYTES = 256 * 1024
 # strand three cached datasets per call; keep the most recent few
 # calls' frames and unpersist (never destroy — re-executing an old
 # returned plan then recomputes instead of erroring) the rest.
-_TABLE_PERSIST_KEEP = 3
-_TABLE_PERSIST_LRU: list[tuple] = []
+_TABLE_CACHE_KEEP = 3
+_TABLE_CACHE_LRU: list[tuple] = []
 
 
-def _table_persist_register(*frames) -> None:
-    _TABLE_PERSIST_LRU.append(frames)
-    while len(_TABLE_PERSIST_LRU) > _TABLE_PERSIST_KEEP:
-        for f in _TABLE_PERSIST_LRU.pop(0):
+def _table_cache_register(*frames) -> None:
+    _TABLE_CACHE_LRU.append(frames)
+    while len(_TABLE_CACHE_LRU) > _TABLE_CACHE_KEEP:
+        for f in _TABLE_CACHE_LRU.pop(0):
             try:
                 f.unpersist(blocking=False)
             except Exception:
@@ -1191,11 +1124,9 @@ def pip_join_table(
     # report real stats; unknown stats (LocalRelation / converted-rings
     # lineage, both already sliced ~evenly by createDataFrame or the
     # upstream shuffle) just ensure one task per core.
-    from .knn_join import _plan_size_bytes
-
     para = spark.sparkContext.defaultParallelism
-    nbytes = _plan_size_bytes(polys_df)
-    if 0 < nbytes < (1 << 60):
+    nbytes = plan_bytes(polys_df)
+    if nbytes:
         want = max(para, min(4 * para, nbytes // _COVER_TASK_BYTES + 1))
     else:
         want = para
@@ -1266,7 +1197,7 @@ def pip_join_table(
     # write of the skeleton-width candidates always beats a second
     # shuffle, at bench scale and at 10^12 rows alike.
     cand = cand.persist()
-    _table_persist_register(polys_df, cover, cand)
+    _table_cache_register(polys_df, cover, cand)
     full_hits = cand.where(F.col("full")).drop("__cell", "full")
     partial = cand.where(~F.col("full")).drop("__cell", "full")
 

@@ -732,7 +732,6 @@ def decontaminate(
     k: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_bench: bool | None = None,
 ) -> DataFrame:
     """Drop every corpus document that shares ANY word ``k``-gram with
     the benchmark set — n-gram decontamination (the GPT-3/Gopher
@@ -743,12 +742,11 @@ def decontaminate(
     which for real eval suites (10^4-10^6 docs) is tiny next to a
     10^12-row corpus, so it broadcasts and the contamination probe is
     shuffle-free; the final step is one left-anti join on the id.
-    ``broadcast_bench=None`` auto-decides (hint below Catalyst's
-    threshold, AQE above); pass False to force a shuffle join when the
-    "benchmark" is itself corpus-sized. Boilerplate shingles shared by
-    millions of docs are the skew case — they only inflate the
-    contaminated-id set, never a hot reduce key, because the probe
-    ends in a semi-join collapse.
+    The hint is pinned only below Catalyst's broadcast threshold; a
+    corpus-sized "benchmark" is left to AQE (shuffle). Boilerplate
+    shingles shared by millions of docs are the skew case — they only
+    inflate the contaminated-id set, never a hot reduce key, because
+    the probe ends in a semi-join collapse.
 
     Returns the surviving corpus rows unchanged.
     """
@@ -764,7 +762,7 @@ def decontaminate(
     b_sh = bench.select(w).select(F.explode(sh).alias("sh")).distinct()
     from .embedding import _maybe_broadcast
 
-    b_sh = _maybe_broadcast(b_sh, broadcast_bench)
+    b_sh = _maybe_broadcast(b_sh)
     bad = c_sh.join(b_sh, "sh").select(id_col).distinct()
     return corpus.join(bad, id_col, "left_anti")
 

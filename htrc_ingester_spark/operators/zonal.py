@@ -33,7 +33,6 @@ def zonal_stats(
     res_max: int | None = None,
     lon_col: str = "lon",
     lat_col: str = "lat",
-    persist_candidates: bool | None = None,
 ) -> DataFrame:
     """Per-polygon ``(n, sum, avg, min, max)`` of ``value_col`` over the
     points each polygon contains (even-odd multi-ring semantics, same
@@ -48,7 +47,6 @@ def zonal_stats(
         res_max=res_max,
         lon_col=lon_col,
         lat_col=lat_col,
-        persist_candidates=persist_candidates,
     )
     v = F.col(value_col)
     return hits.groupBy("poly_id").agg(

@@ -9,6 +9,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 
@@ -30,6 +31,51 @@ def static_plan(spark: SparkSession):
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+# Catalyst reports Long.MaxValue bytes for any plan it cannot size (every
+# frame built from a Python list or an RDD); Project stats then scale that
+# sentinel by column width (a 2-of-3-column projection reports ~6.9e18), so
+# everything from one exbibyte up is read as "unknown", not as a real size.
+_UNKNOWN_BYTES = 1 << 60
+
+FORCE_DISTRIBUTED = "spark.htrc.forceDistributed"
+
+
+def plan_bytes(df) -> int | None:
+    """Catalyst's optimized-plan size estimate in bytes — no action, no
+    scan (parquet sources report real footer sizes; a frame that
+    optimizes to empty reports 0). ``None`` when the stats raise or
+    carry the unknown-size sentinel."""
+    try:
+        est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (AttributeError, Py4JError):  # no JVM plan, or stats raised
+        return None
+    return None if est >= _UNKNOWN_BYTES else est
+
+
+def broadcast_threshold(spark: SparkSession) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` in bytes, as the session's
+    SQLConf parses it (-1 = broadcast disabled)."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
+def fits_driver(spark: SparkSession, size: int | None, budget: int) -> bool:
+    """The one regime gate every dual-regime operator decides through:
+    True picks the bounded regime (collect to the driver, or pin a
+    broadcast), False the scalable distributed/shuffle one.
+
+    An unknown ``size`` (None) takes the scalable regime; a ``budget``
+    of 0 or less never fits, not even an empty input; and the session
+    conf ``spark.htrc.forceDistributed=true`` forces the scalable
+    regime everywhere (the parity tests' switch, and the setting for a
+    cluster whose driver must hold nothing)."""
+    return (
+        size is not None
+        and 0 < budget
+        and size <= budget
+        and spark.conf.get(FORCE_DISTRIBUTED, "false").strip().lower() != "true"
+    )
 
 
 def materialize(df, eager: bool = True):

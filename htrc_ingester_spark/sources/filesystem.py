@@ -96,20 +96,16 @@ def read_pairtree(
     missing = keyed.join(meta, "_cleaned", "left_anti").select(id_col)
     hits = matched.limit(point_read_max + 1).collect()
     if len(hits) <= point_read_max:
+        # the matched rows themselves, under matched's schema: the
+        # caller's id type and one row per requested id (duplicates
+        # included), exactly what the full scan below returns
+        lut = spark.createDataFrame(hits, matched.schema)
         if not hits:
-            empty = spark.createDataFrame(
-                [], f"{id_col} string, path string, length long, content binary"
-            )
-            return empty, missing
-        by_path = {r["path"]: (r[id_col], r["length"]) for r in hits}
+            return lut.withColumn("content", F.lit(None).cast("binary")), missing
         content = (
             spark.read.format("binaryFile")
-            .load(list(by_path))
+            .load(sorted({r["path"] for r in hits}))
             .select("path", "content")
-        )
-        lut = spark.createDataFrame(
-            [(p, v, ln) for p, (v, ln) in by_path.items()],
-            f"path string, {id_col} string, length long",
         )
         found = lut.join(content, "path").select(id_col, "path", "length", "content")
         return found, missing

@@ -93,22 +93,25 @@ def parse_batch(batch_df: DataFrame) -> DataFrame:
     always compared (src_file, pos) across batches — this brings the
     MERGE path to the same discipline). File names carry a sortable
     numeral per the dlog convention (dlog-<ts> / t-<ts>); a name with
-    no digits, a 13+-digit numeral (would overflow the 43-bit pack;
-    epoch SECONDS fit), or a file of ≥2^20 lines fails the batch
-    loudly rather than silently mis-ordering. posexplode of the
-    file's own line array → EXACT within-file order (no dependence on
-    split or partition scheduling)."""
+    no digits, more than one digit run (concatenating the runs would
+    order dlog-2-10 after dlog-10-2), a 13+-digit numeral (would
+    overflow the 43-bit pack; epoch SECONDS fit), or a file of ≥2^20
+    lines fails the batch loudly rather than silently mis-ordering.
+    posexplode of the file's own line array → EXACT within-file order
+    (no dependence on split or partition scheduling)."""
     base = "element_at(split(src_file, '/'), -1)"
-    digits = f"regexp_replace({base}, '[^0-9]', '')"
     fnum = (
-        f"case when {digits} = '' then"
+        "case when size(_runs) = 0 then"
         f" cast(raise_error(concat('dlog file name has no numeric ordinal: ', {base})) as long)"
-        f" when length({digits}) > 12 then"
+        " when size(_runs) > 1 then"
+        f" cast(raise_error(concat('dlog file name has more than one numeric run: ', {base})) as long)"
+        " when length(_runs[0]) > 12 then"
         f" cast(raise_error(concat('dlog file-name ordinal too large to order: ', {base})) as long)"
-        f" else cast({digits} as long) end"
+        " else cast(_runs[0] as long) end"
     )
     ranked = (
-        batch_df.withColumn("_fnum", F.expr(fnum))
+        batch_df.withColumn("_runs", F.expr(f"regexp_extract_all({base}, '[0-9]+', 0)"))
+        .withColumn("_fnum", F.expr(fnum))
         .select(
             "_fnum",
             "src_file",
@@ -445,10 +448,10 @@ def geofence_stream(
     stream-static (the cover is a driver-built broadcast), the refine
     is a stateless pandas UDF, and containment is row-local — so there
     is no state store, no watermark, and late data needs no handling
-    (a late point is just a late hit). The only batch-mode knob that
-    must flip is ``persist_candidates`` (caching a streaming frame is
-    illegal): the full/partial split's second consumer re-reads the
-    micro-batch, which is in-memory by construction.
+    (a late point is just a late hit). The full/partial split's second
+    consumer re-reads the micro-batch, which is in-memory by
+    construction (the broadcast regime caches nothing — caching a
+    streaming frame is illegal).
 
     Output == batch ``pip_join`` on the same rows
     (test_streaming.test_geofence_stream_equals_batch, fence set
@@ -461,14 +464,17 @@ def geofence_stream(
     that dispatch is refused here with a clear error instead of an
     AnalysisException at query start. (A larger fence catalog wants a
     stream-static join against a pre-built cover table; the broadcast
-    regime covers the realistic geofencing range.)"""
+    regime covers the realistic geofencing range.) The same refusal
+    applies under ``spark.htrc.forceDistributed=true``, which would
+    dispatch any fence set to the table regime."""
     from ..operators.pip_join import _TABLE_POLYS_BUDGET, pip_join
+    from ..session import fits_driver
 
-    if len(polys) > _TABLE_POLYS_BUDGET:
+    if not fits_driver(spark, len(polys), _TABLE_POLYS_BUDGET):
         raise ValueError(
             f"geofence_stream supports at most {_TABLE_POLYS_BUDGET} fence "
-            f"polygons (got {len(polys)}): the cover-as-table regime that "
-            "larger sets dispatch to cannot run on a streaming point frame"
+            f"polygons (got {len(polys)}) and no spark.htrc.forceDistributed: "
+            "the cover-as-table regime cannot run on a streaming point frame"
         )
     return pip_join(
         spark,
@@ -478,7 +484,6 @@ def geofence_stream(
         res_max=res_max,
         lon_col=lon_col,
         lat_col=lat_col,
-        persist_candidates=False,
     )
 
 

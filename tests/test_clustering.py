@@ -68,15 +68,16 @@ def test_deterministic_under_repartitioning(spark, vec_df):
     assert (a.cluster.to_numpy() == b.cluster.to_numpy()).all()
 
 
-def test_assign_never_shuffles_by_id(spark, vec_df):
+def test_assign_never_shuffles_by_id(spark, vec_df, forced):
     # distributed regime: the assign is a broadcast of the folded
     # centroid row, never an id-keyed shuffle
-    plan = (
-        kmeans_lite(vec_df, k=4, iters=2, dim=8, driver_max_bytes=0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with forced():
+        plan = (
+            kmeans_lite(vec_df, k=4, iters=2, dim=8)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
     assert "hashpartitioning(vec_id" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     # driver-bounded regime: the assign is one map-only Arrow argmin —
@@ -205,27 +206,27 @@ class TestRegimeParity:
     """Driver-bounded numpy trainer vs the distributed Lloyd plan
     (clustering._DRIVER_TRAIN_MAX_BYTES gate): bit-identical codebooks,
     codes, assignments, and centroids on the same input — the regime
-    switch must never change a single value. driver_max_bytes=0 forces
-    the distributed plan on a LocalRelation the gate would otherwise
-    route to the driver."""
+    switch must never change a single value. spark.htrc.forceDistributed
+    forces the distributed plan on a LocalRelation the gate would
+    otherwise route to the driver."""
 
-    def test_kmeans_regimes_bit_identical(self, spark, vec_df):
+    def test_kmeans_regimes_bit_identical(self, spark, vec_df, forced):
         from htrc_ingester_spark.operators.clustering import kmeans_fit
 
         a_drv, c_drv = kmeans_fit(vec_df, k=5, iters=3, dim=8)
-        a_dst, c_dst = kmeans_fit(vec_df, k=5, iters=3, dim=8, driver_max_bytes=0)
+        with forced():
+            a_dst, c_dst = kmeans_fit(vec_df, k=5, iters=3, dim=8)
         assert sorted(map(tuple, a_drv.collect())) == sorted(map(tuple, a_dst.collect()))
         got_c = sorted((r.cluster, list(r.cv)) for r in c_drv.collect())
         want_c = sorted((r.cluster, list(r.cv)) for r in c_dst.collect())
         assert got_c == want_c
 
-    def test_pq_regimes_bit_identical(self, spark, vec_df):
+    def test_pq_regimes_bit_identical(self, spark, vec_df, forced):
         from htrc_ingester_spark.operators.clustering import pq_fit_encode
 
         codes_d, book_d = pq_fit_encode(vec_df, m=2, k=4, iters=2, dim=8)
-        codes_x, book_x = pq_fit_encode(
-            vec_df, m=2, k=4, iters=2, dim=8, driver_max_bytes=0
-        )
+        with forced():
+            codes_x, book_x = pq_fit_encode(vec_df, m=2, k=4, iters=2, dim=8)
         assert sorted((r.vec_id, list(r.codes)) for r in codes_d.collect()) == sorted(
             (r.vec_id, list(r.codes)) for r in codes_x.collect()
         )
@@ -294,19 +295,19 @@ class TestNullSemantics:
         )
         return spark.createDataFrame(pdf, "vec_id bigint, embedding array<double>")
 
-    def test_kmeans_null_vector_both_regimes(self, spark, vec_df, vec_rows):
+    def test_kmeans_null_vector_both_regimes(self, spark, vec_df, vec_rows, forced):
         ndf = self._null_df(spark, vec_rows)
         clean = {r.vec_id: r.cluster for r in kmeans_lite(vec_df, k=5, iters=2, dim=8).collect()}
-        for dmb in (None, 0):  # driver-bounded regime, forced-distributed
-            kw = {} if dmb is None else {"driver_max_bytes": dmb}
-            got = {r.vec_id: r.cluster for r in kmeans_lite(ndf, k=5, iters=2, dim=8, **kw).collect()}
+        for force in (False, True):  # driver-bounded regime, forced-distributed
+            with forced(force):
+                got = {r.vec_id: r.cluster for r in kmeans_lite(ndf, k=5, iters=2, dim=8).collect()}
             # the null row assigns to NULL...
             assert got[900] is None
             # ...and contributes nothing to training: every other
             # assignment matches the run without the null row
             assert {i: c for i, c in got.items() if i != 900} == clean
 
-    def test_pq_null_vector_codes_null_and_topk_excludes(self, spark, vec_df, vec_rows):
+    def test_pq_null_vector_codes_null_and_topk_excludes(self, spark, vec_df, vec_rows, forced):
         from htrc_ingester_spark.operators.clustering import pq_fit_encode, pq_topk
 
         ndf = self._null_df(spark, vec_rows)
@@ -315,9 +316,9 @@ class TestNullSemantics:
         )
         codes_c, book_c = pq_fit_encode(vec_df, m=2, k=4, iters=2, dim=8)
         want = pq_topk(codes_c, book_c, qdf, k_results=5, dim=8, m=2).toPandas()
-        for dmb in (None, 0):
-            kw = {} if dmb is None else {"driver_max_bytes": dmb}
-            codes, book = pq_fit_encode(ndf, m=2, k=4, iters=2, dim=8, **kw)
+        for force in (False, True):
+            with forced(force):
+                codes, book = pq_fit_encode(ndf, m=2, k=4, iters=2, dim=8)
             cmap = {r.vec_id: r.codes for r in codes.collect()}
             assert cmap[900] is None
             got = pq_topk(codes, book, qdf, k_results=5, dim=8, m=2).toPandas()
@@ -339,7 +340,7 @@ class TestNullSemantics:
         got = pq_topk(codes, book, qdf, k_results=3, dim=8, m=2).toPandas()
         assert set(got.query_id) == {"ok"}
 
-    def test_null_id_raises_in_both_regimes(self, spark, vec_rows):
+    def test_null_id_raises_in_both_regimes(self, spark, vec_rows, forced):
         pdf = pd.DataFrame(
             {
                 "vec_id": [None] + list(vec_rows)[:10],
@@ -347,10 +348,9 @@ class TestNullSemantics:
             }
         )
         ndf = spark.createDataFrame(pdf, "vec_id bigint, embedding array<double>")
-        for dmb in (None, 0):
-            kw = {} if dmb is None else {"driver_max_bytes": dmb}
-            with pytest.raises(Exception, match="NULL vec_id"):
-                kmeans_lite(ndf, k=3, iters=1, dim=8, **kw).collect()
+        for force in (False, True):
+            with forced(force), pytest.raises(Exception, match="NULL vec_id"):
+                kmeans_lite(ndf, k=3, iters=1, dim=8).collect()
 
     def test_iters_zero_raises(self, spark, vec_df):
         from htrc_ingester_spark.operators.clustering import pq_fit_encode

@@ -59,7 +59,7 @@ class TestConnectedComponents:
         got = DV.connected_components(cells_df(spark, xy), RES).toPandas()
         assert got.comp.nunique() == 2
 
-    def test_distributed_loop_matches_driver_unionfind(self, spark):
+    def test_distributed_loop_matches_driver_unionfind(self, spark, forced):
         rng = np.random.default_rng(7)
         xy = {(int(x), int(y)) for x, y in zip(rng.integers(0, 64, 300), rng.integers(0, 48, 300))}
         df = cells_df(spark, sorted(xy))
@@ -67,10 +67,11 @@ class TestConnectedComponents:
             DV.connected_components(df, RES)
             .toPandas().sort_values("cell").reset_index(drop=True)
         )
-        dist = (
-            DV.connected_components(df, RES, driver_max_cells=0)
-            .toPandas().sort_values("cell").reset_index(drop=True)
-        )
+        with forced():
+            dist = (
+                DV.connected_components(df, RES)
+                .toPandas().sort_values("cell").reset_index(drop=True)
+            )
         pd.testing.assert_frame_equal(drv, dist)
 
     def test_matches_pure_python_bfs_oracle(self, spark):
@@ -124,7 +125,7 @@ class TestEdgeComponents:
         assert m["a"] == m["b"] == m["c"] == "a"  # chain is transitive
         assert m["x"] == m["y"] == "x"
 
-    def test_distributed_loop_matches_driver_on_edges(self, spark):
+    def test_distributed_loop_matches_driver_on_edges(self, spark, forced):
         rng = np.random.default_rng(3)
         pairs = pd.DataFrame(
             {"id_a": rng.integers(0, 200, 300), "id_b": rng.integers(0, 200, 300)}
@@ -134,10 +135,11 @@ class TestEdgeComponents:
             DV.connected_components_edges(df)
             .toPandas().sort_values("node").reset_index(drop=True)
         )
-        dist = (
-            DV.connected_components_edges(df, driver_max_edges=0)
-            .toPandas().sort_values("node").reset_index(drop=True)
-        )
+        with forced():
+            dist = (
+                DV.connected_components_edges(df)
+                .toPandas().sort_values("node").reset_index(drop=True)
+            )
         pd.testing.assert_frame_equal(
             drv.astype({"node": "int64", "cluster": "int64"}),
             dist.astype({"node": "int64", "cluster": "int64"}),

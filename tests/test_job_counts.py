@@ -41,7 +41,7 @@ PINS = [
     # bounded driver-regime Bellman-Ford (r5: 53 -> 8): rasterize +
     # adjacency collapse/materialize + source collect + numpy rounds on
     # the driver + result materialize — the distributed join+min-agg
-    # rounds only run past driver_max_edges (2M collapsed edges)
+    # rounds only run past graph._DRIVER_MAX_EDGES (2M collapsed edges)
     ("raster_cost_distance", 8),
     # ring-expansion kNN: per-round materialize + active-count, three
     # size-estimate regimes collapse to the pinned-broadcast one here

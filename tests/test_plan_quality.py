@@ -33,37 +33,15 @@ class TestPIPJoinPlan:
         # (broadcast side has the only exchange)
         assert plan.count("Exchange") == plan.count("BroadcastExchange")
 
-    def test_selective_cover_persisted_single_point_scan(self, spark):
-        """Selective covers over a LARGE point side persist the
-        candidate set: both the full and partial branches read the
-        cache, so the point-side parquet scan appears ONCE in the plan
-        (VERDICT r1 #5). Forced here via persist_candidates=True — the
-        auto decision needs a ≥4 GiB Catalyst size estimate, which the
-        test fixture can't provide."""
-        pts = (
-            spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-            .selectExpr(
-                "cast(l_orderkey * 10 + l_linenumber as bigint) as image_id",
-                "cast(l_orderkey % 360 - 180 as double) as lon",
-                "cast(l_orderkey % 160 - 80 as double) as lat",
-            )
-        )
-        out = pip_join(spark, pts, data.polygons(), res=7, persist_candidates=True)
-        plan = plan_of(out)
-        # both branches read the cache (the parquet scan string inside
-        # the printed InMemoryRelation is the cache's lineage, not an
-        # executed scan)
-        assert plan.count("InMemoryTableScan") >= 2
-        out.count()  # the cached plan executes correctly end-to-end
-
     def test_small_input_skips_persist(self, spark):
-        """Below the persist size floor the default plan recomputes the
-        cheap scan instead of paying the InMemoryRelation codegen break
-        + cache write (measured 1.26 s vs 0.57 s cold at sf0.1)."""
-        # drop the equivalent cache entry the forced-persist test above
-        # registered — cached plans apply to ANY canonically-equal query
+        """The broadcast regime never caches its candidates: the plan
+        recomputes the cheap scan instead of paying the
+        InMemoryRelation codegen break + cache write (measured 1.26 s
+        vs 0.57 s cold at sf0.1). Covers a parquet point side and a
+        list-built one, whose plan size is Catalyst's unknown-size
+        sentinel."""
         spark.catalog.clearCache()
-        pts = (
+        parquet_pts = (
             spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
             .selectExpr(
                 "cast(l_orderkey * 10 + l_linenumber as bigint) as image_id",
@@ -71,8 +49,14 @@ class TestPIPJoinPlan:
                 "cast(l_orderkey % 160 - 80 as double) as lat",
             )
         )
-        out = pip_join(spark, pts, data.polygons(), res=7)
-        assert "InMemoryTableScan" not in plan_of(out)
+        pdf = data.images_meta_pdf(200)
+        list_pts = spark.createDataFrame(
+            [tuple(r) for r in pdf[["image_id", "lon", "lat"]].itertuples(index=False)],
+            "image_id string, lon double, lat double",
+        )
+        for pts in (parquet_pts, list_pts):
+            out = pip_join(spark, pts, data.polygons(), res=7)
+            assert "InMemoryTableScan" not in plan_of(out)
 
     def test_global_cover_keeps_two_scan_plan(self, spark):
         """A near-global cover must NOT persist ~everything — the
@@ -275,10 +259,11 @@ class TestRound2PlanShapes:
         assert "BroadcastHashJoin" in plan
         assert "SortMergeJoin" not in plan
 
-    def test_ann_broadcast_guard_both_shapes(self, spark):
+    def test_ann_broadcast_guard_both_shapes(self, spark, forced):
         # VERDICT r2: the query-side broadcast must be a GUARDED hint —
-        # pinned when the query frame is estimably small, absent when
-        # forced off (the 10^8-query regime where the hint would OOM)
+        # pinned when the query frame is estimably small, absent under
+        # spark.htrc.forceDistributed (the shape of the 10^8-query
+        # regime, where the hint would OOM)
         from htrc_ingester_spark.operators.embedding import ann_topk, ivf_topk
 
         rng = __import__("numpy").random.default_rng(2)
@@ -297,10 +282,11 @@ class TestRound2PlanShapes:
         )
         for fn in (ann_topk, ivf_topk):
             # optimized logical plan carries the hint before AQE runs
-            hinted = fn(data_df, q, k=3, broadcast_queries=None)
+            hinted = fn(data_df, q, k=3)
             logical = hinted._jdf.queryExecution().optimizedPlan().toString()
             assert "broadcast" in logical.lower(), fn.__name__
-            off = fn(data_df, q, k=3, broadcast_queries=False)
+            with forced():
+                off = fn(data_df, q, k=3)
             logical_off = off._jdf.queryExecution().optimizedPlan().toString()
             assert "broadcast" not in logical_off.lower(), fn.__name__
             # MATCH unchanged between the two shapes

@@ -105,31 +105,32 @@ def test_knn_loop_reliable_matches_local(spark, ck_dir):
     pd.testing.assert_frame_equal(got.reset_index(drop=True), ref.reset_index(drop=True))
 
 
-def test_cc_loop_reliable_matches_local(spark, ck_dir):
+def test_cc_loop_reliable_matches_local(spark, ck_dir, forced):
     from htrc_ingester_spark.operators.dissolve import connected_components_edges
 
     edges = spark.createDataFrame(
         pd.DataFrame({"id_a": [1, 2, 5, 6, 6], "id_b": [2, 3, 6, 7, 5]})
     )
-    # driver_max_edges=0 forces the distributed pointer-jumping loop
-    got = (
-        connected_components_edges(edges, driver_max_edges=0)
-        .toPandas()
-        .sort_values("node")
-        .reset_index(drop=True)
-    )
-    assert _ck_files(ck_dir), "cc rounds did not use the reliable dir"
-    spark.sparkContext.setCheckpointDir(None)
-    ref = (
-        connected_components_edges(edges, driver_max_edges=0)
-        .toPandas()
-        .sort_values("node")
-        .reset_index(drop=True)
-    )
+    # forceDistributed forces the distributed pointer-jumping loop
+    with forced():
+        got = (
+            connected_components_edges(edges)
+            .toPandas()
+            .sort_values("node")
+            .reset_index(drop=True)
+        )
+        assert _ck_files(ck_dir), "cc rounds did not use the reliable dir"
+        spark.sparkContext.setCheckpointDir(None)
+        ref = (
+            connected_components_edges(edges)
+            .toPandas()
+            .sort_values("node")
+            .reset_index(drop=True)
+        )
     pd.testing.assert_frame_equal(got, ref)
 
 
-def test_shortest_paths_periodic_cut_reliable(spark, ck_dir):
+def test_shortest_paths_periodic_cut_reliable(spark, ck_dir, forced):
     from htrc_ingester_spark.operators.graph import shortest_paths
 
     edges = spark.createDataFrame(
@@ -137,18 +138,19 @@ def test_shortest_paths_periodic_cut_reliable(spark, ck_dir):
             {"src": [0, 1, 2, 3, 0], "dst": [1, 2, 3, 4, 2], "w": [1, 1, 1, 1, 5]}
         )
     )
-    got = (
-        shortest_paths(edges, [0], hops=4, persist_every=1, driver_max_edges=0)
-        .toPandas()
-        .sort_values("node")
-        .reset_index(drop=True)
-    )
-    assert _ck_files(ck_dir), "periodic cuts did not use the reliable dir"
-    spark.sparkContext.setCheckpointDir(None)
-    ref = (
-        shortest_paths(edges, [0], hops=4, persist_every=1, driver_max_edges=0)
-        .toPandas()
-        .sort_values("node")
-        .reset_index(drop=True)
-    )
+    with forced():
+        got = (
+            shortest_paths(edges, [0], hops=4, persist_every=1)
+            .toPandas()
+            .sort_values("node")
+            .reset_index(drop=True)
+        )
+        assert _ck_files(ck_dir), "periodic cuts did not use the reliable dir"
+        spark.sparkContext.setCheckpointDir(None)
+        ref = (
+            shortest_paths(edges, [0], hops=4, persist_every=1)
+            .toPandas()
+            .sort_values("node")
+            .reset_index(drop=True)
+        )
     pd.testing.assert_frame_equal(got, ref)

@@ -337,17 +337,17 @@ def test_table_persist_lru_bounds_cached_frames():
         def unpersist(self, blocking=False):
             self.released = True
 
-    saved = list(P._TABLE_PERSIST_LRU)
-    P._TABLE_PERSIST_LRU.clear()
+    saved = list(P._TABLE_CACHE_LRU)
+    P._TABLE_CACHE_LRU.clear()
     try:
         gens = [tuple(Frame() for _ in range(3)) for _ in range(5)]
         for g in gens:
-            P._table_persist_register(*g)
-        assert len(P._TABLE_PERSIST_LRU) == P._TABLE_PERSIST_KEEP
-        for g in gens[: 5 - P._TABLE_PERSIST_KEEP]:
+            P._table_cache_register(*g)
+        assert len(P._TABLE_CACHE_LRU) == P._TABLE_CACHE_KEEP
+        for g in gens[: 5 - P._TABLE_CACHE_KEEP]:
             assert all(f.released for f in g)
-        for g in gens[5 - P._TABLE_PERSIST_KEEP :]:
+        for g in gens[5 - P._TABLE_CACHE_KEEP :]:
             assert not any(f.released for f in g)
     finally:
-        P._TABLE_PERSIST_LRU.clear()
-        P._TABLE_PERSIST_LRU.extend(saved)
+        P._TABLE_CACHE_LRU.clear()
+        P._TABLE_CACHE_LRU.extend(saved)

@@ -49,3 +49,28 @@ class TestRingMetrics:
         )
         plan = ring_metrics(df)._jdf.queryExecution().optimizedPlan().toString()
         assert "Exchange" not in plan and "exchange" not in plan
+
+    def test_tiny_negative_rounds_to_positive_zero_in_both_dialects(self, spark):
+        """A clockwise ring 2e-7 on a side just west/south of the origin:
+        its signed area and centroid round (6 places) to zero from the
+        negative side. DuckDB's round() alone yields -0.0 where Spark's
+        yields +0.0, which fails a bit-level hash; both must give +0.0."""
+        import duckdb
+
+        from htrc_ingester_spark.operators.ringstats import ring_metrics_oracle_sql
+
+        d = 2e-7
+        verts = [(0.0, 0.0), (0.0, -d), (-d, -d), (-d, 0.0), (0.0, 0.0)]
+        cols = ("signed_area", "area", "centroid_lon", "centroid_lat")
+        got = ring_metrics(
+            spark.createDataFrame([("p", verts)], _SCHEMA), round_to=6
+        ).collect()[0]
+        vals = ", ".join(
+            f"('p', 0, {i}, cast('{x!r}' as double), cast('{y!r}' as double))"
+            for i, (x, y) in enumerate(verts)
+        )
+        rel = f"(select * from (values {vals}) as t(poly_id, ring_idx, pt_idx, lon, lat))"
+        want = duckdb.sql(ring_metrics_oracle_sql(rel, round_to=6)).df().iloc[0]
+        for c in cols:
+            assert getattr(got, c) == 0.0 and math.copysign(1.0, getattr(got, c)) == 1.0, c
+            assert want[c] == 0.0 and math.copysign(1.0, want[c]) == 1.0, c

@@ -6,6 +6,8 @@ strategy with a synthesized fixture instead of a shipped one)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -89,6 +91,24 @@ class TestPairtree:
         assert bytes(got.content.iloc[0]) == f"payload-{sorted(ids)[0]}".encode()
         assert [r.volume_id for r in missing.collect()] == ["missing.id"]
 
+        # point read (default) and full scan (point_read_max=0) agree on
+        # a duplicated non-string id: the caller's id type and row
+        # multiplicity survive both paths
+        FS.write_pairtree(
+            spark.createDataFrame([("4417", b"n")], "volume_id string, content binary"),
+            str(tmp_path),
+        )
+        req = spark.createDataFrame([(4417,), (4417,), (9,)], "volume_id bigint")
+        results = []
+        for limit in (10_000, 0):
+            found, missing = FS.read_pairtree(spark, str(tmp_path), req, point_read_max=limit)
+            assert dict(found.dtypes)["volume_id"] == "bigint"
+            assert [r.volume_id for r in missing.collect()] == [9]
+            results.append(
+                sorted((r.volume_id, r.length, bytes(r.content)) for r in found.collect())
+            )
+        assert results[0] == results[1] == [(4417, 1, b"n"), (4417, 1, b"n")]
+
     def test_segment_path_shape(self, spark, tmp_path):
         df = spark.createDataFrame([("uc2.ark:/13960/ta", b"x")], "volume_id string, content binary")
         FS.write_pairtree(df, str(tmp_path))
@@ -101,61 +121,78 @@ class TestPairtree:
         assert rel == "uc/2,/ar/k+/=1/39/60/=t/a/uc2,ark+=13960=ta.zip"
 
 
-REAL_METS = "/root/reference/src/test/resources/39002034644600.mets.xml"
+METS_FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "compact.mets.xml")
+N_PAGES = 12
+BLANK_PAGES = {4, 9, 12}
 
 
-@pytest.mark.skipif(not __import__("os").path.exists(REAL_METS), reason="reference fixture absent")
+def _page_body(i: int) -> bytes:
+    """The OCR text the fixture's SIZE/CHECKSUM attributes describe."""
+    return b"" if i in BLANK_PAGES else f"Page {i} of the compact METS fixture.\n".encode()
+
+
 class TestRealMETSFixture:
-    """The reference's own gnarly real-world fixture (6,396 lines, 430
-    pages, 3 fptrs per div) parsed at runtime from the read-only
-    reference checkout — the parity case TestMETSParser.java:55-122
-    exercises: lookups by filename and by ID agree, pageCount is
-    consistent."""
+    """A compact hand-written METS document with the real HathiTrust
+    shape (tests/fixtures/compact.mets.xml): an XML encoding
+    declaration, 3 fptrs per page div (image, ocr, coordOCR — only one
+    OCR), pages nested inside ORDER-bearing section divs, blank 0-byte
+    pages, and MD5 plus SHA-1 checksums in lower- and uppercase hex.
+    The parity case TestMETSParser.java:55-122 exercises: lookups by
+    filename and by ID agree, pageCount is consistent."""
 
     @pytest.fixture(scope="class")
     def pages(self, spark):
         import pandas as pd
 
-        with open(REAL_METS) as f:
+        with open(METS_FIXTURE) as f:
             xml = f.read()
+        assert xml.startswith('<?xml version="1.0" encoding="UTF-8"?>')
         df = spark.createDataFrame(
-            pd.DataFrame({"volume_id": ["39002034644600"], "mets_xml": [xml]})
+            pd.DataFrame({"volume_id": ["fixture.0001"], "mets_xml": [xml]})
         )
         parsed = M.parse_mets(df)
         return M.pages_table(parsed) + (parsed,)
 
-    def test_all_430_ocr_pages_assembled(self, pages):
+    def test_all_ocr_pages_assembled(self, pages):
         pg, orphans, parsed = pages
         got = pg.toPandas()
-        assert len(got) == 430
+        assert len(got) == N_PAGES
         # distinct by filename AND by id (the reference's two indices)
-        assert got.filename.nunique() == 430
-        assert got.file_id.nunique() == 430
-        assert M.page_count(pg).collect()[0].page_count == 430
+        assert got.filename.nunique() == N_PAGES
+        assert got.file_id.nunique() == N_PAGES
+        assert M.page_count(pg).collect()[0].page_count == N_PAGES
 
-    def test_orders_are_dense_1_to_430(self, pages):
+    def test_orders_are_dense_innermost_div(self, pages):
         pg, _, _ = pages
         got = pg.toPandas()
-        assert sorted(got["order"]) == list(range(1, 431))
-        assert set(got.sequence) == {f"{i:08d}" for i in range(1, 431)}
+        # the section divs carry ORDER 1 and 2 too: every fptr must
+        # take its innermost (page) div's order, once
+        assert sorted(got["order"]) == list(range(1, N_PAGES + 1))
+        assert set(got.sequence) == {f"{i:08d}" for i in range(1, N_PAGES + 1)}
 
     def test_non_ocr_fptrs_are_orphans_not_pages(self, pages):
         _, orphans, parsed = pages
-        # 1290 fptrs, 430 point at ocr files → 860 orphan fptrs
-        assert orphans.count() == 860
+        # 3 fptrs per page, 1 points at an ocr file → 2 orphans per page
+        assert orphans.count() == 2 * N_PAGES
         p = parsed.toPandas()
         assert (p.kind == "error").sum() == 0
         assert (p.kind == "dup_file").sum() == 0
 
-    def test_checksums_are_md5_hex(self, pages):
+    def test_checksums_match_declared_type(self, pages):
+        import hashlib
+
         pg, _, _ = pages
-        got = pg.toPandas()
-        assert (got.checksum_type == "MD5").all()
-        assert got.checksum.str.fullmatch("[0-9a-f]{32}").all()
-        # the real volume has 13 legitimately EMPTY ocr pages (blank
-        # scans) — size 0 is valid data, not a parse failure
-        assert (got["size"] >= 0).all()
-        assert (got["size"] == 0).sum() == 13
+        got = pg.toPandas().sort_values("order")
+        assert got.checksum_type.value_counts().to_dict() == {"MD5": 8, "SHA-1": 4}
+        assert got.checksum.str.fullmatch("[0-9a-f]+").sum() == 9
+        assert got.checksum.str.fullmatch("[0-9A-F]+").sum() == 3
+        for r in got.itertuples():
+            body = _page_body(r.order)
+            algo = hashlib.md5 if r.checksum_type == "MD5" else hashlib.sha1
+            assert r.checksum.lower() == algo(body).hexdigest(), r.order
+            assert r.size == len(body), r.order
+        # blank scans: size 0 is valid data, not a parse failure
+        assert set(got.loc[got["size"] == 0, "order"]) == BLANK_PAGES
 
 
 class TestSourcesEdgeContracts:

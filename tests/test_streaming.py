@@ -1022,3 +1022,22 @@ def test_geofence_stream_refuses_table_regime_fence_sets(spark):
     )
     with _pytest.raises(ValueError, match="fence polygons"):
         S.geofence_stream(spark, stream, big)
+
+
+def test_parse_batch_seq_from_exactly_one_digit_run(spark):
+    """The file-name ordinal is ONE digit run: concatenating every run
+    made dlog-2-10 → 210 sort after dlog-10-2 → 102, so both names
+    must fail the batch; the zero-padded single-run convention
+    (dlog-000123.log) keeps its ordinal."""
+    def seqs(name):
+        df = spark.createDataFrame(
+            [("root/ab/uc2,ark+=13960=ta.zip\nroot/ab/uc2,ark+=13960=tb.zip\n",
+              f"file:///logs/run-7/{name}")],
+            "value string, src_file string",
+        )
+        return sorted(r.seq for r in S.parse_batch(df).collect())
+
+    assert seqs("dlog-000123.log") == [123 << 20, (123 << 20) + 1]
+    for name in ("dlog-2-10", "dlog-10-2"):
+        with pytest.raises(Exception, match="more than one numeric run"):
+            seqs(name)

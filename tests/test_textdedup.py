@@ -494,11 +494,12 @@ class TestDecontaminate:
         assert 10 not in got and 12 not in got          # contaminated dropped
         assert {11, 13, 14} <= got                      # clean + short kept
 
-    def test_broadcast_shapes_same_result(self, spark):
+    def test_broadcast_shapes_same_result(self, spark, forced):
         corpus = spark.createDataFrame(pd.DataFrame(self.CORPUS, columns=["doc_id", "text"]))
         bench = spark.createDataFrame(pd.DataFrame(self.BENCH, columns=["doc_id", "text"]))
-        a = TD.decontaminate(corpus, bench, k=5, broadcast_bench=True)
-        b = TD.decontaminate(corpus, bench, k=5, broadcast_bench=False)
+        a = TD.decontaminate(corpus, bench, k=5)
+        with forced():
+            b = TD.decontaminate(corpus, bench, k=5)
         assert {r.doc_id for r in a.collect()} == {r.doc_id for r in b.collect()}
         pa = a._jdf.queryExecution().executedPlan().toString()
         pb = b._jdf.queryExecution().executedPlan().toString()
