@@ -1,8 +1,10 @@
 """Planar/spherical geometry kernels: ray-casting PIP, haversine, covers.
 
-All kernels are vectorized numpy over batches of points — these run
-inside Arrow UDFs (one call per Arrow batch, never per row), per the
-no-per-row-Python rule.
+All kernels are vectorized numpy over batches of points — they run on
+the driver (cover builds) or inside Arrow UDFs (one call per Arrow
+batch, never per row), per the no-per-row-Python rule. The ray cast
+also has formula-for-formula twins outside Python (listed below), so
+every path decides containment identically.
 
 Containment convention (deterministic, asserted by tests):
 
@@ -20,8 +22,10 @@ Containment convention (deterministic, asserted by tests):
   round-trip perturbs values by ~1 ulp of 180, which would break the
   half-open edge rule above for points lying exactly on an edge —
   the conditional keeps boundary semantics bit-deterministic, and
-  every twin replicates it: the batch cover kernel, the DuckDB
-  oracle SQL builder, the independent test oracles).
+  every twin replicates it: the batch cover kernel, pip_join's
+  native Catalyst refine (operators/pip_join.py ``_crossing_sql``,
+  numpy's float ``%`` rebuilt from Spark's fmod), the DuckDB oracle
+  SQL builder, the independent test oracles).
 - **Polar caps** (ring whose unwrapped lon winds a full ±360°): the
   cap contains the pole on the side of the ring's mean latitude; a
   point is inside iff the meridian ray from the point to that pole
@@ -70,6 +74,16 @@ def unwrap_ring(ring_lon: np.ndarray) -> np.ndarray:
     return np.concatenate([[lon[0]], lon[0] + np.cumsum(w)])
 
 
+def close_ring(r_lon: np.ndarray, r_lat: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Append the first vertex to an open ring of 3+ vertices — the
+    closure every ring-consuming kernel applies before unwrapping, so
+    the closing edge counts toward edges, bboxes and winding alike
+    (rings under 3 vertices are left as given: they contain nothing)."""
+    if len(r_lon) >= 3 and (r_lon[0] != r_lon[-1] or r_lat[0] != r_lat[-1]):
+        return np.concatenate([r_lon, r_lon[:1]]), np.concatenate([r_lat, r_lat[:1]])
+    return r_lon, r_lat
+
+
 def ring_winding(ring_lon: np.ndarray) -> int:
     """Net longitude winding in full turns (±1 ⇒ polar cap ring)."""
     u = unwrap_ring(np.asarray(ring_lon, dtype=np.float64))
@@ -107,10 +121,7 @@ def points_in_ring(lon: np.ndarray, lat: np.ndarray, ring_lon: np.ndarray, ring_
     r_lat = np.asarray(ring_lat, dtype=np.float64)
     if r_lon.shape[0] < 3:
         return np.zeros(lon.shape, dtype=bool)
-    # ensure closure
-    if r_lon[0] != r_lon[-1] or r_lat[0] != r_lat[-1]:
-        r_lon = np.concatenate([r_lon, r_lon[:1]])
-        r_lat = np.concatenate([r_lat, r_lat[:1]])
+    r_lon, r_lat = close_ring(r_lon, r_lat)
     u = unwrap_ring(r_lon)
     wind = int(round((u[-1] - u[0]) / 360.0))
     if wind == 0:
@@ -123,8 +134,9 @@ def points_in_ring(lon: np.ndarray, lat: np.ndarray, ring_lon: np.ndarray, ring_
         # bottom edge IN, right/top OUT) for points lying EXACTLY on a
         # ring edge: the raw comparison plon < x_edge is the convention;
         # the perturbed one flipped it by drift direction. Mirrored
-        # bit-for-bit by the SQL oracle builder (plans/catalog.py) and
-        # the batch cover kernel (operators/pip_join.py).
+        # bit-for-bit by the SQL oracle builder (plans/catalog.py), the
+        # batch cover kernel and the native refine predicate
+        # (operators/pip_join.py).
         lo, hi = u.min(), u.max()
         center = 0.5 * (lo + hi)
         delta = lon - center
@@ -188,12 +200,14 @@ def ring_bbox(ring_lon, ring_lat):
     """(lon_min, lat_min, lon_max, lat_max) in the unwrapped frame;
     lon_min > 180-normalized lon_max signals antimeridian crossing.
     For polar caps, the bbox extends to the enclosed pole."""
-    r_lon = np.asarray(ring_lon, dtype=np.float64)
-    r_lat = np.asarray(ring_lat, dtype=np.float64)
+    r_lon, r_lat = close_ring(
+        np.asarray(ring_lon, dtype=np.float64), np.asarray(ring_lat, dtype=np.float64)
+    )
     u = unwrap_ring(r_lon)
     wind = int(round((u[-1] - u[0]) / 360.0))
     if wind != 0:
-        north = bool(np.mean(r_lat) > 0.0)
+        # the pole points_in_ring assigns the cap (closing vertex excluded)
+        north = bool(np.mean(r_lat[:-1]) > 0.0)
         if north:
             return -180.0, float(r_lat.min()), 180.0 - 1e-12, 90.0
         return -180.0, -90.0, 180.0 - 1e-12, float(r_lat.max())

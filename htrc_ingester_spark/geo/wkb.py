@@ -42,6 +42,12 @@ __all__ = [
     "polys_df_from_wkb_column",
 ]
 
+# Driver-collect budget of the spec-list column loaders (here and in
+# geo.wkt): pip_join's broadcast-regime polygon budget
+# (operators/pip_join.py _TABLE_POLYS_BUDGET). Past it the polygon side
+# belongs in a DataFrame.
+_COLLECT_MAX_POLYS = 4096
+
 _POLYGON = 3
 _MULTIPOLYGON = 6
 _EWKB_Z = 0x8000_0000
@@ -264,11 +270,24 @@ def polys_from_wkb_column(df, id_col: str = "poly_id", wkb_col: str = "wkb") -> 
     """Spark DataFrame (id, binary wkb) → spec list — the GeoParquet
     arrival path (geometry column read by spark.read.parquet IS a WKB
     binary column). Collects: the polygon side is the driver-indexed
-    broadcast side of the PIP join by design (past the polygon budget,
-    decode distributed instead and hand pip_join_table a rings
-    DataFrame)."""
-    rows = df.select(id_col, wkb_col).collect()
+    broadcast side of the PIP join by design. Past the polygon budget
+    (``_COLLECT_MAX_POLYS``) it raises; decode distributed with
+    :func:`polys_df_from_wkb_column` + ``pip_join_table`` instead."""
+    rows = _collect_polys(df, id_col, wkb_col, "polys_df_from_wkb_column")
     return polys_from_wkb((r[0], bytes(r[1])) for r in rows)
+
+
+def _collect_polys(df, id_col: str, geom_col: str, twin: str) -> list:
+    """Collect (id, geometry) rows for a spec-list loader, at most
+    ``_COLLECT_MAX_POLYS`` of them: one ``limit(budget + 1)`` collect,
+    and a ValueError naming the distributed ``twin`` past the budget."""
+    rows = df.select(id_col, geom_col).limit(_COLLECT_MAX_POLYS + 1).collect()
+    if len(rows) > _COLLECT_MAX_POLYS:
+        raise ValueError(
+            f"more than {_COLLECT_MAX_POLYS} polygons to collect to the driver; "
+            f"use {twin} + pip_join_table, which keep the polygon side distributed"
+        )
+    return rows
 
 
 def _ingest_polys_df(df, cols: list, parse_row, out: str = "wkb"):

@@ -137,8 +137,11 @@ def polys_from_wkt_column(df, id_col: str = "poly_id", wkt_col: str = "wkt") -> 
     """Spark DataFrame (id, wkt) → spec list. Collects: the polygon
     side is the driver-indexed broadcast side of the PIP join by
     design (see module docstring). Past the polygon budget use
-    :func:`polys_df_from_wkt_column` + ``pip_join_table`` instead."""
-    rows = df.select(id_col, wkt_col).collect()
+    :func:`polys_df_from_wkt_column` + ``pip_join_table`` instead
+    (past it this raises — see geo.wkb._collect_polys)."""
+    from .wkb import _collect_polys
+
+    rows = _collect_polys(df, id_col, wkt_col, "polys_df_from_wkt_column")
     return polys_from_wkt((r[0], r[1]) for r in rows)
 
 

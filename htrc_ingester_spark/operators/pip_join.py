@@ -1,4 +1,4 @@
-"""Point-in-polygon join: broadcast adaptive cell-cover + vectorized refine.
+"""Point-in-polygon join: broadcast adaptive cell-cover + native refine.
 
 Scale design (the part that must survive 100 TB / 10^12 rows):
 
@@ -8,10 +8,10 @@ Scale design (the part that must survive 100 TB / 10^12 rows):
    polygon is emitted as ``full`` at the coarsest resolution that fits
    (any point in it matches with NO exact test); a cell the ring
    boundary may cross is subdivided; at ``res_max`` the surviving
-   boundary cells are emitted as ``partial``. The refine UDF therefore
+   boundary cells are emitted as ``partial``. The refine therefore
    only ever sees an O(perimeter / cell_size) shell — measured on the
-   bench pipeline this cut Python-side traffic ~30x vs a single-res
-   cover whose cells were larger than the polygons (all-partial).
+   bench pipeline this cut refine traffic ~30x vs a single-res cover
+   whose cells were larger than the polygons (all-partial).
 
 2. The cover is a tiny broadcast DataFrame probed in one of two
    shapes, chosen at index-build time (round 4): covers expanding to
@@ -22,13 +22,19 @@ Scale design (the part that must survive 100 TB / 10^12 rows):
    rows by k, but the cover stays O(perimeter)-bounded). Either way
    there is zero shuffle of the image side; image ``bytes`` never
    move — the join runs on the (image_id, lon, lat) skeleton per the
-   bounded-shuffle rule in BASELINE.json. Driver-side index artifacts
-   (cover, ring broadcast, refine UDF) are content-keyed and memoized
-   per session — built once, reused by every invocation.
+   bounded-shuffle rule in BASELINE.json. The cover frame is
+   content-keyed and memoized per session — built once, reused by
+   every invocation.
 
-3. Partial candidates go through ONE Arrow-batched pandas UDF that
-   groups the batch by poly_id and ray-casts each group vectorized
-   (geo.geometry.points_in_ring).
+3. Each partial cover row carries the ring edges a point in that cell
+   can cross (``edges``, filtered on the driver — about 2 per cell for
+   a simple polygon) and the polygon's cap-ring parity. The refine is
+   ONE Catalyst predicate in the same scan as the broadcast join,
+   ``full OR (cap_parity != aggregate(edges, false, acc != crossing))``
+   — a formula-for-formula twin of geo.geometry.points_in_ring, so no
+   Python worker runs and the points are read once (a pandas-UDF
+   refine needed a second scan for its partial branch and a Python
+   worker pool per session).
 
 Classification is conservative-exact: ``full`` requires ALL cell
 corners inside AND no ring-edge bbox overlapping the cell's bbox
@@ -54,6 +60,7 @@ import hashlib
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -80,6 +87,36 @@ def poly_rings(p: dict) -> list[np.ndarray]:
     return [a for a in arrs if len(a)]
 
 
+# Smallest outward pad of a cell box, in the cover classifiers and the
+# per-cell edge filter alike: the encode maps a point to its cell through
+# float arithmetic, so a point can sit a few ulps of 180° outside the box
+# cell_corners reports (e.g. lat -1e-15 encodes into the row above 0).
+# Padding keeps such a point's cell partial — refined exactly — wherever
+# the polygon comes within the pad of the box.
+_CELL_PAD_DEG = 1e-9
+
+
+def _cell_boxes(cells: np.ndarray, be) -> tuple:
+    """(corner lons, corner lats, lon0, lon1, lat0, lat1): the
+    backend's cell corners (n, C) and their min/max box padded outward.
+    The backend pad is 0 for h3lite (cells ARE lat/lon rectangles) and
+    span²-scaled for real H3, whose geodesic hexagon edges bulge past
+    the vertex min/max box (ADVICE r4); either way at least
+    ``_CELL_PAD_DEG``. A larger box only demotes full→partial / keeps
+    provably-disjoint cells, both sound directions."""
+    c_lons, c_lats = be.cell_corners(cells)
+    pad = be.bbox_pad_deg(c_lons, c_lats) if hasattr(be, "bbox_pad_deg") else 0.0
+    pad = np.maximum(pad, _CELL_PAD_DEG)
+    return (
+        c_lons,
+        c_lats,
+        c_lons.min(axis=1) - pad,
+        c_lons.max(axis=1) + pad,
+        c_lats.min(axis=1) - pad,
+        c_lats.max(axis=1) + pad,
+    )
+
+
 def _classify(cells: np.ndarray, rings: list[np.ndarray], backend=None):
     """Classify cells vs one (multi-ring, even-odd) polygon →
     (full_mask, partial_mask).
@@ -99,18 +136,8 @@ def _classify(cells: np.ndarray, rings: list[np.ndarray], backend=None):
     still requires no bbox overlap at all.
     """
     be = backend or H3LiteBackend()
-    c_lons, c_lats = be.cell_corners(cells)  # (n, C)
+    c_lons, c_lats, c_lon0, c_lon1, c_lat0, c_lat1 = _cell_boxes(cells, be)
     n_corners = c_lons.shape[1]
-    # backend-specific outward pad: 0 for h3lite (cells ARE lat/lon
-    # rectangles), span²-scaled for real H3 whose geodesic hexagon
-    # edges bulge past the vertex min/max box (ADVICE r4) — a larger
-    # box only demotes full→partial / keeps provably-disjoint cells,
-    # both sound directions
-    pad = be.bbox_pad_deg(c_lons, c_lats) if hasattr(be, "bbox_pad_deg") else 0.0
-    c_lon0 = c_lons.min(axis=1) - pad
-    c_lon1 = c_lons.max(axis=1) + pad
-    c_lat0 = c_lats.min(axis=1) - pad
-    c_lat1 = c_lats.max(axis=1) + pad
     corners_in = np.ones(len(cells), dtype=bool)
     any_corner = np.zeros(len(cells), dtype=bool)
     corner_parity = [np.zeros(len(cells), dtype=bool) for _ in range(n_corners)]
@@ -125,6 +152,9 @@ def _classify(cells: np.ndarray, rings: list[np.ndarray], backend=None):
         ).reshape(len(cells), n_corners)
         for j in range(n_corners):
             corner_parity[j] ^= par[:, j]
+        # edge bboxes over the CLOSED ring, as points_in_ring casts it:
+        # an open ring's closing edge bounds the polygon like any other
+        r_lon, r_lat = G.close_ring(r_lon, r_lat)
         u = G.unwrap_ring(r_lon)
         e_lon0 = np.minimum(u[:-1], u[1:])
         e_lon1 = np.maximum(u[:-1], u[1:])
@@ -437,12 +467,10 @@ def _cover_rings_many(
         seed_pidx = seed_pidx[keep]
     seed_rs = r_start[seed_pidx]
 
-    # ---- padded per-polygon edge tables. Parity edges mirror
-    # points_in_ring (a synthetic closing edge is appended only when
-    # the ring arrives OPEN); the per-poly kernel's edge-bbox test runs
-    # on the ring AS GIVEN (no synthetic closure), so synthetic entries
-    # are exempted from the bbox arrays — decision identity, not just
-    # soundness ----
+    # ---- padded per-polygon edge tables. Edges mirror points_in_ring
+    # (a synthetic closing edge is appended only when the ring arrives
+    # OPEN) for parity and edge bboxes alike, as in the per-poly
+    # kernel ----
     e_ring = np.where(closed[r_rows], lens[r_rows] - 1, lens[r_rows])
     e_poly = np.add.reduceat(e_ring, boff)
     e_max = int(e_poly.max())
@@ -463,7 +491,6 @@ def _cover_rings_many(
     ex2 = np.full(B * e_max, np.nan)
     ey2 = np.full(B * e_max, np.nan)
     ecen = np.full(B * e_max, np.nan)
-    syn_close = np.zeros(B * e_max, dtype=bool)
     ex1[tgt] = vlon[src1]
     ey1[tgt] = vlat[src1]
     ex2[tgt] = vlon[src2]
@@ -478,22 +505,16 @@ def _cover_rings_many(
     # (corner, ring) to stay decision-identical, not just
     # mathematically equal.
     ecen[tgt] = (0.5 * (rmin_lon[r_rows] + rmax_lon[r_rows]))[eridx]
-    syn_close[tgt] = open_last
     ex1 = ex1.reshape(B, e_max)
     ey1 = ey1.reshape(B, e_max)
     ex2 = ex2.reshape(B, e_max)
     ey2 = ey2.reshape(B, e_max)
     ecen = ecen.reshape(B, e_max)
-    syn_close = syn_close.reshape(B, e_max)
 
     e_lon0 = np.minimum(ex1, ex2)
     e_lon1 = np.maximum(ex1, ex2)
     e_lat0 = np.minimum(ey1, ey2)
     e_lat1 = np.maximum(ey1, ey2)
-    # NaN (never-hit) for the synthetic closing edges the per-poly
-    # kernel's bbox test never sees
-    for arr in (e_lon0, e_lon1, e_lat0, e_lat1):
-        arr[syn_close] = np.nan
 
     acc_c: list[np.ndarray] = []
     acc_f: list[np.ndarray] = []
@@ -501,10 +522,10 @@ def _cover_rings_many(
 
     def _classify_chunk(cells, pidx):
         c_lons, c_lats = be.cell_corners(cells)  # (n, 4)
-        cl0 = c_lons.min(axis=1)
-        cl1 = c_lons.max(axis=1)
-        ct0 = c_lats.min(axis=1)
-        ct1 = c_lats.max(axis=1)
+        cl0 = c_lons.min(axis=1) - _CELL_PAD_DEG
+        cl1 = c_lons.max(axis=1) + _CELL_PAD_DEG
+        ct0 = c_lats.min(axis=1) - _CELL_PAD_DEG
+        ct1 = c_lats.max(axis=1) + _CELL_PAD_DEG
         x1 = ex1[pidx][:, None, :]
         y1 = ey1[pidx][:, None, :]
         x2 = ex2[pidx][:, None, :]
@@ -628,8 +649,7 @@ def build_cell_cover(
             "cell": np.concatenate(rows_cell),
             # str() here keeps the cover column a real string column
             # (the documented poly_id:str contract): raw int ids would
-            # fall off the Arrow createDataFrame path downstream and
-            # mismatch the str-keyed refine broadcast dict
+            # mismatch the str-keyed ring lookup of _edge_table
             "poly_id": np.repeat(
                 np.array([str(p["poly_id"]) for p in polys], dtype=object),
                 [len(c) for c, _f in covers],
@@ -658,16 +678,16 @@ def _polys_key(polys: list[dict], res: int, res_max: int, backend_name: str) -> 
     return h.hexdigest()
 
 
-# Driver-side plan-construction artifacts, memoized per (session, polygon
-# content, res band). A long-running service (the reference's ingester
-# daemon is one — Ingester.java:332-341 loops forever on a 10s poll)
-# builds the polygon index ONCE and reuses it for every micro-batch;
-# rebuilding the cover + re-broadcasting the rings + re-registering the
-# UDF per query invocation measured ~0.25-1.4 s of pure driver-side
-# fixed cost (the round-3 flagship bench regression). Bounded: a
-# long-lived service cycling through MANY distinct polygon sets evicts
-# oldest-first (dict order) and destroys the evicted ring broadcast.
-_ARTIFACT_MEMO: dict[tuple[str, str], dict] = {}
+# The broadcast cover frame, memoized per (session, polygon content, res
+# band). A long-running service (the reference's ingester daemon is one —
+# Ingester.java:332-341 loops forever on a 10s poll) builds the polygon
+# index ONCE and reuses it for every micro-batch; rebuilding it per query
+# invocation measured ~0.25-1.4 s of pure driver-side fixed cost (the
+# round-3 flagship bench regression). Bounded: a long-lived service
+# cycling through MANY distinct polygon sets evicts oldest-first (dict
+# order). An entry is a local relation and holds no executor state, so
+# eviction just drops it.
+_ARTIFACT_MEMO: dict[tuple[str, str], tuple] = {}
 _ARTIFACT_MEMO_MAX = 64
 
 # Flat-probe ceiling: when the cover expanded to its finest level stays
@@ -723,9 +743,180 @@ def _expand_cover(cover: pd.DataFrame, fine: int, backend=None) -> pd.DataFrame:
     )
 
 
+# (cells × edges) mask elements per chunk of the per-cell edge filter
+_EDGE_MASK_CHUNK = 1 << 20
+
+_EDGE_FIELDS = ("x1", "y1", "x2", "y2", "c", "cap", "north")
+_EDGE_TYPE = pa.struct(
+    [(f, pa.bool_() if f in ("cap", "north") else pa.float64()) for f in _EDGE_FIELDS]
+)
+
+
+def _ring_edges(rings: list[np.ndarray]) -> tuple[dict, int]:
+    """One polygon's rings → its edge columns and cap-ring count, with
+    the ring preparation of geo.geometry.points_in_ring (twinned by
+    plans/catalog.py:pip_crossing_oracle_sql): open rings are closed,
+    rings under 3 vertices dropped, longitudes unwrapped. A normal ring
+    (winding 0) stamps each edge with its frame centre ``c``; a polar
+    cap (winding ±1) stamps ``c`` = the frame origin ``lo`` and the
+    enclosed pole (``north``)."""
+    cols: list[tuple] = []
+    n_caps = 0
+    for ring in rings:
+        r_lon, r_lat = ring[:, 0], ring[:, 1]
+        if len(r_lon) < 3:
+            continue
+        r_lon, r_lat = G.close_ring(r_lon, r_lat)
+        u = G.unwrap_ring(r_lon)
+        cap = int(round((u[-1] - u[0]) / 360.0)) != 0
+        if cap:
+            n_caps += 1
+            c, north = u.min(), bool(np.mean(r_lat[:-1]) > 0.0)
+        else:
+            c, north = 0.5 * (u.min() + u.max()), False
+        n = len(u) - 1
+        cols.append(
+            (u[:-1], r_lat[:-1], u[1:], r_lat[1:], np.full(n, c), np.full(n, cap), np.full(n, north))
+        )
+    if not cols:
+        return {t.name: np.array([], dtype=t.type.to_pandas_dtype()) for t in _EDGE_TYPE}, 0
+    return {f: np.concatenate(v) for f, v in zip(_EDGE_FIELDS, zip(*cols))}, n_caps
+
+
+def _cell_edges(cells: np.ndarray, e: dict, be) -> tuple[np.ndarray, np.ndarray]:
+    """Per-cell edge filter → (kept-edge count per cell, flat kept-edge
+    indices in cell order). Drops exactly the edges no point of the
+    cell can cross, so the refine stays decision-identical:
+
+    - a normal-ring edge is crossed only by a point whose lat lies in
+      its lat span, so it is kept iff that span meets the cell's padded
+      lat band (open-ended at a pole row, where the encode clamps lat);
+    - the ray runs toward +lon and a point's in-frame lon is ≥ the
+      cell's west side unless the ring's frame shift fires, so the edge
+      must also reach ``max(x1, x2) ≥ lon_min`` — a test skipped for a
+      ring whose shift can fire anywhere in the cell (a raw lon 360°
+      off its cell box is shifted back into the box by the same rule);
+    - polar-cap edges are always kept.
+
+    Cell boxes are :func:`_cell_boxes`, as in :func:`_classify`."""
+    _, _, lon0, lon1, lat0, lat1 = _cell_boxes(cells, be)
+    lon0, lon1 = lon0[:, None], lon1[:, None]
+    lat0 = np.where(lat0 <= -90.0, -np.inf, lat0)[:, None]
+    lat1 = np.where(lat1 >= 90.0, np.inf, lat1)[:, None]
+    y_lo = np.minimum(e["y1"], e["y2"])
+    y_hi = np.maximum(e["y1"], e["y2"])
+    x_hi = np.maximum(e["x1"], e["x2"])
+    counts: list[np.ndarray] = []
+    idx: list[np.ndarray] = []
+    step = max(1, _EDGE_MASK_CHUNK // max(1, len(e["c"])))
+    for s in range(0, len(cells), step):
+        sl = slice(s, s + step)
+        d0, d1 = lon0[sl] - e["c"], lon1[sl] - e["c"]
+        keep = e["cap"] | (
+            (y_lo <= lat1[sl])
+            & (y_hi >= lat0[sl])
+            & ((d0 < -180.0) | (d1 >= 180.0) | (x_hi >= lon0[sl]))
+        )
+        counts.append(keep.sum(axis=1))
+        idx.append(np.nonzero(keep)[1])
+    return np.concatenate(counts), np.concatenate(idx)
+
+
+def _edge_table(cover: pd.DataFrame, polys: list[dict], be) -> pa.Table:
+    """The broadcast cover as an Arrow table: (cell, poly_id, full,
+    cap_parity, edges). Partial rows carry their cell's filtered ring
+    edges; full rows carry none (the predicate never reads them)."""
+    # keyed by str(): the cover frame's poly_id column is a string
+    # even when the spec used int ids
+    prepared = {str(p["poly_id"]): _ring_edges(poly_rings(p)) for p in polys}
+    full = cover["full"].to_numpy()
+    pid = cover["poly_id"].to_numpy()
+    cells = cover["cell"].to_numpy()
+    # partial rows grouped per polygon, after every full row, so each
+    # group's kept edges concatenate straight into the list values
+    order = [np.nonzero(full)[0]]
+    counts = [np.zeros(len(order[0]), dtype=np.int64)]
+    values: dict[str, list[np.ndarray]] = {f: [] for f in _EDGE_FIELDS}
+    part = np.nonzero(~full)[0]
+    for poly_id, ii in pd.Series(part).groupby(pid[part]).indices.items():
+        rows = part[ii]
+        e, _ = prepared[poly_id]
+        n, kept = _cell_edges(cells[rows], e, be)
+        order.append(rows)
+        counts.append(n)
+        for f in _EDGE_FIELDS:
+            values[f].append(e[f][kept])
+    order = np.concatenate(order)
+    offsets = np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32)
+    flat = pa.StructArray.from_arrays(
+        [pa.array(np.concatenate(values[t.name]) if values[t.name] else [], type=t.type) for t in _EDGE_TYPE],
+        fields=list(_EDGE_TYPE),
+    )
+    pid = pid[order]
+    parity = {k: n_caps % 2 == 1 for k, (_e, n_caps) in prepared.items()}
+    return pa.table(
+        {
+            "cell": pa.array(cells[order], pa.int64()),
+            "poly_id": pa.array(pid, pa.string()),
+            "full": pa.array(full[order]),
+            "cap_parity": pa.array(pd.Series(pid).map(parity).to_numpy(dtype=bool)),
+            "edges": pa.ListArray.from_arrays(offsets, flat),
+        }
+    )
+
+
+def _rem360(x: str) -> str:
+    """numpy's float ``x % 360.0`` in Spark SQL: Spark's ``%`` is fmod,
+    numpy's adds the divisor to a negative fmod result. (``pmod``
+    differs where ``r + 360`` rounds to 360, and a floor form is not
+    bit-identical either.)"""
+    return f"(CASE WHEN ({x}) % 360.0D < 0.0D THEN ({x}) % 360.0D + 360.0D ELSE ({x}) % 360.0D END)"
+
+
+def _crossing_sql(lon: str, lat: str) -> str:
+    """Does the ray from point (lon, lat) cross edge ``__e``? Twin of
+    geo.geometry.points_in_ring per edge. Normal ring: the +lon ray of
+    _points_in_ring_planar with the conditional frame shift. Cap ring:
+    the meridian ray toward the enclosed pole over the shifts {0, ±360}.
+    The normal test keeps its straddle check FIRST: AND short-circuits,
+    and with ANSI on a horizontal edge's zero ``y2 - y1`` would raise."""
+    d = f"({lon} - __e.c)"
+    plon = (
+        f"(CASE WHEN {d} >= -180.0D AND {d} < 180.0D THEN {lon}"
+        f" ELSE __e.c + ({_rem360(f'{d} + 180.0D')} - 180.0D) END)"
+    )
+    normal = (
+        f"(((__e.y1 > {lat}) != (__e.y2 > {lat})) AND {plon} <"
+        f" __e.x1 + ({lat} - __e.y1) * (__e.x2 - __e.x1) / (__e.y2 - __e.y1))"
+    )
+    p = f"(__e.c + {_rem360(f'{lon} - __e.c')})"
+
+    def cap_hit(pp: str) -> str:
+        spans = f"((__e.x1 <= {pp} AND {pp} < __e.x2) OR (__e.x2 <= {pp} AND {pp} < __e.x1))"
+        t = f"(CASE WHEN __e.x2 != __e.x1 THEN ({pp} - __e.x1) / (__e.x2 - __e.x1) ELSE 0.0D END)"
+        ycross = f"(__e.y1 + {t} * (__e.y2 - __e.y1))"
+        return f"({spans} AND (CASE WHEN __e.north THEN {ycross} > {lat} ELSE {ycross} < {lat} END))"
+
+    cap = " OR ".join(cap_hit(pp) for pp in (p, f"({p} + 360.0D)", f"({p} - 360.0D)"))
+    return f"(CASE WHEN __e.cap THEN ({cap}) ELSE {normal} END)"
+
+
+def _inside(lon_col: str, lat_col: str):
+    """The refine predicate over a candidate row: a full cell matches
+    outright; a partial one is inside iff its cap parity XOR the parity
+    of the crossings over its edges is odd (even-odd over the rings,
+    a cap counting as inside at EVEN crossings). Built as SQL text: one
+    parse instead of a py4j round trip per expression node."""
+    lon, lat = (f"`{c.replace('`', '``')}`" for c in (lon_col, lat_col))
+    crossings = f"aggregate(edges, false, (__acc, __e) -> __acc != {_crossing_sql(lon, lat)})"
+    return F.expr(f"full OR (cap_parity != {crossings})")
+
+
 def _cover_artifacts(
     spark: SparkSession, polys: list[dict], res: int, res_max: int, backend=None
-) -> dict:
+) -> tuple:
+    """(cover_df, levels) for a polygon set, memoized; ``cover_df`` is
+    None when the cover is empty."""
     be = backend or H3LiteBackend()
     key = (spark.sparkContext.applicationId, _polys_key(polys, res, res_max, be.name))
     art = _ARTIFACT_MEMO.get(key)
@@ -743,53 +934,14 @@ def _cover_artifacts(
         )
         if expanded_n <= _FLAT_MAX_CELLS and (res_present != fine).any():
             cover = _expand_cover(cover, fine, backend=be)
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType(), False),
-            T.StructField("poly_id", T.StringType(), False),
-            T.StructField("full", T.BooleanType(), False),
-        ]
-    )
-    # keyed by str(): the cover frame's poly_id column is StringType,
-    # so the refine lookup arrives as a STRING even when the spec used
-    # int ids — an unnormalized key only surfaced when a point landed
-    # in a partial cell (KeyError in production, green smoke tests)
-    rings = {str(p["poly_id"]): poly_rings(p) for p in polys}
-    bc_rings = spark.sparkContext.broadcast(rings)
-
-    @F.pandas_udf(T.BooleanType())
-    def _refine(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        out = np.zeros(len(lon), dtype=bool)
-        lon_v = lon.to_numpy(dtype=np.float64)
-        lat_v = lat.to_numpy(dtype=np.float64)
-        # single-pass grouping (the _refine_join idiom) — a per-unique
-        # full-batch mask was O(unique polys × batch rows)
-        for poly_id, ii in lon.groupby(pid.to_numpy()).indices.items():
-            out[ii] = G.points_in_rings(lon_v[ii], lat_v[ii], bc_rings.value[poly_id])
-        return pd.Series(out)
-
-    art = {
-        "cover": cover,
-        "cover_df": spark.createDataFrame(cover, schema=schema) if len(cover) else None,
-        "refine": _refine,
-        "levels": np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist()
-        if len(cover)
-        else [],
-        "all_full": bool(cover["full"].all()) if len(cover) else True,
-        "_bc": bc_rings,
-    }
+        art = (
+            spark.createDataFrame(_edge_table(cover, polys, be)),
+            np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist(),
+        )
+    else:
+        art = (None, [])
     while len(_ARTIFACT_MEMO) >= _ARTIFACT_MEMO_MAX:
-        oldest = next(iter(_ARTIFACT_MEMO))  # dicts preserve insertion order
-        old = _ARTIFACT_MEMO.pop(oldest)
-        try:
-            # unpersist, NOT destroy: previously returned pip_join plans
-            # may still hold the evicted broadcast in their refine UDF —
-            # unpersist frees the executor copies but lets a later
-            # recompute re-send the value; destroy() would fail such a
-            # recompute (ADVICE r4)
-            old["_bc"].unpersist(blocking=False)
-        except Exception:
-            pass  # context gone
+        _ARTIFACT_MEMO.pop(next(iter(_ARTIFACT_MEMO)))  # dicts keep insertion order
     _ARTIFACT_MEMO[key] = art
     return art
 
@@ -844,35 +996,19 @@ def pip_join(
             lat_col=lat_col,
             backend=be,
         )
-    art = _cover_artifacts(spark, polys, res, res_max, backend=be)
-
-    if art["cover_df"] is None:
+    cover_df, levels = _cover_artifacts(spark, polys, res, res_max, backend=be)
+    if cover_df is None:
         return points.withColumn("poly_id", F.lit(None).cast("string")).where(F.lit(False))
 
-    # ONE broadcast equi-join for all cover levels: each point probes
-    # with its ancestor-chain cells (array + explode — narrow,
-    # whole-stage codegen). Cover levels are disjoint regions per
-    # polygon, so no duplicate hits. The full/partial split below has
-    # two consumers; both re-read the column-pruned point scan, which
-    # is cheaper than caching the candidates (measured 0.57 s vs
-    # 1.26 s cold at sf0.1: the InMemoryRelation breaks whole-stage
-    # codegen and pays a columnar cache write).
-    probe = _probe_cells(points, art["levels"], be, lon_col, lat_col)
-    cand = probe.join(
-        F.broadcast(art["cover_df"]), F.col("__cell") == F.col("cell"), "inner"
+    # ONE broadcast equi-join for all cover levels, refined in the same
+    # scan: full cells match outright, partial cells ray-cast their
+    # edges natively (_inside)
+    probe = _probe_cells(points, levels, be, lon_col, lat_col)
+    return (
+        probe.join(F.broadcast(cover_df), F.col("__cell") == F.col("cell"), "inner")
+        .where(_inside(lon_col, lat_col))
+        .drop("cell", "full", "cap_parity", "edges", "__cell")
     )
-
-    _refine = art["refine"]
-    full_hits = cand.where(F.col("full")).drop("cell", "full", "__cell")
-    if art["all_full"]:
-        return full_hits
-    # only the O(perimeter) res_max shell reaches the Arrow refine
-    partial_hits = (
-        cand.where(~F.col("full"))
-        .where(_refine(F.col(lon_col), F.col(lat_col), F.col("poly_id")))
-        .drop("cell", "full", "__cell")
-    )
-    return full_hits.unionByName(partial_hits)
 
 
 # ---------------------------------------------------------------------------

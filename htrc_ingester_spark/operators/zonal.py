@@ -2,13 +2,13 @@
 
 The classic raster/vector GIS op (mean elevation per watershed, image
 count + quality stats per admin region) expressed Spark-first: the
-containment test is :func:`pip_join`'s broadcast cell-cover + Arrow
-refine, and the aggregation is a plain ``groupBy(poly_id)`` — which
+containment test is :func:`pip_join`'s broadcast cell-cover + native
+ray-cast refine, and the aggregation is a plain ``groupBy(poly_id)`` — which
 Catalyst executes with map-side partial aggregation, so the only
 exchange carries ``#polys × #tasks`` partial rows, never per-point
 rows. That makes this plan already optimal at 10^12 points: points are
 never shuffled (the cover join is broadcast), points inside FULL cover
-cells skip the Arrow refine entirely (the pip_join split), and the
+cells skip the ray cast entirely (the predicate's ``full OR``), and the
 final shuffle is bounded by the polygon count.
 
 Reference analog: the per-volume page-count / size-metric rollups

@@ -10,7 +10,8 @@ flagship query has an exact DuckDB oracle — the driver value-checks it,
 not just row-counts.
 
 The Spark side still runs the real operators (broadcast cell-cover PIP
-join with full/partial classification + Arrow refine; tile column expr)
+join with full/partial classification + native ray-cast refine over
+the partial cells' edges; tile column expr)
 — the oracle just expresses the same semantics relationally.
 """
 

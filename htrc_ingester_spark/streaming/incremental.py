@@ -440,18 +440,17 @@ def geofence_stream(
 ) -> DataFrame:
     """Streaming geofencing: emit a (point, poly_id) hit row the moment
     a geotagged point lands inside a fence polygon — the EXACT
-    ``pip_join`` plan (broadcast cell-cover equi-join + O(perimeter)
-    Arrow refine, even-odd multi-ring semantics) applied per
-    micro-batch.
+    ``pip_join`` plan (broadcast cell-cover equi-join refined by a
+    native ray-cast predicate over the partial cells' edges, even-odd
+    multi-ring semantics) applied per micro-batch.
 
     Nothing about the plan is stateful: the cover join is
     stream-static (the cover is a driver-built broadcast), the refine
-    is a stateless pandas UDF, and containment is row-local — so there
-    is no state store, no watermark, and late data needs no handling
-    (a late point is just a late hit). The full/partial split's second
-    consumer re-reads the micro-batch, which is in-memory by
-    construction (the broadcast regime caches nothing — caching a
-    streaming frame is illegal).
+    is a row-local Catalyst predicate in the same scan, so there is no
+    state store, no watermark, no Python worker, and late data needs
+    no handling (a late point is just a late hit). The micro-batch is
+    read once and nothing is cached (caching a streaming frame is
+    illegal).
 
     Output == batch ``pip_join`` on the same rows
     (test_streaming.test_geofence_stream_equals_batch, fence set

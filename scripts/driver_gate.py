@@ -1,13 +1,25 @@
+"""Value gate: run every catalog entry at sf0.01 and compare it with its
+DuckDB oracle (MATCH / MISMATCH / rows-only / ERROR per entry).
+
+    python scripts/driver_gate.py                 # all entries
+    python scripts/driver_gate.py pip_ zonal      # entries whose name contains any substring
+
+Cores come from $SPARK_GRAFT_CPUS, else the CPUs this process may run on.
+"""
 import sys, math, os
-sys.path.insert(0, "/root/repo")
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 os.chdir("/tmp")  # foreign cwd like the driver might use
 import duckdb, pandas as pd
 import __spark_entry__ as E
 from htrc_ingester_spark.session import get_spark
 
 SF = "/root/testdata/sf0.01"
-spark = get_spark("gate", cores=8, shuffle_partitions=8)
+cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+spark = get_spark("gate", cores=cores, shuffle_partitions=cores)
 qs, osql = E.queries(), E.oracle_sql()
+picks = sys.argv[1:]
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.sql(f"create view {t} as select * from '{SF}/{t}.parquet'")
@@ -27,6 +39,8 @@ def canon(df):
 
 fails = []
 for name in sorted(qs):
+    if picks and not any(p in name for p in picks):
+        continue
     try:
         got = qs[name](spark, SF).toPandas()
         if name in osql:

@@ -120,10 +120,10 @@ differs between runs. One JVM per run, sequential, warm-up excluded.
   `groupBy(poly_id, tile_id)` (≤ a few thousand groups): H3 encode and
   tile hash are whole-stage-codegen column expressions; the PIP join is
   a broadcast hash join (zero shuffle of the image side); the
-  ray-casting refine is an Arrow-batched pandas UDF whose worker pool
-  scales with cores.
-- Cell-cover full/partial classification keeps the Python refine on the
-  O(perimeter) shell only; interior cells join-and-pass with no UDF.
+  ray-casting refine is a Catalyst predicate in the same scan, over
+  the few ring edges each partial cell carries — no Python worker.
+- Cell-cover full/partial classification keeps the ray cast on the
+  O(perimeter) shell only; interior cells join-and-pass untested.
 - At 1000 executors the same plan holds: broadcast cover (KBs–MBs),
   narrow encode, one small agg shuffle. The only driver-side state is
   the polygon index.

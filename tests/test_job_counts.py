@@ -73,6 +73,10 @@ PINS = [
     # per-entry floor the sandbox scheduler amortizes at scale; a
     # regression that adds an action shows up here exactly)
     ("pip_join_many_polys", 14),
+    # broadcast-regime flagship: one point scan refined in the
+    # broadcast join's own filter (the full/partial union and its
+    # pandas-UDF refine dropped one job: 6 -> 5)
+    ("flagship_pip_tiles", 5),
     ("pip_join_wkb_table", 14),
     ("pip_join_wkt_table", 14),
     # forced-cogroup twin skips the refine-shape max-agg decision job

@@ -33,6 +33,21 @@ class TestPIPJoinPlan:
         # (broadcast side has the only exchange)
         assert plan.count("Exchange") == plan.count("BroadcastExchange")
 
+    def test_native_refine_single_scan(self, spark):
+        """The broadcast regime refines in the join's own scan: no
+        Python evaluation node, no Union of full/partial branches, and
+        the point relation is scanned exactly once."""
+        pts = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").selectExpr(
+            "cast(l_orderkey * 10 + l_linenumber as bigint) as image_id",
+            "cast(l_orderkey % 360 - 180 as double) as lon",
+            "cast(l_orderkey % 160 - 80 as double) as lat",
+        )
+        plan = plan_of(pip_join(spark, pts, data.polygons(), res=7))
+        for node in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF", "Union"):
+            assert node not in plan, node
+        assert plan.count("FileScan parquet") == 1
+        assert "aggregate(edges" in plan
+
     def test_small_input_skips_persist(self, spark):
         """The broadcast regime never caches its candidates: the plan
         recomputes the cheap scan instead of paying the
@@ -59,8 +74,8 @@ class TestPIPJoinPlan:
             assert "InMemoryTableScan" not in plan_of(out)
 
     def test_global_cover_keeps_two_scan_plan(self, spark):
-        """A near-global cover must NOT persist ~everything — the
-        fallback is the two-scan plan. The rectangle needs intermediate
+        """A near-global cover must NOT persist ~everything — the plan
+        stays the uncached scan. The rectangle needs intermediate
         vertices: under the shortest-delta unwrap convention a ring
         jumping -179.9 → 179.9 is a thin antimeridian sliver, not a
         wide box."""
@@ -325,11 +340,13 @@ class TestRound2PlanShapes:
 class TestCatalogWidePlanAudit:
     """Every catalog entry's physical plan is free of row-at-a-time
     Python UDFs (BatchEvalPython). Arrow-vectorized Python
-    (ArrowEvalPython — the PIP refine / S2 encode kernels) and
-    mapInPandas (image/METS batch parsers) are the sanctioned Python
-    paths; per-row pickling in a hot path is never acceptable and this
-    sweep makes that a standing invariant for all current AND future
-    entries."""
+    (ArrowEvalPython — pip_join_table's ray-cast refine, the S2 / real
+    H3 encode kernels) and mapInPandas (image/METS batch parsers, the
+    distributed cover build) are the sanctioned Python paths; the
+    broadcast-regime pip_join refines natively and runs no Python at
+    all (TestPIPJoinPlan.test_native_refine_single_scan). Per-row
+    pickling in a hot path is never acceptable and this sweep makes
+    that a standing invariant for all current AND future entries."""
 
     def test_no_row_wise_python_udf_anywhere(self, spark):
         import __spark_entry__ as E

@@ -283,6 +283,21 @@ class TestSparkColumnIngestion:
         )
         assert a.equals(b)
 
+    def test_column_collect_fails_past_budget(self, spark, monkeypatch):
+        """The driver collect is bounded: at the budget it loads, one
+        past it raises naming the distributed twin + pip_join_table."""
+        from htrc_ingester_spark.geo import wkb
+
+        wdf = spark.createDataFrame(
+            data.polygons_holes_wkb(), "poly_id string, wkb binary"
+        )
+        n = wdf.count()
+        monkeypatch.setattr(wkb, "_COLLECT_MAX_POLYS", n)
+        assert len(wkb.polys_from_wkb_column(wdf)) == len(polys_from_wkb(data.polygons_holes_wkb()))
+        monkeypatch.setattr(wkb, "_COLLECT_MAX_POLYS", n - 1)
+        with pytest.raises(ValueError, match="polys_df_from_wkb_column.*pip_join_table"):
+            wkb.polys_from_wkb_column(wdf)
+
     def test_wkb_survives_parquet_roundtrip(self, spark, tmp_path):
         """Write the WKB column to parquet and read it back — the
         GeoParquet interchange in miniature; bytes must be identical."""
