@@ -31,6 +31,11 @@ Containment convention (deterministic, asserted by tests):
   point is inside iff the meridian ray from the point to that pole
   crosses the ring an EVEN number of times (the ray's endpoint — the
   pole — is interior, so even parity means same side as the pole).
+  The ray meets the first and last edge at longitudes that agree
+  only up to rounding (``u[0]`` and ``u[-1] ∓ 360``), so in a sliver
+  about 1e-14° wide at the first vertex's lon a point on the far side
+  crosses both or neither and counts as inside; the cover builds
+  refine that meridian (operators/pip_join.py ``_seam``).
 - **Degenerate rings** (zero area, repeated vertex, bowtie): no crash;
   even-odd parity semantics apply as-is (zero-area ⇒ nothing inside).
 """

@@ -42,12 +42,6 @@ __all__ = [
     "polys_df_from_wkb_column",
 ]
 
-# Driver-collect budget of the spec-list column loaders (here and in
-# geo.wkt): pip_join's broadcast-regime polygon budget
-# (operators/pip_join.py _TABLE_POLYS_BUDGET). Past it the polygon side
-# belongs in a DataFrame.
-_COLLECT_MAX_POLYS = 4096
-
 _POLYGON = 3
 _MULTIPOLYGON = 6
 _EWKB_Z = 0x8000_0000
@@ -271,20 +265,24 @@ def polys_from_wkb_column(df, id_col: str = "poly_id", wkb_col: str = "wkb") -> 
     arrival path (geometry column read by spark.read.parquet IS a WKB
     binary column). Collects: the polygon side is the driver-indexed
     broadcast side of the PIP join by design. Past the polygon budget
-    (``_COLLECT_MAX_POLYS``) it raises; decode distributed with
+    (pip_join's ``_TABLE_POLYS_BUDGET``) it raises; decode distributed with
     :func:`polys_df_from_wkb_column` + ``pip_join_table`` instead."""
     rows = _collect_polys(df, id_col, wkb_col, "polys_df_from_wkb_column")
     return polys_from_wkb((r[0], bytes(r[1])) for r in rows)
 
 
 def _collect_polys(df, id_col: str, geom_col: str, twin: str) -> list:
-    """Collect (id, geometry) rows for a spec-list loader, at most
-    ``_COLLECT_MAX_POLYS`` of them: one ``limit(budget + 1)`` collect,
-    and a ValueError naming the distributed ``twin`` past the budget."""
-    rows = df.select(id_col, geom_col).limit(_COLLECT_MAX_POLYS + 1).collect()
-    if len(rows) > _COLLECT_MAX_POLYS:
+    """Collect (id, geometry) rows for a spec-list loader (here and in
+    geo.wkt), at most pip_join's broadcast-regime polygon budget of
+    them: one ``limit(budget + 1)`` collect, and a ValueError naming
+    the distributed ``twin`` past the budget, where the polygon side
+    belongs in a DataFrame."""
+    from ..operators.pip_join import _TABLE_POLYS_BUDGET as budget
+
+    rows = df.select(id_col, geom_col).limit(budget + 1).collect()
+    if len(rows) > budget:
         raise ValueError(
-            f"more than {_COLLECT_MAX_POLYS} polygons to collect to the driver; "
+            f"more than {budget} polygons to collect to the driver; "
             f"use {twin} + pip_join_table, which keep the polygon side distributed"
         )
     return rows

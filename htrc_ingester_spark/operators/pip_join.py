@@ -27,14 +27,21 @@ Scale design (the part that must survive 100 TB / 10^12 rows):
    every invocation.
 
 3. Each partial cover row carries the ring edges a point in that cell
-   can cross (``edges``, filtered on the driver — about 2 per cell for
-   a simple polygon) and the polygon's cap-ring parity. The refine is
-   ONE Catalyst predicate in the same scan as the broadcast join,
-   ``full OR (cap_parity != aggregate(edges, false, acc != crossing))``
-   — a formula-for-formula twin of geo.geometry.points_in_ring, so no
-   Python worker runs and the points are read once (a pandas-UDF
-   refine needed a second scan for its partial branch and a Python
-   worker pool per session).
+   can cross (``edges`` for normal rings, ``cap_edges`` for polar
+   caps), filtered on the driver: edges out of the cell's reach are
+   dropped, and edges east of the cell fold into the row's ``parity``
+   bit or into a few stand-in edges. A row keeps about the edges that
+   meet its cell, so the broadcast stays O(cover) — measured ≤ 4 per
+   row on a 2000-vertex cap and a 200-tooth comb. The refine is ONE
+   Catalyst predicate in the same scan as the broadcast join,
+   ``full OR (parity != (aggregate(edges, ...) != aggregate(cap_edges,
+   ...)))`` — a formula-for-formula twin of
+   geo.geometry.points_in_ring, so no Python worker runs and the points
+   are read once (a pandas-UDF refine needed a second scan for its
+   partial branch and a Python worker pool per session). A table past
+   ``spark.sql.autoBroadcastJoinThreshold`` sends the join to the
+   cover-as-table regime (``pip_join_table``), as a polygon set past
+   ``_TABLE_POLYS_BUDGET`` does.
 
 Classification is conservative-exact: ``full`` requires ALL cell
 corners inside AND no ring-edge bbox overlapping the cell's bbox
@@ -68,7 +75,7 @@ from pyspark.sql import types as T
 from ..geo import geometry as G
 from ..geo import h3lite as H
 from ..geo.backend import H3LiteBackend, get_backend
-from ..session import fits_driver, plan_bytes
+from ..session import broadcast_threshold, fits_driver, plan_bytes
 
 
 def poly_rings(p: dict) -> list[np.ndarray]:
@@ -117,14 +124,45 @@ def _cell_boxes(cells: np.ndarray, be) -> tuple:
     )
 
 
+def _seam(r_lon: np.ndarray, r_lat: np.ndarray, u: np.ndarray) -> tuple | None:
+    """(lon, lat_min, lat_max) of the meridian segment where
+    geo.geometry.points_in_ring's parity for a closed ring (unwrapped
+    lons ``u``) can change off the ring's edges, lon in [-180, 180),
+    or None:
+
+    - a polar cap's meridian ray counts its first and last edge at
+      longitudes that agree only up to rounding, ``u[0]`` and ``u[-1]
+      ∓ 360``: in a sliver about 1e-14° wide at the first vertex's lon,
+      a point on the far side of that vertex crosses both edges or
+      neither, so the sliver runs from the vertex to the far pole;
+    - a normal ring a full turn wide or wider has edges on both sides
+      of its frame seam ``c + 180``, where a point's frame shift
+      jumps by 360°.
+
+    The cover classifiers treat the segment as a ring edge, so a cell
+    it passes through is refined, never taken whole."""
+    if len(u) < 4:
+        return None
+    if int(round((u[-1] - u[0]) / 360.0)) != 0:
+        lon = u[0]
+        lat0, lat1 = (-90.0, r_lat[0]) if np.mean(r_lat[:-1]) > 0.0 else (r_lat[0], 90.0)
+    elif u.max() - u.min() >= 360.0:
+        lon = 0.5 * (u.min() + u.max()) + 180.0
+        lat0, lat1 = r_lat.min(), r_lat.max()
+    else:
+        return None
+    return float((lon + 180.0) % 360.0 - 180.0), float(lat0), float(lat1)
+
+
 def _classify(cells: np.ndarray, rings: list[np.ndarray], backend=None):
     """Classify cells vs one (multi-ring, even-odd) polygon →
     (full_mask, partial_mask).
 
     full: ALL cell corners inside AND no ring-edge bbox overlaps the
     cell's bbox. Sound for multi-ring even-odd: parity only changes
-    across a ring edge, so a cell no edge touches has constant parity —
-    the corners decide it. A cell wholly inside a hole has even-parity
+    across a ring edge or a ring's seam (:func:`_seam`, tested as one
+    more edge), so a cell no edge touches has constant parity — the
+    corners decide it. A cell wholly inside a hole has even-parity
     corners and no edge hit → neither full nor partial (dropped).
     partial: not full AND not provably disjoint. The corner set is the
     backend's cell polygon (4 rectangle corners for h3lite, 5-6 hexagon
@@ -160,6 +198,13 @@ def _classify(cells: np.ndarray, rings: list[np.ndarray], backend=None):
         e_lon1 = np.maximum(u[:-1], u[1:])
         e_lat0 = np.minimum(r_lat[:-1], r_lat[1:])
         e_lat1 = np.maximum(r_lat[:-1], r_lat[1:])
+        seam = _seam(r_lon, r_lat, u)
+        if seam is not None:
+            lon, lat0, lat1 = seam
+            e_lon0 = np.append(e_lon0, lon)
+            e_lon1 = np.append(e_lon1, lon)
+            e_lat0 = np.append(e_lat0, lat0)
+            e_lat1 = np.append(e_lat1, lat1)
         for shift in (-360.0, 0.0, 360.0):
             cl0 = c_lon0 + shift
             cl1 = c_lon1 + shift
@@ -221,6 +266,13 @@ def _cover_rings(
         be.cover_bbox(lon0, lat0, lon1, lat1, r_start)
         for lon0, lat0, lon1, lat1 in bboxes
     ]
+    # a cap's seam runs outside its pole-side bbox (see _seam)
+    for ring in rings:
+        r_lon, r_lat = G.close_ring(ring[:, 0], ring[:, 1])
+        seam = _seam(r_lon, r_lat, G.unwrap_ring(r_lon))
+        if seam is not None:
+            lon, lat0, lat1 = seam
+            seeds.append(be.cover_bbox(lon - _CELL_PAD_DEG, lat0, lon + _CELL_PAD_DEG, lat1, r_start))
     frontier = np.unique(np.concatenate(seeds)) if seeds else np.array([], dtype=np.int64)
     out_cells: list[np.ndarray] = []
     out_full: list[np.ndarray] = []
@@ -686,8 +738,9 @@ def _polys_key(polys: list[dict], res: int, res_max: int, backend_name: str) -> 
 # round-3 flagship bench regression). Bounded: a long-lived service
 # cycling through MANY distinct polygon sets evicts oldest-first (dict
 # order). An entry is a local relation and holds no executor state, so
-# eviction just drops it.
-_ARTIFACT_MEMO: dict[tuple[str, str], tuple] = {}
+# eviction just drops it; None records a table past the broadcast
+# threshold (the threshold is part of the key).
+_ARTIFACT_MEMO: dict[tuple, tuple | None] = {}
 _ARTIFACT_MEMO_MAX = 64
 
 # Flat-probe ceiling: when the cover expanded to its finest level stays
@@ -746,86 +799,181 @@ def _expand_cover(cover: pd.DataFrame, fine: int, backend=None) -> pd.DataFrame:
 # (cells × edges) mask elements per chunk of the per-cell edge filter
 _EDGE_MASK_CHUNK = 1 << 20
 
-_EDGE_FIELDS = ("x1", "y1", "x2", "y2", "c", "cap", "north")
-_EDGE_TYPE = pa.struct(
-    [(f, pa.bool_() if f in ("cap", "north") else pa.float64()) for f in _EDGE_FIELDS]
+# One struct per ring edge, in two arrays per cover row: normal-ring
+# edges carry their ring's frame centre ``c``, polar-cap edges the
+# frame origin ``lo`` and the enclosed pole (``north``).
+_EDGE_TYPE = pa.struct([(f, pa.float64()) for f in ("x1", "y1", "x2", "y2", "c")])
+_CAP_EDGE_TYPE = pa.struct(
+    [(f, pa.float64()) for f in ("x1", "y1", "x2", "y2", "lo")] + [("north", pa.bool_())]
 )
 
 
-def _ring_edges(rings: list[np.ndarray]) -> tuple[dict, int]:
-    """One polygon's rings → its edge columns and cap-ring count, with
-    the ring preparation of geo.geometry.points_in_ring (twinned by
+def _edge_columns(cols: list[tuple], typ: pa.StructType) -> dict:
+    """Per-ring column tuples → one array per field of ``typ``."""
+    if not cols:
+        return {t.name: np.array([], dtype=t.type.to_pandas_dtype()) for t in typ}
+    return {t.name: np.concatenate(v) for t, v in zip(typ, zip(*cols))}
+
+
+def _ring_edges(rings: list[np.ndarray]) -> tuple[dict, dict, int]:
+    """One polygon's rings → (normal-ring edge columns, cap-ring edge
+    columns, cap-ring count), with the ring preparation of
+    geo.geometry.points_in_ring (twinned by
     plans/catalog.py:pip_crossing_oracle_sql): open rings are closed,
     rings under 3 vertices dropped, longitudes unwrapped. A normal ring
     (winding 0) stamps each edge with its frame centre ``c``; a polar
-    cap (winding ±1) stamps ``c`` = the frame origin ``lo`` and the
-    enclosed pole (``north``)."""
-    cols: list[tuple] = []
-    n_caps = 0
+    cap (winding ±1) with its frame origin ``lo`` and the enclosed pole
+    (``north``)."""
+    normal: list[tuple] = []
+    caps: list[tuple] = []
     for ring in rings:
         r_lon, r_lat = ring[:, 0], ring[:, 1]
         if len(r_lon) < 3:
             continue
         r_lon, r_lat = G.close_ring(r_lon, r_lat)
         u = G.unwrap_ring(r_lon)
-        cap = int(round((u[-1] - u[0]) / 360.0)) != 0
-        if cap:
-            n_caps += 1
-            c, north = u.min(), bool(np.mean(r_lat[:-1]) > 0.0)
-        else:
-            c, north = 0.5 * (u.min() + u.max()), False
         n = len(u) - 1
-        cols.append(
-            (u[:-1], r_lat[:-1], u[1:], r_lat[1:], np.full(n, c), np.full(n, cap), np.full(n, north))
-        )
-    if not cols:
-        return {t.name: np.array([], dtype=t.type.to_pandas_dtype()) for t in _EDGE_TYPE}, 0
-    return {f: np.concatenate(v) for f, v in zip(_EDGE_FIELDS, zip(*cols))}, n_caps
+        xy = (u[:-1], r_lat[:-1], u[1:], r_lat[1:])
+        if int(round((u[-1] - u[0]) / 360.0)) != 0:
+            caps.append(xy + (np.full(n, u.min()), np.full(n, bool(np.mean(r_lat[:-1]) > 0.0))))
+        else:
+            normal.append(xy + (np.full(n, 0.5 * (u.min() + u.max())),))
+    return _edge_columns(normal, _EDGE_TYPE), _edge_columns(caps, _CAP_EDGE_TYPE), len(caps)
 
 
-def _cell_edges(cells: np.ndarray, e: dict, be) -> tuple[np.ndarray, np.ndarray]:
-    """Per-cell edge filter → (kept-edge count per cell, flat kept-edge
-    indices in cell order). Drops exactly the edges no point of the
-    cell can cross, so the refine stays decision-identical:
+def _meets_mod360(a0, a1, b0, b1):
+    """Does [a0, a1] + 360·m meet [b0, b1] for some integer m? Place the
+    copy of [a0, a1] that starts at or before b0 less than a turn away:
+    [b0, b1] meets it, or reaches the start of the next copy."""
+    r = (b0 - a0) % 360.0
+    return (r <= a1 - a0) | (r + (b1 - b0) >= 360.0)
 
-    - a normal-ring edge is crossed only by a point whose lat lies in
-      its lat span, so it is kept iff that span meets the cell's padded
-      lat band (open-ended at a pole row, where the encode clamps lat);
-    - the ray runs toward +lon and a point's in-frame lon is ≥ the
-      cell's west side unless the ring's frame shift fires, so the edge
-      must also reach ``max(x1, x2) ≥ lon_min`` — a test skipped for a
-      ring whose shift can fire anywhere in the cell (a raw lon 360°
-      off its cell box is shifted back into the box by the same rule);
-    - polar-cap edges are always kept.
 
-    Cell boxes are :func:`_cell_boxes`, as in :func:`_classify`."""
+# x of the stand-in edges that carry a cell's east-chain lat breakpoints:
+# finite (so x2 - x1 is 0, not NaN) and east of every finite lon
+_EAST_X = 1e300
+
+
+def _cell_edges(cells: np.ndarray, e: dict, k: dict, be) -> tuple:
+    """Per-cell edge filter → (normal-edge count per cell, normal-edge
+    columns, cap-edge count per cell, cap-edge columns, parity bit per
+    cell), columns in cell order. For finite point coordinates the
+    refine stays decision-identical: an edge is dropped only if no
+    point of the cell can cross it, and replaced only by edges and a
+    parity bit that every point of the cell crosses the same number
+    of times, modulo 2.
+
+    Normal ring (+lon ray, ``(y1 > lat) != (y2 > lat)`` straddle):
+
+    - kept only if its lat span meets the cell's lat band (open-ended
+      at a pole row, where the encode clamps lat) and is not
+      horizontal (a horizontal edge straddles no lat);
+    - the ray runs toward +lon, and a point's in-frame lon lies in the
+      cell's box when the ring's frame shift cannot fire in the box (a
+      raw lon a turn off the box is shifted back into it by the same
+      rule), so the edge must reach ``max(x1, x2) ≥ lon_min`` — a test
+      skipped where the shift can fire in the box;
+    - an edge whose stretch inside the lat band lies east of the box
+      (same frame condition) is crossed by a point of the cell exactly
+      when it straddles the point's lat, i.e. once per breakpoint
+      ``y_lo``, ``y_hi`` at or below that lat, modulo 2. Such edges
+      become breakpoints: those below the band flip the parity bit,
+      those above it drop, those inside that repeat an even number of
+      times cancel (a chain of east edges keeps only its two ends), and
+      the rest pair up, in lat order, into vertical stand-in edges at
+      ``_EAST_X`` (an odd last one paired with +inf).
+
+    Polar cap (meridian ray toward the enclosed pole, the point's lon
+    tried at shifts {0, ±360}): kept only if its lon span is not empty
+    and meets the box modulo 360, and it reaches the pole side of the
+    lat band (``max(y1, y2) ≥ lat_min`` for a north cap, ``min(y1, y2)
+    ≤ lat_max`` for a south one).
+
+    Cell boxes are :func:`_cell_boxes`, as in :func:`_classify`; their
+    ≥ 1e-9° pad dwarfs the few-ulp rounding of the encode and of the
+    crossing arithmetic, which is what keeps these tests exact."""
+    n = len(cells)
     _, _, lon0, lon1, lat0, lat1 = _cell_boxes(cells, be)
-    lon0, lon1 = lon0[:, None], lon1[:, None]
-    lat0 = np.where(lat0 <= -90.0, -np.inf, lat0)[:, None]
-    lat1 = np.where(lat1 >= 90.0, np.inf, lat1)[:, None]
-    y_lo = np.minimum(e["y1"], e["y2"])
-    y_hi = np.maximum(e["y1"], e["y2"])
+    lat0 = np.where(lat0 <= -90.0, -np.inf, lat0)
+    lat1 = np.where(lat1 >= 90.0, np.inf, lat1)
+    y_lo, y_hi = np.minimum(e["y1"], e["y2"]), np.maximum(e["y1"], e["y2"])
     x_hi = np.maximum(e["x1"], e["x2"])
-    counts: list[np.ndarray] = []
-    idx: list[np.ndarray] = []
-    step = max(1, _EDGE_MASK_CHUNK // max(1, len(e["c"])))
-    for s in range(0, len(cells), step):
-        sl = slice(s, s + step)
-        d0, d1 = lon0[sl] - e["c"], lon1[sl] - e["c"]
-        keep = e["cap"] | (
-            (y_lo <= lat1[sl])
-            & (y_hi >= lat0[sl])
-            & ((d0 < -180.0) | (d1 >= 180.0) | (x_hi >= lon0[sl]))
+    dy = np.where(y_lo < y_hi, e["y2"] - e["y1"], 1.0)
+    kx_lo, kx_hi = np.minimum(k["x1"], k["x2"]), np.maximum(k["x1"], k["x2"])
+    ky_lo, ky_hi = np.minimum(k["y1"], k["y2"]), np.maximum(k["y1"], k["y2"])
+    rows_e, cols_e, rows_k, cols_k, bp_row, bp_val = [], [], [], [], [], []
+    step = max(1, _EDGE_MASK_CHUNK // max(1, len(y_lo), len(kx_lo)))
+    for s in range(0, n, step):
+        a0, a1 = lon0[s : s + step, None], lon1[s : s + step, None]
+        b0, b1 = lat0[s : s + step, None], lat1[s : s + step, None]
+        framed = (a0 - e["c"] >= -180.0) & (a1 - e["c"] < 180.0)
+        cand = (y_lo < y_hi) & (y_lo <= b1) & (y_hi >= b0) & (~framed | (x_hi >= a0))
+        # the edge's x where it enters and leaves the band
+        x_in, x_out = (
+            e["x1"] + (np.clip(b, y_lo, y_hi) - e["y1"]) * (e["x2"] - e["x1"]) / dy for b in (b0, b1)
         )
-        counts.append(keep.sum(axis=1))
-        idx.append(np.nonzero(keep)[1])
-    return np.concatenate(counts), np.concatenate(idx)
+        east = cand & framed & (np.minimum(x_in, x_out) > a1)
+        ckeep = (
+            (kx_lo < kx_hi)
+            & _meets_mod360(a0, a1, kx_lo, kx_hi)
+            & np.where(k["north"], ky_hi >= b0, ky_lo <= b1)
+        )
+        for mask, src, rows, cols in ((cand & ~east, e, rows_e, cols_e), (ckeep, k, rows_k, cols_k)):
+            r, j = np.nonzero(mask)
+            rows.append(r + s)
+            cols.append({f: v[j] for f, v in src.items()})
+        r, j = np.nonzero(east)
+        bp_row.append(np.concatenate([r, r]) + s)
+        bp_val.append(np.concatenate([y_lo[j], y_hi[j]]))
+    row, val = np.concatenate(bp_row), np.concatenate(bp_val)
+    below = val <= lat0[row]
+    parity = np.bincount(row[below], minlength=n) % 2 == 1
+    inside = ~below & (val < lat1[row])
+    row, val = row[inside], val[inside]
+    order = np.lexsort((val, row))
+    row, val = row[order], val[order]
+    starts = np.nonzero(np.r_[True, (row[1:] != row[:-1]) | (val[1:] != val[:-1])])[0]
+    odd = starts[np.diff(np.r_[starts, len(row)]) % 2 == 1]
+    row, val = row[odd], val[odd]
+    if len(row):
+        # survivors pair up per cell in lat order, an odd last one with +inf
+        same_next = np.r_[row[1:] == row[:-1], False]
+        idx = np.arange(len(row))
+        rank = idx - np.maximum.accumulate(np.where(np.r_[True, ~same_next[:-1]], idx, 0))
+        lead = rank % 2 == 0
+        y2 = np.where(same_next, np.r_[val[1:], np.inf], np.inf)[lead]
+        m = len(y2)
+        rows_e.append(row[lead])
+        cols_e.append(
+            {"x1": np.full(m, _EAST_X), "y1": val[lead], "x2": np.full(m, _EAST_X), "y2": y2, "c": np.zeros(m)}
+        )
+
+    def by_cell(rows, cols):
+        rows = np.concatenate(rows)
+        order = np.argsort(rows, kind="stable")
+        return np.bincount(rows, minlength=n), {f: np.concatenate([c[f] for c in cols])[order] for f in cols[0]}
+
+    return (*by_cell(rows_e, cols_e), *by_cell(rows_k, cols_k), parity)
 
 
-def _edge_table(cover: pd.DataFrame, polys: list[dict], be) -> pa.Table:
+def _list_array(counts: list[np.ndarray], values: list[dict], typ: pa.StructType) -> pa.ListArray:
+    """Per-row edge counts + edge columns (both in row order) → one
+    Arrow list<struct> column."""
+    offsets = np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32)
+    flat = pa.StructArray.from_arrays(
+        [pa.array(np.concatenate([v[t.name] for v in values]) if values else [], type=t.type) for t in typ],
+        fields=list(typ),
+    )
+    return pa.ListArray.from_arrays(offsets, flat)
+
+
+def _edge_table(cover: pd.DataFrame, polys: list[dict], be, max_bytes: int) -> pa.Table | None:
     """The broadcast cover as an Arrow table: (cell, poly_id, full,
-    cap_parity, edges). Partial rows carry their cell's filtered ring
-    edges; full rows carry none (the predicate never reads them)."""
+    parity, edges, cap_edges). Partial rows carry their cell's
+    filtered ring edges and the parity of the polygon's cap rings and
+    of the cell's folded edges; full rows carry none (the predicate
+    never reads them). None as soon as the kept edges alone pass
+    ``max_bytes`` — the cover then belongs in the table regime."""
     # keyed by str(): the cover frame's poly_id column is a string
     # even when the spec used int ids
     prepared = {str(p["poly_id"]): _ring_edges(poly_rings(p)) for p in polys}
@@ -835,32 +983,37 @@ def _edge_table(cover: pd.DataFrame, polys: list[dict], be) -> pa.Table:
     # partial rows grouped per polygon, after every full row, so each
     # group's kept edges concatenate straight into the list values
     order = [np.nonzero(full)[0]]
-    counts = [np.zeros(len(order[0]), dtype=np.int64)]
-    values: dict[str, list[np.ndarray]] = {f: [] for f in _EDGE_FIELDS}
+    none = np.zeros(len(order[0]), dtype=np.int64)
+    n_e, n_k, fold = [none], [none], [none.astype(bool)]
+    v_e: list[dict] = []
+    v_k: list[dict] = []
+    kept_bytes = 0
     part = np.nonzero(~full)[0]
     for poly_id, ii in pd.Series(part).groupby(pid[part]).indices.items():
         rows = part[ii]
-        e, _ = prepared[poly_id]
-        n, kept = _cell_edges(cells[rows], e, be)
+        e, k, _ = prepared[poly_id]
+        ne, ve, nk, vk, f = _cell_edges(cells[rows], e, k, be)
+        # Arrow bytes per edge: five doubles, plus a bool for a cap edge
+        kept_bytes += 40 * int(ne.sum()) + 41 * int(nk.sum())
+        if kept_bytes > max_bytes:
+            return None
         order.append(rows)
-        counts.append(n)
-        for f in _EDGE_FIELDS:
-            values[f].append(e[f][kept])
+        n_e.append(ne)
+        n_k.append(nk)
+        fold.append(f)
+        v_e.append(ve)
+        v_k.append(vk)
     order = np.concatenate(order)
-    offsets = np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32)
-    flat = pa.StructArray.from_arrays(
-        [pa.array(np.concatenate(values[t.name]) if values[t.name] else [], type=t.type) for t in _EDGE_TYPE],
-        fields=list(_EDGE_TYPE),
-    )
     pid = pid[order]
-    parity = {k: n_caps % 2 == 1 for k, (_e, n_caps) in prepared.items()}
+    caps = {p: n_caps % 2 == 1 for p, (_e, _k, n_caps) in prepared.items()}
     return pa.table(
         {
             "cell": pa.array(cells[order], pa.int64()),
             "poly_id": pa.array(pid, pa.string()),
             "full": pa.array(full[order]),
-            "cap_parity": pa.array(pd.Series(pid).map(parity).to_numpy(dtype=bool)),
-            "edges": pa.ListArray.from_arrays(offsets, flat),
+            "parity": pa.array(pd.Series(pid).map(caps).to_numpy(dtype=bool) ^ np.concatenate(fold)),
+            "edges": _list_array(n_e, v_e, _EDGE_TYPE),
+            "cap_edges": _list_array(n_k, v_k, _CAP_EDGE_TYPE),
         }
     )
 
@@ -873,9 +1026,10 @@ def _rem360(x: str) -> str:
     return f"(CASE WHEN ({x}) % 360.0D < 0.0D THEN ({x}) % 360.0D + 360.0D ELSE ({x}) % 360.0D END)"
 
 
-def _crossing_sql(lon: str, lat: str) -> str:
+def _crossing_sql(lon: str, lat: str) -> tuple[str, str]:
     """Does the ray from point (lon, lat) cross edge ``__e``? Twin of
-    geo.geometry.points_in_ring per edge. Normal ring: the +lon ray of
+    geo.geometry.points_in_ring per edge, as (normal-ring edge,
+    cap-ring edge). Normal ring: the +lon ray of
     _points_in_ring_planar with the conditional frame shift. Cap ring:
     the meridian ray toward the enclosed pole over the shifts {0, ±360}.
     The normal test keeps its straddle check FIRST: AND short-circuits,
@@ -889,7 +1043,7 @@ def _crossing_sql(lon: str, lat: str) -> str:
         f"(((__e.y1 > {lat}) != (__e.y2 > {lat})) AND {plon} <"
         f" __e.x1 + ({lat} - __e.y1) * (__e.x2 - __e.x1) / (__e.y2 - __e.y1))"
     )
-    p = f"(__e.c + {_rem360(f'{lon} - __e.c')})"
+    p = f"(__e.lo + {_rem360(f'{lon} - __e.lo')})"
 
     def cap_hit(pp: str) -> str:
         spans = f"((__e.x1 <= {pp} AND {pp} < __e.x2) OR (__e.x2 <= {pp} AND {pp} < __e.x1))"
@@ -897,32 +1051,39 @@ def _crossing_sql(lon: str, lat: str) -> str:
         ycross = f"(__e.y1 + {t} * (__e.y2 - __e.y1))"
         return f"({spans} AND (CASE WHEN __e.north THEN {ycross} > {lat} ELSE {ycross} < {lat} END))"
 
-    cap = " OR ".join(cap_hit(pp) for pp in (p, f"({p} + 360.0D)", f"({p} - 360.0D)"))
-    return f"(CASE WHEN __e.cap THEN ({cap}) ELSE {normal} END)"
+    return normal, " OR ".join(cap_hit(pp) for pp in (p, f"({p} + 360.0D)", f"({p} - 360.0D)"))
 
 
 def _inside(lon_col: str, lat_col: str):
     """The refine predicate over a candidate row: a full cell matches
-    outright; a partial one is inside iff its cap parity XOR the parity
-    of the crossings over its edges is odd (even-odd over the rings,
-    a cap counting as inside at EVEN crossings). Built as SQL text: one
-    parse instead of a py4j round trip per expression node."""
+    outright; a partial one is inside iff its parity bit XOR the parity
+    of the crossings over its edges is odd (even-odd over the rings, a
+    cap counting as inside at EVEN crossings, a folded edge as one
+    crossing). Built as SQL text: one parse instead of a py4j round
+    trip per expression node."""
     lon, lat = (f"`{c.replace('`', '``')}`" for c in (lon_col, lat_col))
-    crossings = f"aggregate(edges, false, (__acc, __e) -> __acc != {_crossing_sql(lon, lat)})"
-    return F.expr(f"full OR (cap_parity != {crossings})")
+    normal, cap = _crossing_sql(lon, lat)
+    crossings = (
+        f"aggregate(edges, false, (__acc, __e) -> __acc != {normal})"
+        f" != aggregate(cap_edges, false, (__acc, __e) -> __acc != ({cap}))"
+    )
+    return F.expr(f"full OR (parity != ({crossings}))")
 
 
 def _cover_artifacts(
     spark: SparkSession, polys: list[dict], res: int, res_max: int, backend=None
-) -> tuple:
+) -> tuple | None:
     """(cover_df, levels) for a polygon set, memoized; ``cover_df`` is
-    None when the cover is empty."""
+    None when the cover is empty. None when the broadcast table does
+    not fit ``spark.sql.autoBroadcastJoinThreshold`` (the session.py
+    gate), so the polygon set belongs in the table regime."""
     be = backend or H3LiteBackend()
-    key = (spark.sparkContext.applicationId, _polys_key(polys, res, res_max, be.name))
-    art = _ARTIFACT_MEMO.get(key)
-    if art is not None:
-        return art
+    budget = broadcast_threshold(spark)
+    key = (spark.sparkContext.applicationId, _polys_key(polys, res, res_max, be.name), budget)
+    if key in _ARTIFACT_MEMO:
+        return _ARTIFACT_MEMO[key]
     cover = build_cell_cover(polys, res, res_max, backend=be)
+    art: tuple | None = (None, [])
     if len(cover):
         # flat-probe rewrite: single-level cover ⇒ one codegen encode on
         # the point side and NO explode (the chain plan multiplies every
@@ -934,12 +1095,15 @@ def _cover_artifacts(
         )
         if expanded_n <= _FLAT_MAX_CELLS and (res_present != fine).any():
             cover = _expand_cover(cover, fine, backend=be)
+        tab = _edge_table(cover, polys, be, budget) if budget > 0 else None
         art = (
-            spark.createDataFrame(_edge_table(cover, polys, be)),
-            np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist(),
+            (
+                spark.createDataFrame(tab),
+                np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist(),
+            )
+            if fits_driver(spark, None if tab is None else tab.nbytes, budget)
+            else None
         )
-    else:
-        art = (None, [])
     while len(_ARTIFACT_MEMO) >= _ARTIFACT_MEMO_MAX:
         _ARTIFACT_MEMO.pop(next(iter(_ARTIFACT_MEMO)))  # dicts keep insertion order
     _ARTIFACT_MEMO[key] = art
@@ -980,12 +1144,23 @@ def pip_join(
     be = get_backend(backend) if isinstance(backend, (str, type(None))) else backend
     if res_max is None:
         res_max = min(res + 5, be.res_max)
-    if not fits_driver(spark, len(polys), _TABLE_POLYS_BUDGET):
-        # cover-as-table spill-over (SCALE.md): past the driver budget
-        # the serial cover build + broadcast is the wrong regime —
-        # build the cover distributed and probe with a cell-keyed
-        # shuffle join of the skeleton. Same classification + refine
-        # kernels, identical results.
+    art = None
+    if fits_driver(spark, len(polys), _TABLE_POLYS_BUDGET):
+        art = _cover_artifacts(spark, polys, res, res_max, backend=be)
+    if art is None:
+        # cover-as-table spill-over (SCALE.md): past the polygon budget,
+        # or with a broadcast table past the broadcast threshold, the
+        # serial cover build + broadcast is the wrong regime — build
+        # the cover distributed and probe with a cell-keyed shuffle
+        # join of the skeleton. Same classification kernels, identical
+        # results. That regime persists and repartitions the point
+        # side, which a streaming frame cannot do.
+        if points.isStreaming:
+            raise ValueError(
+                "pip_join on a streaming point frame needs the broadcast regime: at most "
+                f"{_TABLE_POLYS_BUDGET} polygons, a cover table within "
+                "spark.sql.autoBroadcastJoinThreshold, and no spark.htrc.forceDistributed"
+            )
         return pip_join_table(
             spark,
             points,
@@ -996,7 +1171,7 @@ def pip_join(
             lat_col=lat_col,
             backend=be,
         )
-    cover_df, levels = _cover_artifacts(spark, polys, res, res_max, backend=be)
+    cover_df, levels = art
     if cover_df is None:
         return points.withColumn("poly_id", F.lit(None).cast("string")).where(F.lit(False))
 
@@ -1007,7 +1182,7 @@ def pip_join(
     return (
         probe.join(F.broadcast(cover_df), F.col("__cell") == F.col("cell"), "inner")
         .where(_inside(lon_col, lat_col))
-        .drop("cell", "full", "cap_parity", "edges", "__cell")
+        .drop("cell", "full", "parity", "edges", "cap_edges", "__cell")
     )
 
 

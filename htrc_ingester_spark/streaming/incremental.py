@@ -465,7 +465,9 @@ def geofence_stream(
     stream-static join against a pre-built cover table; the broadcast
     regime covers the realistic geofencing range.) The same refusal
     applies under ``spark.htrc.forceDistributed=true``, which would
-    dispatch any fence set to the table regime."""
+    dispatch any fence set to the table regime, and ``pip_join`` itself
+    refuses a streaming frame whose fence cover table outgrows
+    ``spark.sql.autoBroadcastJoinThreshold``."""
     from ..operators.pip_join import _TABLE_POLYS_BUDGET, pip_join
     from ..session import fits_driver
 

@@ -97,7 +97,11 @@ class TestFixtures:
         tri = [(0.0, 5.0), (8.0, 5.0), (4.0, 9.0)]
         lon = np.linspace(-1.0, 9.0, 41)
         lat = np.full_like(lon, 5.0)
-        _assert_identical(spark, lon, lat, [{"poly_id": "tri", "ring": tri}], res=6)
+        polys = [{"poly_id": "tri", "ring": tri}]
+        _assert_identical(spark, lon, lat, polys, res=6)
+        # the cover's edge filter drops horizontal edges, so the
+        # predicate also runs over every edge of the ring
+        assert _predicate_pairs(spark, lon, lat, polys) == _numpy_pairs(lon, lat, polys)
 
     def test_antimeridian_ring_out_of_frame_longitudes(self, spark):
         """Open ring across the dateline (unwrapped frame 170..190,
@@ -126,6 +130,22 @@ class TestFixtures:
             spark, np.concatenate([vlon, glon]), np.concatenate([vlat, glat]), polys, res=2, res_max=5
         )
         assert {pid for _i, pid in got} == {"n", "s"}
+
+    def test_cap_seam_sliver(self, spark):
+        """A cap's meridian ray meets its first and last edge at lons
+        that agree only up to rounding: in a ~1e-14° sliver at the first
+        vertex's lon, points on the far side of the cap count as inside.
+        The cover must refine that meridian down to the far pole."""
+        x = np.linspace(10.3, 10.3 - 360.0, 14)[:-1]
+        cap = list(zip(x, 60.0 + 5.0 * np.sin(np.radians(x))))
+        tiny = [(2.6684353237923398e-191, 0.0), (0.0, 0.0), (180.0, 0.0)]
+        polys = [{"poly_id": "cap", "ring": cap}, {"poly_id": "tiny", "ring": tiny}]
+        sliver = 10.3 + np.arange(-40, 41) * np.spacing(10.3)
+        lon, lat = _grid(np.concatenate([sliver, [10.29, 10.31, 0.0, -0.0, 1e-300, 1.0]]), [-80.0, -1.0, 23.0, 50.0])
+        got = _assert_identical(spark, lon, lat, polys, res=3, res_max=8)
+        far = (lat < 50.0) & (np.abs(lon - 10.3) < 1e-12)
+        assert any(pid == "cap" and far[i] for i, pid in got)  # the sliver is really hit
+        assert (int(np.nonzero((lon == 0.0) & (lat == 23.0))[0][0]), "tiny") in got
 
     def test_hole_open_ring_and_two_vertex_ring(self, spark):
         outer_open = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
@@ -170,21 +190,114 @@ class TestFixtures:
         )
 
 
+def _cap(n_vertices):
+    """South polar cap: a coastline of ``n_vertices`` wiggling ±3°
+    around lat -70."""
+    x = np.linspace(180.0, -180.0, n_vertices, endpoint=False)
+    return [{"poly_id": "cap", "ring": list(zip(x, -70.0 + 3.0 * np.sin(np.radians(7.0 * x))))}]
+
+
+def _comb(n_teeth):
+    """A comb whose ``n_teeth`` teeth point north from one base line,
+    tips staggered in lat: every base vertex shares one lat band."""
+    pts = [(0.0, 0.0)]
+    for i in range(n_teeth):
+        x0, tip = 0.1 * i, 1.0 + 0.004 * i
+        pts += [(x0 + 0.02, 0.0), (x0 + 0.02, tip), (x0 + 0.08, tip), (x0 + 0.08, 0.0)]
+    pts += [(0.1 * n_teeth, 0.0), (0.1 * n_teeth, -0.5), (0.0, -0.5)]
+    return [{"poly_id": "comb", "ring": pts}]
+
+
+def _edge_counts(polys, res, res_max):
+    """(edges per partial row, table bytes) of the broadcast table."""
+    from htrc_ingester_spark.geo.backend import H3LiteBackend
+
+    cover = P.build_cell_cover(polys, res, res_max)
+    tab = P._edge_table(cover, polys, H3LiteBackend(), 1 << 40)
+    part = ~np.asarray(tab.column("full").to_numpy(zero_copy_only=False))
+    n = sum(np.asarray(tab.column(c).combine_chunks().value_lengths()) for c in ("edges", "cap_edges"))
+    assert part.any()
+    return n[part], tab.nbytes
+
+
 class TestEdgeLists:
     def test_partial_rows_carry_few_edges(self):
         """The per-cell filter keeps the broadcast O(cover): a 64-gon's
         partial cells carry a handful of edges each, not all 64."""
-        from htrc_ingester_spark.geo.backend import H3LiteBackend
-
         t = np.linspace(0.0, 2.0 * np.pi, 65)[:-1]
         circle = [{"poly_id": "c", "ring": list(zip(5.0 * np.cos(t), 5.0 * np.sin(t)))}]
-        cover = P.build_cell_cover(circle, 5, 9)
-        tab = P._edge_table(cover, circle, H3LiteBackend())
-        part = ~np.asarray(tab.column("full").to_numpy(zero_copy_only=False))
-        n_edges = np.asarray(tab.column("edges").combine_chunks().value_lengths())[part]
-        assert part.any()
-        assert n_edges.mean() <= 4.0
-        assert n_edges.max() < 64
+        n, _ = _edge_counts(circle, 5, 9)
+        assert n.mean() <= 4.0
+        assert n.max() < 64
+
+    def test_many_vertex_cap_rows_stay_small(self):
+        """A cap edge is kept only where its lon span meets the cell
+        modulo 360 and it reaches the pole side: a 2000-vertex cap's
+        rows carry a few edges, not all 2000."""
+        n, nbytes = _edge_counts(_cap(2000), 3, 8)
+        assert n.max() <= 4
+        assert nbytes < 1_000_000
+
+    def test_comb_rows_stay_small(self):
+        """East of a cell, a chain of edges inside its lat band keeps
+        only its end breakpoints and a band-spanning edge folds into
+        the parity bit: a 200-tooth comb, whose base vertices all share
+        one lat band, keeps a few edges per row, not every tooth east
+        of the cell."""
+        n, nbytes = _edge_counts(_comb(200), 5, 10)
+        assert n.max() <= 6
+        assert nbytes < 1_000_000
+
+    @pytest.mark.parametrize("shape", ["cap", "comb"])
+    def test_filtered_shapes_identical(self, spark, shape):
+        polys, res, res_max = (_cap(400), 3, 7) if shape == "cap" else (_comb(40), 5, 10)
+        vlon, vlat = _ring_points([P.poly_rings(polys[0])[0]])
+        if shape == "cap":
+            glon, glat = _grid(np.arange(-180.0, 180.0, 1.7), np.arange(-80.0, -60.0, 0.37))
+        else:
+            glon, glat = _grid(np.arange(-0.05, 4.1, 0.013), np.arange(-0.6, 1.25, 0.021))
+        lon, lat = np.concatenate([vlon, glon]), np.concatenate([vlat, glat])
+        got = _assert_identical(spark, lon, lat, polys, res=res, res_max=res_max)
+        assert got and len(got) < len(lon)
+
+
+class TestBroadcastGate:
+    """The edge table goes through session.fits_driver against
+    spark.sql.autoBroadcastJoinThreshold: past it, pip_join runs the
+    cover-as-table regime with the same result."""
+
+    def test_oversized_table_takes_table_regime(self, spark, monkeypatch):
+        calls = []
+        real = P.pip_join_table
+        monkeypatch.setattr(P, "pip_join_table", lambda *a, **kw: calls.append(1) or real(*a, **kw))
+        polys = data.polygons_holes()
+        rng = np.random.default_rng(3)
+        lon, lat = rng.uniform(-20.0, 40.0, 3000), rng.uniform(-10.0, 40.0, 3000)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        try:
+            for threshold in ("1k", "-1"):
+                spark.conf.set(key, threshold)
+                _assert_identical(spark, lon, lat, polys, res=7)
+            assert len(calls) == 2
+        finally:
+            spark.conf.set(key, old)
+        _assert_identical(spark, lon, lat, polys, res=7)
+        assert len(calls) == 2
+
+    def test_streaming_points_refuse_table_regime(self, spark):
+        stream = (
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .selectExpr("cast(value as double) as lon", "cast(value as double) as lat")
+        )
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "1k")
+            with pytest.raises(ValueError, match="streaming point frame"):
+                P.pip_join(spark, stream, data.polygons_holes(), res=7)
+        finally:
+            spark.conf.set(key, old)
 
 
 # --------------------------------------------------------------------------
@@ -205,29 +318,36 @@ def _all_edges_frame(spark, lon, lat, polys):
     its ring edges — the predicate alone, without cover or filter."""
     import pyarrow as pa
 
-    rows = {"lon": [], "lat": [], "poly_id": [], "full": [], "cap_parity": [], "edges": []}
+    rows = {"lon": [], "lat": [], "poly_id": [], "parity": [], "edges": [], "cap_edges": []}
     for p in polys:
-        e, n_caps = P._ring_edges(P.poly_rings(p))
-        edges = [{f: e[f][i].item() for f in P._EDGE_FIELDS} for i in range(len(e["c"]))]
+        e, k, n_caps = P._ring_edges(P.poly_rings(p))
+        edges = [{f: v[i].item() for f, v in e.items()} for i in range(len(e["c"]))]
+        cap_edges = [{f: v[i].item() for f, v in k.items()} for i in range(len(k["lo"]))]
         for x, y in zip(lon, lat):
             rows["lon"].append(float(x))
             rows["lat"].append(float(y))
             rows["poly_id"].append(str(p["poly_id"]))
-            rows["full"].append(False)
-            rows["cap_parity"].append(n_caps % 2 == 1)
+            rows["parity"].append(n_caps % 2 == 1)
             rows["edges"].append(edges)
+            rows["cap_edges"].append(cap_edges)
     tab = pa.table(
         {
             "image_id": pa.array(np.tile(np.arange(len(lon)), len(polys)), pa.int64()),
             "lon": pa.array(rows["lon"], pa.float64()),
             "lat": pa.array(rows["lat"], pa.float64()),
             "poly_id": pa.array(rows["poly_id"], pa.string()),
-            "full": pa.array(rows["full"], pa.bool_()),
-            "cap_parity": pa.array(rows["cap_parity"], pa.bool_()),
+            "full": pa.array([False] * len(rows["lon"]), pa.bool_()),
+            "parity": pa.array(rows["parity"], pa.bool_()),
             "edges": pa.array(rows["edges"], pa.list_(P._EDGE_TYPE)),
+            "cap_edges": pa.array(rows["cap_edges"], pa.list_(P._CAP_EDGE_TYPE)),
         }
     )
     return spark.createDataFrame(tab)
+
+
+def _predicate_pairs(spark, lon, lat, polys) -> set:
+    df = _all_edges_frame(spark, lon, lat, polys)
+    return {(int(r[0]), r[1]) for r in df.where(P._inside("lon", "lat")).select("image_id", "poly_id").collect()}
 
 
 @settings(max_examples=40, deadline=None)
@@ -243,9 +363,7 @@ def test_predicate_matches_points_in_rings(spark, rings, pts):
     vlon, vlat = _ring_points(rings)
     lon = np.concatenate([[a for a, _ in pts], vlon])
     lat = np.concatenate([[b for _, b in pts], vlat])
-    df = _all_edges_frame(spark, lon, lat, polys)
-    got = {(int(r[0]), r[1]) for r in df.where(P._inside("lon", "lat")).select("image_id", "poly_id").collect()}
-    assert got == _numpy_pairs(lon, lat, polys)
+    assert _predicate_pairs(spark, lon, lat, polys) == _numpy_pairs(lon, lat, polys)
 
 
 @settings(max_examples=25, deadline=None)
@@ -279,3 +397,28 @@ def test_fixture_polygons_with_shifted_lons(spark, shift):
     _assert_identical(
         spark, np.concatenate([lon, vlon]) + shift, np.concatenate([lat, vlat]), polys, res=7
     )
+
+
+@settings(max_examples=15, deadline=None)
+@given(
+    st.lists(
+        st.lists(
+            st.tuples(st.floats(-2.0, 2.0, allow_nan=False), st.floats(-0.3, 0.3, allow_nan=False)),
+            min_size=3,
+            max_size=24,
+        ),
+        min_size=1,
+        max_size=2,
+    ),
+    st.lists(st.tuples(st.floats(-2.5, 2.5, allow_nan=False), st.floats(-0.5, 0.5, allow_nan=False)), max_size=30),
+)
+def test_pip_join_matches_points_in_rings_flat_rings(spark, rings, pts):
+    """Rings squashed into a few cell rows, so many vertices share a
+    lat band and east chains, folds and stand-in edges all occur;
+    queried also on the res_max grid lines."""
+    polys = [{"poly_id": "f", "rings": rings}]
+    vlon, vlat = _ring_points(rings)
+    glon, glat = _grid(np.arange(-2.5, 2.6, 360.0 / 1024), np.arange(-0.5, 0.51, 180.0 / 512))
+    lon = np.concatenate([[a for a, _ in pts], vlon, glon])
+    lat = np.concatenate([[b for _, b in pts], vlat, glat])
+    _assert_identical(spark, lon, lat, polys, res=4, res_max=8)

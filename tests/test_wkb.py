@@ -287,14 +287,15 @@ class TestSparkColumnIngestion:
         """The driver collect is bounded: at the budget it loads, one
         past it raises naming the distributed twin + pip_join_table."""
         from htrc_ingester_spark.geo import wkb
+        from htrc_ingester_spark.operators import pip_join
 
         wdf = spark.createDataFrame(
             data.polygons_holes_wkb(), "poly_id string, wkb binary"
         )
         n = wdf.count()
-        monkeypatch.setattr(wkb, "_COLLECT_MAX_POLYS", n)
+        monkeypatch.setattr(pip_join, "_TABLE_POLYS_BUDGET", n)
         assert len(wkb.polys_from_wkb_column(wdf)) == len(polys_from_wkb(data.polygons_holes_wkb()))
-        monkeypatch.setattr(wkb, "_COLLECT_MAX_POLYS", n - 1)
+        monkeypatch.setattr(pip_join, "_TABLE_POLYS_BUDGET", n - 1)
         with pytest.raises(ValueError, match="polys_df_from_wkb_column.*pip_join_table"):
             wkb.polys_from_wkb_column(wdf)
 

@@ -216,16 +216,16 @@ class TestSparkColumnIngestion:
     def test_column_collect_fails_past_budget(self, spark, monkeypatch):
         """The driver collect is bounded: at the budget it loads, one
         past it raises naming the distributed twin + pip_join_table."""
-        from htrc_ingester_spark.geo import wkb
         from htrc_ingester_spark.geo.wkt import polys_from_wkt_column
+        from htrc_ingester_spark.operators import pip_join
 
         wdf = spark.createDataFrame(
             data.polygons_holes_wkt(), "poly_id string, wkt string"
         )
         n = wdf.count()
-        monkeypatch.setattr(wkb, "_COLLECT_MAX_POLYS", n)
+        monkeypatch.setattr(pip_join, "_TABLE_POLYS_BUDGET", n)
         assert len(polys_from_wkt_column(wdf)) == n
-        monkeypatch.setattr(wkb, "_COLLECT_MAX_POLYS", n - 1)
+        monkeypatch.setattr(pip_join, "_TABLE_POLYS_BUDGET", n - 1)
         with pytest.raises(ValueError, match="polys_df_from_wkt_column.*pip_join_table"):
             polys_from_wkt_column(wdf)
 
