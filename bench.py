@@ -78,9 +78,10 @@ HEADLINE = [
     # with these, every catalog entry has either a driver CORRECTNESS
     # sample or a recorded headline wall+MAD. Each was probed first
     # (cold protocol, sf0.1); the six heavier ones (wkt-table twin,
-    # cogroup refine shape, the dedup cluster/survivor/winnow family,
-    # mutual-kNN) are included deliberately so the final bench records
-    # the whole dedup pipeline, both table-regime refine shapes, and
+    # the 128-polygon table-regime entry, the dedup
+    # cluster/survivor/winnow family, mutual-kNN) are included
+    # deliberately so the final bench records the whole dedup
+    # pipeline, a small polygon table through the table regime, and
     # the text-ingest twin. Headline TOTAL grows by construction;
     # r3_subset_total stays the round-over-round comparable number.
     "pip_join_wkt_table",

@@ -204,12 +204,17 @@ def points_in_rings(lon: np.ndarray, lat: np.ndarray, rings) -> np.ndarray:
 def ring_bbox(ring_lon, ring_lat):
     """(lon_min, lat_min, lon_max, lat_max) in the unwrapped frame;
     lon_min > 180-normalized lon_max signals antimeridian crossing.
-    For polar caps, the bbox extends to the enclosed pole."""
+    For polar caps, the bbox extends to the enclosed pole; a ring
+    winding an even number of turns spans the globe, because
+    points_in_ring's meridian ray from the far pole crosses it an even
+    number of times too."""
     r_lon, r_lat = close_ring(
         np.asarray(ring_lon, dtype=np.float64), np.asarray(ring_lat, dtype=np.float64)
     )
     u = unwrap_ring(r_lon)
     wind = int(round((u[-1] - u[0]) / 360.0))
+    if wind % 2 == 0 and wind != 0:
+        return -180.0, -90.0, 180.0 - 1e-12, 90.0
     if wind != 0:
         # the pole points_in_ring assigns the cap (closing vertex excluded)
         north = bool(np.mean(r_lat[:-1]) > 0.0)

@@ -28,20 +28,19 @@ Scale design (the part that must survive 100 TB / 10^12 rows):
 
 3. Each partial cover row carries the ring edges a point in that cell
    can cross (``edges`` for normal rings, ``cap_edges`` for polar
-   caps), filtered on the driver: edges out of the cell's reach are
-   dropped, and edges east of the cell fold into the row's ``parity``
-   bit or into a few stand-in edges. A row keeps about the edges that
-   meet its cell, so the broadcast stays O(cover) — measured ≤ 4 per
-   row on a 2000-vertex cap and a 200-tooth comb. The refine is ONE
-   Catalyst predicate in the same scan as the broadcast join,
+   caps), filtered per cell (:func:`_edge_table`): edges out of the
+   cell's reach are dropped, and edges east of the cell fold into the
+   row's ``parity`` bit or into a few stand-in edges. A row keeps about
+   the edges that meet its cell, so the table stays O(cover) — measured
+   ≤ 4 per row on a 2000-vertex cap and a 200-tooth comb. The refine
+   is ONE Catalyst predicate in the same scan as the join,
    ``full OR (parity != (aggregate(edges, ...) != aggregate(cap_edges,
    ...)))`` — a formula-for-formula twin of
    geo.geometry.points_in_ring, so no Python worker runs and the points
-   are read once (a pandas-UDF refine needed a second scan for its
-   partial branch and a Python worker pool per session). A table past
-   ``spark.sql.autoBroadcastJoinThreshold`` sends the join to the
-   cover-as-table regime (``pip_join_table``), as a polygon set past
-   ``_TABLE_POLYS_BUDGET`` does.
+   are read once. A table past ``spark.sql.autoBroadcastJoinThreshold``
+   sends the join to the cover-as-table regime (``pip_join_table``), as
+   a polygon set past ``_TABLE_POLYS_BUDGET`` does; that regime builds
+   the same table distributed and refines with the same predicate.
 
 Classification is conservative-exact: ``full`` requires ALL cell
 corners inside AND no ring-edge bbox overlapping the cell's bbox
@@ -70,7 +69,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..geo import geometry as G
 from ..geo import h3lite as H
@@ -675,6 +674,19 @@ def _cover_rings_many(
     return out
 
 
+def _cover_rows(covers: list[tuple]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Per-polygon (cells, full) covers → flat rows (cell int64[],
+    polygon index int64[], full bool[])."""
+    counts = [len(c) for c, _f in covers]
+    if not sum(counts):
+        return np.array([], dtype=np.int64), np.array([], dtype=np.int64), np.array([], dtype=bool)
+    return (
+        np.concatenate([c for c, _f in covers]),
+        np.repeat(np.arange(len(covers)), counts),
+        np.concatenate([f for _c, f in covers]),
+    )
+
+
 def build_cell_cover(
     polys: list[dict], res: int, res_max: int | None = None, backend=None
 ) -> pd.DataFrame:
@@ -692,23 +704,9 @@ def build_cell_cover(
     be = backend or H3LiteBackend()
     if res_max is None:
         res_max = min(res + 5, be.res_max)
-    covers = _cover_rings_many([poly_rings(p) for p in polys], res, res_max, be)
-    rows_cell = [c for c, _f in covers if len(c)]
-    if not rows_cell:
-        return pd.DataFrame({"cell": np.array([], dtype=np.int64), "poly_id": [], "full": []})
-    return pd.DataFrame(
-        {
-            "cell": np.concatenate(rows_cell),
-            # str() here keeps the cover column a real string column
-            # (the documented poly_id:str contract): raw int ids would
-            # mismatch the str-keyed ring lookup of _edge_table
-            "poly_id": np.repeat(
-                np.array([str(p["poly_id"]) for p in polys], dtype=object),
-                [len(c) for c, _f in covers],
-            ),
-            "full": np.concatenate([f for c, f in covers if len(c)]),
-        }
-    )
+    cells, pidx, full = _cover_rows(_cover_rings_many([poly_rings(p) for p in polys], res, res_max, be))
+    ids = np.array([str(p["poly_id"]) for p in polys], dtype=object)
+    return pd.DataFrame({"cell": cells, "poly_id": ids[pidx], "full": full})
 
 
 def _polys_key(polys: list[dict], res: int, res_max: int, backend_name: str) -> str:
@@ -766,37 +764,25 @@ def _probe_cells(points: DataFrame, levels, be, lon_col: str, lat_col: str) -> D
     return points.withColumn("__cell", F.explode(chain))
 
 
-def _expand_cover(cover: pd.DataFrame, fine: int, backend=None) -> pd.DataFrame:
-    """Expand every cover cell to its descendants at level ``fine``
-    via the backend's child tree (full cells stay full; partial cells
-    already live at the finest level, factor 1)."""
-    be = backend or H3LiteBackend()
-    cells = cover["cell"].to_numpy()
+def _expand_cover(cells: np.ndarray, fine: int, be) -> tuple[np.ndarray, np.ndarray]:
+    """Every cover cell's descendants at level ``fine`` via the
+    backend's child tree → (cells, each one's source row). Full cells
+    expand; partial cells already live at the finest level (factor 1)."""
     res = be.cell_res(cells)
-    pid = cover["poly_id"].to_numpy()
-    full = cover["full"].to_numpy()
     out_cell: list[np.ndarray] = []
-    out_pid: list[np.ndarray] = []
-    out_full: list[np.ndarray] = []
+    out_src: list[np.ndarray] = []
     for r in np.unique(res):
-        m = res == r
-        c, p, f = cells[m], pid[m], full[m]
+        src = np.nonzero(res == r)[0]
+        c = cells[src]
         for _ in range(int(fine - r)):
             c, parent = be.cells_to_children(c)
-            p, f = p[parent], f[parent]
+            src = src[parent]
         out_cell.append(c)
-        out_pid.append(p)
-        out_full.append(f)
-    return pd.DataFrame(
-        {
-            "cell": np.concatenate(out_cell),
-            "poly_id": np.concatenate(out_pid),
-            "full": np.concatenate(out_full),
-        }
-    )
+        out_src.append(src)
+    return np.concatenate(out_cell), np.concatenate(out_src)
 
 
-# (cells × edges) mask elements per chunk of the per-cell edge filter
+# (cell, edge) pairs per chunk of the per-cell edge filter
 _EDGE_MASK_CHUNK = 1 << 20
 
 # One struct per ring edge, in two arrays per cover row: normal-ring
@@ -815,10 +801,11 @@ def _edge_columns(cols: list[tuple], typ: pa.StructType) -> dict:
     return {t.name: np.concatenate(v) for t, v in zip(typ, zip(*cols))}
 
 
-def _ring_edges(rings: list[np.ndarray]) -> tuple[dict, dict, int]:
-    """One polygon's rings → (normal-ring edge columns, cap-ring edge
-    columns, cap-ring count), with the ring preparation of
-    geo.geometry.points_in_ring (twinned by
+def _ring_edges(rings_list: list[list[np.ndarray]]) -> tuple:
+    """Every polygon's rings → (normal-ring edge columns, their offsets
+    per polygon, cap-ring edge columns, their offsets per polygon, odd
+    cap-ring count per polygon), edges in polygon order, with the ring
+    preparation of geo.geometry.points_in_ring (twinned by
     plans/catalog.py:pip_crossing_oracle_sql): open rings are closed,
     rings under 3 vertices dropped, longitudes unwrapped. A normal ring
     (winding 0) stamps each edge with its frame centre ``c``; a polar
@@ -826,19 +813,30 @@ def _ring_edges(rings: list[np.ndarray]) -> tuple[dict, dict, int]:
     (``north``)."""
     normal: list[tuple] = []
     caps: list[tuple] = []
-    for ring in rings:
-        r_lon, r_lat = ring[:, 0], ring[:, 1]
-        if len(r_lon) < 3:
-            continue
-        r_lon, r_lat = G.close_ring(r_lon, r_lat)
-        u = G.unwrap_ring(r_lon)
-        n = len(u) - 1
-        xy = (u[:-1], r_lat[:-1], u[1:], r_lat[1:])
-        if int(round((u[-1] - u[0]) / 360.0)) != 0:
-            caps.append(xy + (np.full(n, u.min()), np.full(n, bool(np.mean(r_lat[:-1]) > 0.0))))
-        else:
-            normal.append(xy + (np.full(n, 0.5 * (u.min() + u.max())),))
-    return _edge_columns(normal, _EDGE_TYPE), _edge_columns(caps, _CAP_EDGE_TYPE), len(caps)
+    n_e, n_k, n_caps = (np.zeros(len(rings_list), dtype=np.int64) for _ in range(3))
+    for i, rings in enumerate(rings_list):
+        for ring in rings:
+            r_lon, r_lat = ring[:, 0], ring[:, 1]
+            if len(r_lon) < 3:
+                continue
+            r_lon, r_lat = G.close_ring(r_lon, r_lat)
+            u = G.unwrap_ring(r_lon)
+            n = len(u) - 1
+            xy = (u[:-1], r_lat[:-1], u[1:], r_lat[1:])
+            if int(round((u[-1] - u[0]) / 360.0)) != 0:
+                caps.append(xy + (np.full(n, u.min()), np.full(n, bool(np.mean(r_lat[:-1]) > 0.0))))
+                n_k[i] += n
+                n_caps[i] += 1
+            else:
+                normal.append(xy + (np.full(n, 0.5 * (u.min() + u.max())),))
+                n_e[i] += n
+    return (
+        _edge_columns(normal, _EDGE_TYPE),
+        np.concatenate([[0], np.cumsum(n_e)]),
+        _edge_columns(caps, _CAP_EDGE_TYPE),
+        np.concatenate([[0], np.cumsum(n_k)]),
+        n_caps % 2 == 1,
+    )
 
 
 def _meets_mod360(a0, a1, b0, b1):
@@ -854,10 +852,23 @@ def _meets_mod360(a0, a1, b0, b1):
 _EAST_X = 1e300
 
 
-def _cell_edges(cells: np.ndarray, e: dict, k: dict, be) -> tuple:
-    """Per-cell edge filter → (normal-edge count per cell, normal-edge
-    columns, cap-edge count per cell, cap-edge columns, parity bit per
-    cell), columns in cell order. For finite point coordinates the
+def _pairs(beg: np.ndarray, cnt: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """CSR gather → (row, edge) index pairs: row i with edges
+    ``beg[i] .. beg[i] + cnt[i] - 1``."""
+    row = np.repeat(np.arange(len(cnt)), cnt)
+    return row, np.arange(len(row)) + np.repeat(beg - (np.cumsum(cnt) - cnt), cnt)
+
+
+def _cell_edges(
+    cells: np.ndarray, pidx: np.ndarray, e: dict, eoff: np.ndarray, k: dict, koff: np.ndarray, be, max_bytes=None
+) -> tuple | None:
+    """Per-cell edge filter over flat (cell, edge) pairs: partial cover
+    row i is paired with every edge of its polygon ``pidx[i]`` (the
+    :func:`_ring_edges` columns ``e``/``k`` at offsets ``eoff``/``koff``),
+    in chunks of at most ``_EDGE_MASK_CHUNK`` pairs → (normal-edge count
+    per row, normal-edge columns, cap-edge count per row, cap-edge
+    columns, parity bit per row), columns in row order; None as soon as
+    the kept edges pass ``max_bytes``. For finite point coordinates the
     refine stays decision-identical: an edge is dropped only if no
     point of the cell can cross it, and replaced only by edges and a
     parity bit that every point of the cell crosses the same number
@@ -898,33 +909,48 @@ def _cell_edges(cells: np.ndarray, e: dict, k: dict, be) -> tuple:
     lat1 = np.where(lat1 >= 90.0, np.inf, lat1)
     y_lo, y_hi = np.minimum(e["y1"], e["y2"]), np.maximum(e["y1"], e["y2"])
     x_hi = np.maximum(e["x1"], e["x2"])
-    dy = np.where(y_lo < y_hi, e["y2"] - e["y1"], 1.0)
     kx_lo, kx_hi = np.minimum(k["x1"], k["x2"]), np.maximum(k["x1"], k["x2"])
     ky_lo, ky_hi = np.minimum(k["y1"], k["y2"]), np.maximum(k["y1"], k["y2"])
-    rows_e, cols_e, rows_k, cols_k, bp_row, bp_val = [], [], [], [], [], []
-    step = max(1, _EDGE_MASK_CHUNK // max(1, len(y_lo), len(kx_lo)))
-    for s in range(0, n, step):
-        a0, a1 = lon0[s : s + step, None], lon1[s : s + step, None]
-        b0, b1 = lat0[s : s + step, None], lat1[s : s + step, None]
-        framed = (a0 - e["c"] >= -180.0) & (a1 - e["c"] < 180.0)
-        cand = (y_lo < y_hi) & (y_lo <= b1) & (y_hi >= b0) & (~framed | (x_hi >= a0))
+    e_cnt, k_cnt = np.diff(eoff)[pidx], np.diff(koff)[pidx]
+    ends = np.cumsum(e_cnt + k_cnt)
+    none = np.zeros(0, dtype=np.int64)
+    rows_e, idx_e, rows_k, idx_k, bp_row, bp_val = [none], [none], [none], [none], [none], [np.zeros(0)]
+    kept_bytes = 0
+    s = 0
+    while s < n:
+        # rows s..t-1 hold at most _EDGE_MASK_CHUNK pairs (or one row)
+        t = max(s + 1, int(np.searchsorted(ends, ends[s] - e_cnt[s] - k_cnt[s] + _EDGE_MASK_CHUNK, side="right")))
+        r, j = _pairs(eoff[pidx[s:t]], e_cnt[s:t])
+        r += s
+        b0, b1 = lat0[r], lat1[r]
+        m = (y_lo[j] < y_hi[j]) & (y_lo[j] <= b1) & (y_hi[j] >= b0)
+        r, j, b0, b1 = r[m], j[m], b0[m], b1[m]
+        a0, c = lon0[r], e["c"][j]
+        framed = (a0 - c >= -180.0) & (lon1[r] - c < 180.0)
+        m = ~framed | (x_hi[j] >= a0)
+        r, j, b0, b1, framed = r[m], j[m], b0[m], b1[m], framed[m]
+        x1, y1, x2, y2, lo, hi = e["x1"][j], e["y1"][j], e["x2"][j], e["y2"][j], y_lo[j], y_hi[j]
         # the edge's x where it enters and leaves the band
-        x_in, x_out = (
-            e["x1"] + (np.clip(b, y_lo, y_hi) - e["y1"]) * (e["x2"] - e["x1"]) / dy for b in (b0, b1)
+        x_in, x_out = (x1 + (np.clip(b, lo, hi) - y1) * (x2 - x1) / (y2 - y1) for b in (b0, b1))
+        east = framed & (np.minimum(x_in, x_out) > lon1[r])
+        rows_e.append(r[~east])
+        idx_e.append(j[~east])
+        bp_row.append(np.concatenate([r[east], r[east]]))
+        bp_val.append(np.concatenate([lo[east], hi[east]]))
+        r, j = _pairs(koff[pidx[s:t]], k_cnt[s:t])
+        r += s
+        m = (
+            (kx_lo[j] < kx_hi[j])
+            & _meets_mod360(lon0[r], lon1[r], kx_lo[j], kx_hi[j])
+            & np.where(k["north"][j], ky_hi[j] >= lat0[r], ky_lo[j] <= lat1[r])
         )
-        east = cand & framed & (np.minimum(x_in, x_out) > a1)
-        ckeep = (
-            (kx_lo < kx_hi)
-            & _meets_mod360(a0, a1, kx_lo, kx_hi)
-            & np.where(k["north"], ky_hi >= b0, ky_lo <= b1)
-        )
-        for mask, src, rows, cols in ((cand & ~east, e, rows_e, cols_e), (ckeep, k, rows_k, cols_k)):
-            r, j = np.nonzero(mask)
-            rows.append(r + s)
-            cols.append({f: v[j] for f, v in src.items()})
-        r, j = np.nonzero(east)
-        bp_row.append(np.concatenate([r, r]) + s)
-        bp_val.append(np.concatenate([y_lo[j], y_hi[j]]))
+        rows_k.append(r[m])
+        idx_k.append(j[m])
+        # Arrow bytes per edge: five doubles, plus a bool for a cap edge
+        kept_bytes += 40 * len(rows_e[-1]) + 41 * len(rows_k[-1])
+        if max_bytes is not None and kept_bytes > max_bytes:
+            return None
+        s = t
     row, val = np.concatenate(bp_row), np.concatenate(bp_val)
     below = val <= lat0[row]
     parity = np.bincount(row[below], minlength=n) % 2 == 1
@@ -935,6 +961,8 @@ def _cell_edges(cells: np.ndarray, e: dict, k: dict, be) -> tuple:
     starts = np.nonzero(np.r_[True, (row[1:] != row[:-1]) | (val[1:] != val[:-1])])[0]
     odd = starts[np.diff(np.r_[starts, len(row)]) % 2 == 1]
     row, val = row[odd], val[odd]
+    rows_e = np.concatenate(rows_e)
+    cols_e = {f: v[np.concatenate(idx_e)] for f, v in e.items()}
     if len(row):
         # survivors pair up per cell in lat order, an odd last one with +inf
         same_next = np.r_[row[1:] == row[:-1], False]
@@ -943,77 +971,57 @@ def _cell_edges(cells: np.ndarray, e: dict, k: dict, be) -> tuple:
         lead = rank % 2 == 0
         y2 = np.where(same_next, np.r_[val[1:], np.inf], np.inf)[lead]
         m = len(y2)
-        rows_e.append(row[lead])
-        cols_e.append(
-            {"x1": np.full(m, _EAST_X), "y1": val[lead], "x2": np.full(m, _EAST_X), "y2": y2, "c": np.zeros(m)}
-        )
+        stand = {"x1": np.full(m, _EAST_X), "y1": val[lead], "x2": np.full(m, _EAST_X), "y2": y2, "c": np.zeros(m)}
+        rows_e = np.concatenate([rows_e, row[lead]])
+        cols_e = {f: np.concatenate([v, stand[f]]) for f, v in cols_e.items()}
 
-    def by_cell(rows, cols):
-        rows = np.concatenate(rows)
+    def by_row(rows, cols):
         order = np.argsort(rows, kind="stable")
-        return np.bincount(rows, minlength=n), {f: np.concatenate([c[f] for c in cols])[order] for f in cols[0]}
+        return np.bincount(rows, minlength=n), {f: v[order] for f, v in cols.items()}
 
-    return (*by_cell(rows_e, cols_e), *by_cell(rows_k, cols_k), parity)
+    rows_k = np.concatenate(rows_k)
+    cols_k = {f: v[np.concatenate(idx_k)] for f, v in k.items()}
+    return (*by_row(rows_e, cols_e), *by_row(rows_k, cols_k), parity)
 
 
-def _list_array(counts: list[np.ndarray], values: list[dict], typ: pa.StructType) -> pa.ListArray:
+def _list_array(counts: np.ndarray, values: dict, typ: pa.StructType) -> pa.ListArray:
     """Per-row edge counts + edge columns (both in row order) → one
     Arrow list<struct> column."""
-    offsets = np.concatenate([[0], np.cumsum(np.concatenate(counts))]).astype(np.int32)
-    flat = pa.StructArray.from_arrays(
-        [pa.array(np.concatenate([v[t.name] for v in values]) if values else [], type=t.type) for t in typ],
-        fields=list(typ),
-    )
+    offsets = np.concatenate([[0], np.cumsum(counts)]).astype(np.int32)
+    flat = pa.StructArray.from_arrays([pa.array(values[t.name], type=t.type) for t in typ], fields=list(typ))
     return pa.ListArray.from_arrays(offsets, flat)
 
 
-def _edge_table(cover: pd.DataFrame, polys: list[dict], be, max_bytes: int) -> pa.Table | None:
-    """The broadcast cover as an Arrow table: (cell, poly_id, full,
-    parity, edges, cap_edges). Partial rows carry their cell's
-    filtered ring edges and the parity of the polygon's cap rings and
-    of the cell's folded edges; full rows carry none (the predicate
-    never reads them). None as soon as the kept edges alone pass
-    ``max_bytes`` — the cover then belongs in the table regime."""
-    # keyed by str(): the cover frame's poly_id column is a string
-    # even when the spec used int ids
-    prepared = {str(p["poly_id"]): _ring_edges(poly_rings(p)) for p in polys}
-    full = cover["full"].to_numpy()
-    pid = cover["poly_id"].to_numpy()
-    cells = cover["cell"].to_numpy()
-    # partial rows grouped per polygon, after every full row, so each
-    # group's kept edges concatenate straight into the list values
-    order = [np.nonzero(full)[0]]
-    none = np.zeros(len(order[0]), dtype=np.int64)
-    n_e, n_k, fold = [none], [none], [none.astype(bool)]
-    v_e: list[dict] = []
-    v_k: list[dict] = []
-    kept_bytes = 0
-    part = np.nonzero(~full)[0]
-    for poly_id, ii in pd.Series(part).groupby(pid[part]).indices.items():
-        rows = part[ii]
-        e, k, _ = prepared[poly_id]
-        ne, ve, nk, vk, f = _cell_edges(cells[rows], e, k, be)
-        # Arrow bytes per edge: five doubles, plus a bool for a cap edge
-        kept_bytes += 40 * int(ne.sum()) + 41 * int(nk.sum())
-        if kept_bytes > max_bytes:
-            return None
-        order.append(rows)
-        n_e.append(ne)
-        n_k.append(nk)
-        fold.append(f)
-        v_e.append(ve)
-        v_k.append(vk)
-    order = np.concatenate(order)
-    pid = pid[order]
-    caps = {p: n_caps % 2 == 1 for p, (_e, _k, n_caps) in prepared.items()}
+def _edge_table(
+    cells: np.ndarray, pidx: np.ndarray, full: np.ndarray, rings_list: list, ids: list[str], be, max_bytes=None
+) -> pa.Table | None:
+    """The cover of both regimes as an Arrow table: (cell, poly_id,
+    full, parity, edges, cap_edges), one row per cover row (cell,
+    polygon ``pidx`` of ``rings_list``, whose poly_id is in ``ids``,
+    full). Partial rows carry their cell's filtered ring edges
+    (:func:`_cell_edges`) and the parity of the polygon's cap rings and
+    of the cell's folded edges; full rows, first, carry none (the
+    predicate never reads them). None as soon as the kept edges alone
+    pass ``max_bytes`` — a broadcast cover then belongs in the table
+    regime."""
+    e, eoff, k, koff, caps = _ring_edges(rings_list)
+    n_full = int(full.sum())
+    order = np.concatenate([np.nonzero(full)[0], np.nonzero(~full)[0]])
+    part = order[n_full:]
+    got = _cell_edges(cells[part], pidx[part], e, eoff, k, koff, be, max_bytes)
+    if got is None:
+        return None
+    n_e, v_e, n_k, v_k, fold = got
+    pid = pidx[order]
+    none = np.zeros(n_full, dtype=np.int64)
     return pa.table(
         {
             "cell": pa.array(cells[order], pa.int64()),
-            "poly_id": pa.array(pid, pa.string()),
+            "poly_id": pa.array(np.asarray(ids, dtype=object)[pid], pa.string()),
             "full": pa.array(full[order]),
-            "parity": pa.array(pd.Series(pid).map(caps).to_numpy(dtype=bool) ^ np.concatenate(fold)),
-            "edges": _list_array(n_e, v_e, _EDGE_TYPE),
-            "cap_edges": _list_array(n_k, v_k, _CAP_EDGE_TYPE),
+            "parity": pa.array(caps[pid] ^ np.concatenate([none.astype(bool), fold])),
+            "edges": _list_array(np.concatenate([none, n_e]), v_e, _EDGE_TYPE),
+            "cap_edges": _list_array(np.concatenate([none, n_k]), v_k, _CAP_EDGE_TYPE),
         }
     )
 
@@ -1082,24 +1090,27 @@ def _cover_artifacts(
     key = (spark.sparkContext.applicationId, _polys_key(polys, res, res_max, be.name), budget)
     if key in _ARTIFACT_MEMO:
         return _ARTIFACT_MEMO[key]
-    cover = build_cell_cover(polys, res, res_max, backend=be)
+    rings = [poly_rings(p) for p in polys]
+    cells, pidx, full = _cover_rows(_cover_rings_many(rings, res, res_max, be))
     art: tuple | None = (None, [])
-    if len(cover):
+    if len(cells):
         # flat-probe rewrite: single-level cover ⇒ one codegen encode on
         # the point side and NO explode (the chain plan multiplies every
         # point row by the number of cover levels)
-        res_present = be.cell_res(cover["cell"].to_numpy())
+        res_present = be.cell_res(cells)
         fine = int(res_present.max())
         expanded_n = int(
             (float(be.aperture) ** (fine - res_present)).sum()
         )
         if expanded_n <= _FLAT_MAX_CELLS and (res_present != fine).any():
-            cover = _expand_cover(cover, fine, backend=be)
-        tab = _edge_table(cover, polys, be, budget) if budget > 0 else None
+            cells, src = _expand_cover(cells, fine, be)
+            pidx, full = pidx[src], full[src]
+        ids = [str(p["poly_id"]) for p in polys]
+        tab = _edge_table(cells, pidx, full, rings, ids, be, budget) if budget > 0 else None
         art = (
             (
                 spark.createDataFrame(tab),
-                np.sort(np.unique(be.cell_res(cover["cell"].to_numpy()))).tolist(),
+                np.unique(be.cell_res(cells)).tolist(),
             )
             if fits_driver(spark, None if tab is None else tab.nbytes, budget)
             else None
@@ -1189,11 +1200,12 @@ def pip_join(
 # ---------------------------------------------------------------------------
 # Cover-as-table regime: polygon sets past the driver/broadcast envelope
 # (VERDICT r4 #1; SCALE.md's documented spill-over for the broadcast
-# index). The polygon side becomes a DataFrame, the cover is built
-# DISTRIBUTED (mapInPandas over the same _cover_rings kernel the
-# broadcast regime uses), and the probe becomes a cell-keyed shuffle
-# join of the point SKELETON. A user with 10^6 parcels/census polygons
-# never touches the driver loop or the broadcast ceiling.
+# index). The polygon side becomes a DataFrame, the broadcast regime's
+# cover table is built DISTRIBUTED (mapInArrow over the same
+# _cover_rings_many and _edge_table kernels), and the probe becomes a
+# cell-keyed shuffle join of the point SKELETON, refined by the same
+# _inside predicate. A user with 10^6 parcels/census polygons never
+# touches the driver loop or the broadcast ceiling.
 # ---------------------------------------------------------------------------
 
 # past this many polygons, pip_join() auto-dispatches to the table
@@ -1205,29 +1217,39 @@ _TABLE_POLYS_BUDGET = 4096
 _COVER_TASK_BYTES = 256 * 1024
 
 # cache hygiene, table-regime twin of the broadcast regime's LRU memo:
-# each pip_join_table call persists its polygon table, cover, and
-# candidate skeleton (all three are consumed by the returned plan).
-# A long-lived session issuing successive table-regime queries would
-# strand three cached datasets per call; keep the most recent few
-# calls' frames and unpersist (never destroy — re-executing an old
-# returned plan then recomputes instead of erroring) the rest.
+# each pip_join_table call persists its cover (read by the level
+# histogram and by the returned plan). A long-lived session issuing
+# successive table-regime queries would strand one cached cover per
+# call; keep the most recent few calls' covers and unpersist (never
+# destroy — re-executing an old returned plan then recomputes instead
+# of erroring) the rest.
 _TABLE_CACHE_KEEP = 3
-_TABLE_CACHE_LRU: list[tuple] = []
+_TABLE_CACHE_LRU: list[DataFrame] = []
 
 
-def _table_cache_register(*frames) -> None:
-    _TABLE_CACHE_LRU.append(frames)
+def _table_cache_register(cover: DataFrame) -> None:
+    _TABLE_CACHE_LRU.append(cover)
     while len(_TABLE_CACHE_LRU) > _TABLE_CACHE_KEEP:
-        for f in _TABLE_CACHE_LRU.pop(0):
-            try:
-                f.unpersist(blocking=False)
-            except Exception:
-                pass
+        try:
+            _TABLE_CACHE_LRU.pop(0).unpersist(blocking=False)
+        except Exception:
+            pass
 
-# refine="auto": polygons whose rings total more vertices than this
-# refine via cogroup (rings ship per poly); smaller rings refine via
-# the per-candidate join (no per-group scheduling overhead)
-_RING_JOIN_MAX_VERTS = 4096
+
+# the distributed cover's rows: _edge_table's columns plus the cell level
+_COVER_SCHEMA = from_arrow_schema(
+    pa.schema(
+        [
+            ("cell", pa.int64()),
+            ("poly_id", pa.string()),
+            ("full", pa.bool_()),
+            ("parity", pa.bool_()),
+            ("edges", pa.list_(_EDGE_TYPE)),
+            ("cap_edges", pa.list_(_CAP_EDGE_TYPE)),
+            ("res", pa.int32()),
+        ]
+    )
+)
 
 RINGS_SQL_TYPE = "array<array<array<double>>>"
 
@@ -1299,8 +1321,6 @@ def pip_join_table(
     lon_col: str = "lon",
     lat_col: str = "lat",
     backend=None,
-    refine: str = "auto",
-    refine_salt: int = 8,
 ) -> DataFrame:
     """points ⋈ polygons containment join with the polygon side as a
     DataFrame — the scale regime for polygon sets past the broadcast
@@ -1310,8 +1330,7 @@ def pip_join_table(
     array<array<array<double>>>)`` (normalized to WKB in one
     distributed pass). Same semantics as :func:`pip_join` (even-odd
     over the ring list, inner-join drop of non-matching points,
-    identical classification and refine kernels), different physical
-    plan:
+    identical cover and refine kernels), different physical plan:
 
     0. **Binary-native polygon transport**: every exchange, cache, and
        Arrow batch carries polygons as ONE compact WKB cell; executors
@@ -1321,50 +1340,32 @@ def pip_join_table(
        executor time 24% going from 2 to 8 concurrent cores (allocation
        churn on the shared heap) — the binary path is what keeps the
        regime's N→4N scaling honest.
-    1. **Distributed cover build**: one mapInPandas over the polygon
-       table runs the SAME per-polygon adaptive kernel
-       (:func:`_cover_rings`) the broadcast regime runs on the driver —
-       per-polygon work, embarrassingly parallel, no driver loop. The
-       cover (cell, poly_id, full, res) is hash-partitioned on cell and
-       persisted: it IS the index, reused by both probe branches.
-    2. **Cell-keyed shuffle probe**: the point side encodes its cell(s)
-       (one codegen encode per cover level; single-level covers pay no
-       explode) and equi-joins the cover on cell — a plain shuffle
-       hash/sort-merge join Catalyst+AQE own (skew split, partition
-       coalescing). Pass the (id, lon, lat) SKELETON as ``points``:
-       this regime shuffles the point side, so payload columns (image
-       ``bytes``) must be joined back by id afterwards — the flagship
-       discipline per the bounded-shuffle rule in BASELINE.json.
-    3. **Two refine shapes, auto-chosen from ring size** (the refine
-       itself is the same vectorized even-odd ray cast either way —
-       geo.geometry.points_in_rings):
-       - ``join`` (parcel-sized rings, ≤ _RING_JOIN_MAX_VERTS total
-         vertices — the many-polygon use case): partial candidates
-         equi-join the polygon table on poly_id (AQE skew-splits a hot
-         polygon's shell) and ONE Arrow-batched UDF ray-casts each
-         batch grouped by poly_id. Ring payload rides per candidate
-         row — cheap for small rings, and there is no per-group
-         scheduling overhead.
-       - ``cogroup`` (vertex-heavy rings): candidates cogroup with the
-         polygon table on (poly_id, salt) — rings ship ``refine_salt``
-         times per POLYGON instead of per candidate, and a hot
-         polygon's shell spreads over ``refine_salt`` tasks. Per-group
-         Arrow overhead makes this wrong for 10^4+ small polygons
-         (measured 135 s vs ~3 s on the 10^4-poly entry), right for
-         coastline-grade rings.
+    1. **Distributed cover build**: one mapInArrow over the WKB polygon
+       batches runs the kernels the broadcast regime runs on the driver
+       — :func:`_cover_rings_many` for the adaptive cover, then
+       :func:`_edge_table` (no byte budget) for each partial row's
+       filtered ring edges and parity bit — and yields the Arrow
+       batches directly: per-polygon work, embarrassingly parallel, no
+       driver loop. The cover (cell, poly_id, full, parity, edges,
+       cap_edges, res) is hash-partitioned on cell and persisted: it IS
+       the index.
+    2. **Cell-keyed shuffle probe, refined in its own filter**: the
+       point side encodes its cell(s) (one codegen encode per cover
+       level; single-level covers pay no explode), equi-joins the cover
+       on cell — a plain shuffle hash/sort-merge join Catalyst+AQE own
+       (skew split, partition coalescing) — and the joined rows pass
+       the broadcast regime's :func:`_inside` predicate: full cells
+       match outright, partial cells ray-cast their own edges natively.
+       No Python worker runs past the cover build. Pass the (id, lon,
+       lat) SKELETON as ``points``: this regime shuffles the point
+       side, so payload columns (image ``bytes``) must be joined back
+       by id afterwards — the flagship discipline per the
+       bounded-shuffle rule in BASELINE.json.
 
     At 10^12 points the plan is: one map-side encode, one shuffle of
-    the skeleton keyed by cell, one shuffle of the O(perimeter)
-    boundary-shell candidates keyed by poly_id (or (poly_id, salt)).
-    No driver-side polygon loop, no broadcast of the cover, nothing
-    quadratic.
+    the skeleton keyed by cell, one native filter. No driver-side
+    polygon loop and no broadcast of the cover.
     """
-    if refine not in ("auto", "join", "cogroup"):
-        # a typo must not silently fall through to the cogroup branch —
-        # the wrong shape for small polygons by a measured 40×
-        raise ValueError(
-            f"refine must be 'auto', 'join', or 'cogroup'; got {refine!r}"
-        )
     be = get_backend(backend) if isinstance(backend, (str, type(None))) else backend
     if res_max is None:
         res_max = min(res + 5, be.res_max)
@@ -1393,30 +1394,17 @@ def pip_join_table(
             raise ValueError(f"poly_id={pid!r}: {exc}") from exc
 
     def _cover_map(batches):
-        for pdf in batches:
-            ids = [str(p) for p in pdf["poly_id"]]
-            rl = [_decode_poly(p, blob) for p, blob in zip(ids, pdf["wkb"])]
-            covers = _cover_rings_many(rl, r_lo, r_hi, be, expand_gap=3)
-            cells_l = [c for c, _f in covers if len(c)]
-            if not cells_l:
-                continue
-            cells = np.concatenate(cells_l)
-            yield pd.DataFrame(
-                {
-                    "cell": cells,
-                    "poly_id": np.repeat(
-                        np.array(ids, dtype=object),
-                        [len(c) for c, _f in covers],
-                    ),
-                    "full": np.concatenate([f for _c, f in covers if len(_c)]),
-                    "res": be.cell_res(cells).astype(np.int32),
-                }
-            )
+        for batch in batches:
+            ids = [str(p) for p in batch.column("poly_id").to_pylist()]
+            rings = [_decode_poly(p, blob) for p, blob in zip(ids, batch.column("wkb").to_pylist())]
+            cells, pidx, full = _cover_rows(_cover_rings_many(rings, r_lo, r_hi, be, expand_gap=3))
+            if len(cells):
+                tab = _edge_table(cells, pidx, full, rings, ids, be)
+                res_col = be.cell_res(tab.column("cell").to_numpy()).astype(np.int32)
+                yield from tab.append_column("res", pa.array(res_col)).to_batches()
 
-    # the polygon table has up to three consumers (the refine-shape
-    # aggregate, the cover build, and the refine join); persist the
-    # compact binary once (10^6 parcels ≈ tens of MB), every consumer
-    # reads the materialization.
+    # the polygon table has one consumer, the cover build, so it is not
+    # persisted.
     #
     # Partition it FINE first when it is big: the cover kernel costs
     # ~ms per polygon — orders of magnitude more than shuffling its
@@ -1443,20 +1431,15 @@ def pip_join_table(
         want = para
     if polys_df.rdd.getNumPartitions() < want:
         polys_df = polys_df.repartition(int(want))
-    polys_df = polys_df.persist()
-    cover = polys_df.mapInPandas(
-        _cover_map, schema="cell long, poly_id string, full boolean, res int"
-    )
     # the cover IS the index: partition it on the probe key once and
-    # persist, so both the full and partial branches (and successive
+    # persist, so the level histogram and the probe (and successive
     # micro-batches against the same polys_df lineage) reuse one
     # materialization with the join-side distribution already in place
-    cover = cover.repartition("cell").persist()
+    cover = polys_df.mapInArrow(_cover_map, _COVER_SCHEMA).repartition("cell").persist()
     hist = cover.groupBy("res").count().collect()
     levels = sorted(int(r["res"]) for r in hist)
     if not levels:
         cover.unpersist()
-        polys_df.unpersist()
         return points.withColumn("poly_id", F.lit(None).cast("string")).where(F.lit(False))
 
     # flat-probe rewrite, table-regime twin of the broadcast regime's
@@ -1464,11 +1447,12 @@ def pip_join_table(
     # side through a k-way ancestor-chain explode (k× the probe rows
     # through the shuffle join). When expanding every coarse full cell
     # to the finest level stays bounded, flatten the cover DISTRIBUTED
-    # (one mapInPandas over the persisted cover — the same
-    # _expand_cover child-tree walk the driver regime runs) and probe
-    # with ONE codegen encode. Continental covers blow the budget and
-    # keep the chain plan — that IS the 100-TB scale path, the explode
-    # trades probe rows for a cover that stays O(perimeter).
+    # (one mapInArrow over the persisted cover — the same _expand_cover
+    # child-tree walk the driver regime runs; only full rows, which
+    # carry no edges, expand) and probe with ONE codegen encode.
+    # Continental covers blow the budget and keep the chain plan — that
+    # IS the 100-TB scale path, the explode trades probe rows for a
+    # cover that stays O(perimeter).
     fine = levels[-1]
     if len(levels) > 1:
         expanded_n = sum(
@@ -1478,114 +1462,25 @@ def pip_join_table(
         if expanded_n <= _FLAT_MAX_CELLS:
 
             def _flat_map(batches):
-                for pdf in batches:
-                    if len(pdf):
-                        yield _expand_cover(
-                            pdf[["cell", "poly_id", "full"]], fine, backend=be
+                for batch in batches:
+                    if batch.num_rows:
+                        cells, src = _expand_cover(batch.column("cell").to_numpy(), fine, be)
+                        yield (
+                            batch.take(pa.array(src))
+                            .set_column(0, "cell", pa.array(cells))
+                            .set_column(6, "res", pa.array(np.full(len(cells), fine, dtype=np.int32)))
                         )
 
-            flat = (
-                cover.mapInPandas(
-                    _flat_map, schema="cell long, poly_id string, full boolean"
-                )
-                .repartition("cell")
-                .persist()
-            )
+            flat = cover.mapInArrow(_flat_map, _COVER_SCHEMA).repartition("cell").persist()
             flat.count()
             cover.unpersist(blocking=False)
             cover = flat
             levels = [fine]
+    _table_cache_register(cover)
 
     probe = _probe_cells(points, levels, be, lon_col, lat_col)
-    cand = probe.join(
-        cover.drop("res").withColumnRenamed("cell", "__cell"), "__cell", "inner"
+    return (
+        probe.join(cover.drop("res").withColumnRenamed("cell", "__cell"), "__cell", "inner")
+        .where(_inside(lon_col, lat_col))
+        .drop("full", "parity", "edges", "cap_edges", "__cell")
     )
-    # the candidate set feeds BOTH output branches (full hits pass
-    # through; partials refine). Unlike the broadcast regime — where
-    # recomputing a broadcast probe is one map-side pass and the
-    # persist is a measured loss at small inputs — recomputing here
-    # re-runs the cell-keyed SHUFFLE of the point skeleton. One cache
-    # write of the skeleton-width candidates always beats a second
-    # shuffle, at bench scale and at 10^12 rows alike.
-    cand = cand.persist()
-    _table_cache_register(polys_df, cover, cand)
-    full_hits = cand.where(F.col("full")).drop("__cell", "full")
-    partial = cand.where(~F.col("full")).drop("__cell", "full")
-
-    out_schema = partial.schema
-    out_cols = [f.name for f in out_schema.fields]
-
-    if refine == "auto":
-        # ONE tiny aggregate over the polygon table decides the refine
-        # shape: parcel-sized rings (the many-polygon use case) join
-        # per candidate row; vertex-heavy rings cogroup so the payload
-        # ships per (poly, salt), not per candidate. WKB length / 16 is
-        # a tight upper bound on the vertex count (16 bytes/vertex +
-        # small headers), so borderline polygons err toward cogroup —
-        # the shape that tolerates big payloads.
-        mv = polys_df.select(F.max(F.length("wkb")).alias("mv")).first()["mv"]
-        refine = "cogroup" if (mv or 0) / 16.0 > _RING_JOIN_MAX_VERTS else "join"
-
-    if refine == "join":
-        # Equi-join the partial candidates with the polygon table on
-        # poly_id — a plain shuffle join AQE skew-splits when one
-        # polygon's boundary shell is hot — then ONE Arrow-batched
-        # refine that groups each batch by poly_id (one WKB decode per
-        # polygon per batch). The binary payload rides per candidate
-        # ROW, which is why this path is gated to small rings
-        # (≤ _RING_JOIN_MAX_VERTS vertices).
-        @F.pandas_udf(T.BooleanType())
-        def _refine_join(
-            lon: pd.Series, lat: pd.Series, pid: pd.Series, wkb: pd.Series
-        ) -> pd.Series:
-            out = np.zeros(len(lon), dtype=bool)
-            lon_v = lon.to_numpy(dtype=np.float64)
-            lat_v = lat.to_numpy(dtype=np.float64)
-            for p, ii in wkb.groupby(pid.to_numpy()).indices.items():
-                rr = _decode_poly(p, wkb.iloc[ii[0]])
-                out[ii] = G.points_in_rings(lon_v[ii], lat_v[ii], rr)
-            return pd.Series(out)
-
-        refined = (
-            partial.join(polys_df, "poly_id", "inner")
-            .where(
-                _refine_join(
-                    F.col(lon_col), F.col(lat_col), F.col("poly_id"), F.col("wkb")
-                )
-            )
-            .select(*out_cols)
-        )
-        return full_hits.unionByName(refined)
-
-    # cogroup refine: rings ship refine_salt times per POLYGON (never
-    # per candidate), and a hot polygon's shell spreads over
-    # refine_salt tasks. Per-group Arrow overhead (~ms) makes this the
-    # wrong shape for 10^4+ SMALL polygons — measured 135 s vs ~3 s for
-    # the join refine on the many-polygon entry — hence the auto gate.
-    salt = int(max(1, refine_salt))
-    part_s = partial.withColumn(
-        "_salt", F.pmod(F.hash(F.col(lon_col), F.col(lat_col)), F.lit(salt)).cast("int")
-    )
-    rings_s = polys_df.withColumn(
-        "_salt", F.explode(F.expr(f"sequence(0, {salt - 1})"))
-    )
-
-    def _refine_cg(cand_pdf: pd.DataFrame, rings_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand_pdf) or not len(rings_pdf):
-            return cand_pdf.iloc[0:0][out_cols]
-        rings = _decode_poly(
-            rings_pdf["poly_id"].iloc[0], rings_pdf["wkb"].iloc[0]
-        )
-        mask = G.points_in_rings(
-            cand_pdf[lon_col].to_numpy(dtype=np.float64),
-            cand_pdf[lat_col].to_numpy(dtype=np.float64),
-            rings,
-        )
-        return cand_pdf.loc[mask, out_cols]
-
-    refined = (
-        part_s.groupBy("poly_id", "_salt")
-        .cogroup(rings_s.groupBy("poly_id", "_salt"))
-        .applyInPandas(_refine_cg, schema=out_schema)
-    )
-    return full_hits.unionByName(refined)

@@ -56,74 +56,12 @@ def _register_fn(name: str, fn: Callable, duck_sql: str | None) -> None:
     _REG[name] = (fn, duck_sql)
 
 
-# Catalog iteration order (VERDICT r4 #6, closing move): the driver's
-# per-round CORRECTNESS snapshot samples a ~50-entry PREFIX of this
-# dict (r3/r4 snapshots are exactly the first-registered entries), so
-# entries registered late in the file were never driver-sampled across
-# rounds 1-4 (43 of them — each still value-MATCHed by the full local
-# gate, scripts/driver_gate.py). Final round: surface exactly those 43
-# FIRST so every catalog entry ends the project with a driver-recorded
-# correctness sample, followed by the flagship family and the rest in
-# registration order. Pure reordering — the entry set, functions, and
-# oracles are unchanged.
-_NEVER_SAMPLED_R1_R4 = [
-    "pip_join_wkb_input",
-    "pip_join_many_polys",
-    "pip_join_wkb_table",
-    "pip_join_wkt_table",
-    "pip_join_table_cogroup",
-    "dedup_clusters",
-    "dedup_survivors",
-    "similarity_ivf_topk",
-    "similarity_ann_multiprobe",
-    "text_quality_full",
-    "dedup_winnow_pairs",
-    "w4_event_time_window",
-    "dedup_image_phash",
-    "dedup_image_clusters",
-    "knn_mutual_pairs",
-    "events_funnel_stages",
-    "phash_search_radius",
-    "zorder_layout_buckets",
-    "segment_intersect_roads",
-    "ring_metrics_polygons",
-    "geofence_transitions_rects",
-    "raster_isobands",
-    "trajectory_resample_ticks",
-    "quadkey_tile_hist",
-    "coverage_gaps_rects",
-    "raster_gradient_slope",
-    "tile_sample_topk",
-    "ingest_pipeline_e2e",
-    "pip_join_convex_oracle",
-    "segment_density_cells",
-    "events_cohort_retention",
-    "raster_cost_distance",
-    "trajectory_od_matrix",
-    "events_json_extract",
-    "events_moving_avg",
-    "events_cube_rollup",
-    "events_value_ntile",
-    "events_type_pivot",
-    "attribution_click_view",
-    "events_sliding_window",
-    "adaptive_multires_hist",
-    "events_value_anomalies",
-    "zonal_buffer_counts",
-]
-
-
-def _ordered_names() -> list[str]:
-    front = [n for n in _NEVER_SAMPLED_R1_R4 if n in _REG]
-    return front + [n for n in _REG if n not in set(front)]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: _REG[k][0] for k in _ordered_names()}
+    return {k: fn for k, (fn, _oracle) in _REG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {k: _REG[k][1] for k in _ordered_names() if _REG[k][1] is not None}
+    return {k: oracle for k, (_fn, oracle) in _REG.items() if oracle is not None}
 
 
 # ===========================================================================
@@ -510,12 +448,11 @@ _register_fn("pip_join_wkb_input", _pip_wkb, _pip_holes_oracle())
 
 def _pip_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cover-as-table PIP regime (VERDICT r4 #1): 10^4 polygons trip
-    pip_join's _TABLE_POLYS_BUDGET dispatch — the cover is built
-    DISTRIBUTED (mapInPandas over the per-polygon kernel), the probe is
-    a cell-keyed shuffle join of the skeleton, and the refine takes the
-    JOIN shape (parcel-sized rings equi-join candidates on poly_id —
-    the auto-chosen shape for small rings; pip_join_table_cogroup
-    oracle-checks the other shape). Value-checked
+    pip_join's _TABLE_POLYS_BUDGET dispatch — the edge-list cover is
+    built DISTRIBUTED (mapInArrow over the batched cover kernel and the
+    per-cell edge filter), the probe is a cell-keyed shuffle join of
+    the skeleton, and the native _inside predicate refines it in the
+    join's own filter. Value-checked
     by the same crossing-count oracle as every other PIP entry (with
     the result-identical lat-band prefilter keeping DuckDB off the full
     10^4-poly × points cross product). res_max=14 so the adaptive cover
@@ -524,7 +461,7 @@ def _pip_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary shell overshoots the true hit set 3.4x — measured 11.4s
     vs 4.7s at 14 for bit-identical output (the refine makes any
     res_max exact; depth only moves work between the cell join and the
-    Arrow ray-cast)."""
+    ray cast)."""
     from ..data import polygons_grid
     from ..operators.pip_join import pip_join
 
@@ -601,16 +538,12 @@ _register_fn("pip_join_wkt_table", _pip_wkt_table, _pip_many_oracle())
 
 
 def _pip_table_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The table regime's OTHER refine shape under a value oracle: the
-    cogroup refine ships rings per (polygon, salt) instead of per
-    candidate row — the coastline-grade path for vertex-heavy rings.
-    Auto-dispatch picks it from ring size (pinned in pytest); here it
-    is forced on a 128-polygon grid subset so the cogroup kernel's
-    output is value-checked against the SAME crossing-count DuckDB
-    oracle as the join-shape entries (refine shape must be invisible
-    in the result). 128 polys, not 10^4 — per-group Arrow overhead
-    makes cogroup the wrong shape for many small polygons (measured
-    135 s vs ~3 s), which is exactly why the dispatch exists."""
+    """The table regime on a 128-polygon subset of the grid fixture,
+    value-checked against the SAME crossing-count DuckDB oracle as the
+    10^4-polygon entries: a small polygon table through the one
+    distributed cover build and native refine. (The name predates the
+    single refine: it keys this entry's recorded correctness and bench
+    rows.)"""
     from ..data import polygons_grid_wkb
     from ..operators.pip_join import pip_join_table
 
@@ -619,10 +552,7 @@ def _pip_table_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     img = FS.load_images(spark, sf_dir)
     return (
-        pip_join_table(
-            spark, img, wdf, res=9, res_max=14,
-            refine="cogroup", refine_salt=3,
-        )
+        pip_join_table(spark, img, wdf, res=9, res_max=14)
         .select("image_id", "poly_id")
         .orderBy("image_id", "poly_id")
     )
@@ -4907,7 +4837,7 @@ _register_fn("ingest_pipeline_e2e", _ingest_e2e, _ingest_e2e_oracle())
 
 # ===========================================================================
 # PIP value-oracle on convex polygons: the REAL pip_join operator
-# (adaptive cover + Arrow ray-cast refine) value-checked against an
+# (adaptive cover + native ray-cast refine) value-checked against an
 # INDEPENDENT SQL formulation — convex containment = all edge cross
 # products non-negative. Rotated (non-axis-aligned) quads so this
 # exercises the general path, not the rectangle shortcut.

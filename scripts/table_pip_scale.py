@@ -18,8 +18,10 @@ Protocol (same discipline as dedup_scaling_bench):
   (cover build + cell-keyed probe + refine) -> count, cold cache;
 - correctness rides along every run: a deterministic sample of
   hit-bearing polygons re-runs through the BROADCAST regime and the
-  two hit sets must be frame-equal (the regimes share the classify and
-  refine kernels but nothing else — the probe plans are disjoint).
+  two hit sets must be frame-equal (the regimes share the cover kernel,
+  the per-cell edge filter and the refine predicate; the cover is built
+  on the driver in one, on the executors in the other, and the probe
+  plans are disjoint).
 
 Prints ONE JSON line; recorded runs live in SCALE.md ("cover as a
 table" section) and BENCH.md.

@@ -68,19 +68,21 @@ PINS = [
     ("kmeans_clusters", 7),
     # cover-as-table regime (not iterative, but its fixed job
     # composition — polys normalize + size-driven repartition stats +
-    # distributed cover build/persist + refine-shape max-agg + probe +
-    # the collect-protocol orderBy's range-partition sample — is the
+    # distributed cover build/persist + level histogram + probe + the
+    # collect-protocol orderBy's range-partition sample — is the
     # per-entry floor the sandbox scheduler amortizes at scale; a
-    # regression that adds an action shows up here exactly)
-    ("pip_join_many_polys", 14),
+    # regression that adds an action shows up here exactly). 14 -> 8
+    # when the probe took the broadcast regime's native refine over
+    # per-cell edge lists: no refine-shape max-agg, no candidate
+    # persist, no full/partial union and no pandas-UDF refine branch
+    ("pip_join_many_polys", 8),
     # broadcast-regime flagship: one point scan refined in the
     # broadcast join's own filter (the full/partial union and its
     # pandas-UDF refine dropped one job: 6 -> 5)
     ("flagship_pip_tiles", 5),
-    ("pip_join_wkb_table", 14),
-    ("pip_join_wkt_table", 14),
-    # forced-cogroup twin skips the refine-shape max-agg decision job
-    ("pip_join_table_cogroup", 13),
+    ("pip_join_wkb_table", 8),
+    ("pip_join_wkt_table", 8),
+    ("pip_join_table_cogroup", 8),
 ]
 
 

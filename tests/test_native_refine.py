@@ -1,4 +1,4 @@
-"""pip_join's broadcast-regime refine is one Catalyst predicate over
+"""pip_join's refine, in both regimes, is one Catalyst predicate over
 per-cell edge lists (operators/pip_join.py _inside). It must be
 DECISION-IDENTICAL to geo.geometry.points_in_rings — compared here as
 exact (point, polygon) sets, never by tolerance — on hypothesis-made
@@ -10,10 +10,12 @@ filter's pad matters)."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from htrc_ingester_spark import data
@@ -41,12 +43,16 @@ def _pip_pairs(spark, lon, lat, polys, **kw) -> set:
     return {(int(r[0]), r[1]) for r in rows}
 
 
-def _assert_identical(spark, lon, lat, polys, **kw) -> set:
+def _assert_identical(spark, lon, lat, polys, forced=None, **kw) -> set:
+    """pip_join's pairs ≡ points_in_rings'; given conftest's ``forced``,
+    checked in the broadcast regime and again in the table regime."""
     lon, lat = np.asarray(lon, float), np.asarray(lat, float)
-    got = _pip_pairs(spark, lon, lat, polys, **kw)
     want = _numpy_pairs(lon, lat, polys)
-    assert got == want, sorted(got ^ want)[:10]
-    return got
+    for on in (False, True) if forced else (False,):
+        with forced(on) if forced else contextlib.nullcontext():
+            got = _pip_pairs(spark, lon, lat, polys, **kw)
+        assert got == want, (on, sorted(got ^ want)[:10])
+    return want
 
 
 def _grid(lons, lats):
@@ -69,7 +75,11 @@ RECT = [(10.0, 10.0), (20.0, 10.0), (20.0, 20.0), (10.0, 20.0), (10.0, 10.0)]
 
 
 class TestFixtures:
-    def test_rectangle_edges_and_corners(self, spark):
+    """Each fixture runs through both regimes: the broadcast join and,
+    under ``forced``, pip_join_table's distributed cover and shuffle
+    probe refine with the same edge lists and predicate."""
+
+    def test_rectangle_edges_and_corners(self, spark, forced):
         """Left and bottom edges IN, right and top edges OUT; of the
         corners only the bottom-left is IN."""
         named = {
@@ -85,11 +95,11 @@ class TestFixtures:
             "outside": (25.0, 15.0),
         }
         lon, lat = (np.array(v) for v in zip(*named.values()))
-        got = _assert_identical(spark, lon, lat, [{"poly_id": "rect", "ring": RECT}], res=7)
+        got = _assert_identical(spark, lon, lat, [{"poly_id": "rect", "ring": RECT}], forced, res=7)
         names = list(named)
         assert {names[i] for i, _ in got} == {"left", "bottom", "bl", "inside"}
 
-    def test_horizontal_edge_at_point_latitude_under_ansi(self, spark):
+    def test_horizontal_edge_at_point_latitude_under_ansi(self, spark, forced):
         """A horizontal edge has y2 - y1 = 0: under ANSI the crossing
         formula raises on that division unless the straddle test,
         which is false for it, short-circuits first."""
@@ -98,12 +108,12 @@ class TestFixtures:
         lon = np.linspace(-1.0, 9.0, 41)
         lat = np.full_like(lon, 5.0)
         polys = [{"poly_id": "tri", "ring": tri}]
-        _assert_identical(spark, lon, lat, polys, res=6)
+        _assert_identical(spark, lon, lat, polys, forced, res=6)
         # the cover's edge filter drops horizontal edges, so the
         # predicate also runs over every edge of the ring
         assert _predicate_pairs(spark, lon, lat, polys) == _numpy_pairs(lon, lat, polys)
 
-    def test_antimeridian_ring_out_of_frame_longitudes(self, spark):
+    def test_antimeridian_ring_out_of_frame_longitudes(self, spark, forced):
         """Open ring across the dateline (unwrapped frame 170..190,
         centre 180): points at negative raw lons leave the frame, and
         lon - c + 180 < 0 takes the negative-fmod branch; raw lons past
@@ -113,25 +123,25 @@ class TestFixtures:
             [-180.0, -179.5, -175.0, -170.0, -169.5, 169.5, 170.0, 175.0, 179.99, 180.0, 185.0, -185.0],
             [-10.0, -9.5, 0.0, 9.99, 10.0],
         )
-        got = _assert_identical(spark, lon, lat, [{"poly_id": "am", "ring": ring}], res=4)
+        got = _assert_identical(spark, lon, lat, [{"poly_id": "am", "ring": ring}], forced, res=4)
         assert got  # the fixture exercises hits, not only misses
         # the frame shift with a negative fmod result is really exercised
         c = 180.0
         r = np.fmod(lon - c + 180.0, 360.0)
         assert ((lon - c < -180.0) & (r < 0.0)).any()
 
-    def test_polar_caps(self, spark):
+    def test_polar_caps(self, spark, forced):
         north = [(float(x), 70.0 + 5.0 * np.sin(np.radians(3 * x))) for x in range(-180, 180, 10)]
         south = [(float(x), -65.0) for x in range(180, -180, -15)]
         polys = [{"poly_id": "n", "ring": north}, {"poly_id": "s", "ring": south}]
         vlon, vlat = _ring_points([north, south])
         glon, glat = _grid(np.arange(-180.0, 180.0, 7.5), [-89.0, -70.0, -65.0, -60.0, 0.0, 65.0, 70.0, 75.0, 89.0])
         got = _assert_identical(
-            spark, np.concatenate([vlon, glon]), np.concatenate([vlat, glat]), polys, res=2, res_max=5
+            spark, np.concatenate([vlon, glon]), np.concatenate([vlat, glat]), polys, forced, res=2, res_max=5
         )
         assert {pid for _i, pid in got} == {"n", "s"}
 
-    def test_cap_seam_sliver(self, spark):
+    def test_cap_seam_sliver(self, spark, forced):
         """A cap's meridian ray meets its first and last edge at lons
         that agree only up to rounding: in a ~1e-14° sliver at the first
         vertex's lon, points on the far side of the cap count as inside.
@@ -142,29 +152,39 @@ class TestFixtures:
         polys = [{"poly_id": "cap", "ring": cap}, {"poly_id": "tiny", "ring": tiny}]
         sliver = 10.3 + np.arange(-40, 41) * np.spacing(10.3)
         lon, lat = _grid(np.concatenate([sliver, [10.29, 10.31, 0.0, -0.0, 1e-300, 1.0]]), [-80.0, -1.0, 23.0, 50.0])
-        got = _assert_identical(spark, lon, lat, polys, res=3, res_max=8)
+        got = _assert_identical(spark, lon, lat, polys, forced, res=3, res_max=8)
         far = (lat < 50.0) & (np.abs(lon - 10.3) < 1e-12)
         assert any(pid == "cap" and far[i] for i, pid in got)  # the sliver is really hit
         assert (int(np.nonzero((lon == 0.0) & (lat == 23.0))[0][0]), "tiny") in got
 
-    def test_hole_open_ring_and_two_vertex_ring(self, spark):
+    def test_ring_winding_twice(self, spark, forced):
+        """A ring that winds twice around the pole is crossed an even
+        number of times from either pole, so points_in_ring puts both
+        polar regions inside: the cover must seed the whole globe, not
+        only the cap's pole side."""
+        ring = [(180.0, 0.0), (0.0, 0.0), (0.0, 0.0), (180.0, 0.0), (0.0, 0.0)]
+        lon, lat = _grid(np.arange(-180.0, 180.0, 30.0), [-80.0, -45.0, -1.0, 0.0, 1.0, 45.0, 80.0])
+        got = _assert_identical(spark, lon, lat, [{"poly_id": "w2", "ring": ring}], forced, res=2, res_max=6)
+        assert (lat[[i for i, _ in got]] > 10.0).any()
+
+    def test_hole_open_ring_and_two_vertex_ring(self, spark, forced):
         outer_open = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
         hole = [(3.0, 3.0), (6.0, 3.0), (6.0, 6.0), (3.0, 6.0), (3.0, 3.0)]
         two = [(1.0, 1.0), (9.0, 9.0)]
         polys = [{"poly_id": "h", "rings": [outer_open, hole, two]}]
         lon, lat = _grid(np.arange(-0.5, 10.6, 0.5), np.arange(-0.5, 10.6, 0.5))
-        got = _assert_identical(spark, lon, lat, polys, res=6)
+        got = _assert_identical(spark, lon, lat, polys, forced, res=6)
         assert (int(np.nonzero((lon == 4.5) & (lat == 4.5))[0][0]), "h") not in got
         assert (int(np.nonzero((lon == 1.5) & (lat == 1.5))[0][0]), "h") in got
 
-    def test_integer_poly_ids(self, spark):
+    def test_integer_poly_ids(self, spark, forced):
         polys = [{"poly_id": 7, "ring": RECT}, {"poly_id": 8, "rings": P.poly_rings(data.polygons_holes()[0])}]
         vlon, vlat = _ring_points(polys[1]["rings"])
         diag = np.linspace(9.0, 21.0, 25)
-        got = _assert_identical(spark, np.concatenate([diag, vlon]), np.concatenate([diag, vlat]), polys, res=7)
+        got = _assert_identical(spark, np.concatenate([diag, vlon]), np.concatenate([diag, vlat]), polys, forced, res=7)
         assert {pid for _i, pid in got} <= {"7", "8"} and got
 
-    def test_points_on_partial_cell_boundaries(self, spark):
+    def test_points_on_partial_cell_boundaries(self, spark, forced):
         """Points exactly on the res_max grid lines, around a rectangle
         whose edges also lie on grid lines and a slanted triangle — the
         per-cell edge filter must not drop an edge a boundary point
@@ -185,6 +205,7 @@ class TestFixtures:
             np.concatenate([lon, mids[0]]),
             np.concatenate([lat, mids[1]]),
             polys,
+            forced,
             res=4,
             res_max=res_max,
         )
@@ -212,8 +233,10 @@ def _edge_counts(polys, res, res_max):
     """(edges per partial row, table bytes) of the broadcast table."""
     from htrc_ingester_spark.geo.backend import H3LiteBackend
 
-    cover = P.build_cell_cover(polys, res, res_max)
-    tab = P._edge_table(cover, polys, H3LiteBackend(), 1 << 40)
+    be = H3LiteBackend()
+    rings = [P.poly_rings(p) for p in polys]
+    cells, pidx, full = P._cover_rows(P._cover_rings_many(rings, res, res_max, be))
+    tab = P._edge_table(cells, pidx, full, rings, [str(p["poly_id"]) for p in polys], be)
     part = ~np.asarray(tab.column("full").to_numpy(zero_copy_only=False))
     n = sum(np.asarray(tab.column(c).combine_chunks().value_lengths()) for c in ("edges", "cap_edges"))
     assert part.any()
@@ -320,14 +343,14 @@ def _all_edges_frame(spark, lon, lat, polys):
 
     rows = {"lon": [], "lat": [], "poly_id": [], "parity": [], "edges": [], "cap_edges": []}
     for p in polys:
-        e, k, n_caps = P._ring_edges(P.poly_rings(p))
+        e, _, k, _, caps = P._ring_edges([P.poly_rings(p)])
         edges = [{f: v[i].item() for f, v in e.items()} for i in range(len(e["c"]))]
         cap_edges = [{f: v[i].item() for f, v in k.items()} for i in range(len(k["lo"]))]
         for x, y in zip(lon, lat):
             rows["lon"].append(float(x))
             rows["lat"].append(float(y))
             rows["poly_id"].append(str(p["poly_id"]))
-            rows["parity"].append(n_caps % 2 == 1)
+            rows["parity"].append(bool(caps[0]))
             rows["edges"].append(edges)
             rows["cap_edges"].append(cap_edges)
     tab = pa.table(
@@ -366,22 +389,23 @@ def test_predicate_matches_points_in_rings(spark, rings, pts):
     assert _predicate_pairs(spark, lon, lat, polys) == _numpy_pairs(lon, lat, polys)
 
 
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(
     st.lists(st.one_of(local_ring_st, ring_st), min_size=1, max_size=3),
     st.lists(st.tuples(st.floats(-5.0, 5.0, allow_nan=False), st.floats(-5.0, 5.0, allow_nan=False)), max_size=20),
     st.lists(st.tuples(coord_lon, coord_lat), max_size=10),
 )
-def test_pip_join_matches_points_in_rings(spark, rings, local_pts, global_pts):
-    """End to end (cover + per-cell edge filter + predicate) on
-    hypothesis-made polygons: two polygons, the second with integer
-    id, queried with local, global, vertex and edge-midpoint points."""
+def test_pip_join_matches_points_in_rings(spark, forced, rings, local_pts, global_pts):
+    """End to end (cover + per-cell edge filter + predicate), in both
+    regimes, on hypothesis-made polygons: two polygons, the second
+    with integer id, queried with local, global, vertex and
+    edge-midpoint points. (``forced`` holds no per-example state.)"""
     polys = [{"poly_id": "a", "rings": rings}, {"poly_id": 2, "ring": [(-3.0, -3.0), (3.0, -2.0), (0.0, 3.5)]}]
     vlon, vlat = _ring_points(rings)
     pts = local_pts + global_pts
     lon = np.concatenate([[a for a, _ in pts], vlon])
     lat = np.concatenate([[b for _, b in pts], vlat])
-    _assert_identical(spark, lon, lat, polys, res=2, res_max=6)
+    _assert_identical(spark, lon, lat, polys, forced, res=2, res_max=6)
 
 
 @pytest.mark.parametrize("shift", [0.0, 360.0, -360.0])

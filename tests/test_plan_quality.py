@@ -340,11 +340,12 @@ class TestRound2PlanShapes:
 class TestCatalogWidePlanAudit:
     """Every catalog entry's physical plan is free of row-at-a-time
     Python UDFs (BatchEvalPython). Arrow-vectorized Python
-    (ArrowEvalPython — pip_join_table's ray-cast refine, the S2 / real
-    H3 encode kernels) and mapInPandas (image/METS batch parsers, the
-    distributed cover build) are the sanctioned Python paths; the
-    broadcast-regime pip_join refines natively and runs no Python at
-    all (TestPIPJoinPlan.test_native_refine_single_scan). Per-row
+    (ArrowEvalPython — the S2 / real H3 encode kernels), mapInPandas
+    (image/METS batch parsers) and mapInArrow (pip_join_table's
+    distributed cover build) are the sanctioned Python paths; pip_join
+    refines natively in both regimes and runs no Python in its probe
+    (TestPIPJoinPlan.test_native_refine_single_scan,
+    test_spatial_operators' table-regime plan pin). Per-row
     pickling in a hot path is never acceptable and this sweep makes
     that a standing invariant for all current AND future entries."""
 

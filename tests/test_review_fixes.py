@@ -324,10 +324,10 @@ def test_seed_res_antimeridian_width():
 
 
 def test_table_persist_lru_bounds_cached_frames():
-    """r5 review: pip_join_table registers its persisted frames in a
-    bounded LRU; frames from calls older than the window are
+    """r5 review: pip_join_table registers its persisted cover in a
+    bounded LRU; covers from calls older than the window are
     unpersisted (never destroyed) so long-lived sessions don't strand
-    three cached datasets per call."""
+    a cached dataset per call."""
     from htrc_ingester_spark.operators import pip_join as P
 
     class Frame:
@@ -340,14 +340,14 @@ def test_table_persist_lru_bounds_cached_frames():
     saved = list(P._TABLE_CACHE_LRU)
     P._TABLE_CACHE_LRU.clear()
     try:
-        gens = [tuple(Frame() for _ in range(3)) for _ in range(5)]
+        gens = [Frame() for _ in range(5)]
         for g in gens:
-            P._table_cache_register(*g)
+            P._table_cache_register(g)
         assert len(P._TABLE_CACHE_LRU) == P._TABLE_CACHE_KEEP
         for g in gens[: 5 - P._TABLE_CACHE_KEEP]:
-            assert all(f.released for f in g)
+            assert g.released
         for g in gens[5 - P._TABLE_CACHE_KEEP :]:
-            assert not any(f.released for f in g)
+            assert not g.released
     finally:
         P._TABLE_CACHE_LRU.clear()
         P._TABLE_CACHE_LRU.extend(saved)

@@ -1720,7 +1720,7 @@ class TestBatchCoverKernel:
 class TestPIPTable:
     """Cover-as-table regime (VERDICT r4 #1): distributed cover build +
     cell-keyed shuffle probe must be RESULT-IDENTICAL to the broadcast
-    regime on every fixture family, under both refine shapes."""
+    regime on every fixture family."""
 
     def _hits(self, df):
         return (
@@ -1740,17 +1740,6 @@ class TestPIPTable:
         )
         pd.testing.assert_frame_equal(tb, bc)
         assert len(bc) > 0
-
-    def test_bad_refine_value_raises(self, spark, images_df):
-        """A refine typo must raise, not silently fall through to the
-        cogroup shape (the wrong shape for small polygons by 40×)."""
-        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_df
-
-        with pytest.raises(ValueError, match="refine"):
-            pip_join_table(
-                spark, images_df, polys_to_df(spark, data.polygons()),
-                res=7, refine="Join",
-            )
 
     def test_null_wkb_in_direct_frame_fails_naming_row(self, spark, images_df):
         """A raw GeoParquet frame handed straight to pip_join_table can
@@ -1775,12 +1764,7 @@ class TestPIPTable:
 
         polys = data.polygons_holes()
         bc = self._hits(pip_join(spark, images_df, polys, res=7))
-        tb = self._hits(
-            pip_join_table(
-                spark, images_df, polys_to_df(spark, polys), res=7,
-                refine="cogroup", refine_salt=3,
-            )
-        )
+        tb = self._hits(pip_join_table(spark, images_df, polys_to_df(spark, polys), res=7))
         pd.testing.assert_frame_equal(tb, bc)
         assert len(bc) > 0
 
@@ -1827,9 +1811,10 @@ class TestPIPTable:
 
     def test_table_probe_is_shuffle_join_without_bytes(self, spark):
         """Plan pins for the table regime: the probe is a real
-        cell-keyed shuffle join (NOT a broadcast of the cover) and a
+        cell-keyed shuffle join (NOT a broadcast of the cover), a
         skeleton invocation never references the bytes column
-        anywhere (the bounded-shuffle rule)."""
+        anywhere (the bounded-shuffle rule), and the refine is the
+        native predicate — no Python UDF, cogroup or union."""
         from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_df
 
         pdf = data.images_pdf(50)
@@ -1840,13 +1825,15 @@ class TestPIPTable:
         )
         plan = hits._jdf.queryExecution().executedPlan().toString()
         assert "bytes" not in plan
-        # the cover must be built DISTRIBUTED (mapInPandas over the
+        # the cover must be built DISTRIBUTED (mapInArrow over the
         # polygon table), not on the driver (the broadcast regime's
-        # cover is a LocalTableScan of a driver-built pandas frame).
+        # cover is a LocalTableScan of a driver-built Arrow table).
         # The join flavor itself is Catalyst's choice: at test scale it
         # rightly broadcasts the tiny materialized cover; at parcel
         # scale the same plan shuffles the skeleton on __cell.
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
+        for node in ("ArrowEvalPython", "BatchEvalPython", "FlatMapCoGroupsInPandas", "Union"):
+            assert node not in plan, node
         # no LocalTableScan may carry the cover columns: the ONLY
         # local scans allowed are the test inputs (points skeleton,
         # polygon table) — never a driver-materialized (cell, full)
