@@ -9,7 +9,9 @@ adoption caveat). This module closes that gap:
 
 - :func:`get_backend` returns a backend object exposing ONE API —
   ``latlng_to_cell / cell_to_parent / grid_disk / cells_to_children /
-  cell_corners / cover_bbox / encode_col / res_max / aperture`` —
+  cell_corners / bbox_pad_deg / cover_bbox / seed_res / encode_col /
+  res_max / aperture`` (``cover_bbox`` and ``seed_res`` over arrays of
+  boxes and spans, one cover-kernel call for every polygon) —
   implemented by :class:`H3LiteBackend` (pure numpy + codegen SQL
   exprs, bit-stable, what every catalog oracle pins) or
   :class:`H3Backend` (real H3 indices via ``h3`` ≥ 4, hexagonal
@@ -107,25 +109,28 @@ class H3LiteBackend:
         return 0.0
 
     @staticmethod
-    def cover_bbox(lon0: float, lat0: float, lon1: float, lat1: float, res: int):
-        return H.cover_bbox(lon0, lat0, lon1, lat1, res)
+    def cover_bbox(lon0, lat0, lon1, lat1, res) -> tuple[np.ndarray, np.ndarray]:
+        """Every cell meeting each lon/lat box, at each box's level →
+        (cells, the box index of each cell): geo.h3lite.cover_bboxes
+        (lon0 > lon1 after normalizing marks a box across the
+        antimeridian)."""
+        return H.cover_bboxes(lon0, lat0, lon1, lat1, res)
 
     @staticmethod
-    def seed_res(dlon: float, dlat: float, res: int, res_max: int) -> int:
-        """Coarsest USEFUL cover level for a polygon of bbox span
-        (dlon, dlat): the finest r in [res, res_max] whose cells are
-        still at least bbox-sized. Levels coarser than this emit no
+    def seed_res(dlon, dlat, res: int, res_max: int) -> np.ndarray:
+        """Coarsest USEFUL cover level for polygons of bbox span
+        (dlon, dlat), arrays: the finest r in [res, res_max] whose cells
+        are still at least bbox-sized. Levels coarser than this emit no
         full cells (a full cell needs polygon ⊇ cell) and a ≤2×2
         all-partial frontier — pure subdivision overhead the adaptive
         walk can skip by SEEDING there directly (the bbox cover at any
         level ⊇ the cells the walk would have reached, so covers stay
         sound; refine keeps results exact for any seed level).
-        h3lite cells are square in degrees: w = h = 90 / 2^res."""
-        span = max(float(dlon), float(dlat))
-        r = res
-        while r < res_max and 90.0 / (1 << (r + 1)) >= span:
-            r += 1
-        return r
+        h3lite cells are square in degrees: w = h = 90 / 2^res, so r
+        counts the finer levels whose width still holds the span."""
+        span = np.maximum(dlon, dlat)
+        width = 90.0 / (np.int64(1) << np.arange(res + 1, res_max + 1))
+        return res + (width >= np.asarray(span)[..., None]).sum(axis=-1)
 
     @staticmethod
     def encode_col(lon_col: str, lat_col: str, res: int):
@@ -243,39 +248,40 @@ class H3Backend:  # pragma: no cover - requires the h3 wheel
         return span * span * 0.003 + 1e-12
 
     @staticmethod
-    def cover_bbox(lon0: float, lat0: float, lon1: float, lat1: float, res: int):
-        # polygon_to_cells covers cells whose CENTER is inside; pad the
-        # box by one grid_disk ring so boundary-straddling cells join
-        # the frontier (the classifier prunes false positives).
-        poly = _h3.LatLngPoly(
-            [(lat0, lon0), (lat0, lon1), (lat1, lon1), (lat1, lon0), (lat0, lon0)]
-        )
-        seed = {_h3.str_to_int(c) for c in _h3.polygon_to_cells(poly, res)}
-        if not seed:
-            seed = {int(H3Backend.latlng_to_cell((lat0 + lat1) / 2, (lon0 + lon1) / 2, res))}
-        padded = set(seed)
-        for c in list(seed):
-            padded.update(int(x) for x in H3Backend.grid_disk(int(c), 1))
-        return np.array(sorted(padded), dtype=np.int64)
+    def cover_bbox(lon0, lat0, lon1, lat1, res) -> tuple[np.ndarray, np.ndarray]:
+        """(cells, box index) per box, as H3LiteBackend.cover_bbox:
+        polygon_to_cells covers cells whose CENTER is inside, so each
+        box's cells are padded by one grid_disk ring and
+        boundary-straddling cells join the frontier (the classifier
+        prunes false positives)."""
+        cells: list[np.ndarray] = []
+        for a0, b0, a1, b1, r in zip(lon0, lat0, lon1, lat1, res):
+            poly = _h3.LatLngPoly([(b0, a0), (b0, a1), (b1, a1), (b1, a0), (b0, a0)])
+            seed = {_h3.str_to_int(c) for c in _h3.polygon_to_cells(poly, int(r))}
+            if not seed:
+                seed = {int(H3Backend.latlng_to_cell((b0 + b1) / 2, (a0 + a1) / 2, int(r)))}
+            padded = set(seed)
+            for c in list(seed):
+                padded.update(int(x) for x in H3Backend.grid_disk(int(c), 1))
+            cells.append(np.array(sorted(padded), dtype=np.int64))
+        box = np.repeat(np.arange(len(cells)), [len(c) for c in cells])
+        return np.concatenate(cells + [np.zeros(0, dtype=np.int64)]), box
 
     @staticmethod
-    def seed_res(dlon: float, dlat: float, res: int, res_max: int) -> int:
-        """Coarsest useful cover level (see H3LiteBackend.seed_res).
-        Hexagons have no degree-aligned width; use the equal-area
-        effective span sqrt(globe_deg² / num_cells) and stay one level
-        CONSERVATIVE (stop while the next level's cells are still at
-        least 2× bbox-sized) — an early seed is only an efficiency
-        loss, never a soundness one."""
-        span = max(float(dlon), float(dlat))
-        if span <= 0.0:
-            return res_max
-        r = res
-        while r < res_max:
-            eff = (360.0 * 180.0 / float(_h3.get_num_cells(r + 1))) ** 0.5
-            if eff < 2.0 * span:
-                break
-            r += 1
-        return r
+    def seed_res(dlon, dlat, res: int, res_max: int) -> np.ndarray:
+        """Coarsest useful cover level per polygon (see
+        H3LiteBackend.seed_res). Hexagons have no degree-aligned width;
+        use the equal-area effective span sqrt(globe_deg² / num_cells)
+        and stay one level CONSERVATIVE (stop while the next level's
+        cells are still at least 2× bbox-sized) — an early seed is only
+        an efficiency loss, never a soundness one."""
+        out = []
+        for span in np.maximum(dlon, dlat):
+            r = res if span > 0.0 else res_max
+            while r < res_max and (360.0 * 180.0 / float(_h3.get_num_cells(r + 1))) ** 0.5 >= 2.0 * span:
+                r += 1
+            out.append(r)
+        return np.array(out, dtype=np.int64)
 
     @staticmethod
     def encode_col(lon_col: str, lat_col: str, res: int):

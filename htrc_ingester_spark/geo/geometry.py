@@ -22,10 +22,12 @@ Containment convention (deterministic, asserted by tests):
   round-trip perturbs values by ~1 ulp of 180, which would break the
   half-open edge rule above for points lying exactly on an edge —
   the conditional keeps boundary semantics bit-deterministic, and
-  every twin replicates it: the batch cover kernel, pip_join's
-  native Catalyst refine (operators/pip_join.py ``_crossing_sql``,
-  numpy's float ``%`` rebuilt from Spark's fmod), the DuckDB oracle
-  SQL builder, the independent test oracles).
+  every twin replicates it: pip_join's one cover kernel, whose corner
+  test runs this arithmetic per (cell, edge) pair
+  (operators/pip_join.py ``_normal_crossings``/``_cap_crossings``),
+  its native Catalyst refine (``_crossing_sql``, numpy's float ``%``
+  rebuilt from Spark's fmod), the DuckDB oracle SQL builder, the
+  independent test oracles).
 - **Polar caps** (ring whose unwrapped lon winds a full ±360°): the
   cap contains the pole on the side of the ring's mean latitude; a
   point is inside iff the meridian ray from the point to that pole
@@ -70,7 +72,7 @@ def unwrap_ring(ring_lon: np.ndarray) -> np.ndarray:
     # which moved edges ~1e-14° off coordinates that are exactly
     # representable in the input (e.g. a survey boundary lying exactly
     # on a grid line). Downstream consumers (points_in_ring, the cover
-    # classifiers) then disagreed with kernels operating on the raw
+    # kernel) then disagreed with kernels operating on the raw
     # coordinates; returning the exact input keeps every frame
     # bit-identical for planar rings.
     if bool(((d >= -180.0) & (d < 180.0)).all()):
@@ -140,7 +142,7 @@ def points_in_ring(lon: np.ndarray, lat: np.ndarray, ring_lon: np.ndarray, ring_
         # ring edge: the raw comparison plon < x_edge is the convention;
         # the perturbed one flipped it by drift direction. Mirrored
         # bit-for-bit by the SQL oracle builder (plans/catalog.py), the
-        # batch cover kernel and the native refine predicate
+        # cover kernel's corner test and the native refine predicate
         # (operators/pip_join.py).
         lo, hi = u.min(), u.max()
         center = 0.5 * (lo + hi)

@@ -164,22 +164,27 @@ def grid_ring(cell: int, k: int, kx: int | None = None):
 def cover_bbox(lon_min: float, lat_min: float, lon_max: float, lat_max: float, res: int):
     """All cells intersecting a lon/lat bbox (lon_min may exceed lon_max
     when the box crosses the antimeridian). Returns int64 array."""
-    nxr, nyr = nx(res), ny(res)
-    y0 = int(np.clip(np.floor((lat_min + 90.0) / 180.0 * nyr), 0, nyr - 1))
-    y1 = int(np.clip(np.floor((lat_max + 90.0) / 180.0 * nyr), 0, nyr - 1))
-    lon_min_n = float(normalize_lon(lon_min))
-    lon_max_n = float(normalize_lon(lon_max))
-    x0 = int(np.clip(np.floor((lon_min_n + 180.0) / 360.0 * nxr), 0, nxr - 1))
-    x1 = int(np.clip(np.floor((lon_max_n + 180.0) / 360.0 * nxr), 0, nxr - 1))
-    if lon_min_n <= lon_max_n:
-        xs = np.arange(x0, x1 + 1, dtype=np.int64)
-    else:  # antimeridian crossing: [x0 .. nx) ∪ [0 .. x1]
-        xs = np.concatenate(
-            [np.arange(x0, nxr, dtype=np.int64), np.arange(0, x1 + 1, dtype=np.int64)]
-        )
-    ys = np.arange(y0, y1 + 1, dtype=np.int64)
-    xx, yy = np.meshgrid(xs, ys)
-    return pack_xy(xx.ravel(), yy.ravel(), res)
+    return cover_bboxes([lon_min], [lat_min], [lon_max], [lat_max], [res])[0]
+
+
+def cover_bboxes(lon_min, lat_min, lon_max, lat_max, res) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`cover_bbox` over arrays of boxes, each at its own level →
+    (cells, the box index of each cell); a box's cells run row by row,
+    west to east, an antimeridian box's columns as [x0 .. nx) ∪ [0 .. x1]."""
+    lat_min, lat_max, res = (np.asarray(a) for a in (lat_min, lat_max, res))
+    lon_min, lon_max = normalize_lon(lon_min), normalize_lon(lon_max)
+    nxr, nyr = np.int64(1) << (res + 2), np.int64(1) << (res + 1)
+
+    def index(v, half, n):
+        return np.clip(np.floor((v + half) / (2.0 * half) * n), 0, n - 1).astype(np.int64)
+
+    x0, x1 = index(lon_min, 180.0, nxr), index(lon_max, 180.0, nxr)
+    y0, y1 = index(lat_min, 90.0, nyr), index(lat_max, 90.0, nyr)
+    w = np.where(lon_min <= lon_max, x1 - x0, nxr - x0 + x1) + 1
+    n = w * np.maximum(y1 - y0 + 1, 0)
+    box = np.repeat(np.arange(len(n)), n)
+    k = np.arange(len(box)) - np.repeat(np.cumsum(n) - n, n)  # cell rank within its box
+    return pack_xy((x0[box] + k % w[box]) % nxr[box], y0[box] + k // w[box], res[box]), box
 
 
 # ---------------------------------------------------------------------------

@@ -190,7 +190,7 @@ def ring_arrays_to_wkb(rings) -> bytes:
     Degenerate (<3-vertex) rings are NORMALIZED AWAY here: the engine's
     spec-list API tolerates them as even-odd no-ops
     (geometry.points_in_ring returns all-False below 3 vertices, and
-    the cover kernels pre-route such polygons to the per-poly path), so
+    the cover kernel's ring preparation drops them too), so
     dropping them is decision-identical — and it keeps the strict
     decoders (:func:`wkb_to_ring_arrays` / :func:`wkb_to_rings`, which
     reject <3-vertex rings as interchange corruption) total over every

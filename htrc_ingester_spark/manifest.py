@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SUBDIR = "_manifests"
+# most pending partitions one write_resumable call lists on the driver
+PENDING_PARTS_BUDGET = 100_000
 
 # canonical digest expressions — bit_xor(xxhash64(...)) is commutative,
 # associative, overflow-free int64: partition-order independent.
@@ -115,6 +117,8 @@ def write_resumable(
     whose manifest already exists (resume-from-checkpoint).
 
     Returns {"written": n_partitions_written, "skipped": n_skipped}.
+    Raises ValueError, before writing anything, when more than
+    ``PENDING_PARTS_BUDGET`` partitions are pending.
     """
     data_dir = os.path.join(out_dir, "data")
     manifest_dir = os.path.join(out_dir, MANIFEST_SUBDIR)
@@ -129,8 +133,17 @@ def write_resumable(
         n_skipped = 0
         pending = df
 
-    # one narrow pass for the pending partition list (column-pruned)
-    pending_parts = [r[0] for r in pending.select(partition_col).distinct().collect()]
+    # one narrow pass for the pending partition list (column-pruned),
+    # bounded: the list goes to the driver, and the read-back below
+    # prunes on it statically
+    pending_parts = [
+        r[0] for r in pending.select(partition_col).distinct().limit(PENDING_PARTS_BUDGET + 1).collect()
+    ]
+    if len(pending_parts) > PENDING_PARTS_BUDGET:
+        raise ValueError(
+            f"more than {PENDING_PARTS_BUDGET} pending partitions in one write_resumable call; "
+            "write the input in slices of fewer partitions"
+        )
     n_written = len(pending_parts)
     if n_written:
         # dynamic overwrite: a retried half-written partition is replaced
@@ -144,14 +157,12 @@ def write_resumable(
         # manifests are computed from the COMMITTED bytes (partition-
         # pruned read-back), so the declared digests describe what is
         # actually on disk — the reference's verify-what-you-stored
-        # discipline — and the expensive upstream lineage runs once
-        # partition-dir values re-infer as the narrowest type (e.g.
-        # int32); cast back to the source dtype so manifest schemas
-        # stay identical across commits
-        src_type = df.schema[partition_col].dataType
+        # discipline. Reading with the source schema keeps the
+        # partition column's type (a plain read re-infers dir values as
+        # the narrowest type, e.g. int32).
         committed = (
-            spark.read.parquet(data_dir)
-            .withColumn(partition_col, F.col(partition_col).cast(src_type))
+            spark.read.schema(df.schema)
+            .parquet(data_dir)
             .where(F.col(partition_col).isin(pending_parts))
         )
         manifests = compute_manifests(

@@ -449,7 +449,7 @@ _register_fn("pip_join_wkb_input", _pip_wkb, _pip_holes_oracle())
 def _pip_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cover-as-table PIP regime (VERDICT r4 #1): 10^4 polygons trip
     pip_join's _TABLE_POLYS_BUDGET dispatch — the edge-list cover is
-    built DISTRIBUTED (mapInArrow over the batched cover kernel and the
+    built DISTRIBUTED (mapInArrow over the one cover kernel and the
     per-cell edge filter), the probe is a cell-keyed shuffle join of
     the skeleton, and the native _inside predicate refines it in the
     join's own filter. Value-checked

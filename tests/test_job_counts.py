@@ -83,6 +83,13 @@ PINS = [
     ("pip_join_wkb_table", 8),
     ("pip_join_wkt_table", 8),
     ("pip_join_table_cogroup", 8),
+    # CDC MERGE round-trip: delta-log parse + collapse (persisted, read
+    # by the tombstone anti-join and the upsert overlay) + the per-source
+    # count and its orderBy
+    ("cdc_merge_apply", 9),
+    # MinHash LSH pair generation and exact-Jaccard verification (the
+    # warm-up pays one-time jobs: 18 at pin time)
+    ("dedup_minhash_lsh", 6),
 ]
 
 

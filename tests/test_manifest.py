@@ -9,6 +9,8 @@ the named partitions.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -175,3 +177,32 @@ def test_read_manifests_propagates_corruption(spark, tmp_path):
         # some Spark versions defer the failure to schema inference
         if df is not None:
             df.collect()
+
+
+def test_write_bounds_the_pending_partition_list(spark, tmp_path, monkeypatch):
+    """write_resumable lists its pending partitions on the driver, at
+    most PENDING_PARTS_BUDGET of them: past the budget it raises a
+    ValueError naming it before anything is written. Within it, the
+    written count is that list's length, and an empty input on a fresh
+    directory writes nothing."""
+    df = spark.range(0, 900).select(
+        F.col("id").alias("image_id"),
+        (F.col("id") % 300).alias("bucket"),
+        F.xxhash64("id").alias("phash"),
+        (F.col("id") % 7).cast("int").alias("tile_id"),
+    )
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(M, "PENDING_PARTS_BUDGET", 250)
+    with pytest.raises(ValueError, match="more than 250 pending partitions"):
+        M.write_resumable(spark, df, out, "bucket", commit_seq=1)
+    assert not os.path.exists(out)
+    assert M.write_resumable(spark, df.where("bucket < 200"), out, "bucket", commit_seq=1) == {
+        "written": 200,
+        "skipped": 0,
+    }
+    assert M.write_resumable(spark, df, out, "bucket", commit_seq=2) == {"written": 100, "skipped": 200}
+    empty = str(tmp_path / "empty")
+    assert M.write_resumable(spark, df.where("false"), empty, "bucket") == {"written": 0, "skipped": 0}
+    assert not os.path.exists(empty)
+    assert M.verify_manifests(spark, out, "bucket").count() == 0
+    assert M.read_manifests(spark, out).schema["partition_id"].dataType == df.schema["bucket"].dataType

@@ -20,6 +20,7 @@ from hypothesis import strategies as st
 
 from htrc_ingester_spark import data
 from htrc_ingester_spark.geo import geometry as G
+from htrc_ingester_spark.geo.backend import H3LiteBackend
 from htrc_ingester_spark.operators import pip_join as P
 
 
@@ -231,11 +232,9 @@ def _comb(n_teeth):
 
 def _edge_counts(polys, res, res_max):
     """(edges per partial row, table bytes) of the broadcast table."""
-    from htrc_ingester_spark.geo.backend import H3LiteBackend
-
     be = H3LiteBackend()
-    rings = [P.poly_rings(p) for p in polys]
-    cells, pidx, full = P._cover_rows(P._cover_rings_many(rings, res, res_max, be))
+    rings = P._prep_rings([P.poly_rings(p) for p in polys])
+    cells, pidx, full = P._cover(rings, res, res_max, be)
     tab = P._edge_table(cells, pidx, full, rings, [str(p["poly_id"]) for p in polys], be)
     part = ~np.asarray(tab.column("full").to_numpy(zero_copy_only=False))
     n = sum(np.asarray(tab.column(c).combine_chunks().value_lengths()) for c in ("edges", "cap_edges"))
@@ -343,7 +342,8 @@ def _all_edges_frame(spark, lon, lat, polys):
 
     rows = {"lon": [], "lat": [], "poly_id": [], "parity": [], "edges": [], "cap_edges": []}
     for p in polys:
-        e, _, k, _, caps = P._ring_edges([P.poly_rings(p)])
+        rg = P._prep_rings([P.poly_rings(p)])
+        e, k, caps = rg.e, rg.k, rg.caps
         edges = [{f: v[i].item() for f, v in e.items()} for i in range(len(e["c"]))]
         cap_edges = [{f: v[i].item() for f, v in k.items()} for i in range(len(k["lo"]))]
         for x, y in zip(lon, lat):
@@ -446,3 +446,28 @@ def test_pip_join_matches_points_in_rings_flat_rings(spark, rings, pts):
     lon = np.concatenate([[a for a, _ in pts], vlon, glon])
     lat = np.concatenate([[b for _, b in pts], vlat, glat])
     _assert_identical(spark, lon, lat, polys, res=4, res_max=8)
+
+
+class _PaddedBackend(H3LiteBackend):
+    """A stand-in for a backend other than h3lite: h3lite's grid under
+    another name, whose cell boxes carry a non-zero outward pad (real
+    H3's hexagons do)."""
+
+    name = "padded-h3lite"
+
+    @staticmethod
+    def bbox_pad_deg(c_lons, c_lats):
+        return np.full(len(c_lons), 1e-3)
+
+
+def test_backend_generic_path_in_both_regimes(spark, forced):
+    """pip_join through a backend that is not h3lite, in the broadcast
+    and the table regime, on the fixture families (holes, antimeridian,
+    polar caps, degenerate rings): still ≡ points_in_rings."""
+    rng = np.random.default_rng(11)
+    polys = data.polygons_holes() + data.polygons()
+    vlon, vlat = _ring_points([r for p in polys for r in P.poly_rings(p)])
+    lon = np.concatenate([rng.uniform(-180.0, 180.0, 3000), vlon])
+    lat = np.concatenate([rng.uniform(-89.0, 89.0, 3000), vlat])
+    got = _assert_identical(spark, lon, lat, polys, forced, res=5, res_max=9, backend=_PaddedBackend())
+    assert got

@@ -1544,29 +1544,69 @@ class TestAdaptiveCells:
 
 
 class TestBatchCoverKernel:
-    """_cover_rings_many (the vectorized cross-polygon cover build)
-    must be decision-IDENTICAL to the per-polygon kernel on every
-    fixture family — same cells, same full/partial labels — including
-    the fallback families (antimeridian, polar caps, vertex-heavy,
-    large covers) and open-vs-closed ring arrivals."""
+    """The cover kernel (_cover over _prep_rings) checked against the
+    geometry it encodes, G.points_in_rings, on every fixture family:
+
+    - corner parity (_cell_tests) equals points_in_rings at the corners
+      of every cover cell;
+    - every full cell's corners, centre and random interior points are
+      inside its polygon;
+    - every sampled inside point (uniform over the ring bboxes, plus
+      jittered ring vertices) lies in a full or partial cell of its
+      polygon, at one of the cover's levels."""
 
     @staticmethod
-    def _assert_identical(rings_list, res, res_max, gap):
-        import numpy as np
+    def _sample(rings, rng, n=48):
+        from htrc_ingester_spark.geo import geometry as G
 
+        lon, lat = [], []
+        for r in rings:
+            r = np.asarray(r, dtype=np.float64).reshape(-1, 2)
+            if len(r) < 3:
+                continue
+            lon0, lat0, lon1, lat1 = G.ring_bbox(r[:, 0], r[:, 1])
+            w = lon1 - lon0 if lon1 >= lon0 else lon1 + 360.0 - lon0
+            lon.append(lon0 + w * rng.random(n))
+            lat.append(lat0 + (lat1 - lat0) * rng.random(n))
+            jitter = rng.normal(0.0, 1e-6, (2, len(r)))
+            lon.append(r[:, 0] + jitter[0])
+            lat.append(np.clip(r[:, 1] + jitter[1], -90.0, 90.0))
+        if not lon:
+            return np.zeros(0), np.zeros(0)
+        lon = np.concatenate(lon)
+        return (lon + 180.0) % 360.0 - 180.0, np.concatenate(lat)
+
+    @classmethod
+    def _assert_sound(cls, rings_list, res, res_max, gap):
+        from htrc_ingester_spark.geo import geometry as G
         from htrc_ingester_spark.operators import pip_join as PJ
 
         be = PJ.get_backend(None)
-        empty = (np.array([], dtype=np.int64), np.array([], dtype=bool))
-        per = [
-            PJ._cover_rings(r, res, res_max, be, expand_gap=gap) if r else empty
-            for r in rings_list
-        ]
-        many = PJ._cover_rings_many(rings_list, res, res_max, be, expand_gap=gap)
-        for i, ((c1, f1), (c2, f2)) in enumerate(zip(per, many)):
-            assert sorted(zip(c1.tolist(), f1.tolist())) == sorted(
-                zip(c2.tolist(), f2.tolist())
-            ), f"cover mismatch for polygon {i}"
+        rg = PJ._prep_rings(rings_list)
+        cells, pidx, full = PJ._cover(rg, res, res_max, be, expand_gap=gap)
+        assert len(set(zip(cells.tolist(), pidx.tolist()))) == len(cells)
+        inside, _hit = PJ._cell_tests(cells, pidx, rg, be)
+        c_lons, c_lats = be.cell_corners(cells)
+        lon0, lat0, lon1, lat1 = H.cell_to_boundary(cells)
+        levels = np.unique(be.cell_res(cells)).tolist()
+        cover = set(zip(cells.tolist(), pidx.tolist()))
+        rng = np.random.default_rng(5)
+        for i, rings in enumerate(rings_list):
+            rows = pidx == i
+            want = G.points_in_rings(c_lons[rows].ravel(), c_lats[rows].ravel(), rings)
+            assert (inside[rows].ravel() == want).all(), f"corner parity, polygon {i}"
+            f = rows & full
+            u, v = rng.random((2, int(f.sum()), 6))
+            lon = np.concatenate([c_lons[f].ravel(), (lon0[f] + lon1[f]) / 2, (lon0[f, None] + u * (lon1 - lon0)[f, None]).ravel()])
+            lat = np.concatenate([c_lats[f].ravel(), (lat0[f] + lat1[f]) / 2, (lat0[f, None] + v * (lat1 - lat0)[f, None]).ravel()])
+            assert G.points_in_rings(lon, lat, rings).all(), f"full cell not inside, polygon {i}"
+            lon, lat = cls._sample(rings, rng)
+            ins = G.points_in_rings(lon, lat, rings)
+            found = np.zeros(int(ins.sum()), dtype=bool)
+            for r in levels:
+                enc = np.atleast_1d(be.latlng_to_cell(lat[ins], lon[ins], r))
+                found |= np.array([(int(c), i) in cover for c in enc], dtype=bool)
+            assert found.all(), f"inside points outside the cover, polygon {i}: {list(zip(lon[ins][~found], lat[ins][~found]))[:3]}"
 
     def _rl(self, polys):
         from htrc_ingester_spark.operators.pip_join import poly_rings
@@ -1574,19 +1614,17 @@ class TestBatchCoverKernel:
         return [poly_rings(p) for p in polys]
 
     def test_parcel_grid_identical_both_gaps(self):
-        self._assert_identical(self._rl(data.polygons_grid(1500)), 9, 14, 3)
-        self._assert_identical(self._rl(data.polygons_grid(1500)), 9, 12, 0)
+        self._assert_sound(self._rl(data.polygons_grid(1500)), 9, 14, 3)
+        self._assert_sound(self._rl(data.polygons_grid(1500)), 9, 12, 0)
 
     def test_general_and_holes_fixtures_identical(self):
-        self._assert_identical(self._rl(data.polygons()), 7, 12, 0)
-        self._assert_identical(self._rl(data.polygons_holes()), 7, 12, 0)
-        self._assert_identical(self._rl(data.polygons_holes()), 7, 12, 3)
+        self._assert_sound(self._rl(data.polygons()), 7, 12, 0)
+        self._assert_sound(self._rl(data.polygons_holes()), 7, 12, 0)
+        self._assert_sound(self._rl(data.polygons_holes()), 7, 12, 3)
 
     def test_open_ring_arrivals_identical(self):
-        """Open rings take a synthetic parity-closing edge that the
-        per-poly kernel's edge-bbox test never sees — the batch kernel
-        must reproduce that asymmetry, not just be sound."""
-        import numpy as np
+        """Open rings take a synthetic closing edge, for parity and edge
+        boxes alike, exactly as points_in_ring closes them."""
 
         def open_rings(rings):
             return [
@@ -1600,65 +1638,44 @@ class TestBatchCoverKernel:
         assert any(
             not (np.array_equal(r[0][0], r[0][-1])) for r in rl
         )  # fixture really is open now
-        self._assert_identical(rl, 7, 12, 0)
+        self._assert_sound(rl, 7, 12, 0)
 
     def test_fuzz_identical_including_fallback_shapes(self):
-        import numpy as np
-
+        """Random 3-8-gons from parcel to 1° size, open and closed,
+        anywhere on the globe (antimeridian and near-pole included)."""
         rng = np.random.default_rng(7)
         polys = []
         for i in range(400):
             cx, cy = rng.uniform(-179.8, 179.8), rng.uniform(-88, 88)
             k = int(rng.integers(3, 9))
             ang = np.sort(rng.uniform(0, 2 * np.pi, k))
-            rad = rng.uniform(0.0005, 0.5)  # spans batch AND fallback sizes
+            rad = rng.uniform(0.0005, 0.5)
             ring = np.stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)], axis=1)
             if i % 3 == 0:
                 ring = np.concatenate([ring, ring[:1]])  # closed variant
             polys.append([ring])
-        self._assert_identical(polys, 7, 13, 3)
+        self._assert_sound(polys, 7, 13, 3)
 
     def test_grid_aligned_edges_identical(self):
-        """Polygon edges lying EXACTLY on cell boundaries: the per-poly
-        kernel's per-ring frame shift (center + ((lon − center + 180) %
-        360 − 180)) perturbs query lons by ~1 ulp, flipping corners
-        that sit exactly on an edge — the batch kernel must apply the
-        SAME transform per (corner, ring), not the raw lon (caught as a
-        real full/partial divergence on an axis-aligned square)."""
-        import numpy as np
-
+        """Polygon edges lying EXACTLY on cell boundaries: corners that
+        sit exactly on an edge follow points_in_ring's half-open rule
+        (left/bottom in, right/top out), not a rounded frame shift."""
         big = [np.array([[0.0, 0.0], [0.35, 0.0], [0.35, 0.35], [0.0, 0.35]])]
         for gap in (0, 1, 3):
-            self._assert_identical([big], 8, 11, gap)
+            self._assert_sound([big], 8, 11, gap)
         cases = []
         for k in range(40):
             w = 90.0 / (1 << (8 + (k % 4)))
             x0 = -180.0 + (k * 7) * w
             y0 = -90.0 + (k * 3) * w
-            cases.append(
-                [
-                    np.array(
-                        [
-                            [x0, y0],
-                            [x0 + 5 * w, y0],
-                            [x0 + 5 * w, y0 + 5 * w],
-                            [x0, y0 + 5 * w],
-                        ]
-                    )
-                ]
-            )
-        self._assert_identical(cases, 8, 12, 3)
+            cases.append([np.array([[x0, y0], [x0 + 5 * w, y0], [x0 + 5 * w, y0 + 5 * w], [x0, y0 + 5 * w]])])
+        self._assert_sound(cases, 8, 12, 3)
 
     def test_nondyadic_walk_then_exact_boundary_edge_identical(self):
         """A NON-DYADIC vertex followed by an edge lying exactly on a
-        cell boundary: unwrap_ring's cumsum reconstruction perturbed
-        the exactly-representable edge lon by ~1e-14, so the per-poly
-        kernel's edge-bbox test (run in the unwrap frame) missed the
-        boundary column the batch kernel (raw-lon frame) kept —
-        926/4000 cover divergences before unwrap_ring gained its
-        planar identity path (caught by adversarial review fuzz)."""
-        import numpy as np
-
+        cell boundary: a planar ring must keep its exact input
+        coordinates (unwrap_ring's identity path), or the edge moves
+        ~1e-14° off the boundary and the boundary column is missed."""
         res, res_max = 8, 12
         w = 360.0 / (1 << (res_max + 2))
         h = 180.0 / (1 << (res_max + 1))
@@ -1670,42 +1687,24 @@ class TestBatchCoverKernel:
             x0 = -180.0 + xi * w  # exact res_max cell boundary
             y0 = -90.0 + yi * h
             xa = x0 - 2 * w - 0.1 * float(rng.random())  # non-dyadic
-            cases.append(
-                [
-                    np.array(
-                        [
-                            [xa, y0],
-                            [x0, y0],  # vertical edge exactly at x0
-                            [x0, y0 + 2 * h],
-                            [xa, y0 + 2 * h],
-                            [xa, y0],
-                        ]
-                    )
-                ]
-            )
-        self._assert_identical(cases, res, res_max, 3)
-        self._assert_identical(cases, res, res_max, 0)
+            cases.append([np.array([[xa, y0], [x0, y0], [x0, y0 + 2 * h], [xa, y0 + 2 * h], [xa, y0]])])
+        self._assert_sound(cases, res, res_max, 3)
+        self._assert_sound(cases, res, res_max, 0)
 
     def test_out_of_frame_lons_identical(self):
-        """Rings outside [-180, 180) or touching exactly +180 (where
+        """Rings outside [-180, 180) or touching exactly +180, where
         ring_bbox's normalization flips the seed bbox through the
-        antimeridian branch) must classify identically — they take the
-        per-poly fallback via the frame gate (caught as a real
-        mismatch on a lon-185 fixture)."""
-        import numpy as np
-
+        antimeridian branch and the corners need the frame shift."""
         cases = [
             [np.array([[179.9, 0.0], [180.0, 0.0], [180.0, 1.0], [179.9, 1.0]])],
             [np.array([[184.0, 5.0], [185.0, 5.0], [184.5, 6.0]])],
             [np.array([[-184.0, 5.0], [-185.0, 5.0], [-184.5, 6.0]])],
             [np.array([[-180.0, 0.0], [-179.9, 0.0], [-179.9, 1.0], [-180.0, 1.0]])],
         ]
-        self._assert_identical(cases, 5, 10, 0)
-        self._assert_identical(cases, 5, 10, 3)
+        self._assert_sound(cases, 5, 10, 0)
+        self._assert_sound(cases, 5, 10, 3)
 
     def test_antimeridian_polar_and_degenerate_identical(self):
-        import numpy as np
-
         cases = [
             [],  # no rings
             [np.array([[179.5, 10.0], [-179.5, 10.0], [-179.5, 11.0], [179.5, 11.0]])],
@@ -1713,8 +1712,51 @@ class TestBatchCoverKernel:
             [np.array([[179.99, -5.0], [180.0, -5.0], [180.0, 5.0], [179.99, 5.0]])],
             [np.array([[10.0, 10.0], [10.001, 10.0], [10.0005, 10.001]])],
         ]
-        self._assert_identical(cases, 5, 9, 0)
-        self._assert_identical(cases, 5, 9, 3)
+        self._assert_sound(cases, 5, 9, 0)
+        self._assert_sound(cases, 5, 9, 3)
+
+    def test_polar_caps_both_poles(self):
+        """Wiggly coastline caps around each pole, one with a hole."""
+        x = np.linspace(180.0, -180.0, 90, endpoint=False)
+        south = np.stack([x, -70.0 + 3.0 * np.sin(np.radians(7.0 * x))], axis=1)
+        north = np.stack([x[::-1], 75.0 + 2.0 * np.cos(np.radians(5.0 * x))], axis=1)
+        hole = np.array([[10.0, 80.0], [20.0, 80.0], [20.0, 82.0], [10.0, 82.0]])
+        self._assert_sound([[south], [north, hole]], 3, 7, 0)
+        self._assert_sound([[south], [north, hole]], 3, 7, 3)
+
+    def test_many_vertex_ring(self):
+        """A 256-vertex wiggly ring, and a 200-vertex one across the
+        antimeridian."""
+        t = np.linspace(0.0, 2.0 * np.pi, 256, endpoint=False)
+        rad = 2.0 + 0.3 * np.sin(9.0 * t)
+        wiggly = np.stack([10.0 + rad * np.cos(t), 40.0 + rad * np.sin(t)], axis=1)
+        t = np.linspace(0.0, 2.0 * np.pi, 200, endpoint=False)
+        anti = np.stack([180.0 + 1.5 * np.cos(t), -20.0 + np.sin(t)], axis=1)
+        anti[:, 0] = (anti[:, 0] + 180.0) % 360.0 - 180.0
+        self._assert_sound([[wiggly], [anti]], 5, 10, 0)
+        self._assert_sound([[wiggly], [anti]], 5, 10, 3)
+
+    def test_even_winding_ring(self):
+        """A ring winding twice around the pole: points_in_ring's
+        meridian ray crosses it an even number of times from either
+        pole, and ring_bbox seeds the whole globe."""
+        lon = np.tile([0.0, 120.0, -120.0], 2)
+        twice = np.stack([lon, [80.0, 80.0, 80.0, 70.0, 70.0, 70.0]], axis=1)
+        self._assert_sound([[twice]], 2, 5, 0)
+
+    def test_two_vertex_ring_part(self):
+        """A 2-vertex ring part contains nothing and bounds nothing: the
+        polygon's cover is its square's."""
+        from htrc_ingester_spark.operators import pip_join as PJ
+
+        sq = np.array([[1.0, 1.0], [2.0, 1.0], [2.0, 2.0], [1.0, 2.0]])
+        seg = np.array([[1.5, 1.5], [5.0, 5.0]])
+        self._assert_sound([[sq, seg], [seg]], 5, 10, 0)
+        be = PJ.get_backend(None)
+        with_seg = PJ._cover(PJ._prep_rings([[sq, seg]]), 5, 10, be)
+        alone = PJ._cover(PJ._prep_rings([[sq]]), 5, 10, be)
+        assert all((a == b).all() for a, b in zip(with_seg, alone))
+        assert not len(PJ._cover(PJ._prep_rings([[seg]]), 5, 10, be)[0])
 
 
 class TestPIPTable:
