@@ -288,22 +288,18 @@ def _collect_polys(df, id_col: str, geom_col: str, twin: str) -> list:
     return rows
 
 
-def _ingest_polys_df(df, cols: list, parse_row, out: str = "wkb"):
+def _ingest_polys_df(df, cols: list, parse_row):
     """Shared executor-batch scaffold for the distributed geometry
     ingest trio (WKB / WKT / GeoJSONL — one parser each, one scaffold):
     iterate the batch rows, ``parse_row(*row_values) -> (pid, rings,
     wire_bytes_or_None)`` (raising ValueError naming the offending row
-    on any corruption), drop empty geometries, and emit either
-
-    - ``out="wkb"`` (default): ``(poly_id string, wkb binary)`` — the
-      engine's NATIVE wire (:func:`pip_join_table` point 0), so the
-      parse feeds the cover-as-table regime with zero further
-      conversion passes. ``wire_bytes`` passes through verbatim when
-      the input already is WKB; text parsers return None and the
-      rings are encoded here (one pass, no nested-array Arrow hop).
-    - ``out="rings"``: ``(poly_id string, rings
-      array<array<array<double>>>)`` — the nested spec shape, for
-      consumers of the ring lists themselves.
+    on any corruption), drop empty geometries, and emit ``(poly_id
+    string, wkb binary)`` — the engine's NATIVE wire
+    (:func:`pip_join_table` point 0), so the parse feeds the
+    cover-as-table regime with zero further conversion passes.
+    ``wire_bytes`` passes through verbatim when the input already is
+    WKB; text parsers return None and the rings are encoded here (one
+    pass, no nested-array Arrow hop).
 
     Widening rationale (shared by all three): a 10^5-geometry catalog
     is only tens of MB, so the file packer hands it to 1-2 splits and
@@ -316,15 +312,6 @@ def _ingest_polys_df(df, cols: list, parse_row, out: str = "wkb"):
 
     from ..functions import ensure_parallelism
 
-    if out == "rings":
-        from ..operators.pip_join import RINGS_SQL_TYPE
-
-        schema, geom_col = f"poly_id string, rings {RINGS_SQL_TYPE}", "rings"
-    elif out == "wkb":
-        schema, geom_col = "poly_id string, wkb binary", "wkb"
-    else:
-        raise ValueError(f"out must be 'wkb' or 'rings', got {out!r}")
-
     def _decode(batches):
         for pdf in batches:
             ids: list[str] = []
@@ -334,30 +321,24 @@ def _ingest_polys_df(df, cols: list, parse_row, out: str = "wkb"):
                 if not rings:
                     continue  # empty geometry matches nothing — drop
                 ids.append(str(pid))
-                if geom_col == "rings":
-                    geoms.append(
-                        [[[float(x), float(y)] for x, y in ring] for ring in rings]
-                    )
-                else:
-                    geoms.append(wire if wire is not None else rings_to_wkb(rings))
+                geoms.append(wire if wire is not None else rings_to_wkb(rings))
             if ids:
-                yield pd.DataFrame({"poly_id": ids, geom_col: geoms})
+                yield pd.DataFrame({"poly_id": ids, "wkb": geoms})
 
-    return ensure_parallelism(df.select(*cols)).mapInPandas(_decode, schema=schema)
+    return ensure_parallelism(df.select(*cols)).mapInPandas(
+        _decode, schema="poly_id string, wkb binary"
+    )
 
 
-def polys_df_from_wkb_column(
-    df, id_col: str = "poly_id", wkb_col: str = "wkb", out: str = "wkb"
-):
+def polys_df_from_wkb_column(df, id_col: str = "poly_id", wkb_col: str = "wkb"):
     """Distributed WKB validate/decode → the DataFrame
     :func:`pip_join_table` consumes — the GeoParquet SCALE path. 10^6+
     binary geometries decode in executor Arrow batches and never touch
     the driver; :func:`polys_from_wkb_column` stays the
     broadcast-regime convenience twin (collect + driver decode, right
-    when the polygon side is the broadcast side anyway). By default
-    the VALIDATED ORIGINAL bytes pass through as the engine's native
-    binary wire (strict-decode every blob, re-emit verbatim);
-    ``out="rings"`` emits the nested ring-list spec instead. Empty
+    when the polygon side is the broadcast side anyway). The
+    VALIDATED ORIGINAL bytes pass through as the engine's native
+    binary wire (strict-decode every blob, re-emit verbatim). Empty
     geometries are dropped, matching the driver path; a malformed blob
     fails the TASK with the decoder's ValueError (poly_id in the
     message) rather than silently skipping — interchange corruption
@@ -373,4 +354,4 @@ def polys_df_from_wkb_column(
             raise ValueError(f"poly_id={pid!r}: {exc}") from exc
         return pid, rings, raw
 
-    return _ingest_polys_df(df, [id_col, wkb_col], _parse, out)
+    return _ingest_polys_df(df, [id_col, wkb_col], _parse)

@@ -145,18 +145,15 @@ def polys_from_wkt_column(df, id_col: str = "poly_id", wkt_col: str = "wkt") -> 
     return polys_from_wkt((r[0], r[1]) for r in rows)
 
 
-def polys_df_from_wkt_column(
-    df, id_col: str = "poly_id", wkt_col: str = "wkt", out: str = "wkb"
-):
+def polys_df_from_wkt_column(df, id_col: str = "poly_id", wkt_col: str = "wkt"):
     """Distributed WKT parse → the DataFrame ``pip_join_table``
     consumes — the text twin of geo.wkb.polys_df_from_wkb_column for
     the PostGIS-dump / CSV-export arrival shape at catalog scale.
     10^6+ WKT strings parse in executor Arrow batches and never touch
-    the driver. By default the parsed rings are encoded STRAIGHT to
+    the driver. The parsed rings are encoded STRAIGHT to
     the engine's native binary wire (poly_id, wkb) in the same batch
     pass — text in, compact WKB out, no nested-array Arrow hop and no
-    second conversion pass inside pip_join_table; ``out="rings"``
-    emits the nested ring-list spec instead. Empty geometries are
+    second conversion pass inside pip_join_table. Empty geometries are
     dropped, matching the driver path; a malformed string fails the
     TASK with the parser's ValueError (poly_id in the message) rather
     than silently skipping — interchange corruption must surface, the
@@ -172,7 +169,7 @@ def polys_df_from_wkt_column(
             raise ValueError(f"poly_id={pid!r}: {exc}") from exc
         return pid, rings, None
 
-    return _ingest_polys_df(df, [id_col, wkt_col], _parse, out)
+    return _ingest_polys_df(df, [id_col, wkt_col], _parse)
 
 
 def _geom_rings(geom: dict) -> list[list[tuple[float, float]]]:
@@ -220,16 +217,14 @@ def polys_df_from_geojson_column(
     json_col: str = "feature",
     id_prop: str = "poly_id",
     id_col: str | None = None,
-    out: str = "wkb",
 ):
     """Distributed newline-delimited-GeoJSON parse → the DataFrame
     ``pip_join_table`` consumes — the GeoJSONL arrival shape (one
     Feature or bare geometry JSON per row; ``spark.read.text`` hands
     exactly this). Completes the executor-batch ingest trio with
-    geo.wkb.polys_df_from_wkb_column and polys_df_from_wkt_column; by
-    default the parsed rings encode straight to the engine's native
-    binary wire (poly_id, wkb) in the same batch pass, ``out="rings"``
-    emits the nested ring-list spec instead.
+    geo.wkb.polys_df_from_wkb_column and polys_df_from_wkt_column; the
+    parsed rings encode straight to the engine's native binary wire
+    (poly_id, wkb) in the same batch pass.
 
     Feature ids come from ``properties[id_prop]``, falling back to the
     feature ``id``, falling back to ``id_col`` when given — a stored
@@ -272,6 +267,6 @@ def polys_df_from_geojson_column(
 
     if id_col is None:
         return _ingest_polys_df(
-            df, [json_col], lambda raw: _parse_obj(None, raw), out
+            df, [json_col], lambda raw: _parse_obj(None, raw)
         )
-    return _ingest_polys_df(df, [id_col, json_col], _parse_obj, out)
+    return _ingest_polys_df(df, [id_col, json_col], _parse_obj)

@@ -955,65 +955,17 @@ _COVER_SCHEMA = from_arrow_schema(
     )
 )
 
-RINGS_SQL_TYPE = "array<array<array<double>>>"
-
-
-def polys_to_df(spark: SparkSession, polys: list[dict]) -> DataFrame:
-    """Polygon spec list → the (poly_id string, rings
-    array<array<array<double>>>) DataFrame shape pip_join_table (and
-    the WKT/GeoJSON/WKB loaders) speak. Rings keep even-odd semantics:
-    shells, holes, and MultiPolygon parts in one flat list."""
-    rows = [
-        (
-            str(p["poly_id"]),
-            [[[float(x), float(y)] for x, y in np.asarray(r, dtype=np.float64)] for r in poly_rings(p)],
-        )
-        for p in polys
-    ]
-    return spark.createDataFrame(rows, f"poly_id string, rings {RINGS_SQL_TYPE}")
-
-
-def _rings_from_cell(rr) -> list[np.ndarray]:
-    """One DataFrame ``rings`` cell (nested lists/arrays from Arrow) →
-    the list of (N, 2) float64 ring arrays the geometry kernel takes."""
-    return [np.asarray([list(v) for v in r], dtype=np.float64).reshape(-1, 2) for r in rr]
-
-
 def polys_to_wkb_df(spark: SparkSession, polys: list[dict]) -> DataFrame:
     """Polygon spec list → the (poly_id string, wkb binary) DataFrame
     shape pip_join_table runs natively. WKB is the regime's internal
     wire format: one compact binary cell per polygon through every
     exchange and cache, decoded to numpy INSIDE the executor kernels
     (geo.wkb.ring_arrays_to_wkb docstring has the flat-ring transport
-    note). Building bytes driver-side is also cheaper than the nested
-    list-of-lists polys_to_df builds — one tobytes per ring."""
+    note); one tobytes per ring."""
     from ..geo.wkb import ring_arrays_to_wkb
 
     rows = [(str(p["poly_id"]), ring_arrays_to_wkb(poly_rings(p))) for p in polys]
     return spark.createDataFrame(rows, "poly_id string, wkb binary")
-
-
-def _rings_df_to_wkb_df(polys_df: DataFrame) -> DataFrame:
-    """(poly_id, rings) arrival → (poly_id, wkb) — one distributed
-    pass over the nested column, after which nothing downstream ships
-    or caches nested arrays. Hand pip_join_table a wkb frame directly
-    (e.g. the raw GeoParquet scan) to skip even this pass."""
-    from ..geo.wkb import ring_arrays_to_wkb
-
-    def _enc(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(
-                    {
-                        "poly_id": pdf["poly_id"].astype(str),
-                        "wkb": [
-                            ring_arrays_to_wkb(_rings_from_cell(rr))
-                            for rr in pdf["rings"]
-                        ],
-                    }
-                )
-
-    return polys_df.mapInPandas(_enc, schema="poly_id string, wkb binary")
 
 
 def pip_join_table(
@@ -1028,11 +980,11 @@ def pip_join_table(
 ) -> DataFrame:
     """points ⋈ polygons containment join with the polygon side as a
     DataFrame — the scale regime for polygon sets past the broadcast
-    envelope. Accepts either polygon shape: ``(poly_id string, wkb
-    binary)`` (the native wire — the raw GeoParquet geometry column,
-    zero conversion) or ``(poly_id string, rings
-    array<array<array<double>>>)`` (normalized to WKB in one
-    distributed pass). Same semantics as :func:`pip_join` (even-odd
+    envelope. The polygon side is ``(poly_id string, wkb binary)``: the
+    raw GeoParquet geometry column, with no conversion pass
+    (:func:`polys_to_wkb_df` builds it from a spec list, and the
+    ``polys_df_from_*_column`` loaders from WKB, WKT or GeoJSON
+    columns). Same semantics as :func:`pip_join` (even-odd
     over the ring list, inner-join drop of non-matching points,
     identical cover and refine kernels), different physical plan:
 
@@ -1077,17 +1029,11 @@ def pip_join_table(
 
     from ..geo.wkb import wkb_to_ring_arrays
 
-    # normalize the polygon side to the binary wire shape (see point 0
-    # of the docstring); a raw GeoParquet scan passes through untouched
-    if "wkb" in polys_df.columns:
-        polys_df = polys_df.select("poly_id", "wkb")
-    elif "rings" in polys_df.columns:
-        polys_df = _rings_df_to_wkb_df(polys_df.select("poly_id", "rings"))
-    else:
+    if "wkb" not in polys_df.columns:
         raise ValueError(
-            "pip_join_table needs a 'wkb' (binary) or 'rings' "
-            f"(array<array<array<double>>>) geometry column; got {polys_df.columns}"
+            f"pip_join_table needs a 'wkb' (binary) geometry column; got {polys_df.columns}"
         )
+    polys_df = polys_df.select("poly_id", "wkb")
 
     def _decode_poly(pid, blob):
         try:

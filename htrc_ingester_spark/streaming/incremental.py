@@ -50,9 +50,8 @@ def read_snapshot(
     straggler upsert for a deleted volume finds no stored seq to lose
     against and silently resurrects it. The default view filters them
     out (the live snapshot); ``include_tombstones=True`` is the merge
-    path's internal read. Tombstones are one row per deleted volume —
-    compact by dropping those older than the maximum accepted
-    straggler horizon."""
+    path's internal read. Tombstones are one row per deleted volume;
+    :func:`compact_tombstones` drops those older than a horizon."""
     from .. import tables as TB
 
     try:
@@ -60,6 +59,30 @@ def read_snapshot(
     except FileNotFoundError:
         return None
     return df if include_tombstones else df.where(F.col("op") != F.lit("delete"))
+
+
+def compact_tombstones(spark: SparkSession, snapshot_dir: str, horizon_seq: int) -> int:
+    """Drop the stored delete markers with ``seq < horizon_seq`` and
+    commit the rest as a new snapshot version (through ``tables.commit``,
+    as ``tables.compact`` does); returns that version.
+
+    A tombstone exists only so that a late straggler for its volume,
+    older than the delete, loses (see :func:`read_snapshot`). Once it
+    is dropped, a straggler with ``seq`` below it would resurrect the
+    volume. So the horizon is safe only when no change older than it
+    can still arrive: every straggler the merge may yet receive must
+    have ``seq >= horizon_seq``, e.g. a horizon of the newest applied
+    seq minus the longest accepted delay, in ``seq`` units (file-name
+    numeral << 20). Stragglers at or past the horizon still lose to
+    every surviving tombstone and to every stored upsert, and a change
+    newer than a dropped tombstone applies as a fresh upsert, as it
+    would have anyway."""
+    from .. import tables as TB
+
+    kept = TB.read(spark, snapshot_dir).where(
+        (F.col("op") != F.lit("delete")) | (F.col("seq") >= F.lit(horizon_seq))
+    )
+    return TB.commit(kept, snapshot_dir, note=f"compact_tombstones seq < {horizon_seq}")
 
 
 def read_delta_log_stream(spark: SparkSession, dlog_dir: str) -> DataFrame:

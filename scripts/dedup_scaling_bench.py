@@ -1,208 +1,9 @@
 #!/usr/bin/env python
-"""Two-parallelism scaling evidence for the DEDUP family (MinHash-LSH).
-
-Same protocol as scripts/scaling_bench.py (the flagship evidence):
-identical job + identical input via spark-submit --py-files, only
---master local[N] differs; N→4N in the regime where the host still
-scales (see BENCH.md host calibration).
-
-Input: `documents` inflated ×mult. Each rep gets a UNIQUE three-layer
-character-substitution map (26³ combinations keyed by rep), so the
-corpus is ~fully distinct — the realistic scan-bound regime — except
-for a small planted dup set: base docs with ``doc_id % 50 = 0`` key
-their map by ``rep % (mult/4)`` instead, yielding exact-duplicate
-clusters of 4 regardless of mult (up to mult 62,500: the planted key
-space is 25³). The measured job is the full
-near-dup pipeline: signatures → bucket compaction → candidate pairs →
-exact-Jaccard verify → count.
-
-Usage: python scripts/dedup_scaling_bench.py [--sf-dir D] [--mult M]
-       [--levels 2,8]
-Prints one JSON line and appends a section to BENCH.md.
-"""
-
-from __future__ import annotations
-
-import argparse
-import json
+"""`python bench.py --suite dedup-scaling`: see bench.py for the suite and its options."""
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
 
-
-def child(cpus: int, sf_dir: str, mult: int) -> None:
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = (
-        SparkSession.builder.appName(f"dedup-scaling[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # text-heavy scan: 16m splits keep every worker fed (the
-        # ~1-2 GB corpus at 128m would scan as ~10 partitions — two
-        # ragged waves on 8 cores, wave quantization in the ratio);
-        # identical at both levels, so the layout cancels out of the
-        # efficiency except for the quantization it removes
-        .config("spark.sql.files.maxPartitionBytes", "16m")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from htrc_ingester_spark.operators.textdedup import lsh_near_dup_pairs
-
-    base = spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(256)
-    alpha = "abcdefghijklmnopqrstuvwxyzabcde"
-    # planted dups collapse the map key so each planted base doc forms
-    # exact-duplicate clusters of 4 REGARDLESS of mult (a real corpus
-    # keeps its dup-cluster size roughly constant as it grows — tying
-    # cluster size to mult made the verify load quadratic in corpus
-    # size, a fixture artifact); everything else gets a rep-unique
-    # (m1, m2) pair out of 26x26 combinations
-    # third digit's alphabet starts at 'k' so digit 0 maps 'klmno' to
-    # itself — mult ≤ 2500 (planted) / rep ≤ 676 (unique) corpora are
-    # byte-identical to the two-layer formula they extend
-    alpha3 = "klmnopqrstuvwxyzabcdefghijklmn"
-    p = f"(rep % greatest({mult} div 4, 1))"
-    k1 = f"case when doc_id % 50 = 0 then cast({p} % 25 as int) else cast(rep % 26 as int) end"
-    k2 = (
-        f"case when doc_id % 50 = 0 then cast(({p} div 25) % 25 as int)"
-        " else cast((rep div 26) % 26 as int) end"
-    )
-    # without a third digit the planted key space is only 25² = 625:
-    # above mult=2500 distinct p values collide and cluster size grows
-    # past 4 (the quadratic verify load the constant-size fixture
-    # exists to avoid); likewise rep-uniqueness saturates at 26² = 676
-    k3 = (
-        f"case when doc_id % 50 = 0 then cast(({p} div 625) % 25 as int)"
-        " else cast((rep div 676) % 26 as int) end"
-    )
-    synth = (
-        base.withColumn("rep", F.explode(F.expr(f"sequence(1, {mult})")))
-        .select(
-            (F.col("doc_id") * mult + F.col("rep")).alias("doc_id"),
-            F.expr(
-                f"translate(translate(translate(text,"
-                f" 'abcde', substr('{alpha}', 1 + {k1}, 5)),"
-                f" 'fghij', substr('{alpha}', 1 + {k2}, 5)),"
-                f" 'klmno', substr('{alpha3}', 1 + {k3}, 5))"
-            ).alias("text"),
-        )
-    )
-    # Materialize the synthesized corpus to parquet OUTSIDE the timed
-    # loop: the translate()-based inflation is sandbox scaffolding for
-    # "N distinct documents on disk" — a real dedup job SCANS its
-    # corpus, it does not synthesize it, so the timed pipeline starts
-    # at the parquet scan (same shape as the production input). Before
-    # this fix the measurement mixed translate's string-churn scaling
-    # into the engine's (round 5: the timed job's 8-thread wall was
-    # insensitive to an 11% engine-CPU reduction that moved the
-    # 2-thread wall by exactly 11% — the synthesis, not the dedup
-    # pipeline, owned the 8-thread memory-bandwidth ceiling).
-    # cache key carries the input dir AND a formula version: keyed by
-    # mult alone, a corpus synthesized from a different --sf-dir (or by
-    # an older substitution formula) would pass the _SUCCESS check and
-    # the timed pipeline would silently scan the wrong input
-    sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    corpus_path = f"/tmp/dedup_scaling_corpus_{sf_tag}_{mult}_v2"
-    if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
-        synth.write.mode("overwrite").parquet(corpus_path)
-    docs = spark.read.parquet(corpus_path)
-    n_docs = docs.count()  # warm: materialize the read path
-    # warm run: C2 JIT of the codegen stages + OS page cache — a
-    # long-running cluster amortizes both; the north-rule metric is
-    # SUSTAINED docs/sec. clearCache between runs: lsh_near_dup_pairs
-    # persists its cand/docs frames, and Spark's CacheManager matches
-    # logically-equal plans, so without clearing, later reps would
-    # measure cache reads, not the engine.
-    lsh_near_dup_pairs(docs).count()
-    spark.catalog.clearCache()
-    wall = float("inf")
-    n_pairs = 0
-    # best-of-3: the 2-thread level's CPU-bound signature stage sees
-    # ~10-15% wall scatter from core-count-dependent turbo on this VM
-    # even with the host idle (measured round 5); three steady-state
-    # reps per level let both levels hit their floor so the ratio
-    # measures the engine, not one level's unlucky frequency draw.
-    for _ in range(3):
-        t0 = time.monotonic()
-        n_pairs = lsh_near_dup_pairs(docs).count()
-        wall = min(wall, time.monotonic() - t0)
-        spark.catalog.clearCache()
-    print(
-        json.dumps(
-            {
-                "cpus": cpus,
-                "n_docs": n_docs,
-                "n_pairs": n_pairs,
-                "wall_sec": round(wall, 3),
-                "docs_per_sec": round(n_docs / wall, 1),
-            }
-        )
-    )
-    spark.stop()
-
-
-def run_level(cpus: int, zip_path: str, sf_dir: str, mult: int) -> dict:
-    from scaling_bench import launch_child
-
-    return launch_child(
-        cpus, zip_path,
-        [os.path.abspath(__file__), "--child", str(cpus), "--sf-dir", sf_dir, "--mult", str(mult)],
-        "docs_per_sec",
-    )
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--child", type=int, default=None)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--mult", type=int, default=100)
-    ap.add_argument("--levels", default="2,8")
-    args = ap.parse_args()
-
-    if args.child is not None:
-        child(args.child, args.sf_dir, args.mult)
-        return
-
-    from scaling_bench import build_zip  # same engine.zip builder
-
-    zip_path = os.path.join(REPO, "engine.zip")
-    build_zip(zip_path)
-    lo, hi = (int(x) for x in args.levels.split(","))
-    r_lo = run_level(lo, zip_path, args.sf_dir, args.mult)
-    r_hi = run_level(hi, zip_path, args.sf_dir, args.mult)
-    eff = (r_hi["docs_per_sec"] / r_lo["docs_per_sec"]) / (hi / lo)
-    result = {
-        "metric": "docs/sec through MinHash-LSH near-dup (signatures->pairs->verify)",
-        "levels": {str(lo): r_lo, str(hi): r_hi},
-        "scaling_efficiency": round(eff, 3),
-        "pass": eff >= 0.8,
-    }
-    print(json.dumps(result))
-
-    section = f"""
-## Dedup-family scaling (same N→{hi // lo}N protocol)
-
-`python scripts/dedup_scaling_bench.py --sf-dir {args.sf_dir} --mult {args.mult} --levels {lo},{hi}` —
-the full MinHash-LSH near-dup pipeline over documents ×{args.mult}
-({r_lo['n_docs']:,} docs, exact-duplicate clusters of {min(args.mult, 4)} planted
-via rep-keyed character substitution on ~2% of base docs; {r_lo['n_pairs']:,} verified pairs found):
-
-| parallelism | wall (s) | docs/sec |
-|---|---|---|
-| local[{lo}] (N) | {r_lo['wall_sec']} | {r_lo['docs_per_sec']:,} |
-| local[{hi}] ({hi // lo}N) | {r_hi['wall_sec']} | {r_hi['docs_per_sec']:,} |
-
-**Scaling efficiency {result['scaling_efficiency']}** → {"PASS" if result['pass'] else "FAIL"} (≥ 0.8).
-The dedup family's only wide ops are the (band,bucket) exchange and the
-pair distinct — both width-parallel; no driver-side state.
-"""
-    with open(os.path.join(REPO, "BENCH.md"), "a") as f:
-        f.write(section)
-
-
-if __name__ == "__main__":
-    main()
+bench.main(["--suite", "dedup-scaling", *sys.argv[1:]])

@@ -1,105 +1,9 @@
 #!/usr/bin/env python
-"""Full-fidelity images/sec benchmark: a REAL image+caption table
-(binary bytes column) through decode → per-row validation (PSNR ≥
-40 dB, caption, phash) → H3 encode → PIP join → tile assign → agg.
-
-Phase 0 (not timed, cached on disk): materialize the images table as
-partitioned parquet — skeleton positions from the sf lineitem, pixels
-encoded deterministically per image_id on the executors
-(operators.imageops.generate_images).
-
-Phase 1 (timed): the pipeline per BASELINE.json, with the validation
-leg that the input_hint's per-row invariant requires. Bytes are read
-columnar, decoded in Arrow batches, and NEVER shuffled — the spatial
-legs run on the skeleton columns; the only wide op is the final tiny
-(poly, tile) aggregate.
-
-Usage: python scripts/image_pipeline_bench.py [--sf-dir D] [--limit N]
-Prints one JSON line.
-"""
-
-from __future__ import annotations
-
-import argparse
-import json
+"""`python bench.py --suite image`: see bench.py for the suite and its options."""
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--limit", type=int, default=200_000)
-    ap.add_argument("--table-dir", default="/tmp/htrc_images_bench")
-    args = ap.parse_args()
-
-    from pyspark.sql import functions as F
-
-    from htrc_ingester_spark.operators import imageops as IO
-    from htrc_ingester_spark.operators.pip_join import pip_join
-    from htrc_ingester_spark.operators.tiles import assign_tiles
-    from htrc_ingester_spark.plans import flagship as FS
-    from htrc_ingester_spark.session import get_spark
-
-    spark = get_spark("image-pipeline-bench")
-    table = f"{args.table_dir}/images_{os.path.basename(args.sf_dir)}_{args.limit}"
-
-    if not os.path.exists(f"{table}/_SUCCESS"):
-        skel = (
-            FS.load_images(spark, args.sf_dir)
-            .limit(args.limit)
-            .select(F.col("image_id").cast("string").alias("image_id"), "lon", "lat")
-            .repartition(128)
-        )
-        IO.generate_images(skel).write.mode("overwrite").parquet(table)
-
-    images = spark.read.parquet(table)
-    n_images = images.count()
-
-    def pipeline() -> dict:
-        # decode leg: 16m splits keep every worker fed on the bytes column
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
-        checks = IO.decode_validate(images)
-        bad = checks.where(
-            ~(F.col("shape_ok") & F.col("psnr_ok") & F.col("caption_ok") & F.col("phash_ok"))
-        ).count()
-        # spatial leg: column pruning drops the bytes column, so the
-        # same files are ~1% of the split-sizing weight — 16m splits
-        # would schedule 256 near-empty tasks. Per-leg split sizing is
-        # exactly what a real job would submit (conf is plan-time).
-        spark.conf.set("spark.sql.files.maxPartitionBytes", "128m")
-        skel = spark.read.parquet(table).select("image_id", "lon", "lat")
-        hits = pip_join(spark, skel, FS.RECTS, res=FS.RES)
-        tiled = assign_tiles(hits, zoom_res=FS.ZOOM_RES, n_tiles=FS.N_TILES)
-        agg = tiled.groupBy("poly_id", "tile_id").agg(F.count(F.lit(1)).alias("n"))
-        n_tiles_out = agg.count()
-        return {"bad_rows": bad, "tile_groups": n_tiles_out}
-
-    # warm (python workers + JIT); drop the warm run's auto-persisted
-    # PIP candidate cache so the timed run measures its own
-    # materialization, not a resident copy
-    pipeline()
-    spark.catalog.clearCache()
-    t0 = time.monotonic()
-    stats = pipeline()
-    wall = time.monotonic() - t0
-
-    print(
-        json.dumps(
-            {
-                "metric": "images/sec full pipeline (decode+validate+phash+H3+PIP+tile)",
-                "n_images": n_images,
-                "wall_sec": round(wall, 3),
-                "images_per_sec": round(n_images / wall, 1),
-                **stats,
-            }
-        )
-    )
-
-
-if __name__ == "__main__":
-    main()
+bench.main(["--suite", "image", *sys.argv[1:]])

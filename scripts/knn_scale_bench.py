@@ -1,88 +1,9 @@
-"""kNN at 10^5 query points — the VERDICT r1 scale evidence.
-
-Runs the auto-dispatched kNN (``knn_join`` with ≥ many_threshold queries
-→ ``knn_join_many``: all per-query state lives in Spark) over the sf
-images skeleton, and reports wall time, queries/sec, and driver peak RSS
-before/after — the RSS delta is the "flat driver memory" check: the
-driver must hold per-round counters only, never per-query state.
-
-Usage: python scripts/knn_scale_bench.py [--queries 100000] [--sf-dir DIR]
-"""
-
-from __future__ import annotations
-
-import argparse
-import json
-import resource
+#!/usr/bin/env python
+"""`python bench.py --suite knn-scale`: see bench.py for the suite and its options."""
+import os
 import sys
-import time
-from pathlib import Path
 
-import numpy as np
-import pandas as pd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-from htrc_ingester_spark.operators.knn_join import knn_join  # noqa: E402
-from htrc_ingester_spark.plans import flagship as FS  # noqa: E402
-from htrc_ingester_spark.session import get_spark  # noqa: E402
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--queries", type=int, default=100_000)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--k", type=int, default=5)
-    ap.add_argument("--res", type=int, default=6)
-    args = ap.parse_args()
-
-    spark = get_spark("knn-scale")
-    points = FS.load_images(spark, args.sf_dir).withColumn(
-        "image_id", points_col()
-    )
-
-    rng = np.random.default_rng(7)
-    n = args.queries
-    queries = pd.DataFrame(
-        {
-            "query_id": [f"q{i}" for i in range(n)],
-            "lon": rng.uniform(-180.0, 180.0, n),
-            "lat": rng.uniform(-85.0, 85.0, n),
-            "k": args.k,
-        }
-    )
-
-    rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0  # MiB
-    t0 = time.monotonic()
-    out = knn_join(spark, points, queries, res=args.res)
-    n_rows = out.count()
-    dt = time.monotonic() - t0
-    rss1 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
-
-    print(
-        json.dumps(
-            {
-                "metric": "knn_queries_per_sec",
-                "value": round(n / dt, 1),
-                "unit": "queries/sec",
-                "n_queries": n,
-                "k": args.k,
-                "result_rows": n_rows,
-                "wall_sec": round(dt, 2),
-                "driver_rss_before_mib": round(rss0, 1),
-                "driver_rss_after_mib": round(rss1, 1),
-                "driver_rss_delta_mib": round(rss1 - rss0, 1),
-            }
-        )
-    )
-    spark.stop()
-
-
-def points_col():
-    from pyspark.sql import functions as F
-
-    return F.col("image_id").cast("string")
-
-
-if __name__ == "__main__":
-    main()
+bench.main(["--suite", "knn-scale", *sys.argv[1:]])

@@ -1,173 +1,9 @@
 #!/usr/bin/env python
-"""Two-parallelism scaling benchmark → BENCH_SCALING.md (north-rule evidence).
-
-The rule's two-cluster-size criterion (throughput scaling efficiency
-≥0.8 from N to 4N executors) can't use a real cluster in this sandbox;
-per the driver protocol we run the identical job on identical input at
-local[8] and local[32] via ``spark-submit --py-files engine.zip`` (the
-cluster submit path — only the master URL differs) and report
-throughput at both plus efficiency = (thr_4N / thr_N) / 4.
-
-Usage: python scripts/scaling_bench.py [--sf-dir DIR] [--mult M]
-"""
-
-from __future__ import annotations
-
-import argparse
-import json
+"""`python bench.py --suite scaling`: see bench.py for the suite and its options."""
 import os
-import subprocess
 import sys
-import zipfile
-from datetime import datetime, timezone
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
 
-
-def build_zip(path: str) -> None:
-    pkg = os.path.join(REPO, "htrc_ingester_spark")
-    with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as z:
-        for root, _dirs, files in os.walk(pkg):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    z.write(full, os.path.relpath(full, REPO))
-
-
-def launch_child(cpus: int, zip_path: str, script_args: list, result_key: str) -> dict:
-    """spark-submit a child benchmark at local[cpus] and scrape its one
-    JSON result line (shared by the flagship and dedup evidence runs).
-
-    local mode note: executors live in the driver JVM — size it like a
-    real executor, or 32 threads thrash a 1 GB default heap and the
-    scaling measurement measures GC, not the engine."""
-    cmd = [
-        "spark-submit",
-        "--master", f"local[{cpus}]",
-        "--driver-memory", "24g",
-        "--py-files", zip_path,
-        *script_args,
-    ]
-    out = subprocess.run(cmd, capture_output=True, text=True, timeout=1800)
-    for line in out.stdout.splitlines():
-        line = line.strip()
-        if line.startswith("{") and f'"{result_key}"' in line:
-            return json.loads(line)
-    sys.stderr.write(out.stdout[-3000:] + "\n" + out.stderr[-3000:] + "\n")
-    raise RuntimeError(f"child local[{cpus}] produced no result line")
-
-
-def run_level(cpus: int, zip_path: str, sf_dir: str, mult: int) -> dict:
-    return launch_child(
-        cpus, zip_path,
-        [os.path.join(REPO, "scripts", "scaling_child.py"), str(cpus), sf_dir, str(mult)],
-        "images_per_sec",
-    )
-
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--mult", type=int, default=20)
-    ap.add_argument("--levels", default="2,8")  # 8->32 measures the HOST ceiling (steal/frequency), not the engine — see BENCH.md
-    args = ap.parse_args()
-
-    lo, hi = (int(x) for x in args.levels.split(","))
-    zip_path = os.path.join(REPO, "engine.zip")
-    build_zip(zip_path)
-
-    r_lo = run_level(lo, zip_path, args.sf_dir, args.mult)
-    r_hi = run_level(hi, zip_path, args.sf_dir, args.mult)
-    ratio = hi / lo
-    eff = (r_hi["images_per_sec"] / r_lo["images_per_sec"]) / ratio
-
-    result = {
-        "metric": "images/sec through H3-encode→PIP-join→tile-assign",
-        "input": f"{args.sf_dir} lineitem ×{args.mult} = {r_lo['n_images']} images",
-        "levels": {str(lo): r_lo, str(hi): r_hi},
-        "scaling_efficiency": round(eff, 3),
-        "pass": eff >= 0.8,
-    }
-    print(json.dumps(result))
-
-    ts = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M UTC")
-    md = f"""# BENCH — two-parallelism scaling evidence (north rule)
-
-Generated {ts} by `python scripts/scaling_bench.py --sf-dir {args.sf_dir} --mult {args.mult} --levels {lo},{hi}`.
-
-**Metric (BASELINE.json):** images/sec through H3-encode → PIP-join →
-tile-assign; scaling efficiency ≥ 0.8 from N to 4N executors.
-
-**Sandbox protocol** (no real cluster available): identical job,
-identical input ({r_lo['n_images']:,} images = sf0.1 lineitem ×{args.mult},
-fixed 256-partition layout), launched via `spark-submit --py-files
-engine.zip` — the cluster submit path; only `--master local[N]`
-differs between runs. One JVM per run, sequential, warm-up excluded.
-
-| parallelism | wall (s) | images/sec |
-|---|---|---|
-| local[{lo}] (N) | {r_lo['wall_sec']} | {r_lo['images_per_sec']:,} |
-| local[{hi}] (4N) | {r_hi['wall_sec']} | {r_hi['images_per_sec']:,} |
-
-**Scaling efficiency** = (thr_4N / thr_N) / ({hi}/{lo}) =
-({r_hi['images_per_sec']:,} / {r_lo['images_per_sec']:,}) / {ratio:.0f} =
-**{eff:.3f}** → {"**PASS** (≥ 0.8)" if eff >= 0.8 else "**FAIL** (< 0.8)"}
-
-## Why it scales
-
-- The pipeline is embarrassingly parallel until the final tiny
-  `groupBy(poly_id, tile_id)` (≤ a few thousand groups): H3 encode and
-  tile hash are whole-stage-codegen column expressions; the PIP join is
-  a broadcast hash join (zero shuffle of the image side); the
-  ray-casting refine is a Catalyst predicate in the same scan, over
-  the few ring edges each partial cell carries — no Python worker.
-- Cell-cover full/partial classification keeps the ray cast on the
-  O(perimeter) shell only; interior cells join-and-pass untested.
-- At 1000 executors the same plan holds: broadcast cover (KBs–MBs),
-  narrow encode, one small agg shuffle. The only driver-side state is
-  the polygon index.
-
-## Host calibration — why the N→4N pair is chosen low
-
-The sandbox VM (32 vCPU, single NUMA, nonzero steal time) does not
-itself scale linearly past ~16 threads, independent of Spark: a pure
-CPU-bound probe (codegen `md5` over `spark.range`, no memory traffic,
-no Python) measures 2→8 threads at efficiency 0.91 but 8→32 at only
-0.60. Above ~8 threads the measurement reflects the host's
-frequency/steal ceiling, not the engine — so the N→4N evidence is
-taken in the regime where the hardware actually delivers ~4×, exactly
-as a real cluster adds *machines* (each executor keeps its own memory
-bandwidth and clock). The engine at 8→32 threads tracks the raw-CPU
-probe's ceiling within ~15% at every level (no serial bottleneck of
-its own).
-
-## Full-fidelity image pipeline (bytes on board)
-
-`python scripts/image_pipeline_bench.py` — a REAL image+caption table
-(binary `bytes`, ~4.4 KB/row, parquet) through decode → per-row
-validation (PSNR ≥ 40 dB, caption equality, phash recompute) → H3
-encode → PIP join → tile assign → aggregate: **19,367 images/sec** on
-local[32] (200k rows, 0 validation failures). Bytes scan columnar and
-never shuffle; `spark.sql.files.maxPartitionBytes=16m` keeps all
-workers fed on bytes-heavy scans (measured 4.6× vs the 128 MB
-default).
-
-## Iceberg note
-
-No Iceberg runtime jar ships in this container; the engine emulates
-the targeted Iceberg contract with partitioned parquet + dynamic
-partition overwrite (idempotent commits) + per-partition lineage
-manifests (manifest.py) + a streaming write-then-swap snapshot flip.
-On a cluster with Iceberg these map 1:1 to
-`writeTo(...).overwritePartitions()` / `MERGE INTO`.
-"""
-    # BENCH.md is hand-curated (the generated table was merged into a
-    # larger analysis doc); write the raw report alongside it instead
-    # of clobbering — update BENCH.md's table from this by hand.
-    with open(os.path.join(REPO, "BENCH_SCALING.md"), "w") as f:
-        f.write(md)
-
-
-if __name__ == "__main__":
-    main()
+bench.main(["--suite", "scaling", *sys.argv[1:]])

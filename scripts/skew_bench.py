@@ -1,125 +1,9 @@
 #!/usr/bin/env python
-"""Skew benchmark: plain vs salted aggregation on the hot-cell table.
-
-The flagship images table is deliberately skewed (~80% of rows in 3
-H3 cells — north_star's hot-cell scenario). A collect-style aggregate
-keyed by cell sends each hot cell to ONE task; the salted two-stage
-version splits them. This measures both on an inflated table and
-prints one JSON line (results quoted in SCALE.md).
-
-Usage: python scripts/skew_bench.py [--mult 20]
-"""
-
-from __future__ import annotations
-
-import argparse
-import json
+"""`python bench.py --suite skew`: see bench.py for the suite and its options."""
 import os
 import sys
-import time
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--mult", type=int, default=20)
-    args = ap.parse_args()
-
-    from pyspark.sql import functions as F
-
-    from htrc_ingester_spark.functions import h3_cell
-    from htrc_ingester_spark.operators.salting import salted_collect_sorted
-    from htrc_ingester_spark.plans import flagship as FS
-    from htrc_ingester_spark.session import get_spark
-
-    spark = get_spark("skew-bench")
-    spark.read.parquet(f"{args.sf_dir}/lineitem.parquet").createOrReplaceTempView("lineitem")
-    base = spark.sql(FS.images_sql()).repartition(256)
-    images = (
-        base.withColumn("rep", F.explode(F.expr(f"sequence(1, {args.mult})")))
-        .select(
-            (F.col("image_id") * args.mult + F.col("rep")).alias("image_id"),
-            "lon",
-            "lat",
-        )
-        .withColumn("cell", h3_cell("lon", "lat", 7))
-        .withColumn("val", F.conv(F.substring(F.md5(F.col("image_id").cast("string").cast("binary")), 1, 8), 16, 10))
-        .persist()
-    )
-    n = images.count()
-    hist = images.groupBy("cell").count().orderBy(F.desc("count")).limit(3).collect()
-    top3 = sum(r["count"] for r in hist)
-
-    # SHAPE 1 — keyed repartition followed by per-row CPU work (the
-    # write/compute-balancing case salting exists for): hot cells pin
-    # 70% of the work to ≤3 tasks unless salted.
-    # per-row work the optimizer CANNOT prune (the aggregate consumes
-    # it): 3 chained md5 rounds ≈ a light encode/compress step per row
-    heavy = F.md5(F.md5(F.md5(F.concat_ws(":", "image_id", "lon", "lat").cast("binary")).cast("binary")).cast("binary"))
-    work = F.sum(F.conv(F.substring(heavy, 1, 8), 16, 10).cast("long")).alias("w")
-
-    def repart_plain():
-        images.repartition(64, F.col("cell")).agg(work).collect()
-        return n
-
-    def repart_salted():
-        from htrc_ingester_spark.operators.salting import salted_repartition
-
-        salted_repartition(
-            images, "cell", salt_src="image_id",
-            rows_per_task=200_000, num_partitions=64,
-        ).agg(work).collect()
-        return n
-
-    # SHAPE 2 — collect-to-single-array per key: the KNOWN-LIMITATION
-    # case. The output itself is one giant array per hot key, so the
-    # final merge is single-task per key no matter the salting; we
-    # measure it to document that boundary honestly (SCALE.md).
-    def collect_plain():
-        return (
-            images.groupBy("cell")
-            .agg(F.array_sort(F.collect_list("val")).alias("values"))
-            .select(F.sum(F.expr("size(values)")).alias("s"))
-            .collect()[0].s
-        )
-
-    def collect_salted():
-        out = salted_collect_sorted(
-            images, "cell", "val", salt_src="image_id", rows_per_task=200_000
-        )
-        return out.select(F.sum(F.expr("size(values)")).alias("s")).collect()[0].s
-
-    r = {}
-    for name, fn in (
-        ("repart_plain", repart_plain),
-        ("repart_salted", repart_salted),
-        ("collect_plain", collect_plain),
-        ("collect_salted", collect_salted),
-    ):
-        fn()  # warm
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.monotonic()
-            assert fn() == n
-            best = min(best, time.monotonic() - t0)
-        r[name] = round(best, 3)
-
-    print(
-        json.dumps(
-            {
-                "n_rows": n,
-                "top3_cell_rows": top3,
-                "skew_frac": round(top3 / n, 3),
-                **r,
-                "repart_speedup": round(r["repart_plain"] / r["repart_salted"], 2),
-                "collect_speedup": round(r["collect_plain"] / r["collect_salted"], 2),
-            }
-        )
-    )
-
-
-if __name__ == "__main__":
-    main()
+bench.main(["--suite", "skew", *sys.argv[1:]])

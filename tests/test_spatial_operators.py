@@ -1773,12 +1773,12 @@ class TestPIPTable:
         )
 
     def test_table_matches_broadcast_on_general_fixture(self, spark, images_df):
-        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_df
+        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_wkb_df
 
         polys = data.polygons()
         bc = self._hits(pip_join(spark, images_df, polys, res=7))
         tb = self._hits(
-            pip_join_table(spark, images_df, polys_to_df(spark, polys), res=7)
+            pip_join_table(spark, images_df, polys_to_wkb_df(spark, polys), res=7)
         )
         pd.testing.assert_frame_equal(tb, bc)
         assert len(bc) > 0
@@ -1802,11 +1802,11 @@ class TestPIPTable:
             pip_join_table(spark, images_df, wdf, res=7).count()
 
     def test_table_matches_broadcast_on_holes_fixture_cogroup(self, spark, images_df):
-        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_df
+        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_wkb_df
 
         polys = data.polygons_holes()
         bc = self._hits(pip_join(spark, images_df, polys, res=7))
-        tb = self._hits(pip_join_table(spark, images_df, polys_to_df(spark, polys), res=7))
+        tb = self._hits(pip_join_table(spark, images_df, polys_to_wkb_df(spark, polys), res=7))
         pd.testing.assert_frame_equal(tb, bc)
         assert len(bc) > 0
 
@@ -1814,24 +1814,15 @@ class TestPIPTable:
         """A tolerated <3-vertex ring (an even-odd no-op in
         points_in_ring) must not crash the table regime's WKB
         transport: the internal encoder normalizes it away
-        (self-review r5). Both polygon arrival shapes are exercised
-        — the nested-rings frame and the driver-encoded wkb frame."""
-        from htrc_ingester_spark.operators.pip_join import (
-            pip_join_table,
-            polys_to_df,
-            polys_to_wkb_df,
-        )
+        (self-review r5)."""
+        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_wkb_df
 
         polys = [dict(p) for p in data.polygons()[:3]]
         first = polys[0]
         first["rings"] = [list(first.pop("ring")), [(0.0, 0.0), (1.0, 1.0)]]
         bc = self._hits(pip_join(spark, images_df, polys, res=7))
-        for polys_frame in (
-            polys_to_df(spark, polys),
-            polys_to_wkb_df(spark, polys),
-        ):
-            tb = self._hits(pip_join_table(spark, images_df, polys_frame, res=7))
-            pd.testing.assert_frame_equal(tb, bc)
+        tb = self._hits(pip_join_table(spark, images_df, polys_to_wkb_df(spark, polys), res=7))
+        pd.testing.assert_frame_equal(tb, bc)
         assert len(bc) > 0
 
     def test_auto_dispatch_past_polys_budget(self, spark, images_df, monkeypatch):
@@ -1857,13 +1848,13 @@ class TestPIPTable:
         skeleton invocation never references the bytes column
         anywhere (the bounded-shuffle rule), and the refine is the
         native predicate — no Python UDF, cogroup or union."""
-        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_df
+        from htrc_ingester_spark.operators.pip_join import pip_join_table, polys_to_wkb_df
 
         pdf = data.images_pdf(50)
         full = spark.createDataFrame(pdf)
         skel = full.select("image_id", "lon", "lat")
         hits = pip_join_table(
-            spark, skel, polys_to_df(spark, data.polygons()[:3]), res=7
+            spark, skel, polys_to_wkb_df(spark, data.polygons()[:3]), res=7
         )
         plan = hits._jdf.queryExecution().executedPlan().toString()
         assert "bytes" not in plan

@@ -1041,3 +1041,41 @@ def test_parse_batch_seq_from_exactly_one_digit_run(spark):
     for name in ("dlog-2-10", "dlog-10-2"):
         with pytest.raises(Exception, match="more than one numeric run"):
             seqs(name)
+
+
+def test_compact_tombstones_keeps_last_writer_wins(spark, dirs):
+    """compact_tombstones drops only the delete markers below the
+    horizon: the stored row count shrinks, a straggler older than a
+    surviving tombstone still loses, and merges after the compaction
+    stay last-writer-wins (stragglers at or past the horizon, as the
+    horizon contract requires)."""
+    vol = "root/ab/uc2,ark+=13960=t{}.zip".format
+    _write_dlog(os.path.join(dirs["dlog"], "t-010.txt"), [vol(v) for v in "abcd"])
+    _write_dlog(os.path.join(dirs["dlog"], "t-020.txt"), ["deleting " + vol("a")])
+    _write_dlog(os.path.join(dirs["dlog"], "t-030.txt"), ["deleting " + vol("b")])
+    S.run_incremental_merge(spark, dirs["dlog"], dirs["snap"], dirs["ckpt"])
+    ids = ["uc2.ark:/13960/t" + v for v in "abcd"]
+    assert _snapshot_ids(spark, dirs["snap"]) == ids[2:]
+    stored = S.read_snapshot(spark, dirs["snap"], include_tombstones=True)
+    assert stored.count() == 4
+
+    # horizon between the two deletes: ta's tombstone goes, tb's stays
+    S.compact_tombstones(spark, dirs["snap"], horizon_seq=25 << 20)
+    stored = S.read_snapshot(spark, dirs["snap"], include_tombstones=True)
+    assert stored.count() == 3
+    assert [r.volume_id for r in stored.where("op = 'delete'").collect()] == [ids[1]]
+    assert _snapshot_ids(spark, dirs["snap"]) == ids[2:]
+
+    # stragglers past the horizon: tb's upsert is older than its
+    # surviving tombstone and loses; ta's is newer than its dropped
+    # tombstone and applies; a fresh delete of tc applies
+    _write_dlog(os.path.join(dirs["dlog"], "t-026.txt"), [vol("b"), vol("a")])
+    _write_dlog(os.path.join(dirs["dlog"], "t-040.txt"), ["deleting " + vol("c")])
+    S.run_incremental_merge(spark, dirs["dlog"], dirs["snap"], dirs["ckpt"])
+    assert _snapshot_ids(spark, dirs["snap"]) == [ids[0], ids[3]]
+
+    # later still: an upsert older than tc's new tombstone loses, a
+    # delete newer than ta's re-upsert wins
+    _write_dlog(os.path.join(dirs["dlog"], "t-035.txt"), [vol("c"), "deleting " + vol("a")])
+    S.run_incremental_merge(spark, dirs["dlog"], dirs["snap"], dirs["ckpt"])
+    assert _snapshot_ids(spark, dirs["snap"]) == [ids[3]]

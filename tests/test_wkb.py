@@ -324,25 +324,21 @@ class TestDistributedDecode:
             polys_df_from_wkb_column,
             polys_from_wkb,
             rings_to_wkb,
+            wkb_to_rings,
         )
 
         rows = data.polygons_holes_wkb() + [("empty", rings_to_wkb([], [])), ]
         wdf = spark.createDataFrame(rows, "poly_id string, wkb binary")
-        got = {
-            r["poly_id"]: [
-                [(float(x), float(y)) for x, y in ring] for ring in r["rings"]
-            ]
-            for r in polys_df_from_wkb_column(wdf, out="rings").collect()
-        }
-        want = {p["poly_id"]: p["rings"] for p in polys_from_wkb(rows)}
-        assert got == want
-        assert "empty" not in got
-        # default output is the native wire: the VALIDATED ORIGINAL
-        # bytes pass through verbatim (empty geometries dropped)
         wire = {
             r["poly_id"]: bytes(r["wkb"])
             for r in polys_df_from_wkb_column(wdf).collect()
         }
+        got = {pid: wkb_to_rings(b) for pid, b in wire.items()}
+        want = {p["poly_id"]: p["rings"] for p in polys_from_wkb(rows)}
+        assert got == want
+        assert "empty" not in got
+        # the output is the native wire: the VALIDATED ORIGINAL bytes
+        # pass through verbatim (empty geometries dropped)
         assert wire == {pid: bytes(b) for pid, b in rows if pid != "empty"}
 
     def test_distributed_decode_feeds_pip_join_table(self, spark):

@@ -243,22 +243,15 @@ class TestSparkColumnIngestion:
 
         rows = data.polygons_holes_wkt() + [("empty", "POLYGON EMPTY")]
         wdf = spark.createDataFrame(rows, "poly_id string, wkt string")
+        # the output is the native binary wire, encoded in the same
+        # batch pass (no second conversion hop): decoded, the same rings
         got = {
-            r["poly_id"]: [
-                [(float(x), float(y)) for x, y in ring] for ring in r["rings"]
-            ]
-            for r in polys_df_from_wkt_column(wdf, out="rings").collect()
+            r["poly_id"]: wkb_to_rings(bytes(r["wkb"]))
+            for r in polys_df_from_wkt_column(wdf).collect()
         }
         want = {p["poly_id"]: p["rings"] for p in polys_from_wkt(rows)}
         assert got == want
         assert "empty" not in got
-        # the default output is the native binary wire: same rings,
-        # encoded in the same batch pass (no second conversion hop)
-        wire = {
-            r["poly_id"]: wkb_to_rings(bytes(r["wkb"]))
-            for r in polys_df_from_wkt_column(wdf).collect()
-        }
-        assert wire == want
 
     def test_distributed_parse_feeds_pip_join_table(self, spark):
         """Text column → distributed parse → cover-as-table PIP equals
@@ -346,24 +339,14 @@ class TestGeoJSONLColumnIngestion:
         rows = [(r,) for r in self._feature_rows()]
         fdf = spark.createDataFrame(rows, "feature string")
         got = {
-            r["poly_id"]: [
-                [(float(x), float(y)) for x, y in ring] for ring in r["rings"]
-            ]
-            for r in polys_df_from_geojson_column(fdf, out="rings").collect()
+            r["poly_id"]: wkb_to_rings(bytes(r["wkb"]))
+            for r in polys_df_from_geojson_column(fdf).collect()
         }
         want = {
             p["poly_id"]: p["rings"]
             for p in polys_from_geojson(data.polygons_holes_geojson())
         }
         assert got == want and len(got) > 0
-        wire = {
-            r["poly_id"]: [
-                [(float(x), float(y)) for x, y in ring]
-                for ring in wkb_to_rings(bytes(r["wkb"]))
-            ]
-            for r in polys_df_from_geojson_column(fdf).collect()
-        }
-        assert wire == want
 
     def test_distributed_parse_feeds_pip_join_table(self, spark):
         from htrc_ingester_spark.geo.wkt import polys_df_from_geojson_column
