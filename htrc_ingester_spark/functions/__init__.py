@@ -53,12 +53,6 @@ def h3_cell(lon_col: str, lat_col: str, res: int) -> Column:
     return F.expr(h3lite.h3_sql_expr(lon_col, lat_col, res))
 
 
-# Integer division token per SQL dialect. `/` on bigints yields DOUBLE in
-# both Spark SQL and DuckDB — silent precision loss above 2^53, and cell
-# ids exceed that — so exact idiv is mandatory wherever cells are split.
-_IDIV = {"spark": "div", "duckdb": "//"}
-
-
 def tile_sql_expr(cell_expr: str, n_tiles: int, dialect: str = "spark") -> str:
     """Deterministic cell→tile hash, overflow-safe in signed int64 and
     expressible in both Spark SQL and DuckDB (north-rule raster↔vector
@@ -66,7 +60,7 @@ def tile_sql_expr(cell_expr: str, n_tiles: int, dialect: str = "spark") -> str:
 
     Mix: split the cell id into two ~20-bit halves, Knuth-multiply each,
     fold mod a Mersenne prime, then mod n_tiles."""
-    idiv = _IDIV[dialect]
+    idiv = h3lite._IDIV[dialect]
     c = f"cast({cell_expr} as bigint)"
     m1 = f"({c} % 1048573)"
     m2 = f"(({c} {idiv} 1048573) % 1048573)"

@@ -27,7 +27,14 @@ formula is available three ways with bit-identical results:
 
 Grid layout at resolution r: nx = 2^(r+2) columns over lon [-180,180),
 ny = 2^(r+1) rows over lat [-90,90]. Cell id packing (int64, always
-positive): ``res*2^56 + x*2^28 + y``.
+positive): ``res*2^56 + x*2^28 + y``. This module is the only one that
+knows that packing: the rest of the engine reads and writes cell ids
+through the numpy functions or their SQL twins below — ``unpack_sql``
+(res, x, y), ``pack_sql``, ``set_x_sql``, ``lon_index_sql`` /
+``lat_index_sql`` (the clamped column / row of a coordinate),
+``h3_sql_expr`` (encode), ``parent_sql_expr`` / ``child_parent_sql``
+(parent of a cell of any res / of a known res), ``cell_bounds_sql``,
+``neighbor_sql_expr`` and ``neighbor_valid_sql``.
 
 Reference parity note: the reference shards its keyspace with an
 MD5-mod-N hash of the pairtree path (Util.java:86-103, Ingester.java:
@@ -188,20 +195,139 @@ def cover_bboxes(lon_min, lat_min, lon_max, lat_max, res) -> tuple[np.ndarray, n
 
 
 # ---------------------------------------------------------------------------
-# SQL expression builders — the SAME arithmetic as latlng_to_cell, valid in
-# both Spark SQL and DuckDB (floor/least/greatest/cast/% only), so the
-# driver's DuckDB oracle can value-check the spatial pipeline.
+# SQL expression builders — the SAME arithmetic as the numpy functions
+# above, valid in both Spark SQL and DuckDB (floor/least/greatest/cast/%
+# and exact integer division only), so the driver's DuckDB oracle can
+# value-check the spatial pipeline. Each builder takes SQL expression
+# text and returns SQL expression text.
 # ---------------------------------------------------------------------------
 
+# Integer division token per SQL dialect. `/` on bigints yields DOUBLE in
+# both Spark SQL and DuckDB — silent precision loss above 2^53, and cell
+# ids exceed that — so exact idiv is mandatory wherever cells are split.
+_IDIV = {"spark": "div", "duckdb": "//"}
+
+
+def unpack_sql(cell: str, dialect: str = "spark") -> tuple[str, str, str]:
+    """(res, x, y) of the packed id ``cell`` — the SQL twin of
+    :func:`cell_res` / :func:`cell_xy`."""
+    idiv = _IDIV[dialect]
+    return (
+        f"({cell} {idiv} {1 << _RES_SHIFT})",
+        f"(({cell} {idiv} {1 << _X_SHIFT}) % {1 << _X_SHIFT})",
+        f"({cell} % {1 << _X_SHIFT})",
+    )
+
+
+def pack_sql(res: int | str, x: str, y: str) -> str:
+    """The packed id of column ``x``, row ``y`` at ``res`` — the SQL twin
+    of :func:`pack_xy`. An int ``res`` becomes a bigint literal; a string
+    is used as the (bigint) expression it is."""
+    r = f"cast({res} as bigint)" if isinstance(res, int) else res
+    return f"({r} * {1 << _RES_SHIFT} + {x} * {1 << _X_SHIFT} + {y})"
+
+
+def set_x_sql(cell: str, x: str, new_x: str) -> str:
+    """``cell`` moved to column ``new_x`` (``x`` is its current column,
+    from :func:`unpack_sql`); res and row are kept."""
+    return f"{cell} - {x} * {1 << _X_SHIFT} + {new_x} * {1 << _X_SHIFT}"
+
+
+def lon_index_sql(lon: str, res: int) -> str:
+    """Column index of longitude ``lon`` (already in [-180, 180)),
+    clamped to [0, nx) — the x of :func:`latlng_to_cell`."""
+    n = nx(res)
+    return (
+        f"least(greatest(cast(floor(({lon} + 180.0) / 360.0 * {n}) as bigint),"
+        f" cast(0 as bigint)), cast({n - 1} as bigint))"
+    )
+
+
+def lat_index_sql(lat: str, res: int) -> str:
+    """Row index of latitude ``lat``, clamped to [0, ny) — the y of
+    :func:`latlng_to_cell`."""
+    n = ny(res)
+    return (
+        f"least(greatest(cast(floor(({lat} + 90.0) / 180.0 * {n}) as bigint),"
+        f" cast(0 as bigint)), cast({n - 1} as bigint))"
+    )
+
+
 def h3_sql_expr(lon_col: str, lat_col: str, res: int) -> str:
-    nxr, nyr = nx(res), ny(res)
+    """:func:`latlng_to_cell` as SQL: longitude wraps, latitude clamps."""
     lon_n = f"((({lon_col}) + 180.0) - floor((({lon_col}) + 180.0) / 360.0) * 360.0 - 180.0)"
-    x = (
-        f"least(greatest(cast(floor(({lon_n} + 180.0) / 360.0 * {nxr}) as bigint),"
-        f" cast(0 as bigint)), cast({nxr - 1} as bigint))"
-    )
-    y = (
-        f"least(greatest(cast(floor((least(greatest(cast(({lat_col}) as double), -90.0), 90.0)"
-        f" + 90.0) / 180.0 * {nyr}) as bigint), cast(0 as bigint)), cast({nyr - 1} as bigint))"
-    )
-    return f"(cast({res} as bigint) * {1 << _RES_SHIFT} + {x} * {1 << _X_SHIFT} + {y})"
+    lat_c = f"least(greatest(cast(({lat_col}) as double), -90.0), 90.0)"
+    return pack_sql(res, lon_index_sql(lon_n, res), lat_index_sql(lat_c, res))
+
+
+def _pow2_sql(e: str, to: str = "bigint") -> str:
+    return f"cast(pow(cast(2 as double), cast({e} as double)) as {to})"
+
+
+def parent_sql_expr(cell_col: str, parent_res: int, dialect: str = "spark") -> str:
+    """:func:`cell_to_parent` as SQL for cells of ANY res: unpack
+    res/x/y per row, shift x and y right by (res - parent_res), repack.
+    Aperture-4 ⇒ parent index = child index halved per res step.
+
+    A cell COARSER than ``parent_res`` has no res-``parent_res`` parent
+    — the Spark dialect raises a descriptive error (the numpy twin
+    raises ValueError; unguarded, the repack divided by zero: an opaque
+    DIVIDE_BY_ZERO under ANSI, silent NULL cells without it). The
+    DuckDB dialect is oracle-only and never sees invalid fixtures."""
+    idiv = _IDIV[dialect]
+    res, x, y = unpack_sql(f"cast({cell_col} as bigint)", dialect)
+    p2 = _pow2_sql(f"{res} - {parent_res}")
+    if dialect == "spark":
+        p2 = (
+            f"if({res} < {parent_res},"
+            f" cast(raise_error(concat('cannot take the res-{parent_res} parent"
+            f" of a coarser res-', cast({res} as string), ' cell')) as bigint),"
+            f" {p2})"
+        )
+    return pack_sql(parent_res, f"({x} {idiv} {p2})", f"({y} {idiv} {p2})")
+
+
+def child_parent_sql(cell: str, child_res: int, parent_res: int, dialect: str = "spark") -> str:
+    """:func:`cell_to_parent` as SQL for cells KNOWN to be res
+    ``child_res``: the shift is a literal, with no per-row res unpack or
+    guard. That keeps codegen light where parents nest many levels deep
+    (:func:`parent_sql_expr` nested L levels deep pushed the unioned
+    plan of tiles.adaptive_cells past the codegen limit)."""
+    idiv = _IDIV[dialect]
+    s = 1 << (child_res - parent_res)
+    _, x, y = unpack_sql(f"cast({cell} as bigint)", dialect)
+    return pack_sql(parent_res, f"({x} {idiv} {s})", f"({y} {idiv} {s})")
+
+
+def cell_bounds_sql(cell_col: str, dialect: str = "spark") -> dict[str, str]:
+    """Cell rectangle corners as SQL — the twin of
+    :func:`cell_to_boundary`: integer unpack, float arithmetic."""
+    res, x, y = unpack_sql(f"cast({cell_col} as bigint)", dialect)
+    nx_ = _pow2_sql(f"{res} + 2", "double")
+    ny_ = _pow2_sql(f"{res} + 1", "double")
+    return {
+        "lon_min": f"(cast({x} as double) / {nx_} * 360.0 - 180.0)",
+        "lat_min": f"(cast({y} as double) / {ny_} * 180.0 - 90.0)",
+        "lon_max": f"((cast({x} as double) + 1.0) / {nx_} * 360.0 - 180.0)",
+        "lat_max": f"((cast({y} as double) + 1.0) / {ny_} * 180.0 - 90.0)",
+    }
+
+
+def neighbor_sql_expr(cell: str, dx: str, dy: str, dialect: str = "spark") -> str:
+    """Neighbor-cell id at offset (dx, dy) as SQL — one cell of
+    :func:`grid_disk`: x wraps around the antimeridian (longitude is
+    cyclic), y shifts. The y edge is NOT wrapped — crossing a pole is
+    not adjacency — so callers filter with :func:`neighbor_valid_sql`."""
+    res, x, y = unpack_sql(f"cast({cell} as bigint)", dialect)
+    nx_ = _pow2_sql(f"{res} + 2")
+    xn = f"(({x} + cast({dx} as bigint) + {nx_}) % {nx_})"
+    yn = f"({y} + cast({dy} as bigint))"
+    return pack_sql(res, xn, yn)
+
+
+def neighbor_valid_sql(cell: str, dy: str, dialect: str = "spark") -> str:
+    """Predicate: the (·, dy) offset stays on the grid (y within
+    [0, 2^(res+1)) — rows beyond a pole do not exist)."""
+    res, _, y = unpack_sql(f"cast({cell} as bigint)", dialect)
+    yn = f"({y} + cast({dy} as bigint))"
+    return f"({yn} >= 0 and {yn} < {_pow2_sql(f'{res} + 1')})"

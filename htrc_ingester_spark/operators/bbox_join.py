@@ -11,8 +11,10 @@ spatial key.
 Plan shape (Spark-first):
 
 1. Each bbox explodes to the grid cells it covers at resolution
-   ``res`` (two ``sequence`` explodes — a pure Catalyst generator, no
-   UDF; cell ids are the h3lite int64 packing).
+   ``res`` (:func:`bbox_cells`: two ``sequence`` explodes — a pure
+   Catalyst generator, no UDF — over h3lite's ``lon_index_sql`` /
+   ``lat_index_sql``, packed by ``pack_sql``; segments and map_match
+   explode their boxes through the same helper).
 2. ONE equi-join on ``cell`` pairs up boxes sharing a cell.
 3. The exact closed-interval intersection predicate keeps true pairs,
    and the REFERENCE-POINT rule keeps each pair exactly once with no
@@ -30,8 +32,9 @@ auto-derives (one 1-row aggregate over both inputs) so the AVERAGE
 box covers ~2×2 cells — the knob the caller would otherwise have to
 guess, same philosophy as radius_join's auto-res.
 
-Boxes must satisfy ``lon_min <= lon_max`` (no antimeridian wrap);
-split a wrapping box into two rows upstream — the join semantics
+Boxes must satisfy ``lon_min <= lon_max`` (no antimeridian wrap;
+:func:`bbox_cells` raises on a box that wraps); split a wrapping box
+into two rows upstream — the join semantics
 stay correct because both halves carry the same id and the pair
 output is per-id (a wrapped box's two halves can both match, and the
 reference-point rule still fires exactly once per half-pair).
@@ -47,25 +50,32 @@ from ..geo import h3lite as H
 _BBOX_COLS = ("lon_min", "lat_min", "lon_max", "lat_max")
 
 
-def _x_idx(col, res: int):
-    nxr = H.nx(res)
-    return F.least(
-        F.greatest(
-            F.floor((col + F.lit(180.0)) / F.lit(360.0) * F.lit(nxr)).cast("long"),
-            F.lit(0).cast("long"),
-        ),
-        F.lit(nxr - 1).cast("long"),
+def bbox_cells(
+    df: DataFrame, lon_min: str, lat_min: str, lon_max: str, lat_max: str, res: int
+) -> DataFrame:
+    """Explode each row's lon/lat box — four SQL expressions over
+    ``df`` — to the res-``res`` cells it covers (two ``sequence``
+    explodes): adds the cell's column ``__x``, row ``__y`` and packed
+    ``cell``. A box with ``lon_min > lon_max`` crosses the antimeridian
+    and raises (split it into two rows upstream: unchecked, the
+    descending x-sequence covered the complement longitude band and
+    the join silently lost the box). A NULL bound does not raise: the
+    clamp (least/greatest skip NULLs) puts it on the grid edge, and the
+    joins' exact predicates drop the box."""
+    x1 = (
+        f"if({lon_min} > {lon_max}, cast(raise_error(concat('box crosses the antimeridian"
+        f" (lon_min ', cast({lon_min} as string), ' > lon_max ', cast({lon_max} as string),"
+        f" '): split it into two rows')) as bigint), {H.lon_index_sql(lon_max, res)})"
     )
-
-
-def _y_idx(col, res: int):
-    nyr = H.ny(res)
-    return F.least(
-        F.greatest(
-            F.floor((col + F.lit(90.0)) / F.lit(180.0) * F.lit(nyr)).cast("long"),
-            F.lit(0).cast("long"),
-        ),
-        F.lit(nyr - 1).cast("long"),
+    return (
+        df.withColumn("__x0", F.expr(H.lon_index_sql(lon_min, res)))
+        .withColumn("__x1", F.expr(x1))
+        .withColumn("__y0", F.expr(H.lat_index_sql(lat_min, res)))
+        .withColumn("__y1", F.expr(H.lat_index_sql(lat_max, res)))
+        .withColumn("__x", F.explode(F.expr("sequence(__x0, __x1)")))
+        .withColumn("__y", F.explode(F.expr("sequence(__y0, __y1)")))
+        .withColumn("cell", F.expr(H.pack_sql(res, "__x", "__y")))
+        .drop("__x0", "__x1", "__y0", "__y1")
     )
 
 
@@ -75,20 +85,19 @@ def _cover(df: DataFrame, res: int, prefix: str) -> DataFrame:
     out = df
     for c in df.columns:
         out = out.withColumnRenamed(c, f"{prefix}{c}")
-    out = (
-        out.withColumn("__x0", _x_idx(F.col(f"{prefix}lon_min"), res))
-        .withColumn("__x1", _x_idx(F.col(f"{prefix}lon_max"), res))
-        .withColumn("__y0", _y_idx(F.col(f"{prefix}lat_min"), res))
-        .withColumn("__y1", _y_idx(F.col(f"{prefix}lat_max"), res))
-        .withColumn("__x", F.explode(F.expr("sequence(__x0, __x1)")))
-        .withColumn("__y", F.explode(F.expr("sequence(__y0, __y1)")))
-        .withColumn(
-            "cell",
-            (F.lit(res).cast("long") * F.lit(1 << 56) + F.col("__x") * F.lit(1 << 28) + F.col("__y")),
+    return bbox_cells(out, *(prefix + c for c in _BBOX_COLS), res).drop("__x", "__y")
+
+
+def _ref_cell(res: int):
+    """The one cell allowed to emit an a/b pair: the cell of the min
+    corner of the two boxes' intersection (reference-point rule)."""
+    return F.expr(
+        H.pack_sql(
+            res,
+            H.lon_index_sql("greatest(a_lon_min, b_lon_min)", res),
+            H.lat_index_sql("greatest(a_lat_min, b_lat_min)", res),
         )
-        .drop("__x0", "__x1", "__y0", "__y1", "__x", "__y")
     )
-    return out
 
 
 def auto_res(a: DataFrame, b: DataFrame) -> int:
@@ -142,11 +151,4 @@ def bbox_intersect_join(
     )
     # reference point: intersection rect's min corner decides the ONE
     # cell allowed to emit this pair (no distinct)
-    rx = F.greatest(F.col("a_lon_min"), F.col("b_lon_min"))
-    ry = F.greatest(F.col("a_lat_min"), F.col("b_lat_min"))
-    ref_cell = (
-        F.lit(res).cast("long") * F.lit(1 << 56)
-        + _x_idx(rx, res) * F.lit(1 << 28)
-        + _y_idx(ry, res)
-    )
-    return j.where(inter & (F.col("cell") == ref_cell)).drop("cell")
+    return j.where(inter & (F.col("cell") == _ref_cell(res))).drop("cell")

@@ -149,7 +149,7 @@ def polygon_buffer(
         .distinct()  # overlapping ring bboxes must not double parity edges
         .selectExpr(
             "poly_id",
-            f"cast({res} as bigint) * {1 << 56} + x * {1 << 28} + y as cell",
+            f"{H.pack_sql(res, 'x', 'y')} as cell",
             f"{lon_c} as lon_c",
             f"{lat_c} as lat_c",
         )
@@ -194,7 +194,7 @@ def polygon_buffer_oracle_sql(
       cross join lateral (select unnest(generate_series(x0, xe)) as x) gx
       cross join lateral (select unnest(generate_series(y0, ye)) as y) gy),
     cells as (
-      select poly_id, cast({res} as bigint) * {1 << 56} + x * {1 << 28} + y as cell,
+      select poly_id, {H.pack_sql(res, 'x', 'y')} as cell,
              {lon_c} as lon_c, {lat_c} as lat_c
       from cand),
     tests as (

@@ -41,27 +41,18 @@ from ..geo import h3lite as H
 from ..session import fits_driver, materialize, plan_bytes, static_plan
 
 
-def _unpack(cell: str) -> tuple[str, str, str]:
-    c = f"cast({cell} as bigint)"
-    return (
-        f"({c} div {1 << 56})",
-        f"(({c} div {1 << 28}) % {1 << 28})",
-        f"({c} % {1 << 28})",
-    )
-
-
 def adjacency_edges(cells: DataFrame, res: int, cell_col: str = "cell") -> DataFrame:
     """Both-direction 4-adjacency edge list (src, dst) between PRESENT
     cells: E neighbor wraps lon (``(x+1) % nx``), N neighbor clips at
     the pole. One semi self-join; diagonal cells do NOT touch."""
     nxr, nyr = H.nx(res), H.ny(res)
-    _, x, y = _unpack("src")
+    _, x, y = H.unpack_sql("cast(src as bigint)")
     base = cells.select(F.col(cell_col).cast("long").alias("src"))
     e = base.withColumn(
         "dst",
         F.explode(
             F.array(
-                F.expr(f"src - {x} * {1 << 28} + (({x} + 1) % {nxr}) * {1 << 28}"),
+                F.expr(H.set_x_sql("src", x, f"(({x} + 1) % {nxr})")),
                 F.expr(f"case when {y} + 1 < {nyr} then src + 1 else null end"),
             )
         ),
@@ -80,9 +71,8 @@ def _cc_driver(cells_np, res: int):
 
     nxr, nyr = H.nx(res), H.ny(res)
     c = np.sort(np.unique(np.asarray(cells_np, dtype=np.int64)))
-    x = (c >> np.int64(28)) & np.int64((1 << 28) - 1)
-    y = c & np.int64((1 << 28) - 1)
-    e_nb = c - x * np.int64(1 << 28) + ((x + 1) % nxr) * np.int64(1 << 28)
+    x, y = H.cell_xy(c)
+    e_nb = H.pack_xy((x + 1) % nxr, y, res)
     n_nb = np.where(y + 1 < nyr, c + 1, np.int64(-1))
     parent = np.arange(len(c), dtype=np.int64)
 
@@ -342,7 +332,7 @@ def region_boundary_stats(
     grid row count their pole-side edge as boundary). One explode + one
     self-join on the cell key; no geometry, no UDF."""
     nxr, nyr = H.nx(res), H.ny(res)
-    _, x, y = _unpack("cell")
+    _, x, y = H.unpack_sql("cast(cell as bigint)")
     lab = dissolved.select(F.col(cell_col).cast("long").alias("cell"), "comp")
     # -1 sentinel for off-grid (pole-side) neighbors: matches no cell,
     # so the left join marks the edge boundary — same convention as
@@ -351,8 +341,8 @@ def region_boundary_stats(
         "nb",
         F.explode(
             F.array(
-                F.expr(f"cell - {x} * {1 << 28} + (({x} + 1) % {nxr}) * {1 << 28}"),
-                F.expr(f"cell - {x} * {1 << 28} + (({x} - 1 + {nxr}) % {nxr}) * {1 << 28}"),
+                F.expr(H.set_x_sql("cell", x, f"(({x} + 1) % {nxr})")),
+                F.expr(H.set_x_sql("cell", x, f"(({x} - 1 + {nxr}) % {nxr})")),
                 F.expr(f"case when {y} + 1 < {nyr} then cell + 1 else -1 end"),
                 F.expr(f"case when {y} > 0 then cell - 1 else -1 end"),
             )

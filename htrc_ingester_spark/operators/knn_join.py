@@ -38,6 +38,8 @@ dominated by the last round.
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -45,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions import h3_cell, haversine_m
 from ..geo import h3lite as H
-from ..session import broadcast_threshold, fits_driver, plan_bytes
+from ..session import broadcast_threshold, fits_driver, materialize, plan_bytes, static_plan
 
 EARTH_RADIUS_M = 6_371_008.8
 
@@ -209,6 +211,43 @@ def _kx_sql(lat: str, r: str, res: int, bound: str | None = None) -> str:
     )
 
 
+def _with_origin(queries: DataFrame, res: int) -> DataFrame:
+    """Add each query's res-``res`` column ``x0`` and row ``y0``."""
+    _, x, y = H.unpack_sql("_c0")
+    return (
+        queries.withColumn("_c0", h3_cell("q_lon", "q_lat", res))
+        .withColumn("x0", F.expr(f"cast({x} as int)"))
+        .withColumn("y0", F.expr(f"cast({y} as int)"))
+        .drop("_c0")
+    )
+
+
+def _disk_cells(df: DataFrame, r: str, kx: str, res: int) -> DataFrame:
+    """Explode each row to the cells of its disk around (x0, y0): dy in
+    [-r, r] rows (clamped at the poles), dx in [-kx, kx] columns wrapped
+    and capped at nx/2. Adds ``dy``, ``dx`` and ``cell``.
+
+    The dx range is truncated on the high side when a full wrap would
+    emit the same column at both extremes (2·kx+1 > nx): pmod maps any
+    window of ≤ nx offsets injectively, so the disk needs no
+    dropDuplicates exchange."""
+    nxr, nyr = H.nx(res), H.ny(res)
+    return (
+        df.withColumn(
+            "dy", F.explode(F.expr(f"sequence(greatest(-{r}, -y0), least({r}, {nyr - 1} - y0))"))
+        )
+        .withColumn("kx_c", F.expr(f"least({kx}, {nxr // 2})"))
+        .withColumn("dx_hi", F.expr(f"least(kx_c, {nxr} - 1 - kx_c)"))
+        .withColumn("dx", F.explode(F.expr("sequence(-kx_c, dx_hi)")))
+        .withColumn(
+            "cell",
+            F.expr(
+                H.pack_sql(res, f"cast(pmod(x0 + dx, {nxr}) as bigint)", "cast(y0 + dy as bigint)")
+            ),
+        )
+    )
+
+
 def knn_join_many(
     spark: SparkSession,
     points: DataFrame,
@@ -301,16 +340,15 @@ def knn_join_many(
         )
 
     state = (
-        queries.select(
-            F.col("query_id").cast("string"),
-            F.col(lon_col).alias("q_lon").cast("double"),
-            F.col(lat_col).alias("q_lat").cast("double"),
-            F.col("k").cast("int"),
+        _with_origin(
+            queries.select(
+                F.col("query_id").cast("string"),
+                F.col(lon_col).alias("q_lon").cast("double"),
+                F.col(lat_col).alias("q_lat").cast("double"),
+                F.col("k").cast("int"),
+            ),
+            res,
         )
-        .withColumn("_c0", h3_cell("q_lon", "q_lat", res))
-        .withColumn("x0", F.expr(f"cast((_c0 div {1 << 28}) % {1 << 28} as int)"))
-        .withColumn("y0", F.expr(f"cast(_c0 % {1 << 28} as int)"))
-        .drop("_c0")
         .withColumn("r", F.lit(0))
         .withColumn("pkx", F.lit(-1))
         .withColumn("pr", F.lit(-1))
@@ -354,30 +392,11 @@ def knn_join_many(
             ),
         )
 
-        # frontier ring: dy ∈ [-r, r] rows (clamped), dx wrapped and
-        # capped at nx/2, minus the previous disk rectangle. The dx
-        # range is truncated on the high side when a full wrap would
-        # emit the same column at both extremes (2·kx+1 > nx): pmod
-        # maps any window of ≤ nx offsets injectively, so no
-        # dropDuplicates exchange is needed (the previous layout paid
-        # one per round).
+        # frontier ring: the disk at (r_new, kx_new) minus the previous
+        # disk rectangle
         ring = (
-            grown.where("not done")
-            .withColumn(
-                "dy", F.explode(F.expr(f"sequence(greatest(-r_new, -y0), least(r_new, {nyr - 1} - y0))"))
-            )
-            .withColumn("kx_c", F.expr(f"least(kx_new, {nxr // 2})"))
-            .withColumn("dx_hi", F.expr(f"least(kx_c, {nxr} - 1 - kx_c)"))
-            .withColumn("dx", F.explode(F.expr("sequence(-kx_c, dx_hi)")))
+            _disk_cells(grown.where("not done"), "r_new", "kx_new", res)
             .where(~((F.expr("abs(dx)") <= F.expr(f"least(pkx, {nxr // 2})")) & (F.expr("abs(dy)") <= F.col("pr"))))
-            .withColumn(
-                "cell",
-                F.expr(
-                    f"cast({res} as bigint) * {1 << 56}"
-                    f" + cast(pmod(x0 + dx, {nxr}) as bigint) * {1 << 28}"
-                    f" + cast(y0 + dy as bigint)"
-                ),
-            )
             .select("query_id", "q_lon", "q_lat", "cell")
         )
 
@@ -419,23 +438,14 @@ def knn_join_many(
                 F.col("topk2").alias("topk"),
             )
         )
-        if broadcast_skel:
-            # pinned-broadcast regime: the round plan is narrow + one
-            # groupBy over known-small state — AQE's per-stage
-            # materialize/replan jobs are pure latency here
-            # (session.static_plan). The huge-skel regimes keep AQE for
-            # per-round skew handling.
-            from ..session import materialize, static_plan
-
-            with static_plan(spark):
-                new_state = materialize(new_state)
-                n_active = new_state.where("not done").count()
-        else:
-            from ..session import materialize
-
-            new_state = materialize(new_state)
-            n_active = new_state.where("not done").count()
-        state = new_state
+        # pinned-broadcast regime: the round plan is narrow + one
+        # groupBy over known-small state — AQE's per-stage
+        # materialize/replan jobs are pure latency here
+        # (session.static_plan). The huge-skel regimes keep AQE for
+        # per-round skew handling.
+        with static_plan(spark) if broadcast_skel else contextlib.nullcontext():
+            state = materialize(new_state)
+            n_active = state.where("not done").count()
         if init_state is not None:
             init_state.unpersist()
             init_state = None
@@ -583,7 +593,6 @@ def radius_join(
     if res is None:
         res = radius_res(radius_m)
     ch_m = H.cell_h_deg(res) * H.M_PER_DEG_LAT
-    nxr, nyr = H.nx(res), H.ny(res)
     r_rows = int(np.ceil(radius_m / ch_m))
 
     carry = list(carry_cols or [])
@@ -594,45 +603,18 @@ def radius_join(
         h3_cell(lon_col, lat_col, res).alias("cell"),
         *[F.col(c) for c in carry],
     )
-    q = (
+    q = _with_origin(
         queries.select(
             F.col("query_id").cast("string"),
             F.col(lon_col).alias("q_lon").cast("double"),
             F.col(lat_col).alias("q_lat").cast("double"),
-        )
-        .withColumn("_c0", h3_cell("q_lon", "q_lat", res))
-        .withColumn("x0", F.expr(f"cast((_c0 div {1 << 28}) % {1 << 28} as int)"))
-        .withColumn("y0", F.expr(f"cast(_c0 % {1 << 28} as int)"))
-        .drop("_c0")
-        .withColumn(
-            "kx",
-            F.expr(_kx_sql("q_lat", str(r_rows), res, bound=f"cast({radius_m!r} as double)")).cast("int"),
-        )
+        ),
+        res,
+    ).withColumn(
+        "kx",
+        F.expr(_kx_sql("q_lat", str(r_rows), res, bound=f"cast({radius_m!r} as double)")).cast("int"),
     )
-    disk = (
-        q.withColumn(
-            "dy",
-            F.explode(F.expr(f"sequence(greatest(-{r_rows}, -y0), least({r_rows}, {nyr - 1} - y0))")),
-        )
-        .withColumn("kx_c", F.expr(f"least(kx, {nxr // 2})"))
-        # truncate the high side when a full wrap would alias the two
-        # extreme columns (the ring's dx_hi mechanism in knn_join_many):
-        # pmod maps any window of ≤ nx offsets injectively, so the disk
-        # needs NO dropDuplicates exchange — the previous layout paid a
-        # full shuffle of |queries| × |disk| rows per call for a case
-        # the truncation eliminates for free
-        .withColumn("dx_hi", F.expr(f"least(kx_c, {nxr} - 1 - kx_c)"))
-        .withColumn("dx", F.explode(F.expr("sequence(-kx_c, dx_hi)")))
-        .withColumn(
-            "cell",
-            F.expr(
-                f"cast({res} as bigint) * {1 << 56}"
-                f" + cast(pmod(x0 + dx, {nxr}) as bigint) * {1 << 28}"
-                f" + cast(y0 + dy as bigint)"
-            ),
-        )
-        .select("query_id", "q_lon", "q_lat", "cell")
-    )
+    disk = _disk_cells(q, str(r_rows), "kx", res).select("query_id", "q_lon", "q_lat", "cell")
     return (
         skel.join(disk, "cell")
         .withColumn("dist_m", haversine_m("q_lat", "q_lon", "p_lat", "p_lon"))

@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 
 from ..functions import h3_cell
 from ..geo import h3lite as H
+from .bbox_join import bbox_cells
 from .knn_join import radius_res
 
 M_PER_DEG = float(H.M_PER_DEG_LAT)
@@ -96,7 +97,6 @@ def map_match(
     """
     if res is None:
         res = radius_res(radius_m)
-    nxr, nyr = H.nx(res), H.ny(res)
     r_deg = float(radius_m) / M_PER_DEG
 
     # --- segment cover: bbox ± radius, exploded to cells -------------
@@ -107,32 +107,16 @@ def map_match(
         F.col("bx").cast("double"),
         F.col("by").cast("double"),
     )
-    max_abs_lat = F.least(
-        F.greatest(F.abs(F.col("ay")), F.abs(F.col("by"))) + F.lit(r_deg),
-        F.lit(89.0),
-    )
-    lon_exp = F.lit(r_deg) / F.cos(F.radians(max_abs_lat))
-    x_of = lambda c: F.least(  # noqa: E731
-        F.greatest(F.floor((c + F.lit(180.0)) / F.lit(360.0) * F.lit(nxr)).cast("long"), F.lit(0).cast("long")),
-        F.lit(nxr - 1).cast("long"),
-    )
-    y_of = lambda c: F.least(  # noqa: E731
-        F.greatest(F.floor((c + F.lit(90.0)) / F.lit(180.0) * F.lit(nyr)).cast("long"), F.lit(0).cast("long")),
-        F.lit(nyr - 1).cast("long"),
-    )
-    cov = (
-        seg.withColumn("__x0", x_of(F.least("ax", "bx") - lon_exp))
-        .withColumn("__x1", x_of(F.greatest("ax", "bx") + lon_exp))
-        .withColumn("__y0", y_of(F.least("ay", "by") - F.lit(r_deg)))
-        .withColumn("__y1", y_of(F.greatest("ay", "by") + F.lit(r_deg)))
-        .withColumn("__x", F.explode(F.expr("sequence(__x0, __x1)")))
-        .withColumn("__y", F.explode(F.expr("sequence(__y0, __y1)")))
-        .withColumn(
-            "cell",
-            F.lit(res).cast("long") * F.lit(1 << 56) + F.col("__x") * F.lit(1 << 28) + F.col("__y"),
-        )
-        .drop("__x0", "__x1", "__y0", "__y1", "__x", "__y")
-    )
+    r = f"cast({r_deg!r} as double)"
+    lon_exp = f"({r} / cos(radians(least(greatest(abs(ay), abs(by)) + {r}, 89.0))))"
+    cov = bbox_cells(
+        seg,
+        f"least(ax, bx) - {lon_exp}",
+        f"least(ay, by) - {r}",
+        f"greatest(ax, bx) + {lon_exp}",
+        f"greatest(ay, by) + {r}",
+        res,
+    ).drop("__x", "__y")
 
     pts = points.select(
         F.col(id_col).alias("__pid"),

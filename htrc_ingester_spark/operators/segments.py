@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .bbox_join import _cover, _x_idx, _y_idx, auto_res
+from .bbox_join import _cover, _ref_cell, auto_res, bbox_cells
 
 _SEG_COLS = ("x0", "y0", "x1", "y1")
 
@@ -153,13 +153,6 @@ def segment_intersect_join(
     ca = _cover(a_box, res, "a_")
     cb = _cover(b_box, res, "b_")
     j = ca.join(cb, "cell")
-    rx = F.greatest(F.col("a_lon_min"), F.col("b_lon_min"))
-    ry = F.greatest(F.col("a_lat_min"), F.col("b_lat_min"))
-    ref_cell = (
-        F.lit(res).cast("long") * F.lit(1 << 56)
-        + _x_idx(rx, res) * F.lit(1 << 28)
-        + _y_idx(ry, res)
-    )
     bbox_overlap = (
         (F.col("a_lon_min") <= F.col("b_lon_max"))
         & (F.col("b_lon_min") <= F.col("a_lon_max"))
@@ -167,7 +160,7 @@ def segment_intersect_join(
         & (F.col("b_lat_min") <= F.col("a_lat_max"))
     )
     out = j.where(
-        bbox_overlap & (F.col("cell") == ref_cell) & segments_intersect_cond()
+        bbox_overlap & (F.col("cell") == _ref_cell(res)) & segments_intersect_cond()
     ).drop("cell")
     helper = [f"{p}{c}" for p in ("a_", "b_") for c in ("lon_min", "lon_max", "lat_min", "lat_max")]
     return out.drop(*helper)
@@ -252,27 +245,17 @@ def segment_density(segments: DataFrame, res: int) -> DataFrame:
     ``segments``: (seg_id, x0, y0, x1, y1) lon/lat degrees, no
     antimeridian crossing.
     """
-    box = _with_bbox(segments)
     cand = (
-        box.withColumn("_xa", _x_idx(F.col("lon_min"), res))
-        .withColumn("_xb", _x_idx(F.col("lon_max"), res))
-        .withColumn("_ya", _y_idx(F.col("lat_min"), res))
-        .withColumn("_yb", _y_idx(F.col("lat_max"), res))
-        .withColumn("cx", F.explode(F.expr("sequence(_xa, _xb)")))
-        .withColumn("cy", F.explode(F.expr("sequence(_ya, _yb)")))
+        bbox_cells(_with_bbox(segments), "lon_min", "lat_min", "lon_max", "lat_max", res)
+        .withColumnRenamed("__x", "cx")
+        .withColumnRenamed("__y", "cy")
     )
     frac = clip_frac_sql(res)
     length = seg_len_m_sql()
     return (
         cand.withColumn("_len_in", F.expr(f"({frac}) * ({length})"))
         .where(F.col("_len_in") > 0)
-        .groupBy(
-            (
-                F.lit(res).cast("long") * F.lit(1 << 56)
-                + F.col("cx") * F.lit(1 << 28)
-                + F.col("cy")
-            ).alias("cell")
-        )
+        .groupBy("cell")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_segments"),
             F.round(F.sum("_len_in"), 1).alias("len_m"),

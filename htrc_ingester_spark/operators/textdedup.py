@@ -24,8 +24,9 @@ signature step is narrow (per-row arrays); the only shuffle is the
 band-bucket self-join, keyed by (band, bucket) whose cardinality is
 tunable via bands×rows_per_band; hot buckets (boilerplate dups) are
 exactly the skew case — cap candidate pairs per bucket or salt the
-verify stage. Cross-dialect hash: lexicographic MIN over salted md5
-hex strings (md5 exists in both engines; no murmur parity needed).
+verify stage. MinHash hashes with xxhash64, which DuckDB does not
+share, so its oracle checks the verified pairs (exact Jaccard is
+hash-free), not the signatures.
 
 Reference parity: dedup is the J3/SO3 upsert-collapse discipline
 (DeltaLogParser.java:242-244) generalized from exact-key to
@@ -91,27 +92,6 @@ def bound_shingles_expr(k: int, hashed: bool = False) -> str:
         f" transform(sequence(0, size(_w) - {k}),"
         f" {body}))"
     )
-
-
-def _minhash_chunk_off(j: int) -> tuple[int, int]:
-    """Shared md5-family constants: min-hash #j reads 8 hex chars at
-    ``off`` from the chunk-``chunk`` salted digest (md5 = 128 bits =
-    4×32, so four hashes share one digest). ONE source for both
-    :func:`minhash_sql` (the cross-dialect oracle twin) and
-    minhash_signatures' md5 branch — a drift between them would
-    silently break the promised signature-level parity."""
-    return j // 4, (j % 4) * 8 + 1
-
-
-def minhash_sql(shingles: str, j: int, dialect: str) -> str:
-    """Min-hash #j: lexicographic min over shingles of a 32-bit (8 hex
-    chars) slice of a salted md5. Four hashes share one md5 call
-    (md5 = 128 bits = 4x32) — 4x fewer digests than hash-per-salt, and
-    32 bits is ample for shingle-set sketching (collisions ~n²/2³²)."""
-    fn = "array_min" if dialect == "spark" else "list_min"
-    tf = "transform" if dialect == "spark" else "list_transform"
-    chunk, off = _minhash_chunk_off(j)
-    return f"{fn}({tf}({shingles}, s -> substr(md5(concat('c{chunk}:', s)), {off}, 8)))"
 
 
 def _bit_sign(col: str, i: int) -> str:
@@ -236,7 +216,6 @@ def minhash_signatures(
     n_bands: int = 8,
     rows_per_band: int = 2,
     shingle_k: int = 3,
-    hash_impl: str = "xx64",
 ) -> DataFrame:
     """(id, band, bucket): LSH bucket per band = hash of the band's
     row min-hashes.
@@ -246,19 +225,14 @@ def minhash_signatures(
     projection collapsing would otherwise recompute the shingle array
     per hash (measured 16x blowup on the inlined-transform version).
 
-    ``hash_impl``:
-
-    - ``"xx64"`` (default): double hashing, zero shingle strings —
-      each word k-gram is reduced to ONE bigint base by a chained
-      ``xxhash64`` over the k word columns (no concatenated shingle
-      string is ever allocated), and the ``n_bands*rows_per_band``
-      salted min-hash functions re-hash the 8-byte base. All
-      whole-stage-codegen; buckets are bigints. No cross-dialect twin
-      exists, so the catalog oracle checks the verified-pairs OUTPUT
-      (exact Jaccard is hash-free) rather than the signatures.
-    - ``"md5"``: the cross-dialect family (``minhash_sql``) — 32-bit
-      hex slices of salted md5, reproducible verbatim in DuckDB for
-      signature-level oracles.
+    Hashing is double hashing with zero shingle strings: each word
+    k-gram is reduced to ONE bigint base by a chained ``xxhash64`` over
+    the k word columns (no concatenated shingle string is ever
+    allocated), and the ``n_bands*rows_per_band`` salted min-hash
+    functions re-hash the 8-byte base. All whole-stage-codegen; buckets
+    are bigints. No cross-dialect twin exists, so the catalog oracle
+    checks the verified-pairs OUTPUT (exact Jaccard is hash-free)
+    rather than the signatures.
     """
     n_hashes = n_bands * rows_per_band
     # Bind the word array ONCE PER ROW in its own projection: a
@@ -274,62 +248,32 @@ def minhash_signatures(
     words = _parallelism_floor(df).select(
         id_col, F.expr(f"split({text_col}, ' ')").alias("_w")
     )
-    if hash_impl not in ("xx64", "md5"):
-        # a typo must not silently select the ~n_hashes×-costlier md5
-        # family with different bucket values
-        raise ValueError(f"hash_impl must be 'xx64' or 'md5', got {hash_impl!r}")
-    if hash_impl == "xx64":
-        # Double hashing + zero shingle materialization: each word
-        # k-gram is hashed to ONE 64-bit base value directly from the
-        # bound word array (xxhash64 chains its running hash through
-        # the k word arguments, so word boundaries stay significant
-        # without ever allocating the concatenated shingle string);
-        # the n_hashes salted min-hash functions then re-hash the
-        # 8-byte base. Same minhash family guarantees (each seeded
-        # h_i is ~uniform over shingles; base collisions are 2^-64),
-        # but the dominant stage allocates no shingle strings and
-        # hashes n_hashes× fewer string bytes. No shuffle-shape
-        # change (map-side partial min-agg as before).
-        h64 = bound_shingles_expr(shingle_k, hashed=True)
-        base = words.select(id_col, F.explode(F.expr(h64)).alias("_s64"))
-        mins = base.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64(F.lit(h), F.col("_s64"))).alias(f"_m{h}")
-                for h in range(n_hashes)
-            ]
-        )
-        band_cols = [
-            F.xxhash64(
-                F.lit(-1 - b),
-                *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)],
-            ).alias(f"_b{b}")
-            for b in range(n_bands)
+    # Double hashing + zero shingle materialization: each word
+    # k-gram is hashed to ONE 64-bit base value directly from the
+    # bound word array (xxhash64 chains its running hash through
+    # the k word arguments, so word boundaries stay significant
+    # without ever allocating the concatenated shingle string);
+    # the n_hashes salted min-hash functions then re-hash the
+    # 8-byte base. Same minhash family guarantees (each seeded
+    # h_i is ~uniform over shingles; base collisions are 2^-64),
+    # but the dominant stage allocates no shingle strings and
+    # hashes n_hashes× fewer string bytes. No shuffle-shape
+    # change (map-side partial min-agg as before).
+    h64 = bound_shingles_expr(shingle_k, hashed=True)
+    base = words.select(id_col, F.explode(F.expr(h64)).alias("_s64"))
+    mins = base.groupBy(id_col).agg(
+        *[
+            F.min(F.xxhash64(F.lit(h), F.col("_s64"))).alias(f"_m{h}")
+            for h in range(n_hashes)
         ]
-    else:
-        # same shingle STRINGS as shingles_sql (the cross-dialect
-        # contract), built over the bound `_w` column
-        sh = bound_shingles_expr(shingle_k)
-        exploded_raw = words.select(id_col, F.explode(F.expr(sh)).alias("_s"))
-        n_chunks = (n_hashes + 3) // 4
-        exploded = exploded_raw.select(
-            id_col,
-            *[F.expr(f"md5(concat('c{c}:', _s))").alias(f"_h{c}") for c in range(n_chunks)],
-        )
-        chunk_off = [_minhash_chunk_off(h) for h in range(n_hashes)]
-        mins = exploded.groupBy(id_col).agg(
-            *[
-                F.min(F.expr(f"substr(_h{c}, {off}, 8)")).alias(f"_m{h}")
-                for h, (c, off) in enumerate(chunk_off)
-            ]
-        )
-        band_cols = [
-            F.expr(
-                "md5(concat("
-                + ", ".join(f"_m{b * rows_per_band + r}" for r in range(rows_per_band))
-                + "))"
-            ).alias(f"_b{b}")
-            for b in range(n_bands)
-        ]
+    )
+    band_cols = [
+        F.xxhash64(
+            F.lit(-1 - b),
+            *[F.col(f"_m{b * rows_per_band + r}") for r in range(rows_per_band)],
+        ).alias(f"_b{b}")
+        for b in range(n_bands)
+    ]
     sig = mins.select(id_col, *band_cols)
     pairs = F.array(
         *[F.struct(F.lit(b).alias("band"), F.col(f"_b{b}").alias("bucket")) for b in range(n_bands)]
@@ -358,7 +302,6 @@ def lsh_near_dup_pairs(
     shingle_k: int = 3,
     jaccard_threshold: float = 0.5,
     max_bucket: int = 50,
-    hash_impl: str = "xx64",
     broadcast_verify: bool | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs: band-bucket self-join candidates, then
@@ -387,9 +330,7 @@ def lsh_near_dup_pairs(
     """
     from pyspark.sql import Window
 
-    sig = minhash_signatures(
-        df, id_col, text_col, n_bands, rows_per_band, shingle_k, hash_impl
-    )
+    sig = minhash_signatures(df, id_col, text_col, n_bands, rows_per_band, shingle_k)
     wb = Window.partitionBy("band", "bucket")
     kept = sig.withColumn("_n", F.count(F.lit(1)).over(wb)).where(
         F.col("_n") <= max_bucket

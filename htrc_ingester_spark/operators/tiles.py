@@ -4,6 +4,12 @@
 (functions.tile_sql_expr): no UDF, no RNG, no partition-order
 dependence, so the same input always produces the same tile on any
 cluster size (the determinism requirement in SURVEY.md §4.5).
+
+The raster operators here read and write cell ids only through
+geo/h3lite's SQL builders (``parent_sql_expr`` / ``child_parent_sql``
+for parents, ``neighbor_sql_expr`` / ``neighbor_valid_sql`` for window
+offsets, ``cell_bounds_sql`` for cell rectangles, ``unpack_sql`` /
+``pack_sql`` for the rest), which sit next to their numpy twins.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ def assign_tiles(
     touching lon/lat again.
     """
     if cell_col is not None:
-        # parent-derivation in pure SQL: x>>s, y>>s re-packed
+        # parent-derivation in pure SQL (h3lite.parent_sql_expr)
         df = points.withColumn("__zoom_cell", _parent_expr(cell_col, zoom_res))
     else:
         df = points.withColumn("__zoom_cell", h3_cell(lon_col, lat_col, zoom_res))
@@ -39,39 +45,7 @@ def assign_tiles(
 
 
 def _parent_expr(cell_col: str, parent_res: int):
-    return F.expr(parent_sql_expr(cell_col, parent_res, dialect="spark"))
-
-
-def parent_sql_expr(cell_col: str, parent_res: int, dialect: str = "spark") -> str:
-    """cell_to_parent as SQL (Spark + DuckDB): unpack res/x/y with exact
-    integer division, right-shift x and y by (res - parent_res), repack.
-    Aperture-4 ⇒ parent index = child index halved per res step.
-
-    A cell COARSER than ``parent_res`` has no res-``parent_res`` parent
-    — the Spark dialect raises a descriptive error (the numpy twin
-    ``h3lite.cell_to_parent`` raises ValueError; unguarded, the repack
-    divided by zero: an opaque DIVIDE_BY_ZERO under ANSI, silent NULL
-    cells without it). The DuckDB dialect is oracle-only and never
-    sees invalid fixtures."""
-    from ..functions import _IDIV
-
-    idiv = _IDIV[dialect]
-    c = f"cast({cell_col} as bigint)"
-    res = f"({c} {idiv} {1 << 56})"
-    x = f"(({c} {idiv} {1 << 28}) % {1 << 28})"
-    y = f"({c} % {1 << 28})"
-    p2 = f"cast(pow(cast(2 as double), cast({res} - {parent_res} as double)) as bigint)"
-    if dialect == "spark":
-        p2 = (
-            f"if({res} < {parent_res},"
-            f" cast(raise_error(concat('cannot take the res-{parent_res} parent"
-            f" of a coarser res-', cast({res} as string), ' cell')) as bigint),"
-            f" {p2})"
-        )
-    return (
-        f"(cast({parent_res} as bigint) * {1 << 56}"
-        f" + ({x} {idiv} {p2}) * {1 << 28} + ({y} {idiv} {p2}))"
-    )
+    return F.expr(H.parent_sql_expr(cell_col, parent_res, dialect="spark"))
 
 
 # ---------------------------------------------------------------------------
@@ -102,26 +76,6 @@ def rasterize(
     )
 
 
-def cell_bounds_sql(cell_col: str, dialect: str = "spark") -> dict[str, str]:
-    """Cell rectangle corner expressions (the SQL twin of
-    h3lite.cell_to_boundary) — integer unpack + float arithmetic."""
-    from ..functions import _IDIV
-
-    idiv = _IDIV[dialect]
-    c = f"cast({cell_col} as bigint)"
-    res = f"({c} {idiv} {1 << 56})"
-    x = f"(({c} {idiv} {1 << 28}) % {1 << 28})"
-    y = f"({c} % {1 << 28})"
-    nx = f"cast(pow(cast(2 as double), cast({res} + 2 as double)) as double)"
-    ny = f"cast(pow(cast(2 as double), cast({res} + 1 as double)) as double)"
-    return {
-        "lon_min": f"(cast({x} as double) / {nx} * 360.0 - 180.0)",
-        "lat_min": f"(cast({y} as double) / {ny} * 180.0 - 90.0)",
-        "lon_max": f"((cast({x} as double) + 1.0) / {nx} * 360.0 - 180.0)",
-        "lat_max": f"((cast({y} as double) + 1.0) / {ny} * 180.0 - 90.0)",
-    }
-
-
 def vectorize(
     raster: DataFrame,
     threshold: float,
@@ -133,7 +87,7 @@ def vectorize(
     array<struct<lon,lat>> (the engine's polygon wire format, §1.2).
     Adjacent-cell dissolve is a follow-up groupBy on parent cells;
     per-cell quads keep the operator a pure projection."""
-    b = cell_bounds_sql(cell_col, "spark")
+    b = H.cell_bounds_sql(cell_col, "spark")
     ring = (
         "array("
         f"struct({b['lon_min']} as lon, {b['lat_min']} as lat),"
@@ -147,39 +101,6 @@ def vectorize(
         .withColumn("ring", F.expr(ring))
         .select(F.col(cell_col).alias("poly_cell"), F.col(value_col).alias("value"), "ring")
     )
-
-
-def neighbor_sql_expr(cell: str, dx: str, dy: str, dialect: str = "spark") -> str:
-    """Neighbor-cell id at offset (dx, dy) as SQL valid in Spark AND
-    DuckDB: unpack res/x/y, wrap x around the antimeridian (longitude
-    is cyclic), shift y; repack. The y edge is NOT wrapped — crossing a
-    pole is not adjacency — callers must filter with
-    :func:`neighbor_valid_sql`."""
-    from ..functions import _IDIV
-
-    idiv = _IDIV[dialect]
-    c = f"cast({cell} as bigint)"
-    res = f"({c} {idiv} {1 << 56})"
-    x = f"(({c} {idiv} {1 << 28}) % {1 << 28})"
-    y = f"({c} % {1 << 28})"
-    nx = f"cast(pow(cast(2 as double), cast({res} + 2 as double)) as bigint)"
-    xn = f"(({x} + cast({dx} as bigint) + {nx}) % {nx})"
-    yn = f"({y} + cast({dy} as bigint))"
-    return f"({res} * {1 << 56} + {xn} * {1 << 28} + {yn})"
-
-
-def neighbor_valid_sql(cell: str, dy: str, dialect: str = "spark") -> str:
-    """Predicate: the (·, dy) offset stays on the grid (y within
-    [0, 2^(res+1)) — rows beyond a pole do not exist)."""
-    from ..functions import _IDIV
-
-    idiv = _IDIV[dialect]
-    c = f"cast({cell} as bigint)"
-    res = f"({c} {idiv} {1 << 56})"
-    y = f"({c} % {1 << 28})"
-    ny = f"cast(pow(cast(2 as double), cast({res} + 1 as double)) as bigint)"
-    yn = f"({y} + cast({dy} as bigint))"
-    return f"({yn} >= 0 and {yn} < {ny})"
 
 
 def _scatter_window(
@@ -205,11 +126,8 @@ def _scatter_window(
             for dy in range(-radius, radius + 1)
         ]
     )
-    c = "cast(__src as bigint)"
-    nx = (
-        f"cast(pow(cast(2 as double),"
-        f" cast(({c} div {1 << 56}) + 2 as double)) as bigint)"
-    )
+    res, _, _ = H.unpack_sql("cast(__src as bigint)")
+    nx = f"cast(pow(cast(2 as double), cast({res} + 2 as double)) as bigint)"
     dx_ok = (
         f"({2 * radius + 1} <= {nx})"
         f" or (o.dx >= -({nx} div 2) and o.dx <= ({nx} - 1) div 2)"
@@ -220,9 +138,9 @@ def _scatter_window(
             F.col(value_col).alias("__v"),
             F.explode(offs).alias("o"),
         )
-        .where(F.expr(neighbor_valid_sql("__src", "o.dy", "spark")))
+        .where(F.expr(H.neighbor_valid_sql("__src", "o.dy", "spark")))
         .where(F.expr(dx_ok))
-        .withColumn("__tgt", F.expr(neighbor_sql_expr("__src", "o.dx", "o.dy", "spark")))
+        .withColumn("__tgt", F.expr(H.neighbor_sql_expr("__src", "o.dx", "o.dy", "spark")))
     )
 
 
@@ -520,7 +438,7 @@ def compact_cells(
     cur = cells.select(F.col(cell_col).cast("long").alias("cell")).distinct()
     outs = []
     for level in range(res, min_res, -1):
-        parent = F.expr(parent_sql_expr("cell", level - 1, dialect="spark"))
+        parent = F.expr(H.parent_sql_expr("cell", level - 1, dialect="spark"))
         g = (
             cur.withColumn("__p", parent)
             .groupBy("__p")
@@ -540,17 +458,15 @@ def uncompact_cells(cells: DataFrame, res: int, cell_col: str = "cell") -> DataF
     res-``res`` cells — each cell of res r ≤ ``res`` explodes to its
     4^(res−r) descendants via two bounded ``sequence`` explodes (pure
     Catalyst, no UDF, no shuffle at all: a narrow map stage)."""
-    c = f"cast({cell_col} as bigint)"
-    x = f"(({c} div {1 << 28}) % {1 << 28})"
-    y = f"({c} % {1 << 28})"
-    k = f"cast({res} - ({c} div {1 << 56}) as int)"
+    res_c, x, y = H.unpack_sql(f"cast({cell_col} as bigint)")
+    k = f"cast({res} - {res_c} as int)"
     # a cell FINER than the target res has no descendants at that res:
     # raise like the numpy twin (unguarded, k < 0 made side = 0 and
     # sequence(0, -1) DESCENDS, emitting 4 corrupt cell ids per input)
     side = (
         f"if({k} < 0,"
         f" cast(raise_error(concat('uncompact target res {res} is coarser"
-        f" than cell res ', cast(({c} div {1 << 56}) as string))) as bigint),"
+        f" than cell res ', cast({res_c} as string))) as bigint),"
         f" cast(pow(cast(2 as double), cast({k} as double)) as bigint))"
     )
     return (
@@ -559,9 +475,7 @@ def uncompact_cells(cells: DataFrame, res: int, cell_col: str = "cell") -> DataF
         .withColumn("__dy", F.explode(F.expr("sequence(cast(0 as bigint), __side - 1)")))
         .select(
             F.expr(
-                f"cast({res} as bigint) * {1 << 56}"
-                f" + ({x} * __side + __dx) * {1 << 28}"
-                f" + ({y} * __side + __dy)"
+                H.pack_sql(res, f"({x} * __side + __dx)", f"({y} * __side + __dy)")
             ).alias(cell_col)
         )
     )
@@ -620,7 +534,7 @@ def mosaic_pyramid(
     )
     levels = [level.withColumn("res", F.lit(res_max))]
     for r in range(res_max - 1, res_min - 1, -1):
-        parent = F.expr(parent_sql_expr("cell", r, dialect="spark"))
+        parent = F.expr(H.parent_sql_expr("cell", r, dialect="spark"))
         level = (
             level.withColumn("cell", parent)
             .groupBy("cell")
@@ -663,25 +577,9 @@ def coverage_gaps(
     """
     from .bbox_join import _cover
 
-    # bbox_join's no-wrap contract applies here too (split an
-    # antimeridian-crossing box into two rows upstream): unchecked, a
-    # wrapping box's descending x-sequence covered the COMPLEMENT
-    # longitude band — thousands of bogus gap cells outside the region
-    # and none of the real ones inside it, silently
-    checked = boxes.select(
-        "poly_id",
-        F.expr(
-            "if(lon_min > lon_max,"
-            " cast(raise_error(concat('coverage_gaps: box ',"
-            " cast(poly_id as string),"
-            " ' wraps the antimeridian (lon_min > lon_max) — split it"
-            " into two rows')) as double), lon_min)"
-        ).alias("lon_min"),
-        "lat_min",
-        "lon_max",
-        "lat_max",
-    )
-    cov = _cover(checked, res, "g_")
+    # a box crossing the antimeridian raises in the explode
+    # (bbox_join's no-wrap contract): split it into two rows upstream
+    cov = _cover(boxes.select("poly_id", "lon_min", "lat_min", "lon_max", "lat_max"), res, "g_")
     occupied = (
         points.select(
             F.expr(H.h3_sql_expr(lon_col, lat_col, res)).alias("cell")
@@ -820,35 +718,22 @@ def adaptive_cells(
     makes this ~2× the old per-level descent's wall (the corpus is
     in-memory there), but at the operator's design scale the removed
     L-1 full-corpus scans dominate everything else."""
-    from ..geo import h3lite as Hh
-
     hist = (
         points.groupBy(
-            F.expr(Hh.h3_sql_expr(lon_col, lat_col, max_res)).alias("cell")
+            F.expr(H.h3_sql_expr(lon_col, lat_col, max_res)).alias("cell")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .persist()
     )
 
-    def parent_of(cell: str, child_res: int, parent_res: int) -> str:
-        # every cell at this point is KNOWN to be res child_res (built
-        # that way), so the shift is a literal — lighter codegen than
-        # the general parent_sql_expr (whose per-row res unpack + guard
-        # nested L-deep pushed the unioned plan past the codegen limit)
-        s = 1 << (child_res - parent_res)
-        c = f"cast({cell} as bigint)"
-        return (
-            f"(cast({parent_res} as bigint) * {1 << 56}"
-            f" + ((({c} div {1 << 28}) % {1 << 28}) div {s}) * {1 << 28}"
-            f" + (({c} % {1 << 28}) div {s}))"
-        )
-
-    # rollups: counts at every level from ONE histogram, no corpus scan
+    # rollups: counts at every level from ONE histogram, no corpus scan.
+    # Every cell here is KNOWN to be res r + 1 (built that way), so the
+    # parent shift is a literal (child_parent_sql)
     levels = {max_res: hist}
     for r in range(max_res - 1, base_res - 1, -1):
         levels[r] = (
             levels[r + 1]
-            .groupBy(F.expr(parent_of("cell", r + 1, r)).alias("cell"))
+            .groupBy(F.expr(H.child_parent_sql("cell", r + 1, r)).alias("cell"))
             .agg(F.sum("n").alias("n"))
         )
     out = None
@@ -864,7 +749,7 @@ def adaptive_cells(
         )
         active = levels[r + 1].join(
             hot,
-            F.expr(parent_of("cell", r + 1, r)) == F.col("__hot_cell"),
+            F.expr(H.child_parent_sql("cell", r + 1, r)) == F.col("__hot_cell"),
             "left_semi",
         )
     from ..session import static_plan

@@ -737,7 +737,7 @@ def _cells_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cells_compact_oracle() -> str:
     from ..geo import h3lite as HH
-    from ..operators.tiles import parent_sql_expr
+    from ..geo.h3lite import parent_sql_expr
 
     cell = HH.h3_sql_expr("lon", "lat", _COMPACT_RES)
     ctes = [
@@ -1110,7 +1110,7 @@ def _raster_focal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raster_focal_oracle() -> str:
     from ..geo import h3lite as H
-    from ..operators.tiles import neighbor_sql_expr, neighbor_valid_sql
+    from ..geo.h3lite import neighbor_sql_expr, neighbor_valid_sql
 
     cell = H.h3_sql_expr("lon", "lat", _FOCAL_RES)
     tgt = neighbor_sql_expr("cell", "dx", "dy", "duckdb")
@@ -1169,7 +1169,7 @@ def _raster_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raster_hotspots_oracle() -> str:
     from ..geo import h3lite as H
-    from ..operators.tiles import neighbor_sql_expr, neighbor_valid_sql
+    from ..geo.h3lite import neighbor_sql_expr, neighbor_valid_sql
 
     cell = H.h3_sql_expr("lon", "lat", _FOCAL_RES)
     tgt = neighbor_sql_expr("cell", "dx", "dy", "duckdb")
@@ -1241,7 +1241,7 @@ def _raster_kde(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raster_kde_oracle() -> str:
     from ..geo import h3lite as H
-    from ..operators.tiles import neighbor_sql_expr, neighbor_valid_sql
+    from ..geo.h3lite import neighbor_sql_expr, neighbor_valid_sql
 
     cell = H.h3_sql_expr("lon", "lat", _FOCAL_RES)
     tgt = neighbor_sql_expr("cell", "dx", "dy", "duckdb")
@@ -2433,12 +2433,7 @@ def _pyramid_sql() -> str:
     from ..geo import h3lite as H
 
     c7 = H.h3_sql_expr("lon", "lat", 7)
-    div = "div"
-    parent = (
-        f"(cast(5 as bigint) * {1 << 56}"
-        f" + ((c7 {div} {1 << 28}) % {1 << 28} {div} 4) * {1 << 28}"
-        f" + (c7 % {1 << 28}) {div} 4)"
-    )
+    parent = H.child_parent_sql("c7", 7, 5)
     return f"""
     with img as ({FS.images_sql('lineitem')}),
     cells as (select {c7} as c7 from img),
@@ -3705,7 +3700,7 @@ def _raster_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raster_vector_oracle() -> str:
     from ..geo import h3lite as H
-    from ..operators.tiles import cell_bounds_sql
+    from ..geo.h3lite import cell_bounds_sql
 
     cell = H.h3_sql_expr("lon", "lat", 6)
     b = cell_bounds_sql("cell", "duckdb")
@@ -4679,7 +4674,7 @@ def _raster_gradient(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _raster_gradient_oracle() -> str:
     from ..geo import h3lite as H
-    from ..operators.tiles import neighbor_sql_expr, neighbor_valid_sql
+    from ..geo.h3lite import neighbor_sql_expr, neighbor_valid_sql
 
     cell = H.h3_sql_expr("lon", "lat", _GRAD_RES)
     tgt = neighbor_sql_expr("cell", "dx", "dy", "duckdb")
@@ -5032,7 +5027,8 @@ def _cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..operators.graph import shortest_paths
-    from ..operators.tiles import neighbor_sql_expr, neighbor_valid_sql, rasterize
+    from ..geo.h3lite import neighbor_sql_expr, neighbor_valid_sql
+    from ..operators.tiles import rasterize
 
     r = rasterize(FS.load_images(spark, sf_dir), res=_COST_RES).persist()
     offs = (
@@ -5062,7 +5058,7 @@ def _cost_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cost_distance_oracle() -> str:
     from ..geo import h3lite as HH
-    from ..operators.tiles import neighbor_sql_expr, neighbor_valid_sql
+    from ..geo.h3lite import neighbor_sql_expr, neighbor_valid_sql
 
     cell = HH.h3_sql_expr("lon", "lat", _COST_RES)
     tgt = neighbor_sql_expr("cell", "dx", "dy", "duckdb")

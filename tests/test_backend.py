@@ -108,7 +108,7 @@ class TestReencodeBridge:
     def test_coarser_res_equals_parent(self, spark):
         from htrc_ingester_spark.geo.backend import reencode_cells
         from pyspark.sql import functions as F
-        from htrc_ingester_spark.operators.tiles import parent_sql_expr
+        from htrc_ingester_spark.geo.h3lite import parent_sql_expr
 
         pdf = data.images_meta_pdf(200)[["image_id", "lon", "lat"]]
         df = spark.createDataFrame(pdf).withColumn(

@@ -5,7 +5,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from htrc_ingester_spark.operators.bbox_join import auto_res, bbox_intersect_join
+from htrc_ingester_spark.operators.bbox_join import auto_res, bbox_cells, bbox_intersect_join
 
 
 def _boxes_pdf(n, seed, idp=""):
@@ -109,3 +109,48 @@ class TestBBoxJoin:
         )
         rows = bbox_intersect_join(spark, a, b, res=4).select("b_id").collect()
         assert [r["b_id"] for r in rows] == ["holds"]
+
+    def test_antimeridian_box_raises_and_its_split_halves_match(self, spark):
+        """A box with lon_min > lon_max crosses the antimeridian: the
+        explode raises instead of covering the complement longitude band
+        (which silently lost the pair), and the same box split into two
+        rows upstream — the documented contract — matches once."""
+        cols = "id int, lon_min double, lat_min double, lon_max double, lat_max double"
+        b = spark.createDataFrame([(2, 175.0, 5.0, 176.0, 6.0)], cols)
+        wrapped = spark.createDataFrame([(1, 170.0, 0.0, -170.0, 10.0)], cols)
+        with pytest.raises(Exception, match="antimeridian"):
+            bbox_intersect_join(spark, wrapped, b, res=3).collect()
+        halves = spark.createDataFrame(
+            [(1, 170.0, 0.0, 180.0, 10.0), (1, -180.0, 0.0, -170.0, 10.0)], cols
+        )
+        rows = bbox_intersect_join(spark, halves, b, res=3).select("a_id", "b_id").collect()
+        assert [(r["a_id"], r["b_id"]) for r in rows] == [(1, 2)]
+
+    def test_null_bounds_do_not_raise_and_match_nothing(self, spark):
+        cols = "id int, lon_min double, lat_min double, lon_max double, lat_max double"
+        a = spark.createDataFrame([(1, None, 0.0, 10.0, 10.0), (2, 0.0, 0.0, None, 10.0)], cols)
+        b = spark.createDataFrame([(9, -180.0, -90.0, 180.0, 90.0)], cols)
+        assert bbox_intersect_join(spark, a, b, res=3).count() == 0
+
+    def test_bbox_cells_match_cover_bboxes(self, spark):
+        """The shared explode covers each box with exactly the cells of
+        the numpy twin h3lite.cover_bboxes, at res 0..15 (random boxes
+        that do not wrap, a few cells wide at their res)."""
+        from htrc_ingester_spark.geo import h3lite as H
+
+        rng = np.random.default_rng(11)
+        n = 12
+        for res in range(H.RES_MIN, H.RES_MAX + 1):
+            w = np.minimum(H.cell_w_deg(res) * rng.uniform(0, 4, n), 300.0)
+            h = np.minimum(H.cell_h_deg(res) * rng.uniform(0, 4, n), 150.0)
+            lon0, lat0 = rng.uniform(-180, 180 - w), rng.uniform(-90, 90 - h)
+            pdf = pd.DataFrame(
+                {"box": np.arange(n), "lon_min": lon0, "lat_min": lat0,
+                 "lon_max": lon0 + w, "lat_max": lat0 + h}
+            )
+            got = bbox_cells(
+                spark.createDataFrame(pdf), "lon_min", "lat_min", "lon_max", "lat_max", res
+            ).select("box", "cell").collect()
+            cells, box = H.cover_bboxes(pdf.lon_min, pdf.lat_min, pdf.lon_max, pdf.lat_max, [res] * n)
+            assert len(got) == len(cells), res
+            assert {(r["box"], r["cell"]) for r in got} == set(zip(box.tolist(), cells.tolist())), res

@@ -85,6 +85,123 @@ class TestH3Lite:
             np.testing.assert_array_equal(expected, got.to_numpy())
 
 
+    @pytest.mark.parametrize("engine", ["spark", "duckdb"])
+    @pytest.mark.parametrize(
+        "builder",
+        ["unpack", "pack", "set_x", "index", "encode", "parent", "child_parent", "bounds", "neighbor"],
+    )
+    def test_sql_builders_match_numpy(self, spark, engine, builder):
+        """Every SQL builder of the cell-id vocabulary gives the same
+        values as its numpy twin, on random cells at res 0..15, in Spark
+        SQL and in DuckDB (the dialect the oracle runs)."""
+        import duckdb
+        import pandas as pd
+
+        rng = np.random.default_rng(5)
+        n = 600
+        res = rng.integers(H.RES_MIN, H.RES_MAX + 1, n)
+        x, y = rng.integers(0, 1 << (res + 2)), rng.integers(0, 1 << (res + 1))
+        cell = H.pack_xy(x, y, res)
+        pdf = pd.DataFrame(
+            {
+                "i": np.arange(n), "cell": cell, "res": res, "x": x, "y": y,
+                "new_x": rng.integers(0, 1 << (res + 2)),
+                "lon": rng.uniform(-180, 180, n), "lat": rng.uniform(-91, 91, n),
+            }
+        )
+        levels = range(H.RES_MIN, H.RES_MAX + 1)
+
+        def run(exprs: dict, tail: str = "") -> pd.DataFrame:
+            sel = ", ".join(f"{e} as {k}" for k, e in exprs.items())
+            q = f"select i, cell, {sel} from t {tail}"
+            if engine == "duckdb":
+                con = duckdb.connect()
+                con.register("t", pdf)
+                got = con.sql(q).df()
+            else:
+                spark.createDataFrame(pdf).createOrReplaceTempView("t")
+                got = spark.sql(q).toPandas()
+            return got.sort_values(["i", "cell"], kind="stable").reset_index(drop=True)
+
+        eq = np.testing.assert_array_equal
+        if builder == "unpack":
+            got = run(dict(zip(("r", "gx", "gy"), H.unpack_sql("cell", engine))))
+            eq(got.r, H.cell_res(cell))
+            eq(got.gx, H.cell_xy(cell)[0])
+            eq(got.gy, H.cell_xy(cell)[1])
+        elif builder == "pack":
+            got = run({"c": H.pack_sql("res", "x", "y"), "c7": H.pack_sql(7, "x", "y")})
+            eq(got.c, cell)
+            eq(got.c7, H.pack_xy(x, y, 7))
+        elif builder == "set_x":
+            _, sx, _ = H.unpack_sql("cell", engine)
+            got = run({"c": H.set_x_sql("cell", sx, "new_x")})
+            eq(got.c, H.pack_xy(pdf.new_x.to_numpy(), y, res))
+        elif builder in ("index", "encode"):
+            if builder == "index":
+                exprs = {f"x{r}": H.lon_index_sql("lon", r) for r in levels}
+                exprs |= {f"y{r}": H.lat_index_sql("lat", r) for r in levels}
+            else:
+                exprs = {f"c{r}": H.h3_sql_expr("lon", "lat", r) for r in levels}
+            got = run(exprs)
+            for r in levels:
+                want = H.latlng_to_cell(pdf.lat.to_numpy(), pdf.lon.to_numpy(), r)
+                if builder == "index":
+                    eq(got[f"x{r}"], H.cell_xy(want)[0])
+                    eq(got[f"y{r}"], H.cell_xy(want)[1])
+                else:
+                    eq(got[f"c{r}"], want)
+        elif builder == "parent":
+            for p in (0, 4, 9):
+                got = run({"p": H.parent_sql_expr("cell", p, engine)}, f"where res >= {p}")
+                eq(got.p, H.cell_to_parent(got.cell.to_numpy(), p))
+        elif builder == "child_parent":
+            got = run({f"p{r}": H.child_parent_sql("cell", r, r // 2, engine) for r in levels})
+            for r in levels:
+                at = (res == r)
+                eq(got[f"p{r}"][at], H.cell_to_parent(cell[at], r // 2))
+        elif builder == "bounds":
+            got = run(H.cell_bounds_sql("cell", engine))
+            want = H.cell_to_boundary(cell)
+            for k, w in zip(("lon_min", "lat_min", "lon_max", "lat_max"), want):
+                eq(got[k], w)
+        else:
+            offs = ", ".join(f"({dx}, {dy})" for dx in (-1, 0, 1) for dy in (-1, 0, 1))
+            got = run(
+                {"nb": H.neighbor_sql_expr("cell", "dx", "dy", engine)},
+                f"cross join (values {offs}) as o(dx, dy)"
+                f" where {H.neighbor_valid_sql('cell', 'dy', engine)}",
+            )
+            nbs = got.groupby("cell").nb.apply(lambda s: sorted(set(s)))
+            assert len(nbs) == len(np.unique(cell))
+            for c, got_nb in nbs.items():
+                assert got_nb == H.grid_disk(int(c), 1).tolist(), c
+
+
+    def test_layout_literals_only_in_h3lite(self):
+        """The packed-id layout (res·2^56 + x·2^28 + y) is spelled only in
+        geo/h3lite.py (and in plans/catalog.py's DuckDB oracle strings,
+        which are the reference the gate compares against): every other
+        module goes through h3lite's builders, so a change to the id's
+        order or packing touches one module."""
+        import pathlib
+        import re
+
+        pkg = pathlib.Path(H.__file__).resolve().parents[1]
+        allowed = {pkg / "geo" / "h3lite.py", pkg / "plans" / "catalog.py"}
+        layout = re.compile(
+            r"1\s*<<\s*(56|28)|<<\s*28|>>\s*28|2\s*\*\*\s*(56|28)|72057594037927936|268435456"
+        )
+        leaks = [
+            f"{path.relative_to(pkg)}:{i}: {line.strip()}"
+            for path in sorted(pkg.rglob("*.py"))
+            if path not in allowed
+            for i, line in enumerate(path.read_text().splitlines(), 1)
+            if layout.search(line)
+        ]
+        assert not leaks, "cell-id layout spelled outside geo/h3lite.py:\n" + "\n".join(leaks)
+
+
 class TestS2Lite:
     def test_face_assignment(self):
         # +x axis → face 0, +y → 1, +z(north pole) → 2, -x → 3, -y → 4, -z → 5

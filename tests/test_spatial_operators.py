@@ -1888,7 +1888,7 @@ class TestTilesEdgeContracts:
             uncompact_cells(cells, res=5).collect()
 
     def test_parent_of_coarser_cell_raises(self, spark):
-        from htrc_ingester_spark.operators.tiles import parent_sql_expr
+        from htrc_ingester_spark.geo.h3lite import parent_sql_expr
 
         cells = spark.createDataFrame([(int(4) << 56 | (1 << 28) | 1,)], "cell long")
         with pytest.raises(Exception, match="coarser res-4 cell"):

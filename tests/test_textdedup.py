@@ -601,10 +601,6 @@ class TestR5ReviewRegressions:
             assert "[PHONE]" in out.loc[i, "redacted"]
             assert "4567" not in out.loc[i, "redacted"]
 
-    def test_unknown_hash_impl_raises(self, docs_df):
-        with pytest.raises(ValueError, match="hash_impl"):
-            TD.minhash_signatures(docs_df, hash_impl="xxh64")
-
     def test_broadcast_verify_false_forces_shuffle_join(self, docs_df):
         """False must be distinguishable from None: the verify joins
         carry a merge hint that survives AQE. Compared against True on
