@@ -87,50 +87,10 @@ def _read_header(r: _Reader) -> tuple[str, int]:
     return e, base
 
 
-def _read_ring(r: _Reader, e: str) -> list[tuple[float, float]]:
-    (n,) = r.take(e + "I", 4)
-    vals = r.take(e + f"{2 * n}d", 16 * n)
-    ring = list(zip(vals[0::2], vals[1::2]))
-    if len(ring) < 3:
-        raise ValueError(f"ring with <3 vertices in WKB (n={n})")
-    return ring
-
-
-def _read_polygon_body(r: _Reader, e: str) -> list[list[tuple[float, float]]]:
-    (nrings,) = r.take(e + "I", 4)
-    return [_read_ring(r, e) for _ in range(nrings)]
-
-
-def wkb_to_rings(wkb: bytes) -> list[list[tuple[float, float]]]:
-    """Decode a WKB ``Polygon`` or ``MultiPolygon`` to the flat ring
-    list (even-odd semantics — geo/wkt.py module docstring). An empty
-    geometry (zero rings / zero parts) yields ``[]``. Raises
-    ValueError on any other geometry type, Z/M dimensions, or
-    truncated/trailing bytes."""
-    r = _Reader(bytes(wkb))
-    e, typ = _read_header(r)
-    if typ == _POLYGON:
-        rings = _read_polygon_body(r, e)
-    elif typ == _MULTIPOLYGON:
-        (nparts,) = r.take(e + "I", 4)
-        rings = []
-        for _ in range(nparts):
-            pe, ptyp = _read_header(r)
-            if ptyp != _POLYGON:
-                raise ValueError(f"MultiPolygon part has type {ptyp}, not Polygon")
-            rings.extend(_read_polygon_body(r, pe))
-    else:
-        raise ValueError(f"not a Polygon/MultiPolygon WKB (type {typ})")
-    if r.pos != len(r.buf):
-        raise ValueError(f"{len(r.buf) - r.pos} trailing bytes after WKB geometry")
-    return rings
-
-
 def _read_ring_np(r: _Reader, e: str):
     """One ring as an (N, 2) float64 numpy array — np.frombuffer over
     the coordinate block (no per-vertex Python objects), byte-swapped
-    to native when the wire is big-endian. Bit-identical values to
-    :func:`_read_ring` (both are raw IEEE-754 reads)."""
+    to native when the wire is big-endian."""
     (n,) = r.take(e + "I", 4)
     end = r.pos + 16 * n
     if end > len(r.buf):
@@ -148,15 +108,19 @@ def _read_polygon_body_np(r: _Reader, e: str) -> list:
 
 
 def wkb_to_ring_arrays(wkb: bytes) -> list:
-    """:func:`wkb_to_rings`, returning each ring as an (N, 2) float64
-    numpy array — the shape the geometry kernels consume directly.
+    """Decode a WKB ``Polygon`` or ``MultiPolygon`` to the flat ring
+    list (even-odd semantics — geo/wkt.py module docstring), each ring
+    an (N, 2) float64 numpy array — the shape the geometry kernels
+    consume directly. An empty geometry (zero rings / zero parts)
+    yields ``[]``. Raises ValueError on any other geometry type, Z/M
+    dimensions, a <3-vertex ring, or truncated/trailing bytes.
+
     This is the HOT decoder: the cover-as-table regime decodes every
     polygon inside its executor kernels, and frombuffer keeps the
     per-polygon cost at one array allocation per ring instead of one
     Python tuple per vertex (the nested-object churn was the measured
     scaling ceiling of the cover stage — exec time inflated 24% from
-    2 to 8 concurrent cores before the binary-native path). Identical
-    validation and bit-identical values to :func:`wkb_to_rings`."""
+    2 to 8 concurrent cores before the binary-native path)."""
     r = _Reader(bytes(wkb))
     e, typ = _read_header(r)
     if typ == _POLYGON:
@@ -174,6 +138,13 @@ def wkb_to_ring_arrays(wkb: bytes) -> list:
     if r.pos != len(r.buf):
         raise ValueError(f"{len(r.buf) - r.pos} trailing bytes after WKB geometry")
     return rings
+
+
+def wkb_to_rings(wkb: bytes) -> list[list[tuple[float, float]]]:
+    """:func:`wkb_to_ring_arrays` with each ring a list of (lon, lat)
+    float tuples — the spec-list shape. Same validation, bit-identical
+    values (both are raw IEEE-754 reads)."""
+    return [list(map(tuple, a.tolist())) for a in wkb_to_ring_arrays(wkb)]
 
 
 def ring_arrays_to_wkb(rings) -> bytes:
@@ -349,7 +320,7 @@ def polys_df_from_wkb_column(df, id_col: str = "poly_id", wkb_col: str = "wkb"):
             if wkb is None:
                 raise ValueError("NULL geometry value")
             raw = bytes(wkb)
-            rings = wkb_to_rings(raw)
+            rings = wkb_to_ring_arrays(raw)
         except ValueError as exc:
             raise ValueError(f"poly_id={pid!r}: {exc}") from exc
         return pid, rings, raw

@@ -59,19 +59,24 @@ def bbox_cells(
     ``cell``. A box with ``lon_min > lon_max`` crosses the antimeridian
     and raises (split it into two rows upstream: unchecked, the
     descending x-sequence covered the complement longitude band and
-    the join silently lost the box). A NULL bound does not raise: the
-    clamp (least/greatest skip NULLs) puts it on the grid edge, and the
-    joins' exact predicates drop the box."""
+    the join silently lost the box). A box with a NULL bound covers no
+    cell: its index is NULL, so ``sequence`` is NULL and the explode
+    emits no row (the index clamp alone, whose least/greatest skip
+    NULLs, put the bound on the grid edge)."""
+
+    def idx(bound: str, sql: str):
+        return F.expr(f"if({bound} is null, null, {sql})")
+
     x1 = (
         f"if({lon_min} > {lon_max}, cast(raise_error(concat('box crosses the antimeridian"
         f" (lon_min ', cast({lon_min} as string), ' > lon_max ', cast({lon_max} as string),"
         f" '): split it into two rows')) as bigint), {H.lon_index_sql(lon_max, res)})"
     )
     return (
-        df.withColumn("__x0", F.expr(H.lon_index_sql(lon_min, res)))
-        .withColumn("__x1", F.expr(x1))
-        .withColumn("__y0", F.expr(H.lat_index_sql(lat_min, res)))
-        .withColumn("__y1", F.expr(H.lat_index_sql(lat_max, res)))
+        df.withColumn("__x0", idx(lon_min, H.lon_index_sql(lon_min, res)))
+        .withColumn("__x1", idx(lon_max, x1))
+        .withColumn("__y0", idx(lat_min, H.lat_index_sql(lat_min, res)))
+        .withColumn("__y1", idx(lat_max, H.lat_index_sql(lat_max, res)))
         .withColumn("__x", F.explode(F.expr("sequence(__x0, __x1)")))
         .withColumn("__y", F.explode(F.expr("sequence(__y0, __y1)")))
         .withColumn("cell", F.expr(H.pack_sql(res, "__x", "__y")))

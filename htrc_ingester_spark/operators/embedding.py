@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import broadcast_threshold, fits_driver, plan_bytes
+from .textdedup import bucket_pairs, explode_bands
 
 N_PLANES = 8
 
@@ -411,7 +412,7 @@ def ivf_topk(
 # LSH buckets (two images within hamming distance d collide on some
 # band with probability ≥ 1 - (d/4 choose ...) — any pair with ≤3
 # differing bits shares at least one intact band by pigeonhole),
-# bucket-join candidates, verify exact hamming ≤ threshold. All integer
+# bucket-pair candidates, verify exact hamming ≤ threshold. All integer
 # column expressions — identical in Spark SQL and DuckDB.
 # ---------------------------------------------------------------------------
 
@@ -439,23 +440,11 @@ def hamming64_sql(a: str, b: str, dialect: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _banded(frame: DataFrame, ph: str, keep: list[str]) -> DataFrame:
-    """Explode a 64-bit phash column into its 4×16-bit (band, bucket)
-    rows — the shared banding for phash_neardup_pairs and phash_search
-    (one copy, so the pigeonhole-completeness contract both rely on
-    cannot drift)."""
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.expr(phash_band_sql(ph, b, "spark")).alias("bucket"),
-            )
-            for b in range(N_PHASH_BANDS)
-        ]
-    )
-    return frame.withColumn("_b", F.explode(bands)).select(
-        *keep, F.col("_b.band").alias("band"), F.col("_b.bucket").alias("bucket")
-    )
+def _phash_bands(ph: str) -> list:
+    """The 4×16-bit band buckets of a 64-bit phash column — shared by
+    phash_neardup_pairs and phash_search (one copy, so the
+    pigeonhole-completeness contract both rely on cannot drift)."""
+    return [F.expr(phash_band_sql(ph, b, "spark")) for b in range(N_PHASH_BANDS)]
 
 
 def phash_neardup_pairs(
@@ -467,47 +456,20 @@ def phash_neardup_pairs(
 ) -> DataFrame:
     """(id_a, id_b, hamming) for images whose phash differs by ≤
     ``max_hamming`` bits. Pigeonhole-complete for max_hamming ≤ 3 with
-    4 bands (≤3 flipped bits cannot touch all 4 bands). Hot buckets
-    (identical-phash floods) capped like MinHash boilerplate."""
-    from pyspark.sql import Window
-
-    sig = _banded(
-        df.select(F.col(id_col), F.col(phash_col)), phash_col, [id_col, phash_col]
-    )
-    # single-exchange pair generation (the textdedup.lsh_near_dup_pairs
-    # round-2 rework, ported here): the bucket-size guard is a WINDOW
-    # over (band, bucket) and each surviving bucket compacts with
-    # collect_list ON THE SAME exchange, exploding i<j pairs in place —
-    # no size aggregation, no broadcast, no bucket self-join (the old
-    # shape paid two extra exchanges plus a double execution of the
-    # banding lineage; measured 4.0 s → ~1.5 s for the sf0.1 pair
-    # stage). collect_list buffers are bounded by max_bucket.
-    wb = Window.partitionBy("band", "bucket")
-    kept = sig.withColumn("_n", F.count(F.lit(1)).over(wb)).where(
-        F.col("_n") <= max_bucket
-    )
-    grouped = kept.groupBy("band", "bucket").agg(
-        F.expr(f"array_sort(collect_list(struct({id_col}, {phash_col})))").alias("_e")
-    )
-    pairs = grouped.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(_e, (x, i) ->"
-                " transform(slice(_e, i + 2, size(_e)),"
-                f" y -> struct(x.{id_col} as id_a, x.{phash_col} as ph_a,"
-                f" y.{id_col} as id_b, y.{phash_col} as ph_b))))"
-            )
-        ).alias("_p")
-    ).select("_p.id_a", "_p.ph_a", "_p.id_b", "_p.ph_b")
+    4 bands (≤3 flipped bits cannot touch all 4 bands). Candidates come
+    from textdedup.bucket_pairs (one exchange), whose window count
+    caps hot buckets (identical-phash floods) like MinHash boilerplate."""
+    sig = explode_bands(df, _phash_bands(phash_col), [id_col, phash_col])
     # Spark-side hamming: one codegen bit_count over the xor (the
     # 64-bit-test template stays for the DuckDB oracle dialect, where
     # it exists for cross-engine spelling parity — values identical)
     return (
-        pairs.where(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(sig, f"struct({id_col}, {phash_col})", max_bucket)
+        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
         .select(
-            "id_a",
-            "id_b",
-            F.expr("cast(bit_count(ph_a ^ ph_b) as int)").alias("hamming"),
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            F.expr(f"cast(bit_count(a.{phash_col} ^ b.{phash_col}) as int)").alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
         .distinct()
@@ -553,10 +515,10 @@ def phash_search(
             f"{N_PHASH_BANDS - 1}; got {max_hamming}"
         )
 
-    data = _banded(df.select(id_col, phash_col), phash_col, [id_col, phash_col])
-    q = _banded(
+    data = explode_bands(df, _phash_bands(phash_col), [id_col, phash_col])
+    q = explode_bands(
         query_df.select("query_id", F.col(phash_col).alias("_qph")),
-        "_qph",
+        _phash_bands("_qph"),
         ["query_id", "_qph"],
     )
     out = (

@@ -37,10 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import fits_driver
-from ..session import materialize as session_materialize
-from ..session import reliable_checkpoint_configured
-from ..session import static_plan as static_plan_ctx
+from ..session import fits_driver, materialize, static_plan
 
 __all__ = ["shortest_paths"]
 
@@ -149,21 +146,11 @@ def shortest_paths(
                 best.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
             )
             if persist_every and (i + 1) % persist_every == 0 and i + 1 < hops:
-                if reliable_checkpoint_configured(spark):
-                    # cluster regime: the periodic cut goes to the
-                    # fault-tolerant checkpoint dir (truncates the plan
-                    # AND survives executor loss mid-walk); run it
-                    # static like every other internal action
-                    with static_plan_ctx(spark):
-                        best = best.checkpoint(True)
-                else:
-                    # materialize = eager localCheckpoint: TRUNCATES
-                    # the lineage (each round references `best` twice,
-                    # so the analyzed plan doubles per round — persist()
-                    # cached data but kept the doubling plan, the exact
-                    # driver-OOM failure dissolve._cc_loop documents)
-                    with static_plan_ctx(spark):
-                        best = session_materialize(best)
+                # truncate the lineage (each round references `best`
+                # twice, so the analyzed plan doubles per round); a
+                # configured checkpoint dir makes the cut fault-tolerant
+                with static_plan(spark):
+                    best = materialize(best)
         # cache hygiene (ADVICE r3, matching the dissolve discipline):
         # materialize the result ONCE; the adjacency releases in the
         # finally below — ALSO on failure, so a crashed call cannot
@@ -188,8 +175,6 @@ def _materialize(spark, df: DataFrame) -> int:
     Callers with genuinely skewed billion-edge graphs get their skew
     handling from the persisted adjacency's one-time exchange, not
     from per-round AQE."""
-    from ..session import static_plan
-
     with static_plan(spark):
         return df.count()
 

@@ -479,27 +479,17 @@ def geofence_stream(
     (test_streaming.test_geofence_stream_equals_batch, fence set
     including a polygon with a hole).
 
-    Fence-set bound: the broadcast regime only. Past
-    ``_TABLE_POLYS_BUDGET`` polygons, ``pip_join`` auto-dispatches to
-    the cover-as-table regime, which persists and repartitions frames
-    derived from the POINT side — illegal on a streaming frame — so
-    that dispatch is refused here with a clear error instead of an
-    AnalysisException at query start. (A larger fence catalog wants a
-    stream-static join against a pre-built cover table; the broadcast
-    regime covers the realistic geofencing range.) The same refusal
-    applies under ``spark.htrc.forceDistributed=true``, which would
-    dispatch any fence set to the table regime, and ``pip_join`` itself
-    refuses a streaming frame whose fence cover table outgrows
-    ``spark.sql.autoBroadcastJoinThreshold``."""
-    from ..operators.pip_join import _TABLE_POLYS_BUDGET, pip_join
-    from ..session import fits_driver
+    Fence-set bound: the broadcast regime only. ``pip_join`` raises a
+    ValueError on a streaming point frame whenever it would dispatch to
+    the cover-as-table regime (past ``_TABLE_POLYS_BUDGET`` polygons, a
+    cover table past ``spark.sql.autoBroadcastJoinThreshold``, or
+    ``spark.htrc.forceDistributed=true``), which persists and
+    repartitions point-side frames — illegal on a stream — so the
+    refusal comes before the query starts. (A larger fence catalog
+    wants a stream-static join against a pre-built cover table; the
+    broadcast regime covers the realistic geofencing range.)"""
+    from ..operators.pip_join import pip_join
 
-    if not fits_driver(spark, len(polys), _TABLE_POLYS_BUDGET):
-        raise ValueError(
-            f"geofence_stream supports at most {_TABLE_POLYS_BUDGET} fence "
-            f"polygons (got {len(polys)}) and no spark.htrc.forceDistributed: "
-            "the cover-as-table regime cannot run on a streaming point frame"
-        )
     return pip_join(
         spark,
         point_stream,

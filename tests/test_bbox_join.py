@@ -131,6 +131,14 @@ class TestBBoxJoin:
         a = spark.createDataFrame([(1, None, 0.0, 10.0, 10.0), (2, 0.0, 0.0, None, 10.0)], cols)
         b = spark.createDataFrame([(9, -180.0, -90.0, 180.0, 90.0)], cols)
         assert bbox_intersect_join(spark, a, b, res=3).count() == 0
+        # the shared explode emits no cell for a box with any NULL bound
+        # (the index clamp alone put such a bound on the grid edge)
+        bounds = ("lon_min", "lat_min", "lon_max", "lat_max")
+        for i in range(4):
+            row = [1, 0.0, 0.0, 10.0, 10.0]
+            row[1 + i] = None
+            box = spark.createDataFrame([tuple(row)], cols)
+            assert bbox_cells(box, *bounds, 3).count() == 0, bounds[i]
 
     def test_bbox_cells_match_cover_bboxes(self, spark):
         """The shared explode covers each box with exactly the cells of

@@ -146,6 +146,54 @@ class TestEdgeComponents:
         )
 
 
+def _bfs_min_labels(src, dst) -> dict:
+    """Independent oracle: component minimum of every node by BFS."""
+    adj: dict = {}
+    for a, b in zip(src, dst):
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    out: dict = {}
+    for start in adj:
+        if start in out:
+            continue
+        comp, stack, seen = [], [start], {start}
+        while stack:
+            n = stack.pop()
+            comp.append(n)
+            for m in adj[n] - seen:
+                seen.add(m)
+                stack.append(m)
+        lo = min(comp)
+        out.update((n, lo) for n in comp)
+    return out
+
+
+def _edge_cases():
+    rng = np.random.default_rng(5)
+    chain = rng.permutation(5000)
+    return {
+        "random_sparse": (rng.integers(0, 500, 300), rng.integers(0, 500, 300)),
+        "random_dense": (rng.integers(0, 300, 2000), rng.integers(0, 300, 2000)),
+        "random_id_chain_5000": (chain[:-1], chain[1:]),
+        "string_ids": (np.array(["b", "x", "c", "q", "y"], dtype=object),
+                       np.array(["a", "y", "b", "q", "z"], dtype=object)),
+        "empty": (np.array([], dtype=np.int64), np.array([], dtype=np.int64)),
+        "self_loops_only": (np.array([4, 9, 4]), np.array([4, 9, 4])),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_edge_cases()))
+def test_cc_labels_match_bfs(case):
+    """The driver labeller (np.unique node index + _cc_labels) gives
+    every node its component's minimum id, exactly as a BFS does."""
+    src, dst = _edge_cases()[case]
+    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    lab = DV._cc_labels(len(nodes), inv[: len(src)], inv[len(src):])
+    assert dict(zip(nodes.tolist(), nodes[lab].tolist())) == _bfs_min_labels(
+        src.tolist(), dst.tolist()
+    )
+
+
 class TestRegionOverlay:
     def test_all_four_relations(self, spark):
         # a1 = 3-cell bar, b1 = its middle cell (within/contains)

@@ -1388,6 +1388,29 @@ class TestCoverageGaps:
         pts = spark.createDataFrame([(cw * 0.5, ch * 0.5)], "lon double, lat double")
         assert coverage_gaps(pts, box, res=res).count() == 0
 
+    def test_null_bound_box_reports_like_no_box(self, spark):
+        """A box with a NULL bound covers no cell, so it reports the
+        same gaps as no box at all (clamped to the grid edge, (NULL, 0,
+        10, 10) reported 271 gap cells at res 5)."""
+        from htrc_ingester_spark.operators.tiles import coverage_gaps
+
+        schema = "poly_id string, lon_min double, lat_min double, lon_max double, lat_max double"
+        pts = spark.createDataFrame([(5.0, 5.0)], "lon double, lat double")
+        good = [("g", 0.0, 0.0, 10.0, 10.0)]
+        nulls = [
+            ("n0", None, 0.0, 10.0, 10.0),
+            ("n1", 0.0, None, 10.0, 10.0),
+            ("n2", 0.0, 0.0, None, 10.0),
+            ("n3", 0.0, 0.0, 10.0, None),
+        ]
+
+        def gaps(rows):
+            out = coverage_gaps(pts, spark.createDataFrame(rows, schema), res=5).collect()
+            return sorted((r.poly_id, r.cell) for r in out)
+
+        assert gaps(nulls) == []
+        assert gaps(good + nulls) == gaps(good) != []
+
 
 class TestGradient:
     def test_central_differences_and_null_rule(self, spark):

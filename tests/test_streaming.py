@@ -1009,7 +1009,7 @@ def test_trajectory_null_ts_does_not_brick_entity(spark, tmp_path):
 def test_geofence_stream_refuses_table_regime_fence_sets(spark):
     """r5 review: past the table-regime dispatch budget, pip_join would
     persist/repartition the streaming point side and crash at query
-    start — refuse clearly instead."""
+    start — pip_join refuses clearly instead."""
     import pytest as _pytest
 
     big = [
@@ -1020,7 +1020,7 @@ def test_geofence_stream_refuses_table_regime_fence_sets(spark):
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
         .selectExpr("cast(value as double) as lon", "cast(value as double) as lat")
     )
-    with _pytest.raises(ValueError, match="fence polygons"):
+    with _pytest.raises(ValueError, match="streaming point frame"):
         S.geofence_stream(spark, stream, big)
 
 

@@ -601,28 +601,6 @@ class TestR5ReviewRegressions:
             assert "[PHONE]" in out.loc[i, "redacted"]
             assert "4567" not in out.loc[i, "redacted"]
 
-    def test_broadcast_verify_false_forces_shuffle_join(self, docs_df):
-        """False must be distinguishable from None: the verify joins
-        carry a merge hint that survives AQE. Compared against True on
-        the same input (the un-hinted pair-gen self-join may broadcast
-        either way, so the assertion is RELATIVE): forcing off must
-        yield strictly fewer broadcast joins and at least the three
-        hinted verify joins as sort-merge."""
-        def plan_of(bv):
-            # the operator persists its candidate/doc intermediates;
-            # clear them so each variant plans from scratch instead of
-            # canonicalizing onto the other's cache entries
-            docs_df.sparkSession.catalog.clearCache()
-            out = TD.lsh_near_dup_pairs(
-                docs_df, jaccard_threshold=0.5, broadcast_verify=bv
-            )
-            out.count()
-            return out._jdf.queryExecution().executedPlan().toString()
-
-        p_false, p_true = plan_of(False), plan_of(True)
-        assert p_false.count("SortMergeJoin") >= 3
-        assert p_false.count("BroadcastHashJoin") < p_true.count("BroadcastHashJoin")
-
 
 class TestEmbeddingEdgeContracts:
     """r5 review: zero-norm vectors, dim contract, nprobe validation."""
