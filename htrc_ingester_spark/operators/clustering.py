@@ -17,14 +17,21 @@ No float ever enters an aggregation, so shuffle order / association
 order cannot perturb a single bit, on any cluster size — determinism
 by construction, the same discipline as dataset_split_assign.
 
-Shapes at 10^12 rows: the assign/encode steps are map-only cross joins
-against the BROADCAST centroid set folded into one array row (HOF
-argmin — no N×k expansion ever shuffles); the update step is ONE
-(cluster, pos)-keyed exchange with k×dim reduce keys and map-side
-partial aggregation — textbook Lloyd on Spark. PQ's ADC search joins
-the exploded (id, subspace, code) table against a BROADCAST per-query
-distance table (Q×m×k rows), so per-vector work is m lookups — the
-point of PQ — followed by one (query, id) sum and the per-query top-k.
+One trainer, two regimes (``_train``): k-means is product
+quantization with ONE subspace. Corpora under
+``_DRIVER_TRAIN_MAX_BYTES`` collect the quantized corpus once and run
+the Lloyd rounds in numpy on the driver; larger ones run one grouped
+Lloyd plan, subspace id ``m`` riding along as a grouping key: the
+assign is a map-only HOF argmin against the BROADCAST per-subspace
+centroid fold (no N×k expansion ever shuffles), the update ONE
+``groupBy(m, cluster)`` exchange with ``dim`` per-position sums and
+map-side partial aggregation — textbook Lloyd on Spark. Either way the
+trained codebook is k×m driver-local rows, and every returned
+assignment/code is one map-only Arrow argmin kernel over it
+(``_encode_udf``). PQ's ADC search joins the vector side against a
+BROADCAST per-query distance table (Q rows of m·k entries), so
+per-vector work is m lookups — the point of PQ — followed by the
+per-query top-k.
 
 Empty clusters simply drop out of the centroid set (deterministically
 in both engines); seeding is the k lowest ``md5('km:' || id)`` rows —
@@ -111,6 +118,12 @@ def _np_quantize(vmat, quant: int):
     if half.any():
         r = np.where(half, np.trunc(ax) + np.sign(ax), r)
     return r.astype(np.int64) + qoff(quant)
+
+
+def _book_row(mi, cluster, cv) -> tuple:
+    """One driver-local codebook row ``(m, cluster, cv)`` as plain
+    Python ints, from numpy or Spark Row values."""
+    return int(mi), int(cluster), [int(x) for x in cv]
 
 
 def _sub_centroids(book_rows, m: int):
@@ -250,22 +263,20 @@ def _np_seed_order(ids, k: int):
 
 
 def _np_lloyd(qv, seed_idx, iters: int):
-    """Driver twin of ``_lloyd``'s iteration on a collected quantized
-    matrix: same integer assignment (argmin over cluster-sorted
-    centroids, first-occurrence tie-break = (dist, cluster) total
-    order) and same integer floor-mean update (``//`` on nonneg ==
-    Spark's ``div``), so the trajectory is bit-identical to the
-    distributed plan and the replayed DuckDB oracle.
+    """Driver twin of the distributed Lloyd round on a collected
+    quantized matrix: same integer assignment (argmin over
+    cluster-sorted centroids, first-occurrence tie-break = (dist,
+    cluster) total order) and same integer floor-mean update (``//``
+    on nonneg == Spark's ``div``), so the trajectory is bit-identical
+    to the distributed plan and the replayed DuckDB oracle.
 
-    Returns (last_assign, prev_cents, final_cents) where prev_cents
-    are the centroids ENTERING the last iteration (the ones the
-    returned assignment was computed against) and cents are
-    (cluster_ids, matrix) pairs."""
+    Returns (prev_cents, final_cents) where prev_cents are the
+    centroids ENTERING the last iteration (the ones its assignment was
+    computed against) and cents are (cluster_ids, matrix) pairs."""
     import numpy as np
 
     cids = np.arange(len(seed_idx), dtype=np.int64)
     cmat = qv[np.asarray(seed_idx, dtype=np.int64)]
-    assign, prev = None, (cids, cmat)
     for _ in range(iters):
         prev = (cids, cmat)
         # exact integer expansion ||q - c||² = ||q||² - 2 q·c + ||c||²
@@ -281,7 +292,7 @@ def _np_lloyd(qv, seed_idx, iters: int):
             [qv[assign == c].sum(0) // int((assign == c).sum()) for c in new_ids]
         )
         cids = new_ids
-    return assign, prev, (cids, cmat)
+    return prev, (cids, cmat)
 
 
 def _dist_expr(a: str, b: str, dim: int, dialect: str) -> str:
@@ -301,20 +312,12 @@ def _argmin_expr(cs_col: str, vec: str, dim: int) -> str:
     cluster) total order, zero shuffle. NULL vectors argmin to NULL
     (the Arrow-kernel twins' null propagation) — without the guard,
     an all-NULL distance struct array_min'd to the smallest cluster
-    id, silently assigning every null-embedding row to cluster 0 (and
-    kmeans_score_stream, which reuses this expression, inherited the
-    same wrong score)."""
+    id, silently assigning every null-embedding row to cluster 0."""
     dist_c = _dist_expr(vec, "c.cv", dim, "spark")
     return (
         f"if({vec} is null, cast(null as int),"
         f" array_min(transform({cs_col}, c -> struct({dist_c} as dist,"
         f" c.cluster as cluster))).cluster)"
-    )
-
-
-def _fold_centroids(centroids: DataFrame, alias: str = "cs") -> DataFrame:
-    return centroids.agg(
-        F.expr("array_sort(collect_list(struct(cluster, cv)))").alias(alias)
     )
 
 
@@ -344,44 +347,43 @@ def _centroid_update(assign: DataFrame, dim: int, keys: list[str]) -> DataFrame:
     )
 
 
-def _lloyd(
-    qt: DataFrame, k: int, iters: int, dim: int, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """Core loop over a quantized frame (id, qv). Returns (assignment
-    after the LAST assign, centroids after the LAST update)."""
-    # seeding: k lowest md5 rows via a distributed TakeOrdered (never a
-    # global single-partition window); the row_number window then runs
-    # over k rows only.
-    h = F.md5(F.concat(F.lit("km:"), F.col(id_col).cast("string")))
-    # null vectors cannot seed (a NULL centroid would poison every
-    # distance); the driver twin filters identically before seeding
-    seeds = (
-        qt.where(F.col("qv").isNotNull()).withColumn("_h", h).orderBy("_h", id_col).limit(k)
-    )
-    centroids = seeds.select(
-        (F.row_number().over(Window.orderBy("_h", F.col(id_col))) - 1)
-        .cast("int")
-        .alias("cluster"),
-        F.col("qv").alias("cv"),
-    )
-    assign = None
-    for _ in range(iters):
-        cs = _fold_centroids(centroids)
-        assign = qt.crossJoin(F.broadcast(cs)).select(
-            id_col, F.expr(_argmin_expr("cs", "qv", dim)).alias("cluster"), "qv"
-        )
-        centroids = _centroid_update(assign, dim, ["cluster"])
-    return assign, centroids
+def _train(
+    df: DataFrame,
+    m: int,
+    k: int,
+    iters: int,
+    dim: int,
+    vec_col: str,
+    id_col: str,
+    quant: int,
+) -> tuple[list, list]:
+    """Lloyd over ``m`` subspaces of ``dim // m`` coordinates (shared
+    md5 seeding ids) — k-means is ``m = 1``. Returns two codebooks as
+    sorted ``(m, cluster, cv)`` rows: the centroids ENTERING the last
+    iteration (what its assignment was computed against) and the final
+    ones, in quantized space.
 
-
-def _quantize(
-    df: DataFrame, vec_col: str, id_col: str, quant: int, persist: bool
-) -> DataFrame:
+    Corpora whose Catalyst source estimate fits
+    ``_DRIVER_TRAIN_MAX_BYTES`` (session.fits_driver) collect the
+    quantized corpus once and run the m·iters rounds in numpy — at
+    bench scale the distributed trainer's wall is pure scheduler
+    latency (2·iters tiny barrier stages for k·m rows of real state).
+    Larger ones run ONE grouped Lloyd plan for all m subspaces. Both
+    regimes share the seeding order, the integer argmin total order
+    and the floor-mean update, so their trajectories are bit-identical
+    (pinned by test_clustering's regime-parity tests)."""
+    if iters < 1:
+        # there is no meaningful zero-iteration assignment: fail at
+        # entry instead of training nothing
+        raise ValueError(f"iters must be >= 1, got {iters}")
     from ..functions import ensure_parallelism
+    from ..session import static_plan
 
+    sub = dim // m
+    spark = df.sparkSession
     # parallelism floor BEFORE the interpreted HOF quantize and every
-    # downstream assign/encode projection: a sub-MB embeddings parquet
-    # arrives as 1-2 splits and pins the whole training to 1-2 threads
+    # downstream assign: a sub-MB embeddings parquet arrives as 1-2
+    # splits and pins the whole training to 1-2 threads
     #
     # NULL ids are corruption and must surface loudly (the WKB-decoder
     # discipline): silently, a NULL id would seed at a DIFFERENT
@@ -396,7 +398,96 @@ def _quantize(
         ).alias(id_col),
         F.expr(_quant_expr(vec_col, quant, "spark")).alias("qv"),
     )
-    return qt.persist() if persist else qt
+    if fits_driver(spark, plan_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
+        rows = _np_train_rows(qt, dim, id_col)
+        books = ([], [])
+        if rows:
+            qvm = np.array([r["qv"] for r in rows], dtype=np.int64)
+            seed_idx = _np_seed_order([r[id_col] for r in rows], k)
+            for mi in range(m):
+                cents = _np_lloyd(qvm[:, mi * sub : (mi + 1) * sub], seed_idx, iters)
+                for book, (c_ids, c_mat) in zip(books, cents):
+                    book += [_book_row(mi, c, cv) for c, cv in zip(c_ids, c_mat)]
+        return sorted(books[0]), sorted(books[1])
+
+    qt = qt.persist()
+    try:
+        # subspace id `m` rides along as a grouping key through
+        # seeding, assign, and update: one plan for all m
+        # sub-codebooks, not m chains of barrier stages
+        qtm = qt.select(
+            id_col, F.explode(F.expr(f"sequence(0, {m - 1})")).alias("m"), "qv"
+        ).select(
+            id_col,
+            F.col("m").cast("int").alias("m"),
+            F.expr(f"slice(qv, m * {sub} + 1, {sub})").alias("qv"),
+        )
+        # seeding: md5 depends only on the id, so the k seed ids are
+        # SHARED by every subspace — one distributed TakeOrdered over
+        # the ids (the row_number window then covers k rows only),
+        # joined back to pick each subspace's sub-vector. Null vectors
+        # cannot seed — the same filter _np_train_rows applies.
+        h = F.md5(F.concat(F.lit("km:"), F.col(id_col).cast("string")))
+        seeds = (
+            qt.where(F.col("qv").isNotNull())
+            .select(id_col)
+            .withColumn("_h", h)
+            .orderBy("_h", id_col)
+            .limit(k)
+        )
+        seed_ids = seeds.select(
+            id_col,
+            (F.row_number().over(Window.orderBy("_h", F.col(id_col))) - 1)
+            .cast("int")
+            .alias("cluster"),
+        )
+        centroids = qtm.join(F.broadcast(seed_ids), id_col).select(
+            "m", "cluster", F.col("qv").alias("cv")
+        )
+        for _ in range(iters):
+            cs = centroids.groupBy("m").agg(
+                F.expr("array_sort(collect_list(struct(cluster, cv)))").alias("cs")
+            )
+            assign = qtm.join(F.broadcast(cs), "m").select(
+                "m", F.col(id_col),
+                F.expr(_argmin_expr("cs", "qv", sub)).alias("cluster"), "qv",
+            )
+            centroids = _centroid_update(assign, sub, ["m", "cluster"])
+        # The trained codebooks are k×m MODEL PARAMETERS, bounded by
+        # design: collect both in ONE action — each final centroid row
+        # carries its subspace's fold of the centroids entering the
+        # last iteration (the same broadcast the last assign read, so
+        # the exchange is reused, not recomputed) — run static, since
+        # AQE's per-stage replan jobs are pure latency on known-small
+        # state, and hand them on as driver-local literals. This is the
+        # model-parameter exception to the no-driver-collect rule, the
+        # same regime as pip_join's driver-built polygon cover.
+        with static_plan(spark):
+            rows = centroids.join(F.broadcast(cs), "m").collect()
+    finally:
+        # the collect was the LAST consumer of qt (the callers' encode
+        # re-reads df): drop the cached quantized corpus, ALSO on a
+        # failed collect (e.g. the quantize contract guard firing)
+        qt.unpersist(blocking=False)
+    folds = {r["m"]: r["cs"] for r in rows}
+    prev = [_book_row(mi, c["cluster"], c["cv"]) for mi, fold in folds.items() for c in fold]
+    return sorted(prev), sorted(_book_row(r["m"], r["cluster"], r["cv"]) for r in rows)
+
+
+def _assign(
+    df: DataFrame, book: list, dim: int, vec_col: str, id_col: str, quant: int
+) -> DataFrame:
+    """(``id_col``, cluster:int) against a one-subspace codebook: the
+    map-only Arrow argmin kernel, or NULL for every row when the book
+    is empty (the empty centroid fold's NULL argmin)."""
+    from ..functions import ensure_parallelism
+
+    cluster = (
+        F.element_at(_encode_udf(book, 1, dim, quant)(F.col(vec_col)), 1)
+        if book
+        else F.lit(None).cast("int")
+    )
+    return ensure_parallelism(df).select(F.col(id_col), cluster.alias("cluster"))
 
 
 def kmeans_fit(
@@ -407,69 +498,22 @@ def kmeans_fit(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quant: int = 1000,
-    persist_input: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """(assignment (id, cluster), centroids (cluster, cv)) after
     ``iters`` Lloyd iterations — centroids are in quantized space.
 
-    Corpora whose Catalyst source estimate fits
-    ``_DRIVER_TRAIN_MAX_BYTES`` (session.fits_driver) train on the
-    driver (one collect + vectorized numpy rounds) and
-    rebuild the RETURNED assignment as a distributed map-only Arrow
-    argmin over the final-iteration centroids — the output stays a
-    scale-correct distributed frame; only the k×dim model state rides
-    the driver. Trajectory is bit-identical to the distributed plan
-    (same seeding, argmin total order, floor-mean update — pinned by
-    the regime-parity test).
+    Trains with ``_train(m=1)``; only the k×dim model state rides the
+    driver. The returned assignment is a distributed map-only Arrow
+    argmin over the raw input against the centroids ENTERING the last
+    iteration — the last round's assignment — so the output stays a
+    scale-correct distributed frame. An empty corpus (or all-NULL
+    vectors) trains nothing: all-NULL assignment, empty centroids.
     """
-    if iters < 1:
-        # iters=0 used to crash obscurely (the distributed loop never
-        # ran, leaving assign=None) — there is no meaningful
-        # zero-iteration assignment, so fail at entry
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    spark = df.sparkSession
-    if fits_driver(spark, plan_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
-        rows = _np_train_rows(
-            _quantize(df, vec_col, id_col, quant, persist=False), dim, id_col
-        )
-        if not rows:
-            # empty corpus OR all-null vectors: nothing to train. The
-            # distributed twin's seeds are empty too, so its argmin
-            # over an empty centroid fold is NULL for every row —
-            # match it: all-NULL assignment, empty centroids (and a
-            # truly empty input yields zero assignment rows anyway)
-            assign = df.select(
-                F.col(id_col), F.lit(None).cast("int").alias("cluster")
-            )
-            return assign, spark.createDataFrame(
-                [], "cluster int, cv array<bigint>"
-            )
-        ids = [r[id_col] for r in rows]
-        qvm = np.array([r["qv"] for r in rows], dtype=np.int64)
-        _, (pc_ids, pc_mat), (fc_ids, fc_mat) = _np_lloyd(
-            qvm, _np_seed_order(ids, k), iters
-        )
-        # the returned assignment is vs the centroids ENTERING the last
-        # iteration (exactly what _lloyd returns): a map-only Arrow
-        # argmin kernel over the raw input, m=1 · sub=dim
-        book = [(0, int(c), [int(x) for x in cv]) for c, cv in zip(pc_ids, pc_mat)]
-        from ..functions import ensure_parallelism
-
-        assign = ensure_parallelism(df).select(
-            F.col(id_col),
-            F.element_at(
-                _encode_udf(book, 1, dim, quant)(F.col(vec_col)), 1
-            ).alias("cluster"),
-        )
-        centroids = spark.createDataFrame(
-            [(int(c), [int(x) for x in cv]) for c, cv in zip(fc_ids, fc_mat)],
-            "cluster int, cv array<bigint>",
-        )
-        return assign, centroids
-
-    qt = _quantize(df, vec_col, id_col, quant, persist_input)
-    assign, centroids = _lloyd(qt, k, iters, dim, id_col)
-    return assign.select(id_col, "cluster"), centroids
+    prev, final = _train(df, 1, k, iters, dim, vec_col, id_col, quant)
+    centroids = df.sparkSession.createDataFrame(
+        [(c, cv) for _, c, cv in final], "cluster int, cv array<bigint>"
+    )
+    return _assign(df, prev, dim, vec_col, id_col, quant), centroids
 
 
 def kmeans_lite(
@@ -480,11 +524,10 @@ def kmeans_lite(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     quant: int = 1000,
-    persist_input: bool = True,
 ) -> DataFrame:
     """Final (``id_col``, cluster:int) assignment after ``iters`` Lloyd
     iterations from the deterministic md5 seeding."""
-    return kmeans_fit(df, k, iters, dim, vec_col, id_col, quant, persist_input)[0]
+    return kmeans_fit(df, k, iters, dim, vec_col, id_col, quant)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -502,134 +545,16 @@ def pq_fit_encode(
     id_col: str = "vec_id",
     quant: int = 1000,
 ) -> tuple[DataFrame, DataFrame]:
-    """Train ``m`` independent sub-codebooks (Lloyd, shared seeding ids)
-    and encode every vector as ``m`` codes.
-
-    Corpora whose Catalyst source estimate fits
-    ``_DRIVER_TRAIN_MAX_BYTES`` (session.fits_driver) train on the
-    driver (one collect + vectorized numpy rounds, bit-identical
-    trajectory); larger ones run the distributed grouped Lloyd plan.
+    """Train ``m`` independent sub-codebooks (``_train``: Lloyd, shared
+    seeding ids) and encode every vector as ``m`` codes.
 
     Returns (codes (id, codes array<int> length m),
     codebook (m, cluster, cv) — quantized-space sub-centroids).
     """
     if dim % m:
         raise ValueError("dim must divide into m equal subspaces")
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    sub = dim // m
-    spark = df.sparkSession
-    if fits_driver(spark, plan_bytes(df), _DRIVER_TRAIN_MAX_BYTES):
-        # driver-bounded regime (graph/dissolve precedent): collect the
-        # quantized corpus ONCE and run the m·iters Lloyd rounds in
-        # numpy — at bench scale the distributed trainer's wall is pure
-        # scheduler latency (2·iters tiny barrier stages for k·m rows
-        # of real state). Bit-identical trajectory: same md5 seeding
-        # order, same integer argmin total order, same floor-mean
-        # update (pinned by test_clustering's regime-parity test).
-        rows = _np_train_rows(
-            _quantize(df, vec_col, id_col, quant, persist=False), dim, id_col
-        )
-        book_rows = []
-        if rows:
-            ids = [r[id_col] for r in rows]
-            qvm = np.array([r["qv"] for r in rows], dtype=np.int64)
-            seed_idx = _np_seed_order(ids, k)
-            for mi in range(m):
-                _, _, (fc_ids, fc_mat) = _np_lloyd(
-                    qvm[:, mi * sub : (mi + 1) * sub], seed_idx, iters
-                )
-                book_rows += [
-                    (mi, int(c), [int(x) for x in cv])
-                    for c, cv in zip(fc_ids, fc_mat)
-                ]
-        book_rows.sort()
-        return _pq_encode_tail(df, book_rows, m, sub, quant, vec_col, id_col)
-
-    qt = _quantize(df, vec_col, id_col, quant, persist=True)
-
-    # ONE grouped Lloyd plan for all m sub-codebooks (VERDICT r3 #4: m
-    # sequential _lloyd chains were m× the barrier-stage count for 15
-    # rows of real work — 6.9 s at sf0.1 was stage scheduling, not
-    # data). Subspace id `m` rides along as a grouping key through
-    # seeding, assign, and update; every arithmetic step is the same
-    # integer op as the sequential version, so the trajectory — and the
-    # replayed DuckDB oracle — is bit-identical.
-    qtm = (
-        qt.select(
-            id_col,
-            F.explode(F.expr(f"sequence(0, {m - 1})")).alias("m"),
-            "qv",
-        )
-        .select(
-            id_col,
-            F.col("m").cast("int").alias("m"),
-            F.expr(f"slice(qv, m * {sub} + 1, {sub})").alias("qv"),
-        )
-    )
-
-    # seeding: md5 depends only on the id, so the k seed ids are SHARED
-    # by every subspace — one distributed TakeOrdered over the ids (the
-    # row_number window then covers k rows only), joined back to pick
-    # each subspace's sub-vector
-    h = F.md5(F.concat(F.lit("km:"), F.col(id_col).cast("string")))
-    # null vectors cannot seed — the same filter _lloyd and the
-    # driver-regime _np_train_rows apply before their seed orders
-    seeds = (
-        qt.where(F.col("qv").isNotNull())
-        .select(id_col)
-        .withColumn("_h", h)
-        .orderBy("_h", id_col)
-        .limit(k)
-    )
-    seed_ids = seeds.select(
-        id_col,
-        (F.row_number().over(Window.orderBy("_h", F.col(id_col))) - 1)
-        .cast("int")
-        .alias("cluster"),
-    )
-    centroids = qtm.join(F.broadcast(seed_ids), id_col).select(
-        "m", "cluster", F.col("qv").alias("cv")
-    )
-    for _ in range(iters):
-        cs = centroids.groupBy("m").agg(
-            F.expr("array_sort(collect_list(struct(cluster, cv)))").alias("cs")
-        )
-        assign = qtm.join(F.broadcast(cs), "m").select(
-            "m", F.col(id_col),
-            F.expr(_argmin_expr("cs", "qv", sub)).alias("cluster"), "qv",
-        )
-        centroids = _centroid_update(assign, sub, ["m", "cluster"])
-
-    # The trained codebook is k×m MODEL PARAMETERS (32 rows at the
-    # defaults — bounded by design, independent of the corpus size):
-    # collect it once and rebuild both downstream inputs as literal
-    # local relations. Every consumer (the encode below, pq_topk's
-    # per-query distance tables) would otherwise re-execute the entire
-    # training lineage — measured 8 s vs ~3 s for the full PQ entry at
-    # sf0.1 — and a .persist() of the lazy frame serializes cache
-    # population inside the consuming query (worse, 6-14 s). This is
-    # the model-parameter exception to the no-driver-collect rule, the
-    # same regime as pip_join's driver-built polygon cover.
-    from ..session import static_plan
-
-    # the collect IS the training execution: 2 sequential Lloyd rounds
-    # of tiny barrier stages — run static (session.static_plan), AQE's
-    # per-stage replan jobs are pure latency on known-small state
-    try:
-        with static_plan(spark):
-            book_rows = sorted(
-                (int(r["m"]), int(r["cluster"]), [int(x) for x in r["cv"]])
-                for r in centroids.collect()
-            )
-    finally:
-        # the collect above was the LAST consumer of qt/qtm (the
-        # codebook is now driver-local literals and the encode below
-        # re-reads df) — drop the cached quantized corpus so long-lived
-        # sessions don't strand a copy per pq_fit_encode call, ALSO on
-        # a failed collect (e.g. the quantize contract guard firing)
-        qt.unpersist(blocking=False)
-    return _pq_encode_tail(df, book_rows, m, sub, quant, vec_col, id_col)
+    _, book = _train(df, m, k, iters, dim, vec_col, id_col, quant)
+    return _pq_encode_tail(df, book, m, dim // m, quant, vec_col, id_col)
 
 
 def _pq_encode_tail(
@@ -716,10 +641,7 @@ def pq_topk(
     Generate recomputation documented at textdedup.repetition_stats)
     and paid two extra exchanges."""
     sub = dim // m
-    book = sorted(
-        (int(r["m"]), int(r["cluster"]), [int(x) for x in r["cv"]])
-        for r in codebook.collect()
-    )
+    book = sorted(_book_row(r["m"], r["cluster"], r["cv"]) for r in codebook.collect())
     if not book:  # degenerate: nothing trained → nothing rankable
         # typed from the INPUT schemas so the empty frame unions/
         # compares cleanly with the trained path's output (id_col is

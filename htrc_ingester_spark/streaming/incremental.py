@@ -588,21 +588,16 @@ def kmeans_score_stream(
     codebook (clustering.kmeans_fit's centroids) — the train-offline /
     score-online split every production clusterer runs.
 
-    The static centroid set folds into one broadcast row and the
-    assignment is the same integer HOF argmin as the batch operator:
-    stateless, map-only per micro-batch — no state store, no watermark,
-    and stream==batch on the same rows by construction (pinned in
-    test_streaming). Late data needs no handling (a late row is a late
-    score)."""
-    from ..operators.clustering import _argmin_expr, _fold_centroids, _quant_expr
+    The static centroid set (k rows) is collected once and the
+    assignment is the batch operator's own map-only Arrow argmin
+    kernel (clustering._assign): stateless per micro-batch — no state
+    store, no watermark, and stream==batch on the same rows by
+    construction (pinned in test_streaming). Late data needs no
+    handling (a late row is a late score)."""
+    from ..operators.clustering import _assign, _book_row
 
-    cs = _fold_centroids(centroids)
-    q = stream.select(
-        F.col(id_col), F.expr(_quant_expr(vec_col, quant, "spark")).alias("qv")
-    )
-    return q.crossJoin(F.broadcast(cs)).select(
-        id_col, F.expr(_argmin_expr("cs", "qv", dim)).alias("cluster")
-    )
+    book = sorted(_book_row(0, r["cluster"], r["cv"]) for r in centroids.collect())
+    return _assign(stream, book, dim, vec_col, id_col, quant)
 
 
 def sessionized_counts_stream(

@@ -69,27 +69,18 @@ def test_deterministic_under_repartitioning(spark, vec_df):
 
 
 def test_assign_never_shuffles_by_id(spark, vec_df, forced):
-    # distributed regime: the assign is a broadcast of the folded
-    # centroid row, never an id-keyed shuffle
-    with forced():
-        plan = (
-            kmeans_lite(vec_df, k=4, iters=2, dim=8)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-    assert "hashpartitioning(vec_id" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    # driver-bounded regime: the assign is one map-only Arrow argmin —
-    # no exchange of any kind
-    plan_drv = (
-        kmeans_lite(vec_df, k=4, iters=2, dim=8)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "hashpartitioning(vec_id" not in plan_drv
-    assert "ArrowEvalPython" in plan_drv and "Exchange hashpartitioning" not in plan_drv
+    # both regimes return the same assignment plan: one map-only Arrow
+    # argmin over the trained centroids — no exchange of any kind
+    for force in (True, False):
+        with forced(force):
+            plan = (
+                kmeans_lite(vec_df, k=4, iters=2, dim=8)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+        assert "hashpartitioning(vec_id" not in plan
+        assert "ArrowEvalPython" in plan and "Exchange hashpartitioning" not in plan
 
 
 def test_sse_non_increasing_over_iterations(spark, vec_df, vec_rows):
@@ -373,3 +364,49 @@ class TestNullSemantics:
         out = pq_topk(codes, book, qdf, k_results=3, dim=8, m=2)
         assert out.count() == 0
         assert dict(out.dtypes)["vec_id"] == "bigint"
+
+
+class TestCacheHygiene:
+    """The trainer persists its quantized corpus only for the
+    distributed rounds and releases it before returning — also when
+    the training raises — so long-lived sessions never strand a cached
+    copy per call."""
+
+    @pytest.fixture
+    def parquet_df(self, spark, vec_df, tmp_path):
+        vec_df.write.parquet(str(tmp_path / "vecs"))
+        return spark.read.parquet(str(tmp_path / "vecs"))
+
+    def _fits(self):
+        from htrc_ingester_spark.operators.clustering import kmeans_fit, pq_fit_encode
+
+        return {
+            "kmeans_fit": lambda df: kmeans_fit(df, k=4, iters=2, dim=8),
+            "pq_fit_encode": lambda df: pq_fit_encode(df, m=2, k=4, iters=2, dim=8),
+        }
+
+    def _cache_empty(self, spark):
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    @pytest.mark.parametrize("op", ["kmeans_fit", "pq_fit_encode"])
+    def test_training_leaves_cache_empty(self, spark, forced, parquet_df, op):
+        spark.catalog.clearCache()
+        for force in (False, True):
+            with forced(force):
+                out, book = self._fits()[op](parquet_df)
+                assert out.count() == 120 and book.count() > 0
+            assert self._cache_empty(spark), (op, force)
+
+    @pytest.mark.parametrize("op", ["kmeans_fit", "pq_fit_encode"])
+    def test_failed_training_leaves_cache_empty(self, spark, forced, tmp_path, op):
+        ragged = spark.createDataFrame(
+            [(i, [0.1] * (5 if i == 7 else 8)) for i in range(40)],
+            "vec_id bigint, embedding array<double>",
+        )
+        ragged.write.parquet(str(tmp_path / "ragged"))
+        df = spark.read.parquet(str(tmp_path / "ragged"))
+        spark.catalog.clearCache()
+        for force in (False, True):
+            with forced(force), pytest.raises(Exception):
+                self._fits()[op](df)
+            assert self._cache_empty(spark), (op, force)

@@ -194,6 +194,21 @@ def test_cc_labels_match_bfs(case):
     )
 
 
+def test_cc_loop_size_estimate_does_not_compound(spark):
+    """The distributed loop's state⋈state joins must not carry a
+    compounding size estimate from round to round: on the chain
+    0–1–…–63 the returned state's estimate stays within Long range
+    (at most 19 digits) instead of growing geometrically."""
+    ids = list(range(64))
+    pairs = list(zip(ids[:-1], ids[1:]))
+    edges = spark.createDataFrame(pairs + [(b, a) for a, b in pairs], "src long, dst long")
+    nodes = spark.createDataFrame([(i, i) for i in ids], "node long, label long")
+    state = DV._cc_loop(nodes, edges, 64)
+    assert {r.node: r.label for r in state.collect()} == dict.fromkeys(ids, 0)
+    size = state._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size < 10**19, f"estimate has {len(str(size))} digits"
+
+
 class TestRegionOverlay:
     def test_all_four_relations(self, spark):
         # a1 = 3-cell bar, b1 = its middle cell (within/contains)

@@ -61,10 +61,11 @@ PINS = [
     ("knn_join_distributed", 14),
     # banded LSH pair-gen (single exchange) + pointer-jumping CC
     ("dedup_image_clusters", 13),
-    # seeded Lloyd under the driver-bounded regime: one
-    # quantized-corpus collect + a map-only Arrow argmin assign
-    # (r5: 11 -> 7; the per-iteration (cluster,pos) exchanges only
-    # run past _DRIVER_TRAIN_MAX_BYTES)
+    # seeded Lloyd under the driver-bounded regime of the shared
+    # trainer (clustering._train, m = 1): one quantized-corpus collect
+    # + a map-only Arrow argmin assign (r5: 11 -> 7; the grouped
+    # per-iteration groupBy(m, cluster) exchanges only run past
+    # _DRIVER_TRAIN_MAX_BYTES)
     ("kmeans_clusters", 7),
     # cover-as-table regime (not iterative, but its fixed job
     # composition — polys normalize + size-driven repartition stats +
